@@ -673,13 +673,13 @@ object Oracles {
         |       min(deg) AS min_deg, max(deg) AS max_deg,
         |       CAST(sum(deg) AS BIGINT) AS sum_deg
         |FROM deg GROUP BY 1 ORDER BY deg_bucket""".stripMargin),
-    // 8 unrolled peel rounds: fixpoint is reached by round 5 on every
-    // fixture SF (the Spark loop converges by survivor-count fingerprint,
-    // so any extra unrolled round is the identity; the 3-round margin
-    // absorbs a driver testdata regeneration). The multi-referenced CTEs
-    // are MATERIALIZED: DuckDB inlines CTEs by default, and each round
-    // references the previous one twice — inlined, the unroll would
-    // re-evaluate the simhash chain 2^8 times
+    // 8 unrolled peel rounds: the Spark loop stops at its first empty
+    // kill wave, so any unrolled round past the fixpoint is the identity,
+    // and its unrollGuard fails the query if a fixture ever needs more
+    // than 8 waves. The multi-referenced CTEs are MATERIALIZED: DuckDB
+    // inlines CTEs by default, and each round references the previous
+    // one twice — inlined, the unroll would re-evaluate the simhash chain
+    // 2^8 times
     "kcore_membership" -> (simhashCte + governedPairsCte +
       s""",
          |e AS MATERIALIZED (SELECT pa AS src, pb AS dst FROM pairs

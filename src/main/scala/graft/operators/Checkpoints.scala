@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 
 /** Lineage-cut strategy for the ITERATIVE operators (the CC
-  * star-contraction loop, PageRank/LPA rounds, the k-core delta peel, BFS
+  * star-contraction loop, PageRank/LPA rounds, the k-core peel, BFS
   * frontiers): each round must truncate lineage or the plan tree doubles
   * per round and Catalyst re-optimizes an ever-growing DAG.
   *

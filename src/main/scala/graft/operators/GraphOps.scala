@@ -235,90 +235,6 @@ object GraphOps {
       .orderBy($"label")
   }
 
-  /** k-core of an undirected edge set (`doc_a` < `doc_b`, distinct) by
-    * iterated peeling: drop every node whose degree WITHIN the surviving
-    * subgraph is < k, until a fixpoint. Returns the surviving node set.
-    *
-    * Fully distributed and convergence-checked the way
-    * [[DocDedup.dedupClusters]]' CC loop is: each round is two semi joins
-    * (edge endpoints against the surviving set — the pair graph is the
-    * bounded frame here, never the corpus) plus one degree count, the
-    * surviving set is lazily localCheckpoint'ed so plan depth stays
-    * constant in rounds (cluster: swap for `checkpoint()`), and the loop
-    * stops on a 1-row survivor-count fingerprint — peeling is strictly
-    * monotone decreasing, so equal counts ⇒ equal sets ⇒ fixpoint. Round
-    * count is bounded by the peel depth of the graph (≤ 5 on every
-    * fixture SF; `maxRounds` is a runaway guard, not the convergence
-    * contract). */
-  def kcore(spark: SparkSession, pairs: DataFrame, k: Int,
-      maxRounds: Int = 64): DataFrame =
-    kcoreOfEdges(spark, undirectedEdges(pairs), k, maxRounds)
-
-  /** Both-direction edge list of an undirected (doc_a < doc_b) pair set,
-    * lazily checkpointed — the symmetrization every graph op here needs,
-    * built (and materialized) once per caller. */
-  private def undirectedEdges(pairs: DataFrame): DataFrame =
-    Checkpoints.cut(
-      pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst"))))
-
-  /** [[kcore]] over a prebuilt (already symmetrized, already
-    * materialized) edge list — lets callers that need the edges
-    * themselves share one frame. */
-  private def kcoreOfEdges(spark: SparkSession, edges: DataFrame, k: Int,
-      maxRounds: Int = 64, unrollGuard: Option[Int] = None): DataFrame = {
-    import spark.implicits._
-    // DELTA peel (round 9): the naive synchronous peel recomputes the
-    // surviving subgraph's degrees from the FULL edge list every round —
-    // O(rounds × |E|) shuffle. Equivalent synchronous semantics with
-    // O(|E|) TOTAL shuffle: keep per-vertex degrees, and each round
-    // subtract only the edges whose dst was killed in the previous wave
-    // (deg_i(v) = deg_{i-1}(v) − |N(v) ∩ K_i| — each edge's dst dies at
-    // most once, so the sum of all per-round join inputs is bounded by
-    // |E|). The edge list is hash-partitioned on dst ONCE so every
-    // wave's semi-probe reuses that exchange instead of re-shuffling
-    // 2|E| rows. Same fixpoint as the recompute loop (kills are
-    // simultaneous per round), so the unrolled DuckDB twin and the
-    // scalar property references are unchanged. Measured local[32]
-    // cost is NEUTRAL (in-memory shuffles make the loop scan-bound:
-    // each wave still probes the checkpointed edge blocks) — the win
-    // is cluster-side, where per-round network shuffle volume drops
-    // from 2|E| rows to the edges incident to that wave's kills.
-    val byDst = Checkpoints.cut(edges.repartition($"dst"))
-    var alive = Checkpoints.cut(byDst.groupBy($"src".as("doc_id"))
-      .agg(count(lit(1)).as("deg")))
-    var killed = Checkpoints.cut(alive.where($"deg" < k).select($"doc_id"))
-    var nKilled = killed.count()
-    var round = if (nKilled > 0) 1 else 0
-    var converged = nKilled == 0
-    while (!converged && round < maxRounds) {
-      // no cut on the filter: it has ONE consumer (the join below, whose
-      // result IS cut), and its lineage is a single predicate over the
-      // previous round's cached blocks — checkpointing it only added a
-      // per-round materialization (round 14)
-      alive = alive.where($"deg" >= k)
-      val dec = byDst
-        .join(killed.select($"doc_id".as("dst")), "dst", "left_semi")
-        .groupBy($"src".as("doc_id")).agg(count(lit(1)).as("dec"))
-      alive = Checkpoints.cut(alive.join(dec, Seq("doc_id"), "left_outer")
-        .select($"doc_id", ($"deg" - coalesce($"dec", lit(0L))).as("deg")))
-      killed = Checkpoints.cut(alive.where($"deg" < k).select($"doc_id"))
-      nKilled = killed.count() // 1-row driver read: the wave fingerprint
-      if (nKilled == 0) converged = true else round += 1
-    }
-    // Guard for finitely-unrolled oracles: the DuckDB twin unrolls a fixed
-    // number of peel applications, so if the graph's true peel depth ever
-    // exceeds that unroll the oracle would silently under-peel. `round`
-    // counts non-empty kill waves — exactly the peel applications the
-    // unrolled oracle must cover.
-    unrollGuard.foreach { g =>
-      require(converged && round <= g,
-        s"kcore peel needed $round waves (converged=$converged); the " +
-          s"unrolled oracle covers only $g — raise the oracle unroll")
-    }
-    alive.where($"deg" >= k).select($"doc_id")
-  }
-
   /** NS: 3-core membership over the simhash near-dup pair graph — the
     * density screen between [[labelPropagation]]'s communities and
     * [[graphTriangles]]' cliques: a node survives the 3-core peel iff it
@@ -328,33 +244,76 @@ object GraphOps {
     * one borderline simhash match would detach. Output: every node of the
     * pair graph with its in-core flag and its degree INSIDE the core —
     * the corroboration count a survivorship policy keys on. The oracle
-    * unrolls 8 peel rounds (fixpoint is reached by round 5 on every
-    * fixture SF; the Spark loop converges by fingerprint, so extra
-    * unrolled rounds are identity and the margin absorbs a testdata
-    * regeneration) — and the `unrollGuard` makes that margin CHECKED: a
-    * regenerated fixture whose peel depth exceeds 8 fails this query
-    * loudly instead of letting the oracle silently under-peel. */
+    * unrolls 8 peel rounds (the Spark loop stops at the first empty kill
+    * wave, so unrolled rounds past the fixpoint are identity) — and the
+    * `unrollGuard` makes that margin CHECKED: a regenerated fixture whose
+    * peel depth exceeds 8 fails this query loudly instead of letting the
+    * oracle silently under-peel. */
   def kcoreMembership(spark: SparkSession, dir: String, k: Int = 3): DataFrame =
     kcoreMembershipOf(spark,
       DocDedup.simhashPairsMemo(spark, dir).select(col("doc_a"), col("doc_b")), k,
       unrollGuard = Some(8))
 
-  /** [[kcoreMembership]] over an explicit undirected edge set — exposed
-    * for the scalar-reference property test. */
+  private val MaxPeelRounds = 64
+
+  /** [[kcoreMembership]] over an explicit undirected edge set (`doc_a` <
+    * `doc_b`, distinct) — exposed for the scalar-reference property test.
+    *
+    * Synchronous peeling: each wave kills, at once, every live node whose
+    * degree within the surviving subgraph is < k, until a wave kills
+    * nothing. The state is ONE vertex table `(doc_id, deg, alive)` built
+    * from the pair endpoints; for a live node, `deg` is |N(v) ∩ live|. A
+    * wave is one `groupBy(doc_id)` over
+    *  - the table's own rows, with `alive` cleared where `deg < k` (this
+    *    wave's kills), and
+    *  - one `−1` row per pair endpoint whose other endpoint was killed,
+    *    selected by an in-set filter on the driver-held kill ids (a node
+    *    dies once, so the whole peel emits ≤ 2|E| such rows),
+    * then one lineage cut and one driver read of the next wave's kill ids
+    * (`alive && deg < k`), which is also the convergence fingerprint:
+    * empty ⇒ fixpoint. So a wave costs one shuffle and one driver read,
+    * and because every node dies at most once, all reads together return
+    * ≤ |V| ids (for the shipped query |V| ≤ documents = 50,000 × sf).
+    * Joining the table against the kills instead would shuffle both sides
+    * every wave: a checkpointed frame reports no output partitioning.
+    * The output is the final table itself: `in_core = alive`, and
+    * `core_deg = deg` for a live node.
+    *
+    * `MaxPeelRounds` is a runaway guard, not the convergence contract.
+    * `unrollGuard = Some(g)` fails the call unless the peel converged
+    * within `g` non-empty kill waves — exactly the peel applications a
+    * finitely-unrolled oracle must cover. */
   private[graft] def kcoreMembershipOf(spark: SparkSession, pairs: DataFrame,
       k: Int, unrollGuard: Option[Int] = None): DataFrame = {
     import spark.implicits._
-    val edges = undirectedEdges(pairs) // one symmetrization, shared with the peel
-    val core = kcoreOfEdges(spark, edges, k, unrollGuard = unrollGuard)
-    val coreDeg = edges
-      .join(core.select($"doc_id".as("src")), "src", "left_semi")
-      .join(core.select($"doc_id".as("dst")), "dst", "left_semi")
-      .groupBy($"src".as("doc_id")).agg(count(lit(1)).as("core_deg"))
-    edges.select($"src".as("doc_id")).distinct()
-      .join(coreDeg, Seq("doc_id"), "left_outer")
-      .select($"doc_id",
-        when($"core_deg".isNotNull, 1).otherwise(0).as("in_core"),
-        coalesce($"core_deg", lit(0L)).as("core_deg"))
+    var table = Checkpoints.cut(
+      pairs.select($"doc_a".as("doc_id")).union(pairs.select($"doc_b".as("doc_id")))
+        .groupBy($"doc_id").agg(count(lit(1)).as("deg"))
+        .select($"doc_id", $"deg", lit(1).as("alive")))
+    def killedIn(t: DataFrame): Array[Long] =
+      t.where($"alive" === 1 && $"deg" < k).select($"doc_id").as[Long].collect()
+    var killed = killedIn(table)
+    var round = 0
+    while (killed.nonEmpty && round < MaxPeelRounds) {
+      val dead = killed.toSeq
+      val dec = pairs.where($"doc_a".isin(dead: _*)).select($"doc_b".as("doc_id"))
+        .union(pairs.where($"doc_b".isin(dead: _*)).select($"doc_a".as("doc_id")))
+        .select($"doc_id", lit(-1L).as("deg"), lit(0).as("alive"))
+      table = Checkpoints.cut(
+        table.select($"doc_id", $"deg",
+            when($"deg" < k, 0).otherwise($"alive").as("alive"))
+          .union(dec)
+          .groupBy($"doc_id").agg(sum($"deg").as("deg"), max($"alive").as("alive")))
+      killed = killedIn(table)
+      round += 1
+    }
+    unrollGuard.foreach { g =>
+      require(killed.isEmpty && round <= g,
+        s"kcore peel needed $round waves (converged=${killed.isEmpty}); the " +
+          s"unrolled oracle covers only $g — raise the oracle unroll")
+    }
+    table.select($"doc_id", $"alive".as("in_core"),
+        when($"alive" === 1, $"deg").otherwise(0L).as("core_deg"))
       .orderBy($"doc_id")
   }
 

@@ -23,8 +23,9 @@ object Relational {
     * row where `(18,2) × (19,2)` multiplied java.math.BigDecimals — with
     * the same DECIMAL(38,4) type and values (cents·(100−disc_cents) <
     * 2^63 is a per-row DOMAIN bound — prices don't grow with the corpus,
-    * so the fast path is safe at 100 TB too; overflow would null, as the
-    * old cast did). */
+    * so the fast path is safe at 100 TB too. Out of that domain the long
+    * multiply wraps silently in non-ANSI mode, giving a wrong in-range
+    * decimal, not the null the old decimal cast gave on overflow). */
   def revenueExact(price: Column, discount: Column): Column =
     sum(unscaled_decimal(
       money_cents(price) * (lit(100L) - money_cents(discount)), 38, 4))
@@ -1813,6 +1814,9 @@ object Relational {
     // old a.brand < b.brand join condition), and the totals/marginals
     // derive from the same per-order frame. Bounded per-group state at
     // any SF; the checkpoint (cluster: checkpoint()) feeds 3 consumers.
+    // collect_set drops NULLs, so a NULL p_brand would vanish from the
+    // brandN marginals (the old distinct kept it): the query assumes
+    // p_brand is non-null, as it is in the contract data.
     // part is SF-scaled — no broadcast hint; stats/AQE choose.
     val orderSets = Tables.lineitem(spark, dir)
       .join(Tables.part(spark, dir), $"l_partkey" === $"p_partkey")

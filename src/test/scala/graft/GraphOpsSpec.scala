@@ -262,24 +262,33 @@ class GraphOpsSpec extends SparkSpecBase {
   }
 
   /** Scalar reference: peel to fixpoint, report (in_core, core_deg) per
-    * node — the exact contract of [[GraphOps.kcoreMembershipOf]]. */
-  private def kcoreRef(pairs: Seq[(Long, Long)], k: Int): Map[Long, (Int, Long)] = {
+    * node — the exact contract of [[GraphOps.kcoreMembershipOf]] — and the
+    * number of non-empty kill waves, the count `unrollGuard` checks. */
+  private def kcorePeel(pairs: Seq[(Long, Long)], k: Int)
+      : (Map[Long, (Int, Long)], Int) = {
     val nodes = pairs.flatMap { case (a, b) => Seq(a, b) }.distinct
     def degIn(s: Set[Long]): Map[Long, Long] = pairs
       .filter { case (a, b) => s(a) && s(b) }
       .flatMap { case (a, b) => Seq(a, b) }
       .groupBy(identity).view.mapValues(_.size.toLong).toMap
     var surv = nodes.toSet
+    var waves = 0
     var changed = true
     while (changed) {
       val d = degIn(surv)
       val next = surv.filter(v => d.getOrElse(v, 0L) >= k)
       changed = next != surv
+      if (changed) waves += 1
       surv = next
     }
     val cd = degIn(surv)
-    nodes.map(v => v -> (if (surv(v)) (1, cd(v)) else (0, 0L))).toMap
+    (nodes.map(v => v -> (if (surv(v)) (1, cd(v)) else (0, 0L))).toMap, waves)
   }
+
+  private def kcoreRef(pairs: Seq[(Long, Long)], k: Int): Map[Long, (Int, Long)] =
+    kcorePeel(pairs, k)._1
+
+  private def peelWaves(pairs: Seq[(Long, Long)], k: Int): Int = kcorePeel(pairs, k)._2
 
   private def kcoreSpark(pairs: Seq[(Long, Long)], k: Int): Map[Long, (Int, Long)] =
     GraphOps.kcoreMembershipOf(spark, pairs.toDF("doc_a", "doc_b"), k)
@@ -309,19 +318,72 @@ class GraphOpsSpec extends SparkSpecBase {
 
   test("kcore: the oracle-unroll guard fails loudly when peel depth exceeds it") {
     import spark.implicits._
-    // Path of 12 nodes, k=2: each round peels only the two endpoints, so
-    // the fixpoint (empty core) needs ~6 peel applications — deeper than
-    // a 2-round unroll but within an 8-round one
+    // Path of 12 nodes, k=2: each wave peels only the two endpoints, so
+    // the fixpoint (empty core) needs exactly 6 waves
     val path = (1L to 11L).map(i => (i, i + 1))
-    val ex = intercept[IllegalArgumentException] {
-      GraphOps.kcoreMembershipOf(spark, path.toDF("doc_a", "doc_b"), 2,
-        unrollGuard = Some(2)).collect()
-    }
+    val g = peelWaves(path, 2)
+    assert(g === 6)
+    def run(guard: Int) = GraphOps.kcoreMembershipOf(spark,
+      path.toDF("doc_a", "doc_b"), 2, unrollGuard = Some(guard)).collect()
+    val ex = intercept[IllegalArgumentException](run(g - 1))
     assert(ex.getMessage.contains("unrolled oracle"), ex.getMessage)
-    // and the shipped guard margin (8) admits the same graph
-    val ok = GraphOps.kcoreMembershipOf(spark, path.toDF("doc_a", "doc_b"), 2,
-      unrollGuard = Some(8)).collect()
-    assert(ok.forall(_.getInt(1) == 0), "a path has no 2-core")
+    assert(run(g).forall(_.getInt(1) == 0), "a path has no 2-core")
+  }
+
+  test("kcore: adjacent nodes killed in the same wave") {
+    // K4 on 1..4 plus the triangle 5-6-7 hung off node 1: at k=3, 6 and 7
+    // (adjacent, degree 2) die together in wave 1, then 5 in wave 2
+    val g = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
+      (1L, 5L), (5L, 6L), (5L, 7L), (6L, 7L))
+    assert(peelWaves(g, 3) === 2)
+    val got = kcoreSpark(g, 3)
+    assert(got === kcoreRef(g, 3))
+    assert(got(1L) === ((1, 3L)) && got(6L) === ((0, 0L)) && got(7L) === ((0, 0L)))
+    // two pendant nodes that are each other's neighbor, both tied to the
+    // clique: 5 and 6 both have degree 2 and die in the same single wave
+    val h = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
+      (1L, 5L), (2L, 6L), (5L, 6L))
+    assert(peelWaves(h, 3) === 1)
+    assert(kcoreSpark(h, 3) === kcoreRef(h, 3))
+  }
+
+  test("kcore: a peel wave costs at most two jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val g = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
+      (1L, 5L), (5L, 6L), (6L, 7L))
+    val df = g.toDF("doc_a", "doc_b")
+    // job descriptions in listener order; sentinel jobs fence the call,
+    // because listener events arrive asynchronously but in order
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    def fence(tag: String): Unit = {
+      sc.setJobDescription(tag)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.contains(tag) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(tag), s"listener never saw the $tag job")
+    }
+    sc.addSparkListener(listener)
+    try {
+      for (k <- Seq(2, 3)) {
+        seen.clear()
+        fence("kcore-start")
+        GraphOps.kcoreMembershipOf(spark, df, k).collect()
+        fence("kcore-end")
+        val all = seen.toArray(Array.empty[String]).toSeq
+        val jobs = all.indexOf("kcore-end") - all.indexOf("kcore-start") - 1
+        val waves = peelWaves(g, k)
+        // c = 6: the vertex table's build and first kill read, the ordered
+        // collect (sample, shuffle, result), and one job of slack
+        assert(jobs <= 2 * waves + 6, s"k=$k: $jobs jobs for $waves waves")
+      }
+    } finally sc.removeSparkListener(listener)
   }
 
   test("kcore matches the scalar reference on seeded random graphs") {
