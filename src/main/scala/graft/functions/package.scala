@@ -127,7 +127,12 @@ package object functions {
     * ONLY valid for 2-decimal inputs: a 3-decimal value would round
     * half-to-odd differently than the decimal cast. ExactMoneySpec pins
     * the equivalence over the DataGen value shapes (negatives, nulls,
-    * quartile .25/.75 fractions, full c_acctbal/l_extendedprice ranges). */
+    * quartile .25/.75 fractions, full c_acctbal/l_extendedprice ranges).
+    *
+    * Non-finite inputs are NOT nulled: NaN maps to 0, +Infinity to
+    * Long.MaxValue and −Infinity to Long.MinValue (floor of a non-finite
+    * double), where the DECIMAL(18,2) cast it replaces returns NULL. The
+    * fixtures hold finite money only; nothing checks that at runtime. */
   def money_cents(c: Column): Column =
     org.apache.spark.sql.functions.floor(
       c * org.apache.spark.sql.functions.lit(100d) +

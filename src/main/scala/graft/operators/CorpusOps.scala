@@ -267,9 +267,7 @@ object CorpusOps {
   /** Pre-sort gate frame, memoized once per (session, dir) — see
     * [[TextAnalysis.repetitionFrame]]; `quality_ensemble` shares it. */
   private[graft] def lmFrame(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, dir, "lm_gate")(lmFrameBuild(spark, dir))
-
-  private val memo = new FrameMemo()
+    FrameMemo.shared(spark, dir, "lm_gate")(lmFrameBuild(spark, dir))
 
   private def lmFrameBuild(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)

@@ -15,21 +15,13 @@ import graft.operators.TextAnalysis.{md5Long28, md5Long60, shingles, tokens}
   */
 object DocDedup {
 
-  // Memo of the expensive shared intermediates (near-dup pair sets and CC
-  // labels), keyed by (session, dir). Several declared queries read the
-  // SAME frame — dedup_clusters / cluster_stats / dedup_survivorship all
-  // consume one label frame, and dedup_ensemble re-reads both pair sets —
-  // so without sharing, one bench/verify run re-runs the candidate
-  // generation + star-contraction loop up to 4×. The cached frames are
-  // lazily localCheckpoint'ed (first action materializes; later readers
-  // reuse the checkpoint blocks), deterministic, and tiny (pairs and
-  // labels, not corpus). Bounded by #sessions × #dirs seen in-process —
-  // a handful in tests/bench; on a real cluster this is a persisted
-  // staging table instead.
-  private val memo = new FrameMemo()
-  private def memoized(spark: SparkSession, dir: String, key: String)(
-      build: => DataFrame): DataFrame =
-    memo(spark, dir, key)(build)
+  // The expensive shared intermediates (near-dup pair sets and CC
+  // labels) live in [[FrameMemo.shared]]: dedup_clusters / cluster_stats
+  // / dedup_survivorship all consume one label frame and dedup_ensemble
+  // re-reads both pair sets, so without sharing one bench/verify run
+  // re-runs candidate generation + star contraction up to 4×. The frames
+  // are deterministic and tiny (pairs and labels, not corpus); on a real
+  // cluster this is a persisted staging table instead.
 
   // MinHash: 16 permutations h_i(x) = ((2i+1)·x + 7919·i + 1) mod P over
   // the 28-bit md5 base hash; products stay < 2^34, far from int64 overflow
@@ -102,7 +94,7 @@ object DocDedup {
   }
 
   private def minhashPairsMemo(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "minhash_pairs") {
+    FrameMemo.shared(spark, dir, "minhash_pairs") {
       import spark.implicits._
       val sigs = minhashSigs(spark, dir).select($"doc_id", $"sig", $"b0", $"b1", $"b2", $"b3")
       val bands = sigs.select($"doc_id", $"sig",
@@ -219,7 +211,7 @@ object DocDedup {
     * and the banded pair join both read this one materialization. Explode
     * + groupBy keeps partial aggregation map-side (one shuffle on doc_id). */
   private[graft] def simhashDocsMemo(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "simhash_docs") {
+    FrameMemo.shared(spark, dir, "simhash_docs") {
       import spark.implicits._
       val tok = Tables.documents(spark, dir)
         .select($"doc_id", explode(tokens($"text")).as("t"))
@@ -267,68 +259,29 @@ object DocDedup {
         sum(shiftright(col("n") * (col("n") - 1), 1)).as("cand_pairs"))
   }
 
-  // ladder decisions are deterministic per (session, dir, budget) — cache
-  // the 4-row collect so repeated consumers don't re-trigger it. Keyed by
-  // session like FrameMemo (NOT (dir, budget) alone): if the data under
-  // `dir` is regenerated in the same JVM, a fresh session must re-decide
-  // the level from the fresh data, or the pair join would run at a stale
-  // ladder level while the DuckDB twin recomputes it. SELF-BOUNDING like
-  // FrameMemo: only the 2 most-recently-used sessions' decisions are
-  // kept (insertion-ordered LinkedHashMap), so dead sessions are not
-  // pinned for JVM lifetime; [[clearMemo]] drops decisions alongside the
-  // frames so regeneration-in-place can never pair a stale ladder level
-  // with a fresh simhash frame.
-  private val levelMemo =
-    scala.collection.mutable.LinkedHashMap.empty[(SparkSession, String, Long), Int]
+  /** The governor's pick as a 1-row `chosen_lvl` frame: the loosest
+    * ladder level whose projected candidate mass (`mass`, from
+    * [[simhashPairMass]]) fits `budget`. Level 3 — exact-dup listing — is
+    * the floor even when over budget (it cannot be avoided and is owned
+    * by exact dedup), and also the pick when no level has any mass (an
+    * empty corpus). The one definition of the rule: the report queries
+    * cross-join it, [[chosenSimhashLevel]] collects it, and the DuckDB
+    * twins replay it as their `pk` CTE. */
+  private def chosenLevel(mass: DataFrame, budget: Long): DataFrame =
+    mass.where(col("cand_pairs") <= budget)
+      .agg(coalesce(min(col("lvl")), lit(3)).as("chosen_lvl"))
 
-  private def levelMemoGet(key: (SparkSession, String, Long))(build: => Int): Int = {
-    val hit = levelMemo.synchronized {
-      val h = levelMemo.get(key)
-      // refresh MRU position so the eviction below tracks recency
-      h.foreach { v => levelMemo.remove(key); levelMemo.put(key, v) }
-      h
-    }
-    hit.getOrElse {
-      // Cache miss: run `build` (Spark jobs — simhash frame + pair-mass
-      // collect) OUTSIDE the monitor, so one session's governor decision
-      // cannot serialize cache HITS for every other (session, dir) for
-      // the duration of the job. Two concurrent misses on the same key
-      // may both compute; the decision is deterministic per (session,
-      // dir, budget), so the duplicated work is harmless and last-put
-      // wins with the identical value.
-      val v = build
-      levelMemo.synchronized {
-        levelMemo.remove(key); levelMemo.put(key, v)
-        val mruSessions =
-          levelMemo.keys.toSeq.reverse.map(_._1).distinct.take(2).toSet
-        levelMemo.filterInPlace { case ((s, _, _), _) => mruSessions(s) }
-      }
-      v
-    }
-  }
-
-  /** Drop every memoized frame AND every cached ladder decision. The two
-    * must clear together: a caller that regenerates the data under a dir
-    * in the same JVM and clears only the frames would otherwise get a
-    * fresh simhash frame served under a stale governor level. */
-  def clearMemo(): Unit = { memo.clear(); levelMemo.synchronized(levelMemo.clear()) }
-
-  /** The governor's choice: loosest ladder level whose projected candidate
-    * mass fits the budget (level 3 — exact-dup listing — is the floor even
-    * when over budget: it cannot be avoided and is owned by exact dedup).
-    * Driver-side state is the 4-row mass table — bounded metadata, the
-    * `semantic_dedup` adaptive-k pattern. */
+  /** The governor's choice for `budget` (see [[chosenLevel]]). Driver-side
+    * state is one collected row. The governed pair join is memoized, so a
+    * warm consumer never reaches this call. */
   private[graft] def chosenSimhashLevel(spark: SparkSession, dir: String,
-      budget: Long = PairBudget): Int =
-    levelMemoGet((spark, dir, budget))({
-      val masses = simhashPairMass(simhashDocsMemo(spark, dir))
-        .select(col("lvl"), col("cand_pairs")).collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val lvl = (0 to 3).find(l => masses.getOrElse(l, 0L) <= budget).getOrElse(3)
-      System.err.println(s"[graft] simhash pair governor: dir=$dir budget=$budget " +
-        s"masses=${(0 to 3).map(l => masses.getOrElse(l, 0L)).mkString(",")} -> level $lvl")
-      lvl
-    })
+      budget: Long = PairBudget): Int = {
+    val lvl = chosenLevel(simhashPairMass(simhashDocsMemo(spark, dir)), budget)
+      .head().getInt(0)
+    System.err.println(
+      s"[graft] simhash pair governor: dir=$dir budget=$budget -> level $lvl")
+    lvl
+  }
 
   /** NS: the pair-budget governor REPORT — the knob table a pipeline reads
     * before the near-dup pass: per ladder level, band count, hamming
@@ -341,9 +294,7 @@ object DocDedup {
   def pairBudgetGovernor(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val mass = simhashPairMass(simhashDocsMemo(spark, dir))
-    val chosen = mass.where($"cand_pairs" <= PairBudget)
-      .agg(coalesce(min($"lvl"), lit(3)).as("chosen_lvl"))
-    mass.crossJoin(broadcast(chosen))
+    mass.crossJoin(broadcast(chosenLevel(mass, PairBudget)))
       .select($"lvl", $"n_bands",
         (lit(3) - $"lvl").as("hamming_radius"),
         $"n_buckets", $"cand_pairs",
@@ -376,9 +327,10 @@ object DocDedup {
   def governorRecall(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val one = recallTruthAgg(spark, dir)
-    val chosen = chosenSimhashLevel(spark, dir)
+    val chosen = chosenLevel(simhashPairMass(simhashDocsMemo(spark, dir)), PairBudget)
     spark.range(4).select($"id".cast(IntegerType).as("lvl"))
       .crossJoin(broadcast(one)) // scalar-broadcast: `one` is a 1-row agg
+      .crossJoin(broadcast(chosen)) // ...and so is the governor's pick
       .select($"lvl", (lit(3) - $"lvl").as("hamming_radius"),
         $"s0".as("n_true_pairs"),
         element_at(array($"s0", $"s1", $"s2", $"s3"), $"lvl" + 1)
@@ -387,7 +339,7 @@ object DocDedup {
           element_at(array($"s0", $"s1", $"s2", $"s3"), $"lvl" + 1)
             .cast(DoubleType) / $"s0")
           .as("recall"),
-        ($"lvl" === chosen).cast(IntegerType).as("chosen"))
+        ($"lvl" === $"chosen_lvl").cast(IntegerType).as("chosen"))
       .orderBy($"lvl")
   }
 
@@ -448,6 +400,24 @@ object DocDedup {
     * histogram — so the report is corpus-size-independent. */
   def governorRecallFloor(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
+    val (rows, pick) = recallFloorPlan(spark, dir, RecallFloorNum, RecallFloorDen)
+    rows.crossJoin(broadcast(pick))
+      .select($"lvl", (lit(3) - $"lvl").as("hamming_radius"),
+        $"s0".as("n_true_pairs"), $"n_survive",
+        when($"s0" > 0, $"n_survive".cast(DoubleType) / $"s0").as("recall"),
+        $"meets_floor", $"cand_pairs",
+        ($"lvl" === $"chosen_lvl").cast(IntegerType).as("chosen_by_recall"),
+        $"required_budget")
+      .orderBy($"lvl")
+  }
+
+  /** The inverse pick for `floorNum/floorDen`: the 4 per-level rows
+    * (`lvl, s0, n_survive, cand_pairs, meets_floor`) and the 1-row
+    * `chosen_lvl, required_budget` frame — the one definition shared by
+    * [[governorRecallFloor]] and [[chosenSimhashLevelByRecall]]. */
+  private def recallFloorPlan(spark: SparkSession, dir: String,
+      floorNum: Long, floorDen: Long): (DataFrame, DataFrame) = {
+    import spark.implicits._
     val one = recallTruthAgg(spark, dir)
     val mass = simhashPairMass(simhashDocsMemo(spark, dir))
       .select($"lvl".as("m_lvl"), $"cand_pairs")
@@ -460,7 +430,7 @@ object DocDedup {
         coalesce($"cand_pairs", lit(0L)).as("cand_pairs"))
       .withColumn("meets_floor",
         ($"s0" === 0L ||
-          $"n_survive" * RecallFloorDen >= $"s0" * RecallFloorNum)
+          $"n_survive" * floorDen >= $"s0" * floorNum)
           .cast(IntegerType))
     val pick = rows.where($"meets_floor" === 1)
       // max(struct) = the HIGHEST qualifying level and its mass in one
@@ -468,34 +438,19 @@ object DocDedup {
       .agg(max(struct($"lvl", $"cand_pairs")).as("c"))
       .select($"c.lvl".as("chosen_lvl"),
         $"c.cand_pairs".as("required_budget"))
-    rows.crossJoin(broadcast(pick))
-      .select($"lvl", (lit(3) - $"lvl").as("hamming_radius"),
-        $"s0".as("n_true_pairs"), $"n_survive",
-        when($"s0" > 0, $"n_survive".cast(DoubleType) / $"s0").as("recall"),
-        $"meets_floor", $"cand_pairs",
-        ($"lvl" === $"chosen_lvl").cast(IntegerType).as("chosen_by_recall"),
-        $"required_budget")
-      .orderBy($"lvl")
+    (rows, pick)
   }
 
   /** Documented API for the inverse mode: the cheapest ladder level whose
     * calibration recall meets `floorNum/floorDen`, with the pair budget
-    * that level requires. Driver-side state is one 4-row collect —
+    * that level requires. Driver-side state is one collected row —
     * bounded at any corpus size. */
   def chosenSimhashLevelByRecall(spark: SparkSession, dir: String,
       floorNum: Long = RecallFloorNum,
       floorDen: Long = RecallFloorDen): (Int, Long) = {
-    import spark.implicits._
     require(floorDen > 0 && floorNum >= 0, "floor must be a valid rational")
-    val one = recallTruthAgg(spark, dir).collect()(0)
-    val s = Array(one.getLong(0), one.getLong(1), one.getLong(2), one.getLong(3))
-    val masses = simhashPairMass(simhashDocsMemo(spark, dir))
-      .select($"lvl", $"cand_pairs").collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val lvl = (3 to 0 by -1)
-      .find(l => s(0) == 0L || s(l) * floorDen >= s(0) * floorNum)
-      .getOrElse(0)
-    (lvl, masses.getOrElse(lvl, 0L))
+    val r = recallFloorPlan(spark, dir, floorNum, floorDen)._2.head()
+    (r.getInt(0), r.getLong(1))
   }
 
   /** SimHash near-dup pairs under the BUDGETED default: hamming(simhash)
@@ -513,7 +468,7 @@ object DocDedup {
       budget: Long = PairBudget): DataFrame =
     // non-default budgets (the escalation spec's fixture path) get their
     // own memo slot so they can never serve the governed default
-    memoized(spark, dir,
+    FrameMemo.shared(spark, dir,
       if (budget == PairBudget) "simhash_pairs" else s"simhash_pairs@b=$budget") {
       simhashPairsAt(spark, dir, chosenSimhashLevel(spark, dir, budget))
     }
@@ -990,7 +945,7 @@ object DocDedup {
     // Label frame memoized directly (connectedComponents already returns a
     // checkpointed frame): cluster_stats and dedup_survivorship both
     // consume it, so the star-contraction loop runs once per (session, dir).
-    val labels = memo.raw(spark, dir, "cc_labels")(
+    val labels = FrameMemo.shared.raw(spark, dir, "cc_labels")(
       connectedComponents(
         simhashPairsMemo(spark, dir).select($"doc_a", $"doc_b")))
     Tables.documents(spark, dir).select($"doc_id")
@@ -1032,7 +987,7 @@ object DocDedup {
     // premise is that this frame ALREADY EXISTS — recomputing the prior
     // closure per call would bill the incremental query for the batch work
     // it exists to avoid.
-    val oldLabels = memoized(spark, dir, "inc_old_labels") {
+    val oldLabels = FrameMemo.shared(spark, dir, "inc_old_labels") {
       connectedComponents(oldPairs)
     }
     val la = oldLabels.select($"doc_id".as("doc_a"), $"label".as("la"))

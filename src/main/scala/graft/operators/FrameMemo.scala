@@ -5,17 +5,16 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
 
-/** Bounded (session, dir)-scoped memo of lazily `localCheckpoint`'ed
-  * frames — the shared-gate pattern used by TextAnalysis / DocDedup /
-  * CorpusOps (tokenized corpus, candidate pairs, CC labels, gate frames).
+/** Bounded (session, dir)-scoped memo of `localCheckpoint`'ed frames —
+  * the shared intermediates several declared queries read (tokenized
+  * corpus, gate frames, candidate pairs, CC labels, the IVF cell index).
+  * One process-wide instance, [[FrameMemo.shared]], serves every family;
+  * keys are unique across families.
   *
-  * Lifecycle contract (round-7 hardening + round-9 concurrency close):
-  * the map keeps at most `maxDirs` most-recently-used (session, dir)
-  * groups. Admitting a NEW dir beyond that evicts the least-recently-used
-  * dir's entries and EXPLICITLY unpersists their checkpointed RDDs, so a
-  * multi-dir session releases pinned checkpoint blocks on schedule
-  * instead of accumulating them for the life of the process. [[clear]]
-  * releases the same way.
+  * Lifecycle: the map keeps at most `maxDirs` most-recently-used
+  * (session, dir) groups. Admitting a NEW group beyond that evicts the
+  * least-recently-used group's entries and EXPLICITLY unpersists their
+  * checkpointed RDDs; [[clear]] releases the same way.
   *
   * Why explicit release instead of dropping references and letting the
   * ContextCleaner reclaim on GC: measured on Spark 4.1, a dropped
@@ -26,35 +25,16 @@ import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
   * transitively retains earlier checkpoints; FrameMemoSpec pins the
   * explicit-release behavior instead of that unreliable path).
   *
-  * Concurrency: entries carry a REFCOUNT (guarded by the memo monitor).
-  *  - [[withFrame]] pins the entry for the duration of `use` — eviction
-  *    of an in-use entry defers the unpersist to the last unpin, so a
-  *    concurrent admit can never release blocks out from under a
-  *    running action. This is the safe API for concurrent multi-dir
-  *    pools (FrameMemoSpec stress-proves it).
-  *  - [[raw]]/[[apply]] guarantee the frame is live AT hand-out (they
-  *    rebuild — never resurrect — when an entry was evicted mid-build or
-  *    mid-hand-out) but do NOT pin beyond that instant; they remain the
-  *    right call for the shipped single-flight patterns (callers consume
-  *    the frame within the query that requested it, and eviction needs a
-  *    THIRD dir entering the process).
-  *  - A concurrent same-key double-build keeps one winner via
-  *    putIfAbsent; the LOSER's frame is released immediately (an
-  *    eagerly-materialized loser would otherwise pin checkpoint blocks
-  *    with no release path).
-  *
-  * `maxDirs = 2` covers every in-process multi-dir pattern we ship while
-  * keeping a 3-dir session bounded — the scenario that used to pin
-  * blocks forever.
+  * Concurrency: builds run OUTSIDE the monitor, so concurrent workers
+  * (Verify's pool) never serialize on a checkpoint materialization. A
+  * concurrent same-key double build keeps one winner via putIfAbsent and
+  * releases the loser's frame at once. A handed-out frame is live AT
+  * hand-out (an entry evicted mid-build is rebuilt, never resurrected);
+  * callers consume it within the query that requested it, and eviction
+  * needs a third (session, dir) group entering the process.
   */
-private[graft] final class FrameMemo(maxDirs: Int = 2) {
-  /** refs/evicted guarded by the FrameMemo monitor. */
-  private final class Entry(val df: DataFrame) {
-    var refs: Int = 0
-    var evicted: Boolean = false
-  }
-
-  private val frames = TrieMap[(SparkSession, String, String), Entry]()
+private[graft] final class FrameMemo(maxDirs: Int) {
+  private val frames = TrieMap[(SparkSession, String, String), DataFrame]()
   // LRU over (session, dir): LinkedHashSet iterates in insertion order;
   // re-inserting on touch moves a dir to the back.
   private val lru = mutable.LinkedHashSet[(SparkSession, String)]()
@@ -65,72 +45,36 @@ private[graft] final class FrameMemo(maxDirs: Int = 2) {
 
   /** [[apply]] for builds that already return a checkpointed frame
     * (e.g. connectedComponents) — memoizes without re-checkpointing.
-    * The returned frame is live at hand-out; it is NOT pinned against a
-    * subsequent eviction (use [[withFrame]] for concurrent pools). */
+    * Validity check is membership in `frames` (did release run on OUR
+    * frame?), not LRU membership: re-admission cannot resurrect released
+    * blocks, so a frame evicted mid-build is REBUILT. */
   def raw(spark: SparkSession, dir: String, key: String)(
       build: => DataFrame): DataFrame = {
-    while (true) {
-      val e = acquire(spark, dir, key)(build)
-      val live = synchronized {
-        e.refs -= 1
-        // evicted between pin and here: the frame is (or will be) dead —
-        // drop our pin (releasing if we were the last) and REBUILD
-        if (e.evicted) { if (e.refs == 0) release(e.df); false }
-        else true
-      }
-      if (live) return e.df
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** Run `use` with the memoized frame PINNED: eviction of an in-use
-    * entry defers its unpersist until the last pin drops, so concurrent
-    * builders across 3+ dirs can never observe a released frame. */
-  def withFrame[T](spark: SparkSession, dir: String, key: String)(
-      build: => DataFrame)(use: DataFrame => T): T = {
-    val e = acquire(spark, dir, key)(build)
-    try use(e.df)
-    finally synchronized {
-      e.refs -= 1
-      if (e.refs == 0 && e.evicted) release(e.df)
-    }
-  }
-
-  /** Memoize-or-build and return the entry PINNED (refs incremented).
-    * Build runs OUTSIDE the lock: checkpoint materialization can take
-    * seconds and concurrent workers (Verify's pool) must not serialize
-    * on it. Validity check is membership in `frames` (did release run on
-    * OUR instance?), not LRU membership — re-admission cannot resurrect
-    * released blocks, so an entry evicted mid-build is REBUILT. */
-  private def acquire(spark: SparkSession, dir: String, key: String)(
-      build: => DataFrame): Entry = {
     val k = (spark, dir, key)
     while (true) {
       synchronized(admit(spark, dir))
-      val e = frames.get(k) match {
+      val df = frames.get(k) match {
         case Some(existing) => existing
         case None =>
-          val built = new Entry(build)
+          val built = build
           frames.putIfAbsent(k, built) match {
-            case Some(winner) => release(built.df); winner // losing build
+            case Some(winner) => release(built); winner // losing build
             case None         => built
           }
       }
       synchronized {
-        if (frames.get(k).exists(_ eq e)) {
-          e.refs += 1
-          admit(spark, dir) // pinning counts as a use
-          return e
+        if (frames.get(k).exists(_ eq df)) {
+          admit(spark, dir) // hand-out counts as a use
+          return df
         }
       }
-      // evicted (and possibly released) mid-build — loop and rebuild
+      // evicted (and released) mid-build — loop and rebuild
     }
     throw new IllegalStateException("unreachable")
   }
 
-  /** Touch `dir`; evict LRU dirs beyond `maxDirs`, releasing each evicted
-    * entry NOW unless it is pinned (then the last unpin releases).
-    * Caller must hold the monitor. */
+  /** Touch `dir`; evict and release LRU dirs beyond `maxDirs`. Caller
+    * must hold the monitor. */
   private def admit(spark: SparkSession, dir: String): Unit = {
     val g = (spark, dir)
     lru.remove(g); lru.add(g)
@@ -138,10 +82,7 @@ private[graft] final class FrameMemo(maxDirs: Int = 2) {
       val oldest = lru.head
       lru.remove(oldest)
       frames.keys.filter(k => (k._1, k._2) == oldest)
-        .foreach(k => frames.remove(k).foreach { e =>
-          e.evicted = true
-          if (e.refs == 0) release(e.df)
-        })
+        .foreach(k => frames.remove(k).foreach(release))
     }
   }
 
@@ -152,15 +93,21 @@ private[graft] final class FrameMemo(maxDirs: Int = 2) {
     catch { case _: Throwable => () } // a dead session is already free
 
   /** Drop AND release every memoized frame (tests / explicit session
-    * teardown); in-use pinned frames release on their last unpin. */
+    * teardown). */
   def clear(): Unit = synchronized {
-    frames.values.foreach { e =>
-      e.evicted = true
-      if (e.refs == 0) release(e.df)
-    }
+    frames.values.foreach(release)
     frames.clear(); lru.clear()
   }
 
   private[graft] def size: Int = frames.size
   private[graft] def dirCount: Int = synchronized(lru.size)
+}
+
+private[graft] object FrameMemo {
+  /** Two groups cover every in-process multi-dir pattern we ship while
+    * keeping a 3-dir session bounded. */
+  val MaxDirs = 2
+
+  /** The one memo every operator family reads and writes. */
+  val shared = new FrameMemo(MaxDirs)
 }

@@ -835,13 +835,11 @@ object Similarity {
     16 << bits
   }
 
-  private val memo = new FrameMemo()
-
   /** Memoized (FrameMemo): the dedup self-join consumes this frame on
     * BOTH sides and the ingest twin probes it per batch — without the
     * memo each consumer re-runs the k·N assignment fold. */
   def cellIndex(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, dir, "cellIndex") {
+    FrameMemo.shared(spark, dir, "cellIndex") {
       import spark.implicits._
       val n = Tables.embeddings(spark, dir).count()
       ivfAssigned(spark, dir,

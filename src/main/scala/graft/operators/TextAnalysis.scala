@@ -27,40 +27,19 @@ object TextAnalysis {
   /** Whitespace tokens of `text` (the corpus is single-space separated). */
   def tokens(text: Column): Column = split(text, " ")
 
-  // Shared-gate memo (the DocDedup pattern): deterministic, lazily
-  // localCheckpoint'ed, bounded by #sessions × #dirs seen in-process.
-  // NOTE for bench readers: after the first build, any query composed
-  // over a memoized frame measures checkpoint READS, not the build —
-  // published numbers for the composite queries are warm-path numbers
-  // by design (min-of-2 passes would hit the memo on pass 2 anyway).
-  // Long-lived sessions spanning many dirs should call [[clearMemo]]
-  // to release the pinned checkpoint blocks.
-  private val memo = new FrameMemo()
-  private def memoized(spark: SparkSession, dir: String, key: String)(
-      build: => DataFrame): DataFrame =
-    memo(spark, dir, key)(build)
-
-  /** Drop AND release every memoized frame (explicit unpersist of the
-    * underlying checkpoint RDDs — see [[FrameMemo]] for why GC-driven
-    * reclamation can't be relied on). Since round 8 the memo is ALSO
-    * self-bounding: [[FrameMemo]] keeps only the 2 most-recently-used
-    * (session, dir) groups and releases evicted dirs' blocks on the
-    * spot, so a multi-dir session no longer pins blocks indefinitely
-    * even without this call. */
-  def clearMemo(): Unit = memo.clear()
-
   /** The shared tokenized corpus — `(doc_id, source, toks)` with `toks`
     * the whitespace token array — memoized once per (session, dir). Every
     * tokenizing aggregate family (tfidf/bm25/dsir/pmi and the gate
     * frames) re-scans this frame instead of re-splitting the corpus:
     * tokenization is the single most repeated subtree in the registry,
     * and one localCheckpoint turns N corpus re-tokenizations into N
-    * block reads. On a real cluster swap `localCheckpoint` for
-    * `checkpoint()` (same contract as the DocDedup pair memo) — or drop
-    * the memo entirely and re-scan; correctness never depends on it. */
+    * block reads ([[FrameMemo.shared]]; a warm query over it measures
+    * checkpoint reads, not the build). On a real cluster swap
+    * `localCheckpoint` for `checkpoint()` — or drop the memo entirely
+    * and re-scan; correctness never depends on it. */
   def docTokens(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    memoized(spark, dir, "doc_tokens") {
+    FrameMemo.shared(spark, dir, "doc_tokens") {
       Tables.documents(spark, dir)
         .select($"doc_id", $"source", tokens($"text").as("toks"))
     }
@@ -393,10 +372,10 @@ object TextAnalysis {
   /** Pre-sort gate frame, lazily localCheckpoint'ed once per (session,
     * dir) — `quality_ensemble` re-reads all three gate frames and bench's
     * min-of-2 passes re-run every query, so the memo turns three repeated
-    * corpus scans into checkpoint reads (the `DocDedup` memo pattern;
-    * cluster: a persisted staging table). */
+    * corpus scans into checkpoint reads ([[FrameMemo.shared]]; cluster:
+    * a persisted staging table). */
   private[graft] def repetitionFrame(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "rep_gate")(
+    FrameMemo.shared(spark, dir, "rep_gate")(
       repetitionFrameOf(Tables.documents(spark, dir)))
 
   /** Un-memoized per-doc builder over an arbitrary `(doc_id, text)` frame
@@ -460,7 +439,7 @@ object TextAnalysis {
 
   /** Pre-sort gate frame, memoized — see [[repetitionFrame]]. */
   private[graft] def entropyFrame(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "ent_gate")(entropyFrameBuild(spark, dir))
+    FrameMemo.shared(spark, dir, "ent_gate")(entropyFrameBuild(spark, dir))
 
   /** Un-memoized builder — PlanSpec budgets ITS exchanges (the memoized
     * frame reads back as a checkpoint scan and would hide the shape). */

@@ -296,4 +296,20 @@ class DocDedupSpec extends SparkSpecBase {
     val (lvl0, _) = DocDedup.chosenSimhashLevelByRecall(spark, Sf0001, 0L, 1L)
     assert(lvl0 === 3)
   }
+
+  test("governor on an empty corpus: the plan and the driver both pick level 3") {
+    // sf0.001 tables with a 0-row documents table: no ladder level has
+    // any mass, so the pick is the level-3 floor (as the DuckDB twins say)
+    val dir = java.nio.file.Files.createTempDirectory("graft-empty-docs")
+    new java.io.File(Sf0001).listFiles()
+      .filter(f => f.getName.endsWith(".parquet") && f.getName != "documents.parquet")
+      .foreach(f => java.nio.file.Files.createSymbolicLink(dir.resolve(f.getName), f.toPath))
+    spark.read.parquet(s"$Sf0001/documents.parquet").limit(0)
+      .write.parquet(dir.resolve("documents.parquet").toString)
+    val d = dir.toString
+    val rows = DocDedup.governorRecall(spark, d).collect()
+    assert(rows.filter(_.getAs[Int]("chosen") == 1).map(_.getAs[Int]("lvl")).toSeq
+      === Seq(3))
+    assert(DocDedup.chosenSimhashLevel(spark, d) === 3)
+  }
 }

@@ -122,18 +122,21 @@ class ExactMoneySpec extends SparkSpecBase {
   }
 
   test("money_cents matches the cast on the real fixture money columns") {
-    // end-to-end over actual parquet values, not just generated shapes
-    val li = Tables.lineitem(spark, Sf0001)
-    Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax").foreach { c =>
-      val bad = li.where(
-        money_cents(col(c)) =!=
-          (col(c).cast(DecimalType(18, 2)) * 100).cast(LongType)).count()
-      assert(bad == 0L, s"$c: $bad mismatching rows")
+    // end-to-end over actual parquet values, not just generated shapes,
+    // at every fixture tier (value ranges widen with the scale factor)
+    Seq(Sf0001, "/root/testdata/sf0.01", "/root/testdata/sf0.1").foreach { dir =>
+      val li = Tables.lineitem(spark, dir)
+      Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax").foreach { c =>
+        val bad = li.where(
+          money_cents(col(c)) =!=
+            (col(c).cast(DecimalType(18, 2)) * 100).cast(LongType)).count()
+        assert(bad == 0L, s"$dir $c: $bad mismatching rows")
+      }
+      val cust = Tables.customer(spark, dir)
+      val badBal = cust.where(
+        money_cents($"c_acctbal") =!=
+          ($"c_acctbal".cast(DecimalType(18, 2)) * 100).cast(LongType)).count()
+      assert(badBal == 0L, s"$dir c_acctbal: $badBal mismatching rows")
     }
-    val cust = Tables.customer(spark, Sf0001)
-    val badBal = cust.where(
-      money_cents($"c_acctbal") =!=
-        ($"c_acctbal".cast(DecimalType(18, 2)) * 100).cast(LongType)).count()
-    assert(badBal == 0L, s"c_acctbal: $badBal mismatching rows")
   }
 }

@@ -46,7 +46,7 @@ class FrameMemoSpec extends SparkSpecBase {
     assert(m.size === 0 && m.dirCount === 0)
   }
 
-  test("3-dir session WITHOUT clearMemo: the evicted dir's checkpoint " +
+  test("3-dir session without clear(): the evicted dir's checkpoint " +
     "RDDs are unpersisted on eviction (no pinned blocks left behind)") {
     val sc = spark.sparkContext
     val m = new FrameMemo(maxDirs = 2)
@@ -79,37 +79,45 @@ class FrameMemoSpec extends SparkSpecBase {
       "clear() must unpersist everything it held")
   }
 
-  test("stress: 8 concurrent builders × 4 dirs through constant eviction — " +
-    "no evicted-frame use, no leaked checkpoint RDDs") {
+  test("stress: 8 concurrent workers on one dir and key (Verify's pool " +
+    "shape) — right counts, one survivor, losing builds released") {
     val sc = spark.sparkContext
     val baseline = sc.getPersistentRDDs.keySet.toSet
     val m = new FrameMemo(maxDirs = 2)
-    val dirs = Vector("cA", "cB", "cC", "cD")
+    // every built frame stays referenced here, so only an explicit
+    // release (never a GC-driven cleanup) can unpersist a losing build
+    val built = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.DataFrame]()
+    val start = new java.util.concurrent.CountDownLatch(1)
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val threads = (0 until 8).map { t =>
+    val threads = (0 until 8).map { _ =>
       new Thread(() => {
         try {
-          val rnd = new scala.util.Random(t) // deterministic per thread
-          for (_ <- 0 until 20) {
-            val dir = dirs(rnd.nextInt(dirs.length))
+          start.await() // release every worker at once: the first
+          // request races, so several threads build and all but one lose
+          for (_ <- 0 until 5) {
             // EAGER checkpoint in the build — the dangerous class: a
-            // losing double-build or an unpinned eviction would leak or
-            // kill blocks mid-count
-            val n = m.withFrame(spark, dir, "k") {
-              spark.range(2000).select(($"id" + dir.length).as("v"))
+            // losing build that is not released pins its blocks forever
+            val n = m.raw(spark, "cA", "k") {
+              val df = spark.range(2000).select(($"id" * 3).as("v"))
                 .toDF().localCheckpoint(true)
-            } { df => df.count() }
-            if (n != 2000L) throw new AssertionError(s"$dir count=$n")
+              built.add(df); df
+            }.count()
+            if (n != 2000L) throw new AssertionError(s"count=$n")
           }
         } catch { case e: Throwable => errs.add(e) }
       })
     }
-    threads.foreach(_.start()); threads.foreach(_.join())
+    threads.foreach(_.start()); start.countDown(); threads.foreach(_.join())
     assert(errs.isEmpty, s"concurrent use failed: ${errs.peek()}")
+    assert(m.size === 1 && m.dirCount === 1, "exactly one entry survives")
+    val live = sc.getPersistentRDDs.keySet.toSet -- baseline
+    assert(live.size === 1,
+      s"${built.size} builds left ${live.size} checkpoint RDDs, not the winner's one")
     m.clear()
     val leaked = sc.getPersistentRDDs.keySet.toSet -- baseline
     assert(leaked.isEmpty,
       s"checkpoint RDDs leaked after clear(): ${leaked.toSeq.sorted}")
+    assert(!built.isEmpty) // keeps every build referenced up to here
   }
 
   test("an evicted dir is rebuilt (not resurrected) on re-request") {
@@ -124,5 +132,14 @@ class FrameMemoSpec extends SparkSpecBase {
     // dx's frame was released with its blocks; the memo must hand back a
     // FRESH build, never the dead evicted frame
     assert(get("dx") === 1L && builds === 3)
+  }
+
+  test("a warm construction of lm_score and semantic_cell_profile runs " +
+    "no job (the shared memo hit the warm bench passes rely on)") {
+    Seq("lm_score", "semantic_cell_profile").foreach { q =>
+      SparkEntry.queries(q)(spark, Sf0001).collect()
+      val jobs = jobsDuring { SparkEntry.queries(q)(spark, Sf0001); () }
+      assert(jobs === 0, s"$q: $jobs jobs on a warm construction")
+    }
   }
 }

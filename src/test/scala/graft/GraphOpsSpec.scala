@@ -348,42 +348,16 @@ class GraphOpsSpec extends SparkSpecBase {
   }
 
   test("kcore: a peel wave costs at most two jobs") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val g = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
       (1L, 5L), (5L, 6L), (6L, 7L))
     val df = g.toDF("doc_a", "doc_b")
-    // job descriptions in listener order; sentinel jobs fence the call,
-    // because listener events arrive asynchronously but in order
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
+    for (k <- Seq(2, 3)) {
+      val jobs = jobsDuring { GraphOps.kcoreMembershipOf(spark, df, k).collect() }
+      val waves = peelWaves(g, k)
+      // c = 6: the vertex table's build and first kill read, the ordered
+      // collect (sample, shuffle, result), and one job of slack
+      assert(jobs <= 2 * waves + 6, s"k=$k: $jobs jobs for $waves waves")
     }
-    val sc = spark.sparkContext
-    def fence(tag: String): Unit = {
-      sc.setJobDescription(tag)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.contains(tag) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.contains(tag), s"listener never saw the $tag job")
-    }
-    sc.addSparkListener(listener)
-    try {
-      for (k <- Seq(2, 3)) {
-        seen.clear()
-        fence("kcore-start")
-        GraphOps.kcoreMembershipOf(spark, df, k).collect()
-        fence("kcore-end")
-        val all = seen.toArray(Array.empty[String]).toSeq
-        val jobs = all.indexOf("kcore-end") - all.indexOf("kcore-start") - 1
-        val waves = peelWaves(g, k)
-        // c = 6: the vertex table's build and first kill read, the ordered
-        // collect (sample, shuffle, result), and one job of slack
-        assert(jobs <= 2 * waves + 6, s"k=$k: $jobs jobs for $waves waves")
-      }
-    } finally sc.removeSparkListener(listener)
   }
 
   test("kcore matches the scalar reference on seeded random graphs") {

@@ -33,4 +33,33 @@ trait SparkSpecBase extends AnyFunSuite {
   }
 
   val Sf0001 = "/root/testdata/sf0.001"
+
+  /** Number of Spark jobs `body` starts. Sentinel jobs fence the call,
+    * because listener events arrive asynchronously but in order. */
+  def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    def fence(tag: String): Unit = {
+      sc.setJobDescription(tag)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.contains(tag) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(tag), s"listener never saw the $tag job")
+    }
+    sc.addSparkListener(listener)
+    try {
+      fence("jobs-start")
+      body
+      fence("jobs-end")
+      val all = seen.toArray(Array.empty[String]).toSeq
+      all.indexOf("jobs-end") - all.indexOf("jobs-start") - 1
+    } finally sc.removeSparkListener(listener)
+  }
 }
