@@ -21,6 +21,12 @@ object Tables {
     * reading of the same naive value), or already a zoned TIMESTAMP. Normalize
     * all three to session-UTC TimestampType so every downstream operator and
     * oracle sees identical µs instants.
+    *
+    * Side effect: this read sets `spark.sql.legacy.parquet.nanosAsLong=true`
+    * for the WHOLE session, so every later parquet read in it also maps
+    * TIMESTAMP(NANOS) to long. Spark 4.1's parquet reader has no per-read
+    * option for this (its read options are only mergeSchema, compression,
+    * datetimeRebaseMode and int96RebaseMode), so the flag is session state.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

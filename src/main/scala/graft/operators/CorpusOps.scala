@@ -236,7 +236,8 @@ object CorpusOps {
     * `Window.partitionBy(lang)` would funnel each language's entire
     * corpus through one task at 100 TB. Instead ONE
     * [[Scale.withGlobalRank]] over the composite total order
-    * (lang, score desc, doc_id) ranks everything distributed; per-lang
+    * (lang, score desc, doc_id) ranks everything distributed in one plan
+    * (broadcast per-partition offsets, no driver collect); per-lang
     * ranks fall out by subtracting each language's first global rank
     * (a |langs|-row bounded agg, broadcast back), and the tercile is
     * exact integer math `((rk−rk0)·3) div n_lang` — no ntile, no divided
@@ -246,8 +247,7 @@ object CorpusOps {
     val scored = lmFrame(spark, dir)
       .join(Tables.documents(spark, dir).select($"doc_id", $"lang"), "doc_id")
       .select($"doc_id", $"lang", $"n_bigrams", $"avg_logprob_u20")
-    // single-plan rank: no checkpoint/collect round-trips (guide §1.2)
-    val ranked = Scale.withGlobalRankPlan(scored, "rk", "_n",
+    val ranked = Scale.withGlobalRank(scored, "rk", "_n",
       Seq($"lang", $"avg_logprob_u20".desc, $"doc_id")).drop("_n")
     val offs = ranked.groupBy($"lang")
       .agg(min($"rk").as("rk0"), count(lit(1)).as("n_lang"))
@@ -1162,9 +1162,11 @@ object CorpusOps {
     * global easy→hard order (difficulty proxy: `n_chars`, the classic
     * length curriculum) cut into `phases` equal training phases. The
     * global order comes from [[Scale.withGlobalRank]] (range partitions
-    * + bounded offsets — ordering 100 TB of documents is exactly the
-    * workload a single-task `row_number` window dies on) and the phase
-    * cut from [[Scale.ntileFromRank]], bit-identical to SQL `ntile`.
+    * + broadcast per-partition offsets in one plan, no driver collect —
+    * ordering 100 TB of documents is exactly the workload a single-task
+    * `row_number` window dies on) and the phase cut from
+    * [[Scale.ntileFromRank]] over the rank plan's total-count column,
+    * bit-identical to SQL `ntile`.
     * Emits the per-phase manifest (doc counts, char mass, length band)
     * a training scheduler consumes; the ranked frame itself is what
     * you'd hand to the shard writer. */
@@ -1172,11 +1174,10 @@ object CorpusOps {
       phases: Int = 8): DataFrame = {
     import spark.implicits._
     val docs = Tables.documents(spark, dir).select($"doc_id", $"n_chars")
-    // single-plan rank: no checkpoint/collect round-trips (guide §1.2)
-    val ranked = Scale.withGlobalRankPlan(docs, "rk", "_n",
+    val ranked = Scale.withGlobalRank(docs, "rk", "_n",
       Seq($"n_chars", $"doc_id"))
     ranked
-      .withColumn("phase", Scale.ntileFromRankCol($"rk", $"_n", phases))
+      .withColumn("phase", Scale.ntileFromRank($"rk", $"_n", phases))
       .groupBy($"phase")
       .agg(count(lit(1)).as("n_docs"), sum($"n_chars").as("sum_chars"),
         min($"n_chars").as("min_chars"), max($"n_chars").as("max_chars"))

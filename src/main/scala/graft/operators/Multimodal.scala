@@ -148,18 +148,6 @@ object Multimodal {
     }
   }
 
-  /** `documents` rows shaped as media records: text bytes standing in for
-    * the opaque payload, (lang, source) as typed metadata. */
-  def mediaRecords(spark: SparkSession, dir: String): Dataset[MediaRecord] = {
-    import spark.implicits._
-    Tables.documents(spark, dir)
-      .select(
-        $"doc_id",
-        $"text".cast(BinaryType).as("payload"),
-        map(lit("lang"), $"lang", lit("source"), $"source").as("meta"))
-      .as[MediaRecord]
-  }
-
   /** Synthetic PPM payloads spliced from `doc_id` (the `pii_scrub`
     * injection pattern — the corpus carries no real images, the splice
     * makes the decode verifiable): a P6 header with

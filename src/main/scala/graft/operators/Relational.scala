@@ -1733,13 +1733,14 @@ object Relational {
     * pipeline runs between snapshots before trusting a model's inputs.
     * Computed exactly: per-value counts per side (one shuffle), then the
     * global CDF cumulative via [[Scale.withGlobalCumsum]] — range-
-    * partitioned per-partition running sums plus numParts-row prefix
-    * offsets, NOT an unpartitioned window: `value` is a continuous
-    * column, so its distinct grid grows with the data (≈ row count on
-    * real continuous data) and a single-task cumulative sort would be
-    * the classic 100 TB scale-killer. Every CDF difference is quantized
-    * to 2^-20 fixed point BEFORE the argmax so the winning value is
-    * engine-exact (ties break to the smallest value). */
+    * partitioned per-partition running sums plus broadcast prefix
+    * offsets in the same plan (no driver collect), NOT an unpartitioned
+    * window: `value` is a continuous column, so its distinct grid grows
+    * with the data (≈ row count on real continuous data) and a
+    * single-task cumulative sort would be the classic 100 TB scale-killer.
+    * Every CDF difference is quantized to 2^-20 fixed point BEFORE the
+    * argmax so the winning value is engine-exact (ties break to the
+    * smallest value). */
   def ksDrift(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val ev = Tables.events(spark, dir)
@@ -1755,7 +1756,7 @@ object Relational {
     val totals = ev.agg(
       sum(($"event_type" === "purchase").cast(LongType)).as("na"),
       sum(($"event_type" === "view").cast(LongType)).as("nb"))
-    Scale.withGlobalCumsumPlan(perValue, Seq($"value"),
+    Scale.withGlobalCumsum(perValue, Seq($"value"),
       Seq("ca" -> "cuma", "cb" -> "cumb"))
       .select($"value", $"cuma", $"cumb")
       .crossJoin(broadcast(totals))
@@ -2215,17 +2216,17 @@ object Relational {
     * advisor reports how many events satisfy
     * (max event time seen STRICTLY before it in arrival order) − its
     * own event time > D. The global running max over arrival order is
-    * [[Scale.withGlobalPrefixMax]] — range-partitioned, never a
-    * single-task window — and all five delays come from ONE conditional
-    * aggregate over that frame, melted by `stack` on the single result
-    * row (no per-delay fan-out of the scan). Integer µs throughout;
-    * permille by truncating div. */
+    * [[Scale.withGlobalPrefixMax]] — range-partitioned with broadcast
+    * per-partition offsets, never a single-task window — and all five
+    * delays come from ONE conditional aggregate over that frame, melted
+    * by `stack` on the single result row (no per-delay fan-out of the
+    * scan). Integer µs throughout; permille by truncating div. */
   def watermarkAdvisor(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val delaysS = Seq(0L, 60L, 300L, 900L, 3600L)
     val ev = Tables.events(spark, dir)
       .select($"event_id", unix_micros($"ts").as("us"))
-    val late = Scale.withGlobalPrefixMaxPlan(ev, Seq($"event_id"), "us", "pm")
+    val late = Scale.withGlobalPrefixMax(ev, Seq($"event_id"), "us", "pm")
       // first arrival has an empty strict prefix (the MinValue identity)
       // and can never be late
       .select(when($"pm" === Long.MinValue, 0L)
@@ -2380,22 +2381,22 @@ object Relational {
     * total order revenue, cut into deciles, with each decile's revenue
     * share and the cumulative share (the 80/20 read). The decile cut is
     * DISTRIBUTED: `Scale.withGlobalRank` range-partitions the
-    * per-customer aggregate on the revenue order and adds bounded
-    * per-partition offsets — no single-partition `ntile` window ever
-    * runs, so the plan survives billions of customers. Shares are double
-    * divisions of exact decimals; rank ties break by custkey so the
-    * decile assignment is total-ordered on any data; the 10-row
+    * per-customer aggregate on the revenue order and adds per-partition
+    * offsets broadcast in the same plan (no driver collect) — no
+    * single-partition `ntile` window ever runs, so the plan survives
+    * billions of customers. Shares are double divisions of exact
+    * decimals; rank ties break by custkey so the decile assignment is
+    * total-ordered on any data; the 10-row
     * cumulative window is grid-sized by construction. */
   def paretoShare(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val perCust = Tables.orders(spark, dir)
       .groupBy($"o_custkey")
       .agg(sum(money_dec2($"o_totalprice")).as("rev"))
-    // single-plan rank: no checkpoint/collect round-trips (guide §1.2)
-    val ranked = Scale.withGlobalRankPlan(perCust, "_rn", "_n",
+    val ranked = Scale.withGlobalRank(perCust, "_rn", "_n",
       Seq($"rev".desc, $"o_custkey"))
     val deciled = ranked
-      .withColumn("decile", Scale.ntileFromRankCol($"_rn", $"_n", 10))
+      .withColumn("decile", Scale.ntileFromRank($"_rn", $"_n", 10))
       .groupBy($"decile")
       .agg(count(lit(1)).as("n_customers"), sum($"rev").as("dec_rev"))
     val total = deciled.agg(sum($"dec_rev").as("total_rev"))
@@ -2445,8 +2446,9 @@ object Relational {
     * over the per-customer AGGREGATE, never raw orders; ties break by
     * custkey so scores are total-ordered on any data), rolled up to the
     * ≤125 (r,f,m) segments. All three quintile cuts run DISTRIBUTED via
-    * `Scale.withGlobalRank` + `ntileFromRank` (range partitions + bounded
-    * offsets) — no single-partition window anywhere in the plan. */
+    * `Scale.withGlobalRank` + `ntileFromRank` (range partitions +
+    * broadcast per-partition offsets, no driver collect) — no
+    * single-partition window anywhere in the plan. */
   def rfmSegments(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val day = expr("unix_micros(cast(o_orderdate as timestamp)) div 86400000000")
@@ -2457,15 +2459,12 @@ object Relational {
     val anchor = per.agg(max($"last_day").as("anchor"))
     val base = per.crossJoin(broadcast(anchor))
       .withColumn("recency_days", $"anchor" - $"last_day")
-    // single-plan ranks (guide §1.2/§2.4): the checkpoint+collect form
-    // paid 3×(materialize + collect) sequential driver round-trips; the
-    // rank-plan chain is ONE lazy plan whose shared exchanges AQE
-    // materializes once each, and the ntile total-count comes from the
-    // helper's n column instead of a driver literal
+    // the three ranks chain into ONE lazy plan with no driver round trip;
+    // each ntile reads its total count from the rank's n column
     def score(df: DataFrame, rank: String, out: String,
         sort: Seq[Column]): DataFrame =
-      Scale.withGlobalRankPlan(df, rank, "_n", sort)
-        .withColumn(out, Scale.ntileFromRankCol(col(rank), $"_n", 5))
+      Scale.withGlobalRank(df, rank, "_n", sort)
+        .withColumn(out, Scale.ntileFromRank(col(rank), $"_n", 5))
         .drop(rank, "_n")
     val r1 = score(base, "_rrk", "r_score", Seq($"recency_days", $"o_custkey"))
     val r2 = score(r1, "_frk", "f_score", Seq($"frequency".desc, $"o_custkey"))
@@ -2636,17 +2635,16 @@ object Relational {
     * numerator is PURE integer arithmetic (rank ties broken by custkey ⇒
     * total order on any data), and the single division at the end is one
     * correctly-rounded double op — bit-stable cross-engine. The rank is
-    * DISTRIBUTED (`Scale.withGlobalRank`: range partitions + bounded
-    * offsets) over |customers| aggregate rows, never raw orders — no
-    * single-partition window. */
+    * DISTRIBUTED (`Scale.withGlobalRank`: range partitions + broadcast
+    * per-partition offsets, no driver collect) over |customers|
+    * aggregate rows, never raw orders — no single-partition window. */
   def giniRevenue(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val per = Tables.orders(spark, dir)
       .groupBy($"o_custkey")
       .agg(sum(money_cents($"o_totalprice")).as("cents"))
     val n1 = per.agg(count(lit(1)).as("n"), sum($"cents").as("total_cents"))
-    // single-plan rank: no checkpoint/collect round-trips (guide §1.2)
-    val ranked = Scale.withGlobalRankPlan(per, "i", "_gn",
+    val ranked = Scale.withGlobalRank(per, "i", "_gn",
       Seq($"cents", $"o_custkey")).drop("_gn")
     ranked
       .crossJoin(broadcast(n1))
@@ -2773,8 +2771,9 @@ object Relational {
     * (approx_percentile trades exactness for mergeability; billing and
     * SLA cuts sometimes need the true value). Fully distributed: the
     * global rank comes from [[Scale.withGlobalRank]] (range partitions +
-    * bounded offsets — never a single-task sort), the four target ranks
-    * are integer arithmetic on the returned total count, and one tiny
+    * broadcast per-partition offsets in one plan — never a single-task
+    * sort, no driver collect), the four target ranks are integer column
+    * arithmetic on the rank plan's total-count column, and one tiny
     * conditional aggregate picks the ranked values. Prices are exact
     * decimal cents; the median over an even count is reported as the
     * INTEGER sum of the two middle values (median_x2_cents) so no
@@ -2792,13 +2791,9 @@ object Relational {
   private[graft] def exactMedianOfCents(
       spark: SparkSession, cents: DataFrame): DataFrame = {
     import spark.implicits._
-    // single-plan rank (guide §1.2/§2.4): the old checkpoint+collect rank
-    // cost 2 extra sequential jobs plus a second full exchange of the
-    // 600k-row frame (the checkpoint boundary loses its partitioning, so
-    // the rank window re-shuffled by pid); the quartile target ranks are
-    // now COLUMN arithmetic over the rank plan's n column instead of
-    // driver literals
-    val ranked = Scale.withGlobalRankPlan(cents, "rk", "_n",
+    // the quartile target ranks are COLUMN arithmetic over the rank
+    // plan's n column, so no driver literal is needed
+    val ranked = Scale.withGlobalRank(cents, "rk", "_n",
       Seq($"cents", $"l_orderkey", $"l_linenumber"))
     val r25   = expr("(_n + 3) div 4")
     val r50lo = expr("(_n + 1) div 2")
@@ -2864,9 +2859,10 @@ object Relational {
     * |d| ≤ total·n_days stays far under 2^63 at fixture scale; re-center
     * per shard before applying at 100 TB-year spans). Both prefix
     * passes are DISTRIBUTED: [[Scale.withGlobalCumsum]] for cum and
-    * [[Scale.withGlobalPrefixMax]] on −cum for the strict prefix min —
-    * no unpartitioned window even though the day grid is
-    * calendar-bounded, so the same code survives a per-minute grid.
+    * [[Scale.withGlobalPrefixMax]] on −cum for the strict prefix min
+    * (broadcast per-partition offsets, no driver collect) — no
+    * unpartitioned window even though the day grid is calendar-bounded,
+    * so the same code survives a per-minute grid.
     * Missing days count as zero revenue (a dark day IS drift). Output:
     * the 10 highest-alarm days. */
   def cusumChangepoint(spark: SparkSession, dir: String): DataFrame = {
@@ -2887,9 +2883,9 @@ object Relational {
     val totals = daily.agg(count(lit(1)).as("n_days"), sum($"x").as("total"))
     val drift = daily.crossJoin(broadcast(totals))
       .select($"day", $"x", ($"x" * $"n_days" - $"total").as("d"))
-    val cum = Scale.withGlobalCumsumPlan(drift, Seq($"day"), Seq("d" -> "cum"))
+    val cum = Scale.withGlobalCumsum(drift, Seq($"day"), Seq("d" -> "cum"))
       .withColumn("neg_cum", -$"cum")
-    val withPm = Scale.withGlobalPrefixMaxPlan(cum, Seq($"day"), "neg_cum", "pm")
+    val withPm = Scale.withGlobalPrefixMax(cum, Seq($"day"), "neg_cum", "pm")
     withPm
       // min(0, min_{j<t} cum_j) = −max(0, max_{j<t} −cum_j); the max
       // identity (Long.MinValue on the first day) clamps to 0 safely

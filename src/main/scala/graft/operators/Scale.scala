@@ -501,8 +501,10 @@ object Scale {
     * would be balanced BEFORE shuffling 100 TB (a skewed key shows up
     * here as a fat bucket, and you fix the sample rate or go to more
     * partitions). Sample is md5-deterministic so the boundaries — not
-    * just their quality — are oracled; the 7 collected boundary values
-    * are a bounded driver literal, same class as the IVF codebook. */
+    * just their quality — are oracled. The sample is ranked in one plan
+    * by [[withGlobalRank]] (broadcast per-partition offsets, no driver
+    * collect), so the only driver read is the 7 boundary rows — a
+    * bounded driver literal, same class as the IVF codebook. */
   def rangeBounds(spark: SparkSession, dir: String, parts: Int = 8): DataFrame = {
     import spark.implicits._
     import graft.operators.TextAnalysis.md5Long60
@@ -518,14 +520,11 @@ object Scale {
     // Rank the sample DISTRIBUTED via withGlobalRank — a 2% sample of a
     // 100 TB fact is still far too big for an unpartitioned row_number
     // window (the exact single-task failure this planner exists to
-    // prevent); the rank pass costs one range exchange + a numParts-row
-    // offset collect, and n falls out of the same pass.
-    // single-plan rank (guide §1.2): the boundary RANKS are column
-    // predicates over the rank plan's n column, so the whole boundary
-    // extraction is ONE collect job (vs checkpoint + counts collect +
-    // boundary collect before); n itself rides along on the collected
-    // boundary rows.
-    val ranked = withGlobalRankPlan(sample, "rk", "_n",
+    // prevent). The rank plan carries n as a column and its per-partition
+    // offsets as a broadcast frame, so the boundary RANKS are column
+    // predicates over it and the whole boundary extraction is one driver
+    // collect of at most parts − 1 rows; n rides along on those rows.
+    val ranked = withGlobalRank(sample, "rk", "_n",
       Seq($"l_orderkey", $"l_linenumber"))
     // rank of boundary i (1-based): ceil(i*n/parts) — integer arithmetic.
     // One boundary PER i (duplicates kept when the sample has n < parts
@@ -560,135 +559,10 @@ object Scale {
       .orderBy($"bucket")
   }
 
-  /** Exact integer division a div b for a non-negative LongType column
-    * and a positive literal divisor, built from double-safe primitives:
-    * `a - (a mod b)` is an exact multiple of b and both operands are
-    * exact doubles below 2^53, so the IEEE division returns the integer
-    * quotient EXACTLY (no float-truncation edge at partition-scale n). */
-  private def idiv(a: Column, b: Long): Column =
-    ((a - pmod(a, lit(b))) / lit(b)).cast(LongType)
-
-  /** Global `row_number()` over a TOTAL order WITHOUT the single-partition
+  /** Global `row_number()` over a TOTAL order without the single-partition
     * window (`Window.orderBy` with no partitionBy funnels every row
-    * through one task — the classic 100 TB scale-killer). Instead:
-    * range-repartition on the sort key (ordered partitions), rank WITHIN
-    * each partition, and add per-partition offsets computed from a
-    * numParts-row bounded collect (same class as `rangeBounds`'
-    * boundary literals). The frame is localCheckpoint'ed so the count
-    * pass and the rank pass see the identical materialized partitioning
-    * (swap for `checkpoint()` on a real cluster). Requires `sortCols` to
-    * be a total order (callers tie-break on a key column), which makes
-    * the result independent of where the range boundaries fall.
-    * Returns the frame with `rankCol` (1-based LongType) plus the total
-    * row count (for [[ntileFromRank]]). */
-  def withGlobalRank(df: DataFrame, rankCol: String, sortCols: Seq[Column],
-      numParts: Int = 32): (DataFrame, Long) = {
-    val parted = df.repartitionByRange(numParts, sortCols: _*)
-      .withColumn("_gr_pid", spark_partition_id())
-      .localCheckpoint()
-    val cnts: Array[(Int, Long)] = parted
-      .groupBy(col("_gr_pid")).agg(count(lit(1)).as("c"))
-      .orderBy(col("_gr_pid"))
-      .collect().map(r => (r.getInt(0), r.getLong(1)))
-    val n = cnts.map(_._2).sum
-    val offs = cnts.map(_._1).zip(cnts.map(_._2).scanLeft(0L)(_ + _))
-    val offExpr = offs.foldLeft(lit(0L)) { case (acc, (pid, off)) =>
-      when(col("_gr_pid") === pid, lit(off)).otherwise(acc)
-    }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("_gr_pid")).orderBy(sortCols: _*)
-    (parted
-      .withColumn(rankCol, row_number().over(w).cast(LongType) + offExpr)
-      .drop("_gr_pid"), n)
-  }
-
-  /** Global cumulative sums over a TOTAL order WITHOUT the single-task
-    * window — [[withGlobalRank]]'s trick applied to running sums:
-    * range-repartition on the sort key, cumulative-sum WITHIN each
-    * (ordered) partition, and add per-partition prefix totals computed
-    * from a numParts-row bounded collect. Exactly equal to
-    * `sum(col).over(Window.orderBy(sortCols))` but distributed — the
-    * fix for CDF/running-share queries whose value grid is data-sized
-    * (a continuous column's distinct grid ≈ its row count, so the
-    * "grid-sized window" premise fails and the unpartitioned window
-    * becomes the classic one-task sort at 100 TB).
-    *
-    * `sumCols` maps input LongType column → cumulative output column.
-    * `sortCols` must be a total order over df's rows (ties would make
-    * intermediate cumulative rows nondeterministic); callers aggregate
-    * to distinct keys first. localCheckpoint pins the partitioning the
-    * offsets were computed from (swap for `checkpoint()` on a cluster).
-    */
-  def withGlobalCumsum(df: DataFrame, sortCols: Seq[Column],
-      sumCols: Seq[(String, String)], numParts: Int = 32): DataFrame = {
-    val parted = df.repartitionByRange(numParts, sortCols: _*)
-      .withColumn("_gc_pid", spark_partition_id())
-      .localCheckpoint()
-    val aggs = sumCols.map { case (in, _) => sum(col(in)).as(in) }
-    val partRows = parted.groupBy(col("_gc_pid"))
-      .agg(aggs.head, aggs.tail: _*)
-      .orderBy(col("_gc_pid"))
-      .collect()
-    val pids = partRows.map(_.getInt(0))
-    val withCums = sumCols.zipWithIndex.foldLeft(parted) {
-      case (acc, ((in, out), i)) =>
-        val offs = pids.zip(
-          partRows.map(_.getLong(i + 1)).scanLeft(0L)(_ + _))
-        val offExpr = offs.foldLeft(lit(0L)) { case (e, (pid, off)) =>
-          when(col("_gc_pid") === pid, lit(off)).otherwise(e)
-        }
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("_gc_pid")).orderBy(sortCols: _*)
-          .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-            org.apache.spark.sql.expressions.Window.currentRow)
-        acc.withColumn(out, sum(col(in)).over(w) + offExpr)
-    }
-    withCums.drop("_gc_pid")
-  }
-
-  /** Global STRICT-prefix running max over a TOTAL order WITHOUT the
-    * single-task window — the [[withGlobalCumsum]] trick specialized to
-    * max: range-repartition on the sort key, take the running max over
-    * the rows STRICTLY BEFORE the current one within each (ordered)
-    * partition, and fold in the max of every preceding partition from a
-    * numParts-row bounded collect. `outCol` equals
-    * `max(maxCol).over(Window.orderBy(sortCols).rowsBetween(unboundedPreceding, -1))`
-    * with nulls replaced by Long.MinValue (the max identity, so the
-    * first row in the total order compares true against any value).
-    * The strict frame is what dominance scans need (see [[skyline2d]]):
-    * a row must never see its own value in the prefix. `sortCols` must
-    * be a total order over df's rows (callers aggregate to distinct keys
-    * first); `maxCol` must be LongType. */
-  def withGlobalPrefixMax(df: DataFrame, sortCols: Seq[Column],
-      maxCol: String, outCol: String, numParts: Int = 32): DataFrame = {
-    val parted = df.repartitionByRange(numParts, sortCols: _*)
-      .withColumn("_gm_pid", spark_partition_id())
-      .localCheckpoint()
-    val partMax: Array[(Int, Long)] = parted
-      .groupBy(col("_gm_pid")).agg(max(col(maxCol)).as("m"))
-      .orderBy(col("_gm_pid"))
-      .collect().map(r => (r.getInt(0), r.getLong(1)))
-    // prefix max over STRICTLY preceding partitions (identity MinValue)
-    val prefix = partMax.map(_._2).scanLeft(Long.MinValue)(math.max)
-    val offExpr = partMax.map(_._1).zip(prefix)
-      .foldLeft(lit(Long.MinValue)) { case (e, (pid, off)) =>
-        when(col("_gm_pid") === pid, lit(off)).otherwise(e)
-      }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("_gm_pid")).orderBy(sortCols: _*)
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    parted
-      .withColumn(outCol,
-        greatest(coalesce(max(col(maxCol)).over(w), lit(Long.MinValue)), offExpr))
-      .drop("_gm_pid")
-  }
-
-  /** Single-plan [[withGlobalRank]] — same global rank, ZERO driver
-    * round-trips (guide §1.2/§2.4: the checkpoint+collect form pays two
-    * extra sequential jobs and materializes the whole frame, then loses
-    * its partitioning at the checkpoint boundary so the rank window
-    * re-shuffles everything by pid a second time). Here everything is
-    * one lazy plan:
+    * through one task — the classic 100 TB scale-killer). One lazy plan,
+    * no driver round trip:
     *
     *  - range-repartition on the sort key (REPARTITION_BY_NUM origin —
     *    AQE never coalesces or skew-splits it, so partition ids are
@@ -704,17 +578,14 @@ object Scale {
     *  - broadcast-join A onto B on `mid >> 33 = pid`:
     *    rank = offset(pid) + (mid & mask) + 1.
     *
-    * Both branches read ONE eagerly-materialized range exchange (see the
-    * in-body note on why a checkpoint beats relying on ReuseExchange
-    * here). Requires `sortCols` to be a total
-    * order (callers tie-break on a key), which makes the rank independent
-    * of where the range boundaries fall — the same invariant
-    * [[withGlobalRank]] documents. Partitions must stay under 2^33 rows
-    * (the mid packing), which numParts sizing already guarantees at any
-    * realistic scale. Output: df's columns + `rankCol` (1-based LongType)
-    * + `nCol` (total row count on every row — the column form of the
-    * old API's returned `n`, for [[ntileFromRankCol]]). */
-  def withGlobalRankPlan(df: DataFrame, rankCol: String, nCol: String,
+    * Both branches read ONE lazily checkpointed range exchange (see the
+    * in-body note). Requires `sortCols` to be a total order (callers
+    * tie-break on a key), which makes the rank independent of where the
+    * range boundaries fall. A partition of 2^33 rows or more would
+    * overflow the mid packing, so it fails the query instead (raise
+    * numParts). Output: df's columns + `rankCol` (1-based LongType) +
+    * `nCol` (the total row count on every row, for [[ntileFromRank]]). */
+  def withGlobalRank(df: DataFrame, rankCol: String, nCol: String,
       sortCols: Seq[Column], numParts: Int = 32): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // The checkpoint (not a pure two-branch plan) is LOAD-BEARING for
@@ -726,8 +597,7 @@ object Scale {
     // columns and column pruning de-canonicalizes its copy (also
     // measured 1.4x slower from the double compute). With different
     // boundaries, branch A's offsets describe different pids than
-    // branch B's rows — silently wrong ranks (caught by the gate's
-    // AQE-off sweep on the cumsum sibling). The lazy checkpoint creates
+    // branch B's rows — silently wrong ranks. The lazy checkpoint creates
     // ONE shuffled RDD whose boundaries are sampled exactly once; both
     // branches read its blocks. (Swap for `checkpoint()` on a cluster.)
     requireFreshCols(df, Seq(rankCol, nCol, "_gr_pid", "_gr_mid"))
@@ -739,14 +609,14 @@ object Scale {
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     val offs = parted
       .groupBy(spark_partition_id().as("_gr_pid"))
-      // mid-packing overflow guard (ADVICE r13): rank correctness needs
-      // every partition under 2^33 rows ((pid << 33) | position). The
-      // counts are already on hand in this bounded frame, so the check
-      // is free — a violating partition fails loudly instead of
-      // silently corrupting ranks.
+      // mid-packing overflow guard: rank correctness needs every
+      // partition under 2^33 rows ((pid << 33) | position). The counts
+      // are already on hand in this bounded frame, so the check is free —
+      // a violating partition fails loudly instead of silently
+      // corrupting ranks.
       .agg(when(count(lit(1)) < (1L << 33), count(lit(1)))
         .otherwise(raise_error(concat(
-          lit("withGlobalRankPlan: partition exceeds 2^33 rows ("),
+          lit("withGlobalRank: partition exceeds 2^33 rows ("),
           count(lit(1)), lit(") — raise numParts")))).as("_gr_c"))
       .select(col("_gr_pid").cast(LongType).as("_gr_pid"),
         coalesce(sum(col("_gr_c")).over(wOff), lit(0L)).as("_gr_off"),
@@ -761,16 +631,22 @@ object Scale {
       .select(df.columns.map(col) ++ Seq(col(rankCol), col(nCol)): _*)
   }
 
-  /** Single-plan [[withGlobalCumsum]] — identical cumulative sums, zero
-    * driver round-trips: per-partition totals are exclusive-prefix-summed
-    * by a bounded ≤numParts-row window and broadcast-joined back instead
-    * of collected into CASE literals, and the shared range exchange
-    * replaces the localCheckpoint (ReuseExchange materializes it once
-    * for both the totals branch and the running-sum branch). The
-    * within-partition running sum still needs its window clustered by
-    * pid — that exchange carries only the (already aggregated) grid
-    * rows, same as before. */
-  def withGlobalCumsumPlan(df: DataFrame, sortCols: Seq[Column],
+  /** Global cumulative sums over a TOTAL order without the single-task
+    * window: range-repartition on the sort key, cumulative-sum WITHIN
+    * each (ordered) partition, and add per-partition prefix totals —
+    * exclusive-prefix-summed by a bounded ≤numParts-row window and
+    * broadcast-joined back, in the same plan (no driver collect).
+    * Exactly equal to `sum(col).over(Window.orderBy(sortCols))` but
+    * distributed — the fix for CDF/running-share queries whose value grid
+    * is data-sized (a continuous column's distinct grid ≈ its row count,
+    * so an unpartitioned window would be the one-task sort at 100 TB).
+    *
+    * `sumCols` maps input LongType column → cumulative output column.
+    * `sortCols` must be a total order over df's rows (ties would make
+    * intermediate cumulative rows nondeterministic); callers aggregate
+    * to distinct keys first. The within-partition running sum needs its
+    * window clustered by pid — that exchange carries only df's rows. */
+  def withGlobalCumsum(df: DataFrame, sortCols: Seq[Column],
       sumCols: Seq[(String, String)], numParts: Int = 32): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     requireFreshCols(df, "_gc_pid" +:
@@ -802,16 +678,25 @@ object Scale {
       sumCols.map { case (_, out) => col(out) }: _*)
   }
 
-  /** Single-plan [[withGlobalPrefixMax]] — identical strict-prefix max,
-    * zero driver round-trips (same construction as
-    * [[withGlobalCumsumPlan]], specialized to max with the
-    * Long.MinValue identity for the first partition / first row). */
-  def withGlobalPrefixMaxPlan(df: DataFrame, sortCols: Seq[Column],
+  /** Global STRICT-prefix running max over a TOTAL order without the
+    * single-task window — the [[withGlobalCumsum]] construction
+    * specialized to max: within each range partition, the running max
+    * over the rows STRICTLY BEFORE the current one, folded with the max
+    * of every preceding partition (a bounded ≤numParts-row window,
+    * broadcast-joined back in the same plan). `outCol` equals
+    * `max(maxCol).over(Window.orderBy(sortCols).rowsBetween(unboundedPreceding, -1))`
+    * with nulls replaced by Long.MinValue (the max identity, so the
+    * first row in the total order compares true against any value).
+    * The strict frame is what dominance scans need (see [[skyline2d]]):
+    * a row must never see its own value in the prefix. `sortCols` must
+    * be a total order over df's rows (callers aggregate to distinct keys
+    * first); `maxCol` must be LongType. */
+  def withGlobalPrefixMax(df: DataFrame, sortCols: Seq[Column],
       maxCol: String, outCol: String, numParts: Int = 32): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     requireFreshCols(df, Seq("_gm_pid", "_gm_off", outCol))
     // lazy checkpoint — same boundary-pinning argument as
-    // [[withGlobalCumsumPlan]] (one sampled pid space for both branches)
+    // [[withGlobalCumsum]] (one sampled pid space for both branches)
     val parted0 = df.repartitionByRange(numParts, sortCols: _*)
       .localCheckpoint(eager = false)
     val parted = parted0.withColumn("_gm_pid", spark_partition_id())
@@ -831,26 +716,28 @@ object Scale {
       .select(df.columns.map(col) :+ col(outCol): _*)
   }
 
-  /** [[ntileFromRank]] with the total count as a COLUMN (the
-    * [[withGlobalRankPlan]] `nCol` output) instead of a driver literal —
-    * same SQL-standard bucket arithmetic, fully lazy. */
-  def ntileFromRankCol(rank: Column, n: Column, k: Int): Column = {
-    val base   = idivc(n, lit(k.toLong))
+  /** SQL-standard `ntile(k)` recomputed from a global 1-based rank and
+    * the total row count `n` (both columns — the [[withGlobalRank]]
+    * outputs): the first `n mod k` buckets carry `n div k + 1` rows, the
+    * rest `n div k` — bit-identical to Spark's and DuckDB's `ntile`, but
+    * distributable because the rank needs no single-partition window. */
+  def ntileFromRank(rank: Column, n: Column, k: Int): Column = {
+    val base   = idiv(n, lit(k.toLong))
     val rem    = n - base * k
     val bigCut = rem * (base + 1L)
     val r0     = rank - 1L
-    when(r0 < bigCut, idivc(r0, base + 1L) + 1L)
-      .otherwise(rem + idivc(r0 - bigCut, greatest(base, lit(1L))) + 1L)
+    when(r0 < bigCut, idiv(r0, base + 1L) + 1L)
+      .otherwise(rem + idiv(r0 - bigCut, greatest(base, lit(1L))) + 1L)
       .cast(IntegerType)
   }
 
   /** Integer division for Column divisors (Column `/` is double
     * division); both operands must be non-negative longs here. */
-  private def idivc(a: Column, b: Column): Column =
+  private def idiv(a: Column, b: Column): Column =
     ((a - pmod(a, b)) / b).cast(LongType)
 
-  /** Entry guard for the plan helpers' internal/output column names
-    * (ADVICE r13): a caller frame already carrying one of these would be
+  /** Entry guard for the global-order helpers' internal/output column
+    * names: a caller frame already carrying one of these would be
     * silently clobbered by withColumn — fail loudly instead. */
   private def requireFreshCols(df: DataFrame, names: Seq[String]): Unit = {
     val clash = names.filter(df.columns.contains)
@@ -882,28 +769,13 @@ object Scale {
     // (any smaller size at the same price is dominated by it)
     val grid = p.groupBy($"p_retailprice")
       .agg(max($"p_size".cast(LongType)).as("g_size"))
-    val swept = withGlobalPrefixMaxPlan(grid, Seq($"p_retailprice"), "g_size", "pmax")
+    val swept = withGlobalPrefixMax(grid, Seq($"p_retailprice"), "g_size", "pmax")
     val frontier = swept.where($"g_size" > $"pmax")
       .select($"p_retailprice".as("f_price"), $"g_size")
     p.join(frontier,
         $"p_retailprice" === $"f_price" && $"p_size".cast(LongType) === $"g_size")
       .select($"p_partkey", $"p_name", $"p_retailprice", $"p_size")
       .orderBy($"p_retailprice", $"p_partkey")
-  }
-
-  /** SQL-standard `ntile(k)` recomputed from a global 1-based rank and
-    * the total row count: the first `n mod k` buckets carry
-    * `n div k + 1` rows, the rest `n div k` — bit-identical to Spark's
-    * and DuckDB's `ntile`, but distributable because the rank comes from
-    * [[withGlobalRank]] instead of a single-partition window. */
-  def ntileFromRank(rank: Column, n: Long, k: Int): Column = {
-    val base   = n / k
-    val rem    = n % k
-    val bigCut = rem * (base + 1)
-    val r0     = rank - 1L
-    when(r0 < bigCut, idiv(r0, base + 1) + 1L)
-      .otherwise(lit(rem) + idiv(r0 - lit(bigCut), math.max(base, 1L)) + 1L)
-      .cast(IntegerType)
   }
 
   /** Rendezvous (highest-random-weight) shard assignment for one id

@@ -191,12 +191,19 @@ class LogSinkWriterFactory(schema: StructType, maxRows: Long,
     new LogSinkWriter(schema, partitionId, maxRows, failCommits)
 }
 
-/** Executor-side buffering writer. Values are materialized out of the
-  * (reused) InternalRow immediately — buffering the row object itself
-  * would alias one mutable buffer N times. */
+/** Executor-side buffering writer. The input InternalRow is reused
+  * between `write` calls, and so are the buffers behind its array,
+  * struct and map values, so each value is detached when it is buffered:
+  * strings become `String`, nested values are copied (which fields need
+  * a copy is decided once from the schema), other flat values are
+  * immutable already. */
 class LogSinkWriter(schema: StructType, partitionId: Int, maxRows: Long,
     failCommits: Boolean) extends DataWriter[InternalRow] {
   private val fields = schema.fields
+  private val nested = fields.map(_.dataType match {
+    case _: ArrayType | _: StructType | _: MapType => true
+    case _ => false
+  })
   private val buf = Vector.newBuilder[Seq[Any]]
   private var n = 0L
 
@@ -204,6 +211,7 @@ class LogSinkWriter(schema: StructType, partitionId: Int, maxRows: Long,
     if (n < maxRows) buf += fields.indices.map { i =>
       row.get(i, fields(i).dataType) match {
         case s: org.apache.spark.unsafe.types.UTF8String => s.toString
+        case v if nested(i) => InternalRow.copyValue(v)
         case v => v
       }
     }

@@ -10,9 +10,9 @@ import org.apache.spark.sql.functions._
   * golang/chapter_4/pipelining/pipelining_producer_client.go:86-98, N=25;
   * golang/cmd/multi_event/main.go:13-20, fixed 2-event list). Spark-first
   * equivalents: `spark.range` (distributed, no driver materialization) with
-  * deterministic per-row expressions; the streaming twin is the `rate`
-  * source, whose rowsPerSecond plays the reference's 3-second produce
-  * cadence.
+  * deterministic per-row expressions; the streaming twin is the
+  * `graft-sales` micro-batch source ([[SalesTableProvider]]), whose
+  * per-batch admission limit plays the reference's fetch cycle.
   *
   * Scale note: `spark.range(n)` parallelizes across executors, so the same
   * generator that makes 10 rows in a test makes 10^11 rows for a load test
@@ -36,19 +36,6 @@ object SyntheticSources {
       element_at(Products, (col("id") % 7 % 5 + 1).cast("int")).as("product_name"),
       (col("id") % 10 + 1).cast("int").as("quantity"),
       round(col("id") % 997 * lit(0.37) + 1.0, 2).as("price"))
-
-  /** A1 streaming twin: unbounded transactions on the rate source; the
-    * reference's 10-records-every-3-s cadence ≈ rowsPerSecond=3. */
-  def productTransactionsStream(spark: SparkSession, rowsPerSecond: Int = 3): DataFrame = {
-    val rate = spark.readStream.format("rate")
-      .option("rowsPerSecond", rowsPerSecond).load()
-    rate.select(
-      col("timestamp"),
-      element_at(Customers, (col("value") % 5 + 1).cast("int")).as("customer_name"),
-      element_at(Products, (col("value") % 7 % 5 + 1).cast("int")).as("product_name"),
-      (col("value") % 10 + 1).cast("int").as("quantity"),
-      round(col("value") % 997 * lit(0.37) + 1.0, 2).as("price"))
-  }
 
   /** A3: the fixed multi-event list (`foo`→`{}`, `bar`→`{"name":"bar"}`). */
   def staticMultiEvents(spark: SparkSession): DataFrame = {

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamReader, DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamReader, DataStreamWriter, Trigger}
 import org.apache.spark.sql.types._
 
 import org.apache.spark.sql.Row
@@ -232,8 +232,6 @@ object StreamOps {
       .join(events.withWatermark("e_ts", watermark),
         expr("p_user = e_user AND e_ts > p_ts AND e_ts <= p_ts + INTERVAL 1 HOUR"))
 
-  /** A32 run-once mode: drain whatever is available, then stop — the
-    * AvailableNow trigger against any sink. */
   /** One micro-batch written idempotently: the output partition is keyed
     * by `batchId`, and dynamic partition overwrite replaces exactly that
     * directory. A replayed batch (crash between sink write and checkpoint
@@ -557,14 +555,6 @@ object StreamOps {
       }
       .toDF("doc_id", "content_md5", "keeper_doc_id", "is_duplicate")
   }
-
-  def runOnceToMemory(df: DataFrame, queryName: String, outputMode: String): StreamingQuery =
-    df.writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(outputMode)
-      .trigger(Trigger.AvailableNow())
-      .start()
 
   // ---- exactly-once foreachBatch folds ------------------------------
 

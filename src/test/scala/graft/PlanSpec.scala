@@ -603,9 +603,9 @@ class PlanSpec extends SparkSpecBase {
     // {A,N,R}, o_orderpriority 5 values, yr is 2 years by the filter.
     val allowBoundedGroupAgg: Map[String, (Set[String], String)] = Map(
       "lang_drift" -> (Set("lang", "source"), "lang/source generator enums"),
-      // round 13: the per-lang rank-offset frame (min rank + count per
-      // lang) was previously hidden behind withGlobalRank's checkpoint
-      // leaf; the single-plan rank exposes the full lineage to this walk
+      // the per-lang rank-offset frame (min rank + count per lang):
+      // withGlobalRank's rank is one plan (broadcast per-partition
+      // offsets, no collected literals), so this walk sees its lineage
       "perplexity_buckets" -> (Set("lang"), "lang generator enum"),
       "distinct_users_approx" -> (Set("event_type"), "5-value event enum"),
       "anomaly_zscore" -> (Set("event_type"), "5-value event enum"),
@@ -743,14 +743,14 @@ class PlanSpec extends SparkSpecBase {
 
   test("no declared query runs a window with an empty partition spec") {
     // A `Window.orderBy` without partitionBy funnels EVERY row through one
-    // task — the classic 100 TB scale-killer (the round-5 pareto/rfm/gini
-    // finding; those now rank via Scale.withGlobalRank). The allowlist
+    // task — the classic 100 TB scale-killer. pareto_share, rfm_segments,
+    // gini_revenue, exact_median, range_bounds and the rest rank through
+    // Scale.withGlobalRank; ks_drift and cusum_changepoint accumulate
+    // through Scale.withGlobalCumsum: one plan each, range partitions plus
+    // broadcast per-partition offsets, no driver collect. The allowlist
     // names the frames that are GRID-SIZED by construction — the window
     // input is a bounded aggregate (days, distinct grid values, top-k
     // arms, deciles), never O(input rows).
-    // (ks_drift and range_bounds were delisted in round 7: the CDF
-    // cumulative now runs through Scale.withGlobalCumsum and the sample
-    // ranking through Scale.withGlobalRank — the sweep enforces both.)
     val allowBounded = Set(
       "daily_revenue_ma7", // |days| rows
       "revenue_bridge",   // |days| rows (day-over-day lag)
@@ -769,7 +769,7 @@ class PlanSpec extends SparkSpecBase {
       "ann_ndcg",         // 8 probes × top-5
       "zipf_slope",       // top-1024 vocabulary head (orderBy.limit)
       "autocorr_daily")   // |days| rows (7 lead lags over the day series)
-    // Structural exemption (round 13): the withGlobal*Plan helpers'
+    // Structural exemption: the Scale global-order helpers'
     // per-partition offset windows run unpartitioned over a frame the
     // helper itself aggregated down to ≤numParts rows — grouped ONLY by
     // the helper-owned partition-id column (spark_partition_id aliased

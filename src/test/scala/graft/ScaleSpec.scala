@@ -286,21 +286,24 @@ class ScaleSpec extends SparkSpecBase {
   test("withGlobalRank == collect-sort rank for any partition count " +
     "(incl. empty range partitions); ntileFromRank == SQL-standard ntile") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{col, lit}
     val rnd = new scala.util.Random(0x5EED)
     // duplicate-heavy values force the tie-break columns to matter
     val data = (0L until 97L).map(id => (rnd.nextInt(12).toLong, id))
     val expect = data.sortBy { case (v, id) => (v, id) }
-      .zipWithIndex.map { case ((v, id), i) => (v, id, i + 1L) }
+      .zipWithIndex.map { case ((v, id), i) => (v, id, i + 1L, 97L) }
     for (parts <- Seq(1, 3, 8, 200)) { // 200 > n: some partitions empty
-      val (ranked, n) = graft.operators.Scale.withGlobalRank(
-        data.toDF("v", "id"), "rk", Seq(col("v"), col("id")), parts)
-      assert(n === 97L)
-      val got = ranked.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      val got = graft.operators.Scale.withGlobalRank(
+        data.toDF("v", "id"), "rk", "n", Seq(col("v"), col("id")), parts)
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
         .sortBy(t => (t._1, t._2))
-      assert(got === expect, s"rank diverged at numParts=$parts")
+      assert(got.toSeq === expect, s"rank diverged at numParts=$parts")
     }
+    // empty input: zero rows out, no exception
+    assert(graft.operators.Scale.withGlobalRank(
+      Seq.empty[(Long, Long)].toDF("v", "id"), "rk", "n",
+      Seq(col("v"), col("id")), 4).collect().isEmpty)
     // ntile reference: first n%k buckets take n/k+1 rows
     def ntileRef(rank: Long, n: Long, k: Int): Int = {
       val (base, rem) = (n / k, n % k)
@@ -310,7 +313,7 @@ class ScaleSpec extends SparkSpecBase {
     }
     for (n <- Seq(1L, 4L, 5L, 7L, 97L); k <- Seq(3, 5, 10)) {
       val got = spark.range(1, n + 1)
-        .select(graft.operators.Scale.ntileFromRank(col("id"), n, k).as("t"))
+        .select(graft.operators.Scale.ntileFromRank(col("id"), lit(n), k).as("t"))
         .collect().map(_.getInt(0))
       val want = (1L to n).map(r => ntileRef(r, n, k))
       assert(got.toSeq === want, s"ntile($k) over n=$n")
@@ -323,78 +326,9 @@ class ScaleSpec extends SparkSpecBase {
     }
   }
 
-  test("withGlobalRankPlan == withGlobalRank (single-plan twin): same " +
-    "rank and n for any partition count; ntileFromRankCol == ntileFromRank") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val rnd = new scala.util.Random(0x5EED)
-    val data = (0L until 97L).map(id => (rnd.nextInt(12).toLong, id))
-    val expect = data.sortBy { case (v, id) => (v, id) }
-      .zipWithIndex.map { case ((v, id), i) => (v, id, i + 1L, 97L) }
-    for (parts <- Seq(1, 3, 8, 200)) { // 200 > n: some partitions empty
-      val got = graft.operators.Scale.withGlobalRankPlan(
-        data.toDF("v", "id"), "rk", "n", Seq(col("v"), col("id")), parts)
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        .sortBy(t => (t._1, t._2))
-      assert(got.toSeq === expect, s"rank diverged at numParts=$parts")
-    }
-    // empty input: zero rows out (the old API's n=0 contract, column form)
-    assert(graft.operators.Scale.withGlobalRankPlan(
-      Seq.empty[(Long, Long)].toDF("v", "id"), "rk", "n",
-      Seq(col("v"), col("id")), 4).count() === 0L)
-    // ntileFromRankCol: column-n twin agrees with the literal-n form
-    for (n <- Seq(1L, 4L, 5L, 7L, 97L); k <- Seq(3, 5, 10)) {
-      val got = spark.range(1, n + 1)
-        .select(graft.operators.Scale.ntileFromRankCol(
-          col("id"), org.apache.spark.sql.functions.lit(n), k).as("t"))
-        .collect().map(_.getInt(0))
-      val want = spark.range(1, n + 1)
-        .select(graft.operators.Scale.ntileFromRank(col("id"), n, k).as("t"))
-        .collect().map(_.getInt(0))
-      assert(got.toSeq === want.toSeq, s"ntileFromRankCol($k) over n=$n")
-    }
-  }
-
-  test("withGlobalCumsumPlan / withGlobalPrefixMaxPlan == their " +
-    "collect-based twins for any partition count") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val rnd = new scala.util.Random(0xCADA)
-    val data = rnd.shuffle((0L until 83L).toList)
-      .map(k => (k, rnd.nextInt(100).toLong, rnd.nextInt(7).toLong - 3L))
-    val sorted = data.sortBy(_._1)
-    val expA = sorted.map(_._2).scanLeft(0L)(_ + _).tail
-    val expB = sorted.map(_._3).scanLeft(0L)(_ + _).tail
-    val expect = sorted.lazyZip(expA).lazyZip(expB)
-      .map { case ((k, a, b), ca, cb) => (k, a, b, ca, cb) }
-    for (parts <- Seq(1, 3, 8, 200)) {
-      val got = graft.operators.Scale.withGlobalCumsumPlan(
-        data.toDF("k", "a", "b"), Seq(col("k")),
-        Seq("a" -> "cum_a", "b" -> "cum_b"), parts)
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getLong(3), r.getLong(4)))
-        .sortBy(_._1)
-      assert(got.toSeq === expect, s"cumsumPlan diverged at numParts=$parts")
-    }
-    val pmData = rnd.shuffle((0L until 71L).toList)
-      .map(k => (k, rnd.nextLong() % 1000L))
-    val pmSorted = pmData.sortBy(_._1)
-    val pmExpect = pmSorted.map(_._2).scanLeft(Long.MinValue)(math.max)
-      .init.zip(pmSorted).map { case (pm, (k, v)) => (k, v, pm) }
-    for (parts <- Seq(1, 3, 8, 200)) {
-      val got = graft.operators.Scale.withGlobalPrefixMaxPlan(
-        pmData.toDF("k", "v"), Seq(col("k")), "v", "pmax", parts)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        .sortBy(_._1)
-      assert(got.toSeq === pmExpect, s"prefixMaxPlan diverged at numParts=$parts")
-    }
-  }
-
-  test("withGlobalCumsumPlan boundary pinning: correct when the range " +
-    "sampler SUBSAMPLES (large input, AQE off — the gate's sf0.1 sweep " +
-    "shape that caught the unpinned two-exchange form)") {
+  test("withGlobalCumsum / withGlobalPrefixMax boundary pinning: correct " +
+    "when the range sampler SUBSAMPLES (large input, AQE off — the gate's " +
+    "sf0.1 sweep shape that caught the unpinned two-exchange form)") {
     // A range exchange samples boundaries with an RDD-id-derived seed; two
     // unshared exchange instances can draw different boundaries when the
     // input is large enough that sampling actually subsamples (~100 rows
@@ -409,20 +343,20 @@ class ScaleSpec extends SparkSpecBase {
       val rnd = new scala.util.Random(0xB04D)
       val data = rnd.shuffle((0L until 20000L).toList).map(k => (k, k % 17))
       val expect = data.sortBy(_._1).map(_._2).scanLeft(0L)(_ + _).tail
-      val got = graft.operators.Scale.withGlobalCumsumPlan(
+      val got = graft.operators.Scale.withGlobalCumsum(
         data.toDF("k", "v"), Seq(col("k")), Seq("v" -> "cum"), 8)
         .orderBy(col("k")).select(col("cum"))
         .collect().map(_.getLong(0))
       assert(got.toSeq === expect,
-        "cumsumPlan diverged under subsampled range boundaries")
-      val gotPm = graft.operators.Scale.withGlobalPrefixMaxPlan(
+        "cumsum diverged under subsampled range boundaries")
+      val gotPm = graft.operators.Scale.withGlobalPrefixMax(
         data.toDF("k", "v"), Seq(col("k")), "v", "pm", 8)
         .orderBy(col("k")).select(col("pm"))
         .collect().map(_.getLong(0))
       val expPm = data.sortBy(_._1).map(_._2)
         .scanLeft(Long.MinValue)(math.max).init
       assert(gotPm.toSeq === expPm,
-        "prefixMaxPlan diverged under subsampled range boundaries")
+        "prefix max diverged under subsampled range boundaries")
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
   }
 
@@ -449,6 +383,10 @@ class ScaleSpec extends SparkSpecBase {
         .sortBy(_._1)
       assert(got.toSeq === expect, s"cumsum diverged at numParts=$parts")
     }
+    // empty input: zero rows out, no exception
+    assert(graft.operators.Scale.withGlobalCumsum(
+      Seq.empty[(Long, Long, Long)].toDF("k", "a", "b"), Seq(col("k")),
+      Seq("a" -> "cum_a", "b" -> "cum_b"), 4).collect().isEmpty)
   }
 
   test("withGlobalPrefixMax == unpartitioned STRICT prefix max for any " +
@@ -469,6 +407,10 @@ class ScaleSpec extends SparkSpecBase {
         .sortBy(_._1)
       assert(got.toSeq === expect, s"prefix max diverged at numParts=$parts")
     }
+    // empty input: zero rows out, no exception
+    assert(graft.operators.Scale.withGlobalPrefixMax(
+      Seq.empty[(Long, Long)].toDF("k", "v"), Seq(col("k")), "v", "pmax", 4)
+      .collect().isEmpty)
   }
 
   test("skyline2d survivors are exactly the undominated parts " +

@@ -346,6 +346,29 @@ class SourcesSpec extends SparkSpecBase {
     assert(st.rows.size === 5, "replayed commit must not duplicate rows")
   }
 
+  test("DSv2 sink: array, struct and map values are not views of the " +
+    "writer's reused input row") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.util.{ArrayData, MapData}
+    graft.sources.LogSink.clear("t-nested")
+    spark.range(0, 6, 1, 1)
+      .selectExpr("id", "array(id, 2 * id) AS a",
+        "named_struct('x', 10 * id, 's', concat('s', id)) AS st",
+        "map('k', id) AS m")
+      .write.format("graft-sink").option("name", "t-nested")
+      .mode("append").save()
+    val got = graft.sources.LogSink.get("t-nested").get.rows.map { r =>
+      val a = r(1).asInstanceOf[ArrayData]
+      val st = r(2).asInstanceOf[InternalRow]
+      val m = r(3).asInstanceOf[MapData]
+      (r(0), a.getLong(0), a.getLong(1), st.getLong(0),
+        st.getUTF8String(1).toString, m.keyArray().getUTF8String(0).toString,
+        m.valueArray().getLong(0))
+    }
+    assert(got.sortBy(_._1.asInstanceOf[Long]) ===
+      (0L until 6L).map(i => (i, i, 2 * i, 10 * i, s"s$i", "k", i)))
+  }
+
   test("E2/A19 exactly-once: commit crash mid-stream + restart from the " +
     "same checkpoint delivers every row exactly once (no dupes, no gaps)") {
     // The reference's whole pipelining chapter is commit-AFTER-process
