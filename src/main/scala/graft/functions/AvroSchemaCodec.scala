@@ -1,6 +1,5 @@
 package graft.functions
 
-import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets
 
 import scala.collection.mutable
@@ -15,6 +14,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData, MapData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.sources.SchemaCatalog
 
 /** Schema-driven Avro binary codec with reader/writer schema RESOLUTION —
   * the second half of the reference's Avro surface
@@ -36,12 +37,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * array, map, union, record (nested). Not supported: enum and fixed
   * (absent from the reference surface) — rejected at parse time.
   *
-  * The expressions are CodegenFallback (like [[RecordCodecs]]) but run
-  * COMPILED closure trees ([[compileEncoder]]/[[compileDecoder]]): schema
-  * parsing, resolution validation, Spark type mapping, record field
-  * actions, defaults, and union branch choice all happen once at plan
-  * time, never per row. The recursive `encode`/`decodeResolved`
-  * interpreters remain as the executable spec tests cross-check against.
+  * This is the one Avro binary codec: `avro_encode_schema` /
+  * `avro_decode_schema` run it over caller-given schemas, and
+  * `avro_record_encode` / `avro_record_decode` over the reference's
+  * registered avenger schema ([[recordEncode]] / [[recordDecode]]). The
+  * expressions are CodegenFallback but run COMPILED closure trees
+  * ([[compileEncoder]]/[[compileDecoder]]): schema parsing, resolution
+  * validation, Spark type mapping, record field actions, defaults, and
+  * union branch choice all happen once at plan time, never per row.
+  * Malformed payloads (see [[readZigZag]] and its neighbours) decode to
+  * null. The tests check both directions against Apache Avro.
   */
 object AvroSchemaCodec {
 
@@ -205,9 +210,20 @@ object AvroSchemaCodec {
     })
   }
 
-  // ---- decode (writer-schema driven, resolved into the reader shape) ----
+  // ---- payload reading: the primitives the compiled decoder runs on ----
+  //
+  // Every length, count and branch index comes from the payload, so each
+  // is checked against the bytes left before it is used: a negative
+  // length, a length past the end, a block count that cannot fit in the
+  // bytes left, an out-of-range union index or a varint longer than ten
+  // bytes makes the payload malformed (IllegalArgumentException, which
+  // the decode expression turns into null).
 
-  import RecordCodecs.readZigZag
+  /** Mutable decode position, shared by one payload's decoders. */
+  final class Cursor { var pos = 0 }
+
+  private def malformed(what: String): Nothing =
+    throw new IllegalArgumentException(s"malformed Avro payload: $what")
 
   private def readLe(buf: Array[Byte], pos: Int, n: Int): Long = {
     var v = 0L
@@ -216,228 +232,108 @@ object AvroSchemaCodec {
     v
   }
 
-  def decodeResolved(w: AvroType, r: AvroType, buf: Array[Byte], pos: Int): (Any, Int) =
-    (w, r) match {
-      case (ANull, ANull) => (null, pos)
-      case (ABoolean, ABoolean) => (buf(pos) != 0, pos + 1)
-      case (AInt | ALong, _) =>
-        val (v, p) = readZigZag(buf, pos)
-        r match {
-          case AInt => (v.toInt, p)
-          case ALong => (v, p)
-          case AFloat => (v.toFloat, p)
-          case ADouble => (v.toDouble, p)
-          case other => throw new IllegalArgumentException(s"cannot promote $w to $other")
-        }
-      case (AFloat, _) =>
-        val v = java.lang.Float.intBitsToFloat(readLe(buf, pos, 4).toInt)
-        r match {
-          case AFloat => (v, pos + 4)
-          case ADouble => (v.toDouble, pos + 4)
-          case other => throw new IllegalArgumentException(s"cannot promote float to $other")
-        }
-      case (ADouble, ADouble) =>
-        (java.lang.Double.longBitsToDouble(readLe(buf, pos, 8)), pos + 8)
-      case (AString | ABytes, _) =>
-        val (len, p) = readZigZag(buf, pos)
-        val end = p + len.toInt
-        r match {
-          case AString => (UTF8String.fromBytes(buf, p, len.toInt), end)
-          case ABytes => (java.util.Arrays.copyOfRange(buf, p, end), end)
-          case other => throw new IllegalArgumentException(s"cannot promote $w to $other")
-        }
-      case (AArray(wi), AArray(ri)) =>
-        val items = mutable.ArrayBuffer.empty[Any]
-        var p = pos
-        var more = true
-        while (more) {
-          val (count, p1) = readZigZag(buf, p)
-          p = p1
-          if (count == 0) more = false
-          else {
-            var n = count
-            if (n < 0) { val (_, p2) = readZigZag(buf, p); p = p2; n = -n }
-            var i = 0L
-            while (i < n) {
-              val (v, p3) = decodeResolved(wi, ri, buf, p)
-              items += v; p = p3; i += 1
-            }
-          }
-        }
-        (new GenericArrayData(items.toArray), p)
-      case (AMap(wv), AMap(rv)) =>
-        val keys = mutable.ArrayBuffer.empty[Any]
-        val vals = mutable.ArrayBuffer.empty[Any]
-        var p = pos
-        var more = true
-        while (more) {
-          val (count, p1) = readZigZag(buf, p)
-          p = p1
-          if (count == 0) more = false
-          else {
-            var n = count
-            if (n < 0) { val (_, p2) = readZigZag(buf, p); p = p2; n = -n }
-            var i = 0L
-            while (i < n) {
-              val (klen, pk) = readZigZag(buf, p)
-              keys += UTF8String.fromBytes(buf, pk, klen.toInt)
-              val (v, pv) = decodeResolved(wv, rv, buf, pk + klen.toInt)
-              vals += v; p = pv; i += 1
-            }
-          }
-        }
-        (ArrayBasedMapData(keys.toArray, vals.toArray), p)
-      case (AUnion(wbs), _) =>
-        val (idx, p) = readZigZag(buf, pos)
-        val branch = wbs(idx.toInt)
-        r match {
-          case AUnion(rbs) =>
-            val rb = rbs.find(b => canResolve(branch, b)).getOrElse(
-              throw new IllegalArgumentException(s"no reader branch for writer $branch"))
-            decodeResolved(branch, rb, buf, p)
-          case _ => decodeResolved(branch, r, buf, p)
-        }
-      case (_, AUnion(rbs)) =>
-        val rb = rbs.find(b => canResolve(w, b)).getOrElse(
-          throw new IllegalArgumentException(s"no reader branch for writer $w"))
-        decodeResolved(w, rb, buf, pos)
-      case (ARecord(_, wf), ARecord(_, rf)) =>
-        val values = new Array[Any](rf.length)
-        val readerIdx = rf.map(_.name).zipWithIndex.toMap
-        var p = pos
-        wf.foreach { f =>
-          readerIdx.get(f.name) match {
-            case Some(i) =>
-              val (v, p2) = decodeResolved(f.tpe, rf(i).tpe, buf, p)
-              values(i) = v; p = p2
-            case None => p = skip(f.tpe, buf, p)
-          }
-        }
-        val writerNames = wf.map(_.name).toSet
-        rf.zipWithIndex.foreach { case (f, i) =>
-          if (!writerNames.contains(f.name))
-            values(i) = f.default.map(defaultValue(f.tpe, _)).getOrElse(
-              throw new IllegalArgumentException(
-                s"reader field '${f.name}' absent from writer schema and has no default"))
-        }
-        (new GenericInternalRow(values), p)
-      case (a, b) =>
-        throw new IllegalArgumentException(s"cannot decode writer $a as reader $b")
+  /** Avro zigzag varint (int or long) at the cursor. */
+  def readZigZag(buf: Array[Byte], c: Cursor): Long = {
+    var x = 0L; var s = 0; var i = c.pos
+    while (s < 64) {
+      val b = buf(i) & 0xff
+      x |= (b & 0x7fL) << s
+      i += 1
+      if ((b & 0x80) == 0) { c.pos = i; return (x >>> 1) ^ -(x & 1) }
+      s += 7
     }
+    malformed("varint longer than 10 bytes")
+  }
+
+  /** Byte length of a string, bytes or map key: within the bytes left. */
+  private def readLength(buf: Array[Byte], c: Cursor): Int = {
+    val len = readZigZag(buf, c)
+    if (len < 0 || len > buf.length - c.pos) malformed(s"length $len at ${c.pos}")
+    len.toInt
+  }
+
+  private def readIndex(buf: Array[Byte], c: Cursor, branches: Int): Int = {
+    val i = readZigZag(buf, c)
+    if (i < 0 || i >= branches) malformed(s"union index $i of $branches")
+    i.toInt
+  }
+
+  /** Fewest bytes one value of writer type `t` takes (0 only for null and
+    * records of nulls, whose values take no bytes at all). */
+  private def minBytes(t: AvroType): Int = t match {
+    case ANull => 0
+    case AFloat => 4
+    case ADouble => 8
+    case ARecord(_, fs) => fs.map(f => minBytes(f.tpe)).sum
+    case _ => 1
+  }
+
+  /** Malformed unless `n` items of `itemBytes` or more each fit in the
+    * bytes left. */
+  private def checkCount(buf: Array[Byte], c: Cursor, n: Long, itemBytes: Int): Unit =
+    if (n < 0 || (itemBytes > 0 && n > (buf.length - c.pos) / itemBytes))
+      malformed(s"block of $n items at ${c.pos}")
+
+  /** Item count of the next array/map block, 0 at the end of the
+    * collection. A negative count is followed by the block's byte size,
+    * which only [[skip]] uses. */
+  private def readBlockCount(buf: Array[Byte], c: Cursor, itemBytes: Int): Long = {
+    var n = readZigZag(buf, c)
+    if (n < 0) { readZigZag(buf, c); n = -n }
+    checkCount(buf, c, n, itemBytes)
+    n
+  }
+
+  private def skipBytes(buf: Array[Byte], c: Cursor, n: Int): Unit = {
+    if (n > buf.length - c.pos) malformed(s"$n bytes past the end at ${c.pos}")
+    c.pos += n
+  }
 
   /** Advance past one value of writer type `t` without materializing it —
     * how writer-only fields are dropped. Negative array/map block counts
     * carry a byte size, letting whole blocks be jumped. */
-  def skip(t: AvroType, buf: Array[Byte], pos: Int): Int = t match {
-    case ANull => pos
-    case ABoolean => pos + 1
-    case AInt | ALong => readZigZag(buf, pos)._2
-    case AFloat => pos + 4
-    case ADouble => pos + 8
-    case AString | ABytes =>
-      val (len, p) = readZigZag(buf, pos)
-      p + len.toInt
-    case AArray(it) => skipBlocks(buf, pos, p => skip(it, buf, p))
-    case AMap(v) => skipBlocks(buf, pos, { p =>
-      val (klen, pk) = readZigZag(buf, p)
-      skip(v, buf, pk + klen.toInt)
+  def skip(t: AvroType, buf: Array[Byte], c: Cursor): Unit = t match {
+    case ANull => ()
+    case ABoolean => skipBytes(buf, c, 1)
+    case AInt | ALong => readZigZag(buf, c)
+    case AFloat => skipBytes(buf, c, 4)
+    case ADouble => skipBytes(buf, c, 8)
+    case AString | ABytes => skipBytes(buf, c, readLength(buf, c))
+    case AArray(it) => skipBlocks(buf, c, minBytes(it), () => skip(it, buf, c))
+    case AMap(v) => skipBlocks(buf, c, 1 + minBytes(v), { () =>
+      skipBytes(buf, c, readLength(buf, c))
+      skip(v, buf, c)
     })
-    case AUnion(bs) =>
-      val (idx, p) = readZigZag(buf, pos)
-      skip(bs(idx.toInt), buf, p)
-    case ARecord(_, fs) => fs.foldLeft(pos)((p, f) => skip(f.tpe, buf, p))
+    case AUnion(bs) => skip(bs(readIndex(buf, c, bs.length)), buf, c)
+    case ARecord(_, fs) => fs.foreach(f => skip(f.tpe, buf, c))
   }
 
-  private def skipBlocks(buf: Array[Byte], pos: Int, skipOne: Int => Int): Int = {
-    var p = pos
+  private def skipBlocks(buf: Array[Byte], c: Cursor, itemBytes: Int,
+      skipOne: () => Unit): Unit = {
     var more = true
     while (more) {
-      val (count, p1) = readZigZag(buf, p)
-      p = p1
+      val count = readZigZag(buf, c)
       if (count == 0) more = false
       else if (count < 0) {
-        val (size, p2) = readZigZag(buf, p)
-        p = p2 + size.toInt // sized block: jump it wholesale
+        val size = readZigZag(buf, c) // sized block: jump it wholesale
+        if (size < 0 || size > buf.length - c.pos) malformed(s"block size $size at ${c.pos}")
+        c.pos += size.toInt
       } else {
+        checkCount(buf, c, count, itemBytes)
+        // items of zero bytes (nulls) need no walk
         var i = 0L
-        while (i < count) { p = skipOne(p); i += 1 }
+        while (itemBytes > 0 && i < count) { skipOne(); i += 1 }
       }
     }
-    p
-  }
-
-  // ---- encode (schema-driven, Catalyst values in) ----
-
-  import RecordCodecs.writeZigZag
-
-  private def writeLe(out: ByteArrayOutputStream, v: Long, n: Int): Unit = {
-    var i = 0
-    while (i < n) { out.write(((v >>> (8 * i)) & 0xff).toInt); i += 1 }
-  }
-
-  def encode(t: AvroType, v: Any, out: ByteArrayOutputStream): Unit = t match {
-    case ANull => ()
-    case ABoolean => out.write(if (v.asInstanceOf[Boolean]) 1 else 0)
-    case AInt => writeZigZag(out, v.asInstanceOf[Int].toLong)
-    case ALong => writeZigZag(out, v.asInstanceOf[Long])
-    case AFloat => writeLe(out, java.lang.Float.floatToIntBits(v.asInstanceOf[Float]) & 0xffffffffL, 4)
-    case ADouble => writeLe(out, java.lang.Double.doubleToLongBits(v.asInstanceOf[Double]), 8)
-    case AString =>
-      val b = v.asInstanceOf[UTF8String].getBytes
-      writeZigZag(out, b.length.toLong)
-      out.write(b, 0, b.length)
-    case ABytes =>
-      val b = v.asInstanceOf[Array[Byte]]
-      writeZigZag(out, b.length.toLong)
-      out.write(b, 0, b.length)
-    case AArray(it) =>
-      val arr = v.asInstanceOf[ArrayData]
-      val et = sparkType(it)
-      if (arr.numElements() > 0) {
-        writeZigZag(out, arr.numElements().toLong) // one block
-        (0 until arr.numElements()).foreach(i => encode(it, arr.get(i, et), out))
-      }
-      writeZigZag(out, 0L)
-    case AMap(vt) =>
-      val m = v.asInstanceOf[MapData]
-      val et = sparkType(vt)
-      if (m.numElements() > 0) {
-        writeZigZag(out, m.numElements().toLong)
-        (0 until m.numElements()).foreach { i =>
-          encode(AString, m.keyArray.get(i, StringType), out)
-          encode(vt, m.valueArray.get(i, et), out)
-        }
-      }
-      writeZigZag(out, 0L)
-    case AUnion(bs) =>
-      if (v == null) {
-        val i = bs.indexOf(ANull)
-        require(i >= 0, "null value but union has no null branch")
-        writeZigZag(out, i.toLong)
-      } else {
-        val i = bs.indexWhere(_ != ANull)
-        writeZigZag(out, i.toLong)
-        encode(bs(i), v, out)
-      }
-    case ARecord(_, fs) =>
-      val row = v.asInstanceOf[InternalRow]
-      fs.zipWithIndex.foreach { case (f, i) =>
-        encode(f.tpe, row.get(i, sparkType(f.tpe)), out)
-      }
   }
 
   // ---- compiled codecs ----
   //
-  // Plan-time specialization of the recursive interpreters above: the
-  // expressions below run these, one closure tree per (writer, reader)
-  // pair built ONCE at first eval. Everything per-schema — Spark
+  // One closure tree per schema (encode) or (writer, reader) pair
+  // (decode), built once at first eval. Everything per-schema — Spark
   // DataTypes, record field actions (decode-into-slot vs skip),
   // reader-only default values, union branch resolution — is resolved
-  // here, where the interpreted forms re-derived them per row (the
-  // per-row `readerIdx` map + `writerNames` set builds and the
-  // exception-driven `canResolve` probe per union datum were the
-  // measured hot spots). The interpreted `encode`/`decodeResolved`
-  // stay as the executable spec the tests cross-check against.
+  // here, never per row.
 
   /** Unsynchronized growable byte buffer: ByteArrayOutputStream takes a
     * monitor per write (real per-row cost since JDK 15 removed biased
@@ -466,24 +362,8 @@ object AvroSchemaCodec {
     def toByteArray: Array[Byte] = java.util.Arrays.copyOf(buf, len)
   }
 
-  /** Mutable decode position — replaces the `(value, nextPos)` tuple (and
-    * its per-value Int boxing) of the interpreted decoder. */
-  final class Cursor { var pos = 0 }
-
   type Enc = (Any, ByteSink) => Unit
   type Dec = (Array[Byte], Cursor) => Any
-
-  private def readZigZagC(buf: Array[Byte], c: Cursor): Long = {
-    var x = 0L; var s = 0; var i = c.pos
-    while (true) {
-      val b = buf(i) & 0xff
-      x |= (b & 0x7fL) << s
-      i += 1
-      if ((b & 0x80) == 0) { c.pos = i; return (x >>> 1) ^ -(x & 1) }
-      s += 7
-    }
-    throw new IllegalStateException("unreachable")
-  }
 
   private def writeLeSink(out: ByteSink, v: Long, n: Int): Unit = {
     var i = 0
@@ -567,10 +447,10 @@ object AvroSchemaCodec {
     case (ANull, ANull) => (_, _) => null
     case (ABoolean, ABoolean) => (buf, c) => { val v = buf(c.pos) != 0; c.pos += 1; v }
     case (AInt | ALong, _) => r match {
-      case AInt => (buf, c) => readZigZagC(buf, c).toInt
-      case ALong => (buf, c) => readZigZagC(buf, c)
-      case AFloat => (buf, c) => readZigZagC(buf, c).toFloat
-      case ADouble => (buf, c) => readZigZagC(buf, c).toDouble
+      case AInt => (buf, c) => readZigZag(buf, c).toInt
+      case ALong => (buf, c) => readZigZag(buf, c)
+      case AFloat => (buf, c) => readZigZag(buf, c).toFloat
+      case ADouble => (buf, c) => readZigZag(buf, c).toDouble
       case other => throw new IllegalArgumentException(s"cannot promote $w to $other")
     }
     case (AFloat, _) => r match {
@@ -590,12 +470,12 @@ object AvroSchemaCodec {
     }
     case (AString | ABytes, _) => r match {
       case AString => (buf, c) => {
-        val len = readZigZagC(buf, c).toInt
+        val len = readLength(buf, c)
         val v = UTF8String.fromBytes(buf, c.pos, len)
         c.pos += len; v
       }
       case ABytes => (buf, c) => {
-        val len = readZigZagC(buf, c).toInt
+        val len = readLength(buf, c)
         val v = java.util.Arrays.copyOfRange(buf, c.pos, c.pos + len)
         c.pos += len; v
       }
@@ -603,40 +483,34 @@ object AvroSchemaCodec {
     }
     case (AArray(wi), AArray(ri)) =>
       val itemDec = compileDecoder(wi, ri)
+      val itemBytes = minBytes(wi)
       (buf, c) => {
         val items = mutable.ArrayBuffer.empty[Any]
-        var more = true
-        while (more) {
-          var n = readZigZagC(buf, c)
-          if (n == 0) more = false
-          else {
-            if (n < 0) { readZigZagC(buf, c); n = -n }
-            var i = 0L
-            while (i < n) { items += itemDec(buf, c); i += 1 }
-          }
+        var n = readBlockCount(buf, c, itemBytes)
+        while (n != 0) {
+          var i = 0L
+          while (i < n) { items += itemDec(buf, c); i += 1 }
+          n = readBlockCount(buf, c, itemBytes)
         }
         new GenericArrayData(items.toArray)
       }
     case (AMap(wv), AMap(rv)) =>
       val valDec = compileDecoder(wv, rv)
+      val entryBytes = 1 + minBytes(wv)
       (buf, c) => {
         val keys = mutable.ArrayBuffer.empty[Any]
         val vals = mutable.ArrayBuffer.empty[Any]
-        var more = true
-        while (more) {
-          var n = readZigZagC(buf, c)
-          if (n == 0) more = false
-          else {
-            if (n < 0) { readZigZagC(buf, c); n = -n }
-            var i = 0L
-            while (i < n) {
-              val klen = readZigZagC(buf, c).toInt
-              keys += UTF8String.fromBytes(buf, c.pos, klen)
-              c.pos += klen
-              vals += valDec(buf, c)
-              i += 1
-            }
+        var n = readBlockCount(buf, c, entryBytes)
+        while (n != 0) {
+          var i = 0L
+          while (i < n) {
+            val klen = readLength(buf, c)
+            keys += UTF8String.fromBytes(buf, c.pos, klen)
+            c.pos += klen
+            vals += valDec(buf, c)
+            i += 1
           }
+          n = readBlockCount(buf, c, entryBytes)
         }
         ArrayBasedMapData(keys.toArray, vals.toArray)
       }
@@ -652,7 +526,7 @@ object AvroSchemaCodec {
           case _ => compileDecoder(b, r)
         }
       }.toArray
-      (buf, c) => branchDecs(readZigZagC(buf, c).toInt)(buf, c)
+      (buf, c) => branchDecs(readIndex(buf, c, branchDecs.length))(buf, c)
     case (_, AUnion(rbs)) =>
       val rb = rbs.find(canResolve(w, _)).getOrElse(
         throw new IllegalArgumentException(s"no reader branch for writer $w"))
@@ -668,7 +542,7 @@ object AvroSchemaCodec {
           case None =>
             slots(i) = -1
             val t = f.tpe
-            decs(i) = (buf, c) => { c.pos = skip(t, buf, c.pos); null }
+            decs(i) = (buf, c) => { skip(t, buf, c); null }
         }
       }
       val writerNames = wf.map(_.name).toSet
@@ -699,11 +573,26 @@ object AvroSchemaCodec {
     case (a, b) =>
       throw new IllegalArgumentException(s"cannot decode writer $a as reader $b")
   }
+
+  // ---- the avenger record codec ----
+
+  /** `avro_record_encode`: struct<name, real_name, movies> → Avro binary
+    * under the reference's registered schema
+    * ([[graft.sources.SchemaCatalog.AvengerAvroJson]]). */
+  def recordEncode(child: Expression): Expression =
+    AvroEncodeSchema(child, SchemaCatalog.AvengerAvroJson, "avro_record_encode")
+
+  /** `avro_record_decode`: the inverse, typed [[RecordCodecs.RecordSchema]];
+    * null on a malformed payload. */
+  def recordDecode(child: Expression): Expression =
+    AvroDecodeSchema(child, SchemaCatalog.AvengerAvroJson, SchemaCatalog.AvengerAvroJson,
+      "avro_record_decode")
 }
 
 /** struct (shaped like the schema) → Avro binary, driven by a constant
   * schema JSON fixed at plan time. */
-case class AvroEncodeSchema(child: Expression, schemaJson: String)
+case class AvroEncodeSchema(child: Expression, schemaJson: String,
+    override val prettyName: String = "avro_encode_schema")
     extends UnaryExpression with CodegenFallback {
   @transient private lazy val schema = AvroSchemaCodec.parse(schemaJson)
   override def dataType: DataType = BinaryType
@@ -713,7 +602,7 @@ case class AvroEncodeSchema(child: Expression, schemaJson: String)
       if (DataType.equalsStructurally(child.dataType, expected, ignoreNullability = true))
         TypeCheckResult.TypeCheckSuccess
       else TypeCheckResult.TypeCheckFailure(
-        s"avro_encode_schema input ${child.dataType.sql} does not match schema shape ${expected.sql}")
+        s"$prettyName input ${child.dataType.sql} does not match schema shape ${expected.sql}")
     } catch {
       case e: IllegalArgumentException => TypeCheckResult.TypeCheckFailure(e.getMessage)
     }
@@ -728,14 +617,14 @@ case class AvroEncodeSchema(child: Expression, schemaJson: String)
   }
   override protected def withNewChildInternal(c: Expression): AvroEncodeSchema =
     copy(child = c)
-  override def prettyName: String = "avro_encode_schema"
 }
 
 /** Avro binary written with `writerJson` → struct shaped by `readerJson`,
   * applying Avro schema resolution (defaults, skips, promotions). Schema
   * incompatibilities surface at analysis time; malformed payloads decode
   * to null. */
-case class AvroDecodeSchema(child: Expression, writerJson: String, readerJson: String)
+case class AvroDecodeSchema(child: Expression, writerJson: String, readerJson: String,
+    override val prettyName: String = "avro_decode_schema")
     extends UnaryExpression with CodegenFallback {
   @transient private lazy val writer = AvroSchemaCodec.parse(writerJson)
   @transient private lazy val reader = AvroSchemaCodec.parse(readerJson)
@@ -746,15 +635,14 @@ case class AvroDecodeSchema(child: Expression, writerJson: String, readerJson: S
       AvroSchemaCodec.validateResolution(writer, reader)
       if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
       else TypeCheckResult.TypeCheckFailure(
-        s"avro_decode_schema expects binary input, got ${child.dataType.sql}")
+        s"$prettyName expects binary input, got ${child.dataType.sql}")
     } catch {
       case e: IllegalArgumentException => TypeCheckResult.TypeCheckFailure(e.getMessage)
     }
   @transient private lazy val dec = AvroSchemaCodec.compileDecoder(writer, reader)
   override def nullSafeEval(input: Any): Any =
     try dec(input.asInstanceOf[Array[Byte]], new AvroSchemaCodec.Cursor)
-    catch { case _: RuntimeException | _: ArrayIndexOutOfBoundsException => null }
+    catch { case _: RuntimeException => null }
   override protected def withNewChildInternal(c: Expression): AvroDecodeSchema =
     copy(child = c)
-  override def prettyName: String = "avro_decode_schema"
 }

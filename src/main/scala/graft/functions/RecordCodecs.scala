@@ -10,16 +10,18 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Avro + Protobuf binary serde for the reference's record schema
+/** Protobuf binary serde for the reference's record schema
   * `{name: string, real_name: string, movies: array<string>}`
-  * (reference: golang/avenger.avsc:1-16 Avro;
-  * golang/proto/avenegers.proto:7-11 proto3), implemented from the public
-  * wire specifications (Avro 1.12 binary encoding; protobuf proto3
-  * encoding). The environment ships no spark-avro/spark-protobuf connector
-  * jars, so these scoped expressions stand in for `to_avro`/`from_avro`/
+  * (reference: golang/proto/avenegers.proto:7-11 proto3), implemented from
+  * the public proto3 wire encoding. The environment ships no
+  * spark-protobuf connector jar, so these scoped expressions stand in for
   * `to_protobuf`/`from_protobuf` on this schema — byte-compatible with the
-  * reference's serializers (golang/avro/avenger_avro.go:64-87 encode,
-  * :41-62 decode; golang/util/index.go:17 proto.Marshal).
+  * reference's serializer (golang/util/index.go:17 proto.Marshal).
+  *
+  * The Avro side of the same record (golang/avenger.avsc:1-16) goes
+  * through the schema codec: `avro_record_encode`/`avro_record_decode` are
+  * [[AvroSchemaCodec.recordEncode]]/[[AvroSchemaCodec.recordDecode]] over
+  * [[graft.sources.SchemaCatalog.AvengerAvroJson]], typed [[RecordSchema]].
   *
   * Serde demo path, not a bench hot path → interpreted eval
   * (CodegenFallback) is acceptable.
@@ -30,30 +32,7 @@ object RecordCodecs {
     StructField("real_name", StringType, nullable = false),
     StructField("movies", ArrayType(StringType, containsNull = false), nullable = false)))
 
-  // ---- varint primitives ----
-
-  /** Avro zigzag-varint (long). */
-  def writeZigZag(out: ByteArrayOutputStream, n: Long): Unit = {
-    var v = (n << 1) ^ (n >> 63)
-    while ((v & ~0x7fL) != 0) {
-      out.write(((v & 0x7f) | 0x80).toInt)
-      v >>>= 7
-    }
-    out.write(v.toInt)
-  }
-
-  /** Returns (value, nextPos); throws on truncation. */
-  def readZigZag(buf: Array[Byte], pos: Int): (Long, Int) = {
-    var x = 0L; var s = 0; var i = pos
-    while (true) {
-      val b = buf(i) & 0xff
-      x |= (b & 0x7fL) << s
-      i += 1
-      if ((b & 0x80) == 0) return ((x >>> 1) ^ -(x & 1), i)
-      s += 7
-    }
-    throw new IllegalStateException("unreachable")
-  }
+  // ---- Protobuf (proto3) ----
 
   /** Plain unsigned varint (protobuf). */
   def writeUVarint(out: ByteArrayOutputStream, n: Long): Unit = {
@@ -64,63 +43,6 @@ object RecordCodecs {
     }
     out.write(v.toInt)
   }
-
-  // ---- Avro ----
-
-  private def writeAvroString(out: ByteArrayOutputStream, s: String): Unit = {
-    val b = s.getBytes(StandardCharsets.UTF_8)
-    writeZigZag(out, b.length.toLong)
-    out.write(b, 0, b.length)
-  }
-
-  def avroEncode(name: String, realName: String, movies: Seq[String]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    writeAvroString(out, name)
-    writeAvroString(out, realName)
-    if (movies.nonEmpty) {
-      writeZigZag(out, movies.size.toLong) // one block
-      movies.foreach(writeAvroString(out, _))
-    }
-    writeZigZag(out, 0L) // array terminator
-    out.toByteArray
-  }
-
-  private def readAvroString(buf: Array[Byte], pos: Int): (String, Int) = {
-    val (len, p) = readZigZag(buf, pos)
-    val s = new String(buf, p, len.toInt, StandardCharsets.UTF_8)
-    (s, p + len.toInt)
-  }
-
-  def avroDecode(frame: Array[Byte]): (String, String, Seq[String]) = {
-    val (name, p1) = readAvroString(frame, 0)
-    val (real, p2) = readAvroString(frame, p1)
-    val movies = Seq.newBuilder[String]
-    var pos = p2
-    var more = true
-    while (more) {
-      val (count, p) = readZigZag(frame, pos)
-      pos = p
-      if (count == 0) more = false
-      else {
-        var n = count
-        if (n < 0) { // negative block count: block byte-size follows
-          val (_, p3) = readZigZag(frame, pos)
-          pos = p3
-          n = -n
-        }
-        var i = 0L
-        while (i < n) {
-          val (s, p4) = readAvroString(frame, pos)
-          movies += s
-          pos = p4
-          i += 1
-        }
-      }
-    }
-    (name, real, movies.result())
-  }
-
-  // ---- Protobuf (proto3) ----
 
   private def writeProtoString(out: ByteArrayOutputStream, tag: Int, s: String): Unit = {
     val b = s.getBytes(StandardCharsets.UTF_8)
@@ -186,30 +108,6 @@ private[functions] trait RecordCodecExpr { self: UnaryExpression =>
     val movies = (0 until arr.numElements()).map(i => arr.getUTF8String(i).toString)
     (row.getUTF8String(0).toString, row.getUTF8String(1).toString, movies)
   }
-}
-
-/** struct<name,real_name,movies> → Avro binary. */
-case class AvroRecordEncode(child: Expression)
-    extends UnaryExpression with CodegenFallback with RecordCodecExpr {
-  override def dataType: DataType = BinaryType
-  override def nullSafeEval(input: Any): Any = {
-    val (n, r, m) = unpack(input)
-    RecordCodecs.avroEncode(n, r, m)
-  }
-  override protected def withNewChildInternal(c: Expression): AvroRecordEncode = copy(c)
-  override def prettyName: String = "avro_record_encode"
-}
-
-/** Avro binary → struct<name,real_name,movies>; null on malformed input. */
-case class AvroRecordDecode(child: Expression)
-    extends UnaryExpression with CodegenFallback with RecordCodecExpr {
-  override def dataType: DataType = RecordCodecs.RecordSchema
-  override def nullable: Boolean = true
-  override def nullSafeEval(input: Any): Any =
-    try rowOf(RecordCodecs.avroDecode(input.asInstanceOf[Array[Byte]]))
-    catch { case _: RuntimeException => null }
-  override protected def withNewChildInternal(c: Expression): AvroRecordDecode = copy(c)
-  override def prettyName: String = "avro_record_decode"
 }
 
 /** struct<name,real_name,movies> → proto3 binary. */

@@ -21,9 +21,11 @@ package object functions {
   def wire_decode(frame: Column, proto: Boolean = false): Column =
     toCol(WireDecode(ex(frame), proto))
 
-  /** struct<name,real_name,movies> ↔ Avro binary (reference avenger.avsc). */
-  def avro_record_encode(c: Column): Column = toCol(AvroRecordEncode(ex(c)))
-  def avro_record_decode(c: Column): Column = toCol(AvroRecordDecode(ex(c)))
+  /** struct<name,real_name,movies> ↔ Avro binary (reference avenger.avsc):
+    * the schema codec over the registered avenger schema; decode gives
+    * null on a malformed payload. */
+  def avro_record_encode(c: Column): Column = toCol(AvroSchemaCodec.recordEncode(ex(c)))
+  def avro_record_decode(c: Column): Column = toCol(AvroSchemaCodec.recordDecode(ex(c)))
 
   /** struct<name,real_name,movies> ↔ proto3 binary (avenegers.proto). */
   def proto_record_encode(c: Column): Column = toCol(ProtoRecordEncode(ex(c)))

@@ -249,17 +249,6 @@ object Scale {
       .orderBy($"bin")
   }
 
-  /** Write `df` bucketed+sorted by `key` into `numBuckets` buckets as a
-    * managed table. Two tables bucketed the same way join with ZERO
-    * shuffle — at 100 TB this turns every repeated fact–fact join on the
-    * bucket key into a map-side merge (see the plan test in ScaleSpec).
-    */
-  def writeBucketed(df: DataFrame, table: String, key: String, numBuckets: Int): Unit =
-    df.write.mode("overwrite")
-      .bucketBy(numBuckets, key)
-      .sortBy(key)
-      .saveAsTable(table)
-
   /** Parquet row-group statistics audit — the pruning-health
     * introspection behind every `PushedFilters` win: per (file,
     * row group, INT64 column), the footer's num_values / null_count /
@@ -817,15 +806,6 @@ object Scale {
         ($"n_docs".cast(DoubleType) * nShards / $"n_total")
           .as("balance"))
       .orderBy($"shard")
-  }
-
-  /** Join two identically-bucketed tables on their bucket key —
-    * shuffle-free when `spark.sql.sources.bucketing.enabled` (default). */
-  def bucketedJoin(spark: SparkSession, leftTable: String, rightTable: String,
-      key: String): DataFrame = {
-    val l = spark.table(leftTable)
-    val r = spark.table(rightTable)
-    l.join(r, l(key) === r(key)).drop(r(key))
   }
 
   /** NS: bloom-filter semi-join reduction — the manual runtime-filter

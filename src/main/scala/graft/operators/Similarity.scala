@@ -294,41 +294,6 @@ object Similarity {
       .limit(5)
   }
 
-  /** Lloyd's k-means refinement for the IVF codebook, expressed as
-    * DataFrame ops — the offline training pass the IVF queries assume
-    * ("a production deployment would k-means-train them offline"). Per
-    * iteration: assignment is the same zero-shuffle literal-codebook
-    * argmax the queries use, then per-cell component means come from ONE
-    * partial-aggregated groupBy with `dims` avg columns (no explode
-    * fan-out), 16 rows back to the driver. Cost per iteration at any
-    * scale: one scan + one k-row shuffle. Empty cells keep their previous
-    * centroid. Component means are FP averages — deterministic up to
-    * aggregation order, like any distributed mean. */
-  def trainIvfCodebook(spark: SparkSession, dir: String, k: Int = IvfCells,
-      iters: Int = 2, dims: Int = 64): Array[(Long, Array[Float])] = {
-    import spark.implicits._
-    var cents = codebook(spark, dir, k)
-    for (_ <- 0 until iters) {
-      val means = ivfAssigned(spark, dir, cents)
-        .groupBy($"cell_id")
-        .agg(avg(element_at($"embedding", 1)).as("c0"),
-          (1 until dims).map(d => avg(element_at($"embedding", d + 1)).as(s"c$d")): _*)
-        .collect()
-        .map(r => r.getLong(0) -> Array.tabulate(dims)(d => r.getDouble(d + 1).toFloat))
-        .toMap
-      cents = cents.map { case (cid, old) => (cid, means.getOrElse(cid, old)) }
-    }
-    cents
-  }
-
-  /** Mean assignment cosine under a given codebook — the cohesion metric
-    * that tells you whether training moved the needle. */
-  def codebookCohesion(spark: SparkSession, dir: String,
-      cents: Array[(Long, Array[Float])]): Double = {
-    import spark.implicits._
-    ivfAssigned(spark, dir, cents).agg(avg($"score")).as[Double].collect().head
-  }
-
   // ---- Product quantization (the compression half of FAISS-style IVF-PQ) ----
 
   private val PqM = 8    // subspaces

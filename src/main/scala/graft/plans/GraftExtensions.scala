@@ -80,11 +80,11 @@ object GraftExtensions {
     "avro_record_encode" -> (
       info("avro_record_encode",
         "avro_record_encode(struct) - avenger record struct to Avro binary."),
-      (args: Seq[Expression]) => AvroRecordEncode(args.head)),
+      (args: Seq[Expression]) => AvroSchemaCodec.recordEncode(args.head)),
     "avro_record_decode" -> (
       info("avro_record_decode",
         "avro_record_decode(bin) - Avro binary to avenger record struct."),
-      (args: Seq[Expression]) => AvroRecordDecode(args.head)),
+      (args: Seq[Expression]) => AvroSchemaCodec.recordDecode(args.head)),
     "proto_record_encode" -> (
       info("proto_record_encode",
         "proto_record_encode(struct) - avenger record struct to proto3 binary."),

@@ -1,19 +1,20 @@
 package graft
 
-import java.io.ByteArrayOutputStream
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
 
-import graft.functions.{avro_decode_schema, avro_encode_schema, AvroSchemaCodec, RecordCodecs}
+import graft.functions.{avro_decode_schema, avro_encode_schema, avro_record_encode}
+import AvroReference.{fromAvro, fromRow, hex}
 
 /** Avro reader/writer schema resolution (reference:
   * golang/avro/avenger_avro.go:41-62 DeserializeAvengerAvroFromSchema):
-  * default fill, unknown-field skip, by-name matching, promotions, unions.
+  * default fill, unknown-field skip, by-name matching, promotions, unions,
+  * and null for malformed payloads. Apache Avro (see AvroReference) writes
+  * the payloads and checks the values where a case names it.
   */
 class AvroEvolutionSpec extends SparkSpecBase {
   import spark.implicits._
-  import AvroSchemaCodec._
 
   private def rec(fields: String*) =
     s"""{"type":"record","name":"r","fields":[${fields.mkString(",")}]}"""
@@ -101,51 +102,123 @@ class AvroEvolutionSpec extends SparkSpecBase {
     assert(out(0).getString(1) == "x" && out(1).isNullAt(1))
   }
 
-  test("schema-driven encode of the avenger schema is byte-compatible with RecordCodecs") {
-    val viaSchema = Seq(("Thor", "Odinson", Seq("Ragnarok", "Endgame")))
+  test("avenger encode writes Apache Avro's bytes (both encode functions)") {
+    val df = Seq(("Thor", "Odinson", Seq("Ragnarok", "Endgame")))
       .toDF("name", "real_name", "movies")
-      .select(avro_encode_schema(struct($"name", $"real_name", $"movies"),
-        readerAvenger))
+      .select(struct($"name", $"real_name", $"movies").as("rec"))
+    val viaSchema = df.select(avro_encode_schema($"rec", readerAvenger))
       .collect().head.getAs[Array[Byte]](0)
-    val direct = RecordCodecs.avroEncode("Thor", "Odinson", Seq("Ragnarok", "Endgame"))
-    assert(viaSchema.sameElements(direct),
-      s"${viaSchema.mkString(",")} != ${direct.mkString(",")}")
+    val viaRecord = df.select(avro_record_encode($"rec")).collect().head.getAs[Array[Byte]](0)
+    val reference = AvroReference.write(readerAvenger, AvroReference.record(readerAvenger,
+      "Thor", "Odinson", Seq("Ragnarok", "Endgame").asJava))
+    assert(viaSchema.sameElements(reference), s"${hex(viaSchema)} != ${hex(reference)}")
+    assert(viaRecord.sameElements(reference), s"${hex(viaRecord)} != ${hex(reference)}")
+  }
+
+  /** `avro_decode_schema` over a hex payload, from SQL. */
+  private def decodeSql(frame: Array[Byte], writer: String, reader: String): Any = {
+    graft.plans.GraftExtensions.register(spark)
+    spark.sql(s"SELECT avro_decode_schema(unhex('${hex(frame)}'), '$writer', '$reader')")
+      .collect().head.get(0)
+  }
+
+  private def recordDecodeSql(frame: Array[Byte]): Any = {
+    graft.plans.GraftExtensions.register(spark)
+    spark.sql(s"SELECT avro_record_decode(unhex('${hex(frame)}'))").collect().head.get(0)
   }
 
   test("skip jumps sized (negative-count) array blocks wholesale") {
-    // hand-build: array<string> as one sized block of 2 items, then a long 42
-    val out = new ByteArrayOutputStream()
-    val items = new ByteArrayOutputStream()
-    Seq("aa", "bbb").foreach { s =>
-      RecordCodecs.writeZigZag(items, s.length.toLong)
-      items.write(s.getBytes("UTF-8"))
-    }
-    RecordCodecs.writeZigZag(out, -2L)                  // negative count
-    RecordCodecs.writeZigZag(out, items.size().toLong)  // block byte size
-    out.write(items.toByteArray)
-    RecordCodecs.writeZigZag(out, 0L)                   // terminator
-    RecordCodecs.writeZigZag(out, 42L)                  // trailing long
-    val buf = out.toByteArray
-    val p = AvroSchemaCodec.skip(AArray(AString), buf, 0)
-    val (v, _) = AvroSchemaCodec.decodeResolved(ALong, ALong, buf, p)
-    assert(v == 42L, "sized-block skip landed at the wrong offset")
+    // Apache Avro's blocking encoder writes the writer-only array as one
+    // sized block: negative item count, then the block's byte size
+    val writer = rec(f("aliases", """{"type":"array","items":"string"}"""), f("n", "\"long\""))
+    val reader = rec(f("n", "\"long\""))
+    val buf = AvroReference.write(writer,
+      AvroReference.record(writer, Seq("aa", "bbb").asJava, 42L), blocking = true)
+    assert(buf(0) == 3, s"not a sized block of 2 items: ${hex(buf)}") // zigzag(-2)
+    val got = decodeSql(buf, writer, reader)
+    assert(fromRow(got) == Seq(42L), "sized-block skip landed at the wrong offset")
+    assert(AvroReference.read(writer, reader, buf).map(fromAvro).get == fromRow(got))
   }
 
   test("decode reads sized (negative-count) array blocks") {
-    val out = new ByteArrayOutputStream()
-    val items = new ByteArrayOutputStream()
-    Seq("x", "yz").foreach { s =>
-      RecordCodecs.writeZigZag(items, s.length.toLong)
-      items.write(s.getBytes("UTF-8"))
+    val frame = AvroReference.write(readerAvenger, AvroReference.record(readerAvenger,
+      "Loki", "Laufeyson", Seq("x", "yz", "").asJava), blocking = true)
+    val expected = AvroReference.read(readerAvenger, readerAvenger, frame).map(fromAvro).get
+    assert(fromRow(recordDecodeSql(frame)) == expected)
+    assert(fromRow(decodeSql(frame, readerAvenger, readerAvenger)) == expected)
+    assert(expected == Seq("Loki", "Laufeyson", Seq("x", "yz", "")).map(fromRow))
+  }
+
+  test("malformed payloads decode to null (avro_record_decode, avro_decode_schema)") {
+    def zigzag(v: Long) = AvroReference.write("\"long\"", v)
+    val string = rec(f("s", "\"string\""))
+    val bytes = rec(f("b", "\"bytes\""))
+    val strings = rec(f("a", """{"type":"array","items":"string"}"""))
+    val skipped = rec(f("a", """{"type":"array","items":"string"}"""), f("n", "\"long\""))
+    val long = rec(f("n", "\"long\""))
+    // length 64 over 3 bytes; a 2^40-item block whose first item has
+    // length -1 (it would walk the cursor backwards); an 11-byte varint
+    val stringPastEnd = zigzag(64) ++ "abc".getBytes("UTF-8")
+    val bytesPastEnd = zigzag(64) ++ Array[Byte](1, 2, 3)
+    val hugeBlock = zigzag(1L << 40) ++ zigzag(-1)
+    val cases = Seq(
+      (string, string, stringPastEnd),
+      (bytes, bytes, bytesPastEnd),
+      (strings, strings, hugeBlock),
+      (skipped, long, hugeBlock),
+      (long, long, Array.fill[Byte](10)(0x80.toByte) :+ 1.toByte))
+    cases.foreach { case (w, r, frame) =>
+      // (Apache Avro's skip of the writer-only block walks all 2^40 items)
+      if (w == r)
+        assert(AvroReference.read(w, r, frame).isFailure, s"Apache Avro reads ${hex(frame)}")
+      assert(decodeSql(frame, w, r) == null, s"${hex(frame)} as $w decoded")
     }
-    RecordCodecs.writeZigZag(out, -2L)
-    RecordCodecs.writeZigZag(out, items.size().toLong)
-    out.write(items.toByteArray)
-    RecordCodecs.writeZigZag(out, 0L)
-    val (v, _) = AvroSchemaCodec.decodeResolved(
-      AArray(AString), AArray(AString), out.toByteArray, 0)
-    val arr = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    assert((0 until arr.numElements()).map(arr.getUTF8String(_).toString) == Seq("x", "yz"))
+    // the avenger record: empty name and real_name, then the same block
+    val avenger = Array[Byte](0, 0) ++ hugeBlock
+    assert(AvroReference.read(readerAvenger, readerAvenger, avenger).isFailure)
+    assert(recordDecodeSql(avenger) == null)
+    assert(decodeSql(avenger, readerAvenger, readerAvenger) == null)
+    // control: the well-formed frame still decodes
+    assert(fromRow(recordDecodeSql(Array[Byte](0, 0, 0))) == Seq(Nil, Nil, Nil))
+  }
+
+  test("resolution agrees with Apache Avro: promotions, unions, defaults, skips") {
+    // named apart from the outer record "r", as Apache Avro requires
+    val nested = s"""{"type":"record","name":"o","fields":[""" +
+      s"""${f("planet", "\"string\"")},${f("year", "\"int\"")}]}"""
+    val writer = rec(
+      f("i", "\"int\""), f("l", "\"long\""), f("fl", "\"float\""), f("s", "\"string\""),
+      f("nick", """["null","string"]"""),
+      f("dropped", """{"type":"map","values":"long"}"""),
+      f("origin", nested),
+      f("tags", """{"type":"array","items":"int"}"""))
+    val reader = rec(
+      f("tags", """{"type":"array","items":"double"}"""),
+      f("s", "\"bytes\""), f("fl", "\"double\""), f("l", "\"float\""), f("i", "\"long\""),
+      f("nick", """["null","string"]"""),
+      f("movies", """{"type":"array","items":"string"}""", ""","default":["First Avenger"]"""),
+      f("level", "\"int\"", ""","default":7"""))
+    val origin = AvroReference.schema(writer).getField("origin").schema()
+    val data = Seq(
+      (7, 11L, 2.5f, "hi", "x", Map("a" -> 1L, "b" -> -2L), Seq(1, 2, 3)),
+      (-1, Long.MinValue, -0.0f, "", null, Map.empty[String, Long], Seq.empty[Int]),
+      (Int.MaxValue, 1L << 40, 1e-3f, "名前", "", Map("é" -> Long.MaxValue), Seq(Int.MinValue)))
+    for ((i, l, fl, s, nick, dropped, tags) <- data; blocking <- Seq(false, true)) {
+      val datum = AvroReference.record(writer, i, l, fl, s, nick,
+        dropped.map { case (k, v) => k -> java.lang.Long.valueOf(v) }.asJava,
+        AvroReference.record(origin, "Earth", 1962), tags.map(Int.box).asJava)
+      val frame = AvroReference.write(writer, datum, blocking)
+      val expected = AvroReference.read(writer, reader, frame).map(fromAvro).get
+      assert(fromRow(decodeSql(frame, writer, reader)) == expected, s"${hex(frame)}")
+      if (!blocking) {
+        val ours = Seq(1).toDF("x").select(avro_encode_schema(struct(
+          lit(i).as("i"), lit(l).as("l"), lit(fl).as("fl"), lit(s).as("s"),
+          lit(nick).cast("string").as("nick"), typedLit(dropped).as("dropped"),
+          struct(lit("Earth").as("planet"), lit(1962).as("year")).as("origin"),
+          typedLit(tags).as("tags")), writer)).collect().head.getAs[Array[Byte]](0)
+        assert(ours.sameElements(frame), s"${hex(ours)} != ${hex(frame)}")
+      }
+    }
   }
 
   test("map values resolve and roundtrip") {

@@ -2,7 +2,11 @@ package graft
 
 import scala.util.Random
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions._
 
@@ -90,14 +94,29 @@ class FunctionsSpec extends SparkSpecBase {
   private def randStr(rnd: Random): String =
     Iterator.fill(rnd.nextInt(20))(rnd.nextPrintableChar()).mkString
 
+  // avro_record_encode / avro_record_decode evaluated on one row
+  private def avroEncode(name: String, realName: String, movies: Seq[String]): Array[Byte] = {
+    val row = InternalRow(UTF8String.fromString(name), UTF8String.fromString(realName),
+      new GenericArrayData(movies.map(UTF8String.fromString).toArray[Any]))
+    AvroSchemaCodec.recordEncode(Literal(row, RecordCodecs.RecordSchema)).eval()
+      .asInstanceOf[Array[Byte]]
+  }
+
+  private def avroDecode(frame: Array[Byte]): (String, String, Seq[String]) = {
+    val row = AvroSchemaCodec.recordDecode(Literal(frame)).eval().asInstanceOf[InternalRow]
+    val movies = row.getArray(2)
+    (row.getUTF8String(0).toString, row.getUTF8String(1).toString,
+      (0 until movies.numElements()).map(movies.getUTF8String(_).toString))
+  }
+
   test("avro record codec roundtrips (incl. empty movies / unicode)") {
     val rnd = new Random(7)
     for (_ <- 1 to 200) {
       val t = (randStr(rnd), randStr(rnd), Seq.fill(rnd.nextInt(5))(randStr(rnd)))
-      assert(RecordCodecs.avroDecode(RecordCodecs.avroEncode(t._1, t._2, t._3)) === t)
+      assert(avroDecode(avroEncode(t._1, t._2, t._3)) === t)
     }
-    val uni = RecordCodecs.avroEncode("héro", "名前", Seq("ünïcode"))
-    assert(RecordCodecs.avroDecode(uni) === (("héro", "名前", Seq("ünïcode"))))
+    val uni = avroEncode("héro", "名前", Seq("ünïcode"))
+    assert(avroDecode(uni) === (("héro", "名前", Seq("ünïcode"))))
   }
 
   test("proto record codec roundtrips") {
@@ -111,12 +130,12 @@ class FunctionsSpec extends SparkSpecBase {
   test("avro codec matches the reference's canonical record bytes") {
     // ("Captain America","Steve Rogers",[3 movies]) — cmd/producer/main.go:59-63.
     // Byte layout: zigzag-len + utf8 per string; array = block count, items, 0.
-    val bytes = RecordCodecs.avroEncode("Captain America", "Steve Rogers",
+    val bytes = avroEncode("Captain America", "Steve Rogers",
       Seq("The First Avenger", "The Winter Soldier", "Civil War"))
     assert(bytes(0) === 30.toByte) // zigzag(15) = 30
     assert(new String(bytes, 1, 15, "UTF-8") === "Captain America")
     assert(bytes(16) === 24.toByte) // zigzag(12)
-    val decoded = RecordCodecs.avroDecode(bytes)
+    val decoded = avroDecode(bytes)
     assert(decoded._3.size === 3)
   }
 

@@ -137,20 +137,19 @@ class PropertySpec extends AnyFunSuite {
     } assert(Md5Long.hash(s.getBytes("UTF-8"), d) === ref(s, d), s"($s, $d)")
   }
 
-  // ---- Avro schema codec: cross-implementation properties. RecordCodecs
-  // (the fixed-schema round-1 codec) serves as the independent oracle for
-  // AvroSchemaCodec (the schema-driven round-2 codec): both were written
-  // against the public Avro 1.12 spec but share no code paths beyond the
-  // zigzag primitives.
+  // ---- Avro: the schema codec against Apache Avro ----
+  // Apache Avro, the specification's reference implementation, writes and
+  // reads every payload these properties compare (see AvroReference), so
+  // an error in graft's codec can't be mirrored by the oracle.
 
   import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-  import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+  import org.apache.spark.sql.catalyst.expressions.Literal
+  import org.apache.spark.sql.catalyst.util.GenericArrayData
   import org.apache.spark.unsafe.types.UTF8String
-  import graft.functions.{AvroSchemaCodec, RecordCodecs}
-  import AvroSchemaCodec._
-
-  private val avengerSchema = parse(graft.sources.SchemaCatalog.AvengerAvroJson)
+  import scala.jdk.CollectionConverters._
+  import graft.functions.{AvroDecodeSchema, AvroSchemaCodec, RecordCodecs}
+  import graft.sources.SchemaCatalog.AvengerAvroJson
+  import AvroReference.{fromAvro, fromCatalyst}
 
   private val recGen: Gen[(String, String, Seq[String])] = for {
     name <- Arbitrary.arbitrary[String]
@@ -162,23 +161,27 @@ class PropertySpec extends AnyFunSuite {
     InternalRow(UTF8String.fromString(name), UTF8String.fromString(real),
       new GenericArrayData(movies.map(UTF8String.fromString).toArray[Any]))
 
-  test("avro: schema-driven encode == fixed-schema encode, both decoders agree") {
-    for (((name, real, movies), i) <- samples(recGen).zipWithIndex) {
-      val out = new java.io.ByteArrayOutputStream()
-      AvroSchemaCodec.encode(avengerSchema, avengerRow(name, real, movies), out)
-      val bySchema = out.toByteArray
-      val byFixed = RecordCodecs.avroEncode(name, real, movies)
-      assert(bySchema.sameElements(byFixed), s"case $i: byte mismatch")
-      // fixed decoder reads schema-encoded bytes...
-      val (n2, r2, m2) = RecordCodecs.avroDecode(bySchema)
-      assert((n2, r2, m2) === ((name, real, movies)), s"case $i: fixed decode")
-      // ...and the schema decoder reads fixed-encoded bytes
-      val (row, _) = AvroSchemaCodec.decodeResolved(avengerSchema, avengerSchema, byFixed, 0)
-      val rr = row.asInstanceOf[InternalRow]
-      val arr = rr.getArray(2)
-      val got = (rr.getUTF8String(0).toString, rr.getUTF8String(1).toString,
-        (0 until arr.numElements()).map(arr.getUTF8String(_).toString))
-      assert(got === ((name, real, movies)), s"case $i: schema decode")
+  private def utf8(s: String): Seq[Byte] = s.getBytes("UTF-8").toSeq
+
+  /** `avro_record_encode` / `avro_record_decode`, evaluated row by row. */
+  private def encodeRecord(name: String, real: String, movies: Seq[String]): Array[Byte] =
+    AvroSchemaCodec.recordEncode(Literal(avengerRow(name, real, movies), RecordCodecs.RecordSchema))
+      .eval().asInstanceOf[Array[Byte]]
+  private def decodeRecord(frame: Array[Byte]): Any =
+    fromCatalyst(AvroSchemaCodec.recordDecode(Literal(frame)).eval(), RecordCodecs.RecordSchema)
+
+  test("avro: avenger codec writes Apache Avro's bytes and reads them back") {
+    val fixed = Seq(("", "", Seq.empty[String]), ("héro", "名前", Seq("ünïcode", "")),
+      ("Captain America", "Steve Rogers", Seq("The First Avenger", "Civil War")))
+    for (((name, real, movies), i) <- (fixed ++ samples(recGen)).zipWithIndex) {
+      val expected = Seq(utf8(name), utf8(real), movies.map(utf8))
+      val ours = encodeRecord(name, real, movies)
+      val theirs = AvroReference.write(AvengerAvroJson,
+        AvroReference.record(AvengerAvroJson, name, real, movies.asJava))
+      assert(ours.sameElements(theirs), s"case $i: byte mismatch")
+      assert(decodeRecord(theirs) === expected, s"case $i: decode of Apache Avro's bytes")
+      assert(AvroReference.read(AvengerAvroJson, AvengerAvroJson, ours).map(fromAvro).get ===
+        expected, s"case $i: Apache Avro's read of our bytes")
     }
   }
 
@@ -193,22 +196,45 @@ class PropertySpec extends AnyFunSuite {
         |{"name":"movies","type":{"type":"array","items":"string"},"default":[]},
         |{"name":"team","type":"string"}]}
         |""".stripMargin.replaceAll("\n", "")
-    val writer = parse(writerJson)
     val gen = Gen.zip(recGen, Arbitrary.arbitrary[Long], Arbitrary.arbitrary[String])
     for ((((name, real, movies), seq, team), i) <- samples(gen).zipWithIndex) {
-      val row = InternalRow(seq,
-        UTF8String.fromString(name), UTF8String.fromString(real),
-        new GenericArrayData(movies.map(UTF8String.fromString).toArray[Any]),
-        UTF8String.fromString(team))
-      val out = new java.io.ByteArrayOutputStream()
-      AvroSchemaCodec.encode(writer, row, out)
-      val (dec, _) = AvroSchemaCodec.decodeResolved(writer, avengerSchema, out.toByteArray, 0)
-      val rr = dec.asInstanceOf[InternalRow]
-      val arr = rr.getArray(2)
-      val got = (rr.getUTF8String(0).toString, rr.getUTF8String(1).toString,
-        (0 until arr.numElements()).map(arr.getUTF8String(_).toString))
-      assert(got === ((name, real, movies)), s"case $i")
+      val bytes = AvroReference.write(writerJson,
+        AvroReference.record(writerJson, seq, name, real, movies.asJava, team))
+      val dec = AvroDecodeSchema(Literal(bytes), writerJson, AvengerAvroJson)
+      val got = fromCatalyst(dec.eval(), dec.dataType)
+      assert(got === Seq(utf8(name), utf8(real), movies.map(utf8)), s"case $i")
+      assert(AvroReference.read(writerJson, AvengerAvroJson, bytes).map(fromAvro).get === got,
+        s"case $i: Apache Avro resolves differently")
     }
+  }
+
+  test("avro: truncated and byte-flipped avenger frames decode to null or " +
+      "to Apache Avro's value") {
+    // short strings (with 2- and 3-byte UTF-8 characters) keep the mutant
+    // count small while still covering every field boundary
+    val str = Gen.resize(6, Gen.listOf(Gen.oneOf('a', 'Z', ' ', 'é', '名')).map(_.mkString))
+    val gen = Gen.zip(str, str, Gen.resize(3, Gen.listOf(str)))
+    var (nulls, values) = (0, 0)
+    for (((name, real, movies), i) <- samples(gen).zipWithIndex) {
+      val frame = encodeRecord(name, real, movies)
+      val truncated = (0 until frame.length).map(frame.take(_))
+      val flipped = for (j <- frame.indices; mask <- Seq(0x01, 0x40, 0x80, 0xff)) yield {
+        val f = frame.clone()
+        f(j) = (f(j) ^ mask).toByte
+        f
+      }
+      for (m <- truncated ++ flipped) {
+        val ours = decodeRecord(m)
+        if (ours == null) nulls += 1
+        else {
+          val theirs = AvroReference.read(AvengerAvroJson, AvengerAvroJson, m).map(fromAvro)
+          assert(theirs.toOption.contains(ours),
+            s"case $i: ${AvroReference.hex(m)} decoded to $ours, Apache Avro: $theirs")
+          values += 1
+        }
+      }
+    }
+    assert(nulls > 0 && values > 0, s"$nulls null, $values decoded: a one-sided sample")
   }
 
   test("z-order: interleave is a bijection on the 32-bit × 32-bit domain") {
@@ -319,10 +345,12 @@ class PropertySpec extends AnyFunSuite {
   test("avro: zigzag roundtrips arbitrary longs including extremes") {
     val extremes = Seq(0L, -1L, 1L, Long.MaxValue, Long.MinValue, 63L, 64L, -64L, -65L)
     for (v <- samples(Arbitrary.arbitrary[Long]) ++ extremes) {
-      val out = new java.io.ByteArrayOutputStream()
-      RecordCodecs.writeZigZag(out, v)
-      val (back, n) = RecordCodecs.readZigZag(out.toByteArray, 0)
-      assert(back === v && n === out.size(), s"zigzag($v)")
+      val out = new AvroSchemaCodec.ByteSink
+      out.writeZigZag(v)
+      val bytes = out.toByteArray
+      assert(bytes.sameElements(AvroReference.write("\"long\"", v)), s"zigzag($v) bytes")
+      val c = new AvroSchemaCodec.Cursor
+      assert(AvroSchemaCodec.readZigZag(bytes, c) === v && c.pos === bytes.length, s"zigzag($v)")
     }
   }
 

@@ -547,26 +547,6 @@ class ScaleSpec extends SparkSpecBase {
     assert(hil < mor, s"hilbert box area $hil not tighter than morton $mor")
   }
 
-  test("identically-bucketed tables join with zero shuffle") {
-    import spark.implicits._
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val facts = spark.range(10000).select($"id".as("k"), ($"id" * 2).as("a"))
-      val dims = spark.range(10000).select($"id".as("k"), ($"id" * 3).as("b"))
-      Scale.writeBucketed(facts, "bkt_left", "k", numBuckets = 4)
-      Scale.writeBucketed(dims, "bkt_right", "k", numBuckets = 4)
-      val joined = Scale.bucketedJoin(spark, "bkt_left", "bkt_right", "k")
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"),
-        s"bucketed join still shuffles:\n$plan")
-      assert(joined.count() == 10000)
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS bkt_left")
-      spark.sql("DROP TABLE IF EXISTS bkt_right")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    }
-  }
-
   test("join_size_estimate: CMS inner product never undercounts; sketch " +
     "sides partial-aggregate") {
     val r = Scale.joinSizeEstimate(spark, Sf0001).head()
