@@ -8,10 +8,11 @@ import graft.Tables
 
 /** Similarity search over the `embeddings` table (64-dim float vectors):
   * brute-force cosine top-k as the exact baseline, random-hyperplane LSH
-  * bucketing as the 100 TB scale path (bucket join instead of all-pairs).
-  * Dot products are sequential left-folds over the array via the
-  * `aggregate` higher-order function — deterministic order, double
-  * accumulation, no UDF (stays codegen-friendly).
+  * bucketing as the 100 TB scale path (bucket join instead of all-pairs),
+  * and the IVF / PQ index family over a plan-time literal codebook.
+  * Dot products are the codegen'd `vector_dot` expression ([[dot]]): a
+  * sequential left fold over the array in double precision —
+  * deterministic order, no UDF.
   */
 object Similarity {
 
@@ -142,15 +143,10 @@ object Similarity {
       .limit(5)
   }
 
-  /** IVF (inverted-file) cell assignment: nearest of 16 seed centroids by
-    * cosine, ties broken toward the lowest cell id. Centroids here are the
-    * first 16 vectors by `vec_id` — deterministic and oracle-able; a
-    * production deployment would k-means-train them offline and ship the
-    * trained codebook exactly the same way. The codebook is collected ONCE
-    * at plan time (a pushdown-pruned 16-row scan) and embedded as literal
-    * arrays, so assignment is a per-row argmax expression: zero shuffle,
-    * zero row fan-out, one linear scan — the FAISS IVF-Flat shape.
-    */
+  /** The IVF codebook size: 16 seed centroids, the first 16 vectors by
+    * `vec_id` — deterministic and oracle-able; a production deployment
+    * would k-means-train them offline and ship the trained codebook
+    * exactly the same way. */
   private val IvfCells = 16
 
   /** Left-fold double dot product — the driver-side twin of
@@ -177,9 +173,12 @@ object Similarity {
       .sortBy(_._1)
   }
 
-  /** (vec_id, label, embedding, cell_id, score) with the cell assignment
-    * computed as a single map-side argmax over the literal codebook —
-    * no shuffle, no fan-out, either way. Two forms by codebook size:
+  /** IVF (inverted-file) cell assignment: (vec_id, label, embedding,
+    * cell_id, score), each vector's nearest centroid by cosine, ties to the
+    * lowest cell id. The codebook is collected ONCE at plan time and
+    * embedded as literals, so the assignment is a single map-side argmax
+    * expression — zero shuffle, zero fan-out, one linear scan, the FAISS
+    * IVF-Flat shape. Two forms by codebook size:
     *
     *  - k ≤ 64: `array_max` over k unrolled (score, −cell_id) structs —
     *    fully whole-stage-codegen'd (the shipped-tier k=16 plan,
@@ -191,12 +190,17 @@ object Similarity {
     *    fallback), while the fold form stays a loop. Max over a TOTAL
     *    order ((score, −cid) lexicographic, ties impossible to conflate)
     *    is fold-order-independent, so both forms pick the identical cell
-    *    with the identical score bits. */
+    *    with the identical score bits.
+    *
+    * An empty codebook (an empty `embeddings`) assigns nothing: 0 rows,
+    * as the SQL twins' join against an empty centroid set. */
   private[graft] def ivfAssigned(spark: SparkSession, dir: String,
       cents: Array[(Long, Array[Float])]): DataFrame = {
     import spark.implicits._
     val selfNorm = sqrt(norm2($"embedding"))
-    val best = if (cents.length <= 64) {
+    val best = if (cents.isEmpty) {
+      lit(null).cast("struct<score: double, neg_cell: bigint>")
+    } else if (cents.length <= 64) {
       val scored = cents.map { case (cid, ce) =>
         val ceNorm = math.sqrt(dotD(ce, ce))
         struct((dot($"embedding", lit(ce)) / (selfNorm * lit(ceNorm))).as("score"),
@@ -222,11 +226,53 @@ object Similarity {
             .otherwise(acc)
         })
     }
-    Tables.embeddings(spark, dir)
+    val emb = Tables.embeddings(spark, dir)
+    (if (cents.isEmpty) emb.limit(0) else emb)
       .select($"vec_id", $"label", $"embedding",
         (-best.getField("neg_cell")).as("cell_id"),
         best.getField("score").as("score"))
   }
+
+  /** The eval probes of every recall/nDCG query: vec_id < 8. */
+  private val EvalProbes = 8
+
+  /** The eval probes of `frame` as (p_id, pe, extra…): `pe` is the probe's
+    * `vec` column. The 8-row broadcast side of every eval; its filter on
+    * the bare `vec_id` is what PlanSpec's broadcast pin accepts. */
+  private def evalProbes(frame: DataFrame, vec: String,
+      extra: Column*): DataFrame =
+    frame.where(col("vec_id") < EvalProbes)
+      .select(Seq(col("vec_id").as("p_id"), col(vec).as("pe")) ++ extra: _*)
+
+  /** Runs a probe query over the probe vectors of the collected codebook
+    * (the search probe `_ == 0`, or the eval probes `_ < EvalProbes`).
+    * With none — an empty `embeddings`, or one without those ids — the
+    * answer is 0 rows, as in the SQL twins, whose probe joins come up
+    * empty: the query is planned over a zero vector and emptied, so its
+    * schema holds. */
+  private def withProbes(cents: Array[(Long, Array[Float])], isProbe: Long => Boolean)(
+      query: Array[(Long, Array[Float])] => DataFrame): DataFrame = {
+    val probes = cents.filter(c => isProbe(c._1))
+    if (probes.nonEmpty) query(probes)
+    else query(Array((0L, new Array[Float](PqM * PqDims)))).limit(0)
+  }
+
+  /** Probe→cell ranking, all driver-side arithmetic on the collected
+    * codebook in the row expression's fold order: each probe's `nprobe`
+    * nearest cells by cosine, ties to the lower cell id, as
+    * (p_id, cell_id, rank from 1) — the SQL twins' `row_number()` over
+    * the probe's codebook scores, bit for bit. */
+  private[graft] def probeCells(cents: Array[(Long, Array[Float])],
+      probes: Array[(Long, Array[Float])], nprobe: Int): Seq[(Long, Long, Int)] =
+    probes.toSeq.flatMap { case (pid, pe) =>
+      val pNorm = math.sqrt(dotD(pe, pe))
+      cents.toSeq
+        .map { case (cid, ce) =>
+          (dotD(pe, ce) / (pNorm * math.sqrt(dotD(ce, ce))), cid) }
+        .sortBy { case (score, cid) => (-score, cid) }
+        .take(nprobe).zipWithIndex
+        .map { case ((_, cid), i) => (pid, cid, i + 1) }
+    }
 
   /** NS (LLM pipeline): label purity of the IVF cells — for each cell,
     * the majority ground-truth label's share (argmax over per-(cell,
@@ -267,31 +313,27 @@ object Similarity {
       .orderBy($"cell_id")
   }
 
-  /** IVF query path: rank the probe (vec_id 0) against the codebook — all
-    * driver-side arithmetic on the already-collected 16-row codebook, same
-    * fold order as the column expression — take its nprobe=2 nearest cells,
-    * scan ONLY vectors assigned to those cells, cosine top-5. The whole
-    * plan is scan → filter → TakeOrdered: no join, no shuffle, no window.
-    * At 100 TB with a trained codebook this reads nprobe/cells of the
-    * corpus instead of all of it; recall is tuned by nprobe as in
-    * FAISS-style IVF-Flat. */
+  /** IVF query path: rank the probe (vec_id 0) against the codebook
+    * ([[probeCells]]), take its nprobe=2 nearest cells, scan ONLY vectors
+    * assigned to those cells, cosine top-5. The whole plan is scan →
+    * filter → TakeOrdered: no join, no shuffle, no window. At 100 TB with
+    * a trained codebook this reads nprobe/cells of the corpus instead of
+    * all of it; recall is tuned by nprobe as in FAISS-style IVF-Flat. */
   def annIvfSearch(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val cents = codebook(spark, dir)
-    val probe = cents.find(_._1 == 0L)
-      .getOrElse(sys.error("probe vec_id=0 missing from embeddings"))._2
-    val pNorm = math.sqrt(dotD(probe, probe))
-    val probeCells = cents
-      .map { case (cid, ce) => (dotD(probe, ce) / (pNorm * math.sqrt(dotD(ce, ce))), cid) }
-      .sortBy { case (score, cid) => (-score, cid) }
-      .take(2).map(_._2)
-    ivfAssigned(spark, dir, cents)
-      .where($"cell_id".isin(probeCells: _*) && $"vec_id" =!= 0)
-      .select($"vec_id", $"label", $"cell_id",
-        (dot($"embedding", lit(probe)) / (sqrt(norm2($"embedding")) * lit(pNorm)))
-          .as("score"))
-      .orderBy($"score".desc, $"vec_id")
-      .limit(5)
+    withProbes(cents, _ == 0L) { probes =>
+      val probe = probes.head._2
+      val pNorm = math.sqrt(dotD(probe, probe))
+      ivfAssigned(spark, dir, cents)
+        .where($"cell_id".isin(probeCells(cents, probes, 2).map(_._2): _*) &&
+          $"vec_id" =!= 0)
+        .select($"vec_id", $"label", $"cell_id",
+          (dot($"embedding", lit(probe)) / (sqrt(norm2($"embedding")) * lit(pNorm)))
+            .as("score"))
+        .orderBy($"score".desc, $"vec_id")
+        .limit(5)
+    }
   }
 
   // ---- Product quantization (the compression half of FAISS-style IVF-PQ) ----
@@ -299,23 +341,28 @@ object Similarity {
   private val PqM = 8    // subspaces
   private val PqDims = 8 // dims per subspace (8×8 = 64)
 
-  /** Driver-side subspace L2²: the same left fold with float→double
-    * widening as [[graft.functions.PqKernel.subDist]] — used to build the
-    * probe's ADC lookup tables with bit-identical arithmetic. */
-  private def pqSubDistD(m: Int, v: Array[Float], c: Array[Float]): Double = {
-    var s = 0.0
-    var d = 0
-    while (d < PqDims) {
-      val diff = v(m * PqDims + d).toDouble - c(m * PqDims + d).toDouble
-      s += diff * diff
-      d += 1
-    }
-    s
-  }
-
   /** The seed codebook widened to the double matrix the PQ kernels take. */
   private def pqCodebook(cents: Array[(Long, Array[Float])]): Array[Array[Double]] =
     cents.map(_._2.map(_.toDouble))
+
+  /** Each row's ADC distance to `probe`: the integer sum, by the row's
+    * PQ code, of the probe's lookup tables — per subspace, its
+    * 2^-20-quantized L2² to every centroid, built driver-side with the
+    * left fold and float→double widening of
+    * [[graft.functions.PqKernel.subDist]], so bit-identical to the row
+    * kernel. `cb` is [[pqCodebook]] of `cents`. */
+  private def adcDist(cents: Array[(Long, Array[Float])],
+      cb: Array[Array[Double]], probe: Array[Float]): Column = {
+    val tables = Array.tabulate(PqM) { m =>
+      cents.map { case (_, ce) =>
+        graft.functions.PqKernel.quantU20((0 until PqDims).foldLeft(0.0) { (s, d) =>
+          val diff = probe(m * PqDims + d).toDouble - ce(m * PqDims + d).toDouble
+          s + diff * diff
+        })
+      }
+    }
+    graft.functions.pq_adc(col("embedding"), cb, tables, PqDims)
+  }
 
   /** NS: product-quantization index build — every vector compressed to
     * M=8 one-byte codes (64 floats → 8 bytes, 32×), using the same seed
@@ -343,28 +390,21 @@ object Similarity {
   /** NS: asymmetric-distance (ADC) PQ search — the query path over
     * [[pqCodes]]' compressed vectors: the probe (vec_id 0) precomputes an
     * M×16 lookup table of subspace distances to every centroid
-    * (driver-side on the bounded codebook, same fold order as the row
-    * expression), and each row's estimated distance is the INTEGER sum of
-    * 8 table lookups by code — no float arithmetic per row at all, which
-    * is exactly why PQ scan throughput beats exact search at 100 TB.
-    * Top-5 nearest by estimated distance via TakeOrdered. */
+    * ([[adcDist]]), and each row's estimated distance is the INTEGER
+    * sum of 8 table lookups by code — no float arithmetic per row at all,
+    * which is exactly why PQ scan throughput beats exact search at
+    * 100 TB. Top-5 nearest by estimated distance via TakeOrdered. */
   def pqSearch(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val cents = codebook(spark, dir)
-    val probe = cents.find(_._1 == 0L)
-      .getOrElse(sys.error("probe vec_id=0 missing from embeddings"))._2
-    val luts: Array[Array[Long]] = Array.tabulate(PqM) { m =>
-      cents.map { case (_, ce) =>
-        math.floor(pqSubDistD(m, probe, ce) * 1048576.0 + 0.5).toLong
-      }
+    withProbes(cents, _ == 0L) { probes =>
+      Tables.embeddings(spark, dir)
+        .select($"vec_id", $"label",
+          adcDist(cents, pqCodebook(cents), probes.head._2).as("adc_u20"))
+        .where($"vec_id" =!= 0)
+        .orderBy($"adc_u20".asc, $"vec_id")
+        .limit(5)
     }
-    Tables.embeddings(spark, dir)
-      .select($"vec_id", $"label",
-        graft.functions.pq_adc($"embedding", pqCodebook(cents), luts, PqDims)
-          .as("adc_u20"))
-      .where($"vec_id" =!= 0)
-      .orderBy($"adc_u20".asc, $"vec_id")
-      .limit(5)
   }
 
   /** NS (LLM pipeline): IVF-PQ search — the FAISS-style production ANN
@@ -379,27 +419,66 @@ object Similarity {
   def ivfpqSearch(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val cents = codebook(spark, dir)
-    val probe = cents.find(_._1 == 0L)
-      .getOrElse(sys.error("probe vec_id=0 missing from embeddings"))._2
-    val pNorm = math.sqrt(dotD(probe, probe))
-    val probeCells = cents
-      .map { case (cid, ce) =>
-        (dotD(probe, ce) / (pNorm * math.sqrt(dotD(ce, ce))), cid) }
-      .sortBy { case (score, cid) => (-score, cid) }
-      .take(2).map(_._2)
-    val luts = Array.tabulate(PqM) { m =>
-      cents.map { case (_, ce) =>
-        math.floor(pqSubDistD(m, probe, ce) * 1048576.0 + 0.5).toLong
-      }
+    withProbes(cents, _ == 0L) { probes =>
+      ivfAssigned(spark, dir, cents)
+        .where($"cell_id".isin(probeCells(cents, probes, 2).map(_._2): _*) &&
+          $"vec_id" =!= 0)
+        .select($"vec_id", $"label", $"cell_id",
+          adcDist(cents, pqCodebook(cents), probes.head._2).as("adc_u20"))
+        .orderBy($"adc_u20".asc, $"vec_id")
+        .limit(5)
     }
-    ivfAssigned(spark, dir, cents)
-      .where($"cell_id".isin(probeCells: _*) && $"vec_id" =!= 0)
-      .select($"vec_id", $"label", $"cell_id",
-        graft.functions.pq_adc($"embedding", pqCodebook(cents), luts, PqDims)
-          .as("adc_u20"))
-      .orderBy($"adc_u20".asc, $"vec_id")
-      .limit(5)
   }
+
+  // ---- Retrieval evals: recall@5, nDCG@5 and the nprobe frontier ----
+
+  /** Per-probe top 5 of a (p_id, vec_id, score) frame by `byScore`, ties
+    * to the lower vec_id, as (p_id, vec_id). */
+  private def top5(scored: DataFrame, byScore: Column): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col("p_id")).orderBy(byScore, col("vec_id"))
+    scored.withColumn("rnk", row_number().over(w)).where(col("rnk") <= 5)
+      .select(col("p_id"), col("vec_id"))
+  }
+
+  /** Every row of `rows` scored against each (p_id, pe) probe, itself
+    * excluded, as (p_id, vec_id, score) — the deliberate bounded-broadcast
+    * linear scan of the brute-force arms. */
+  private def probeScan(rows: DataFrame, probes: DataFrame,
+      score: Column): DataFrame =
+    rows.crossJoin(broadcast(probes))
+      .where(col("vec_id") =!= col("p_id"))
+      .select(col("p_id"), col("vec_id"), score.as("score"))
+
+  /** The exact arm: every vector's cosine to each (p_id, pe) probe. */
+  private def exactCosine(spark: SparkSession, dir: String,
+      probes: DataFrame): DataFrame =
+    probeScan(Tables.embeddings(spark, dir), probes,
+      cosine(col("embedding"), col("pe")))
+
+  /** recall@5 per probe: how many of the `exact` arm's top 5 the
+    * `approx` arm's top 5 recovers, both ranked by `byScore` (then
+    * vec_id), as (p_id, n_hits, recall) over every row of `probes`. */
+  private def recallAt5(probes: DataFrame, exact: DataFrame,
+      approx: DataFrame, byScore: Column): DataFrame = {
+    val hits = top5(exact, byScore).join(top5(approx, byScore), Seq("p_id", "vec_id"))
+      .groupBy(col("p_id")).agg(count(lit(1)).as("hits"))
+    probes.select(col("p_id"))
+      .join(hits, Seq("p_id"), "left_outer")
+      .select(col("p_id"), coalesce(col("hits"), lit(0L)).as("n_hits"),
+        (coalesce(col("hits"), lit(0L)).cast(DoubleType) / 5.0).as("recall"))
+      .orderBy(col("p_id"))
+  }
+
+  /** IVF candidates: every `assigned` vector in one of its probe's ranked
+    * `cells` ((p_id, cell_id, pc_rnk) rows of [[probeCells]]), itself
+    * excluded, joined with that probe's `probes` row. */
+  private def ivfCandidates(assigned: DataFrame, cells: DataFrame,
+      probes: DataFrame): DataFrame =
+    assigned.drop("score")
+      .join(broadcast(cells), "cell_id")
+      .join(broadcast(probes), "p_id")
+      .where(col("vec_id") =!= col("p_id"))
 
   /** nDCG@5 weights at 2^-20 fixed point, computed ONCE on the JVM and
     * baked as literals into both the Spark plan and the generated SQL
@@ -421,39 +500,31 @@ object Similarity {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     val cents = codebook(spark, dir)
-    val nProbes = 8
-    val probeCells = cents.filter(_._1 < nProbes).flatMap { case (pid, pe) =>
-      val pNorm = math.sqrt(dotD(pe, pe))
-      cents.map { case (cid, ce) =>
-        (pid, cid, dotD(pe, ce) / (pNorm * math.sqrt(dotD(ce, ce)))) }
-        .sortBy { case (_, cid, s) => (-s, cid) }
-        .take(2).map { case (_, cid, _) => (pid, cid) }
-    }.toSeq.toDF("p_id", "cell_id")
-    val probes = Tables.embeddings(spark, dir).where($"vec_id" < nProbes)
-      .select($"vec_id".as("p_id"), $"embedding".as("pe"), $"label".as("p_label"))
-    val w = Window.partitionBy($"p_id").orderBy($"score".desc, $"vec_id")
-    val ranked = ivfAssigned(spark, dir, cents).drop("score")
-      .join(broadcast(probeCells), "cell_id")
-      .join(broadcast(probes), "p_id")
-      .where($"vec_id" =!= $"p_id")
-      .select($"p_id", $"p_label", $"vec_id", $"label",
-        cosine($"embedding", $"pe").as("score"))
-      .withColumn("rnk", row_number().over(w))
-      .where($"rnk" <= 5)
-    val dcg = ranked.groupBy($"p_id")
-      .agg(sum(when($"label" === $"p_label",
-          element_at(lit(NdcgW.toArray), $"rnk")).otherwise(0L)).as("dcg_u20"),
-        count(lit(1)).as("n_ranked"))
-    val rel = Tables.embeddings(spark, dir)
-      .join(broadcast(probes.select($"p_id", $"p_label")),
-        $"label" === $"p_label" && $"vec_id" =!= $"p_id")
-      .groupBy($"p_id").agg(count(lit(1)).as("n_rel"))
-    dcg.join(rel, "p_id")
-      .select($"p_id", $"n_rel", $"n_ranked", $"dcg_u20",
-        element_at(lit(NdcgP.toArray),
-          least(lit(5), $"n_rel").cast(IntegerType)).as("idcg_u20"))
-      .withColumn("ndcg", $"dcg_u20".cast(DoubleType) / $"idcg_u20")
-      .orderBy($"p_id")
+    withProbes(cents, _ < EvalProbes) { probeVecs =>
+      val probes = evalProbes(Tables.embeddings(spark, dir), "embedding",
+        $"label".as("p_label"))
+      val w = Window.partitionBy($"p_id").orderBy($"score".desc, $"vec_id")
+      val cells = probeCells(cents, probeVecs, 2).toDF("p_id", "cell_id", "pc_rnk")
+      val ranked = ivfCandidates(ivfAssigned(spark, dir, cents), cells, probes)
+        .select($"p_id", $"p_label", $"vec_id", $"label",
+          cosine($"embedding", $"pe").as("score"))
+        .withColumn("rnk", row_number().over(w))
+        .where($"rnk" <= 5)
+      val dcg = ranked.groupBy($"p_id")
+        .agg(sum(when($"label" === $"p_label",
+            element_at(lit(NdcgW.toArray), $"rnk")).otherwise(0L)).as("dcg_u20"),
+          count(lit(1)).as("n_ranked"))
+      val rel = Tables.embeddings(spark, dir)
+        .join(broadcast(probes.select($"p_id", $"p_label")),
+          $"label" === $"p_label" && $"vec_id" =!= $"p_id")
+        .groupBy($"p_id").agg(count(lit(1)).as("n_rel"))
+      dcg.join(rel, "p_id")
+        .select($"p_id", $"n_rel", $"n_ranked", $"dcg_u20",
+          element_at(lit(NdcgP.toArray),
+            least(lit(5), $"n_rel").cast(IntegerType)).as("idcg_u20"))
+        .withColumn("ndcg", $"dcg_u20".cast(DoubleType) / $"idcg_u20")
+        .orderBy($"p_id")
+    }
   }
 
   /** NS: recall@5 of PQ/ADC search against exact squared-L2 — the eval
@@ -468,42 +539,22 @@ object Similarity {
     * dot-product-identity expression the SQL twin spells. */
   def pqRecallEval(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
     val cents = codebook(spark, dir)
     val cb = pqCodebook(cents)
-    val nProbes = 8
-    val adcStructs = cents.filter(_._1 < nProbes).map { case (pid, pe) =>
-      val luts = Array.tabulate(PqM) { m =>
-        cents.map { case (_, ce) =>
-          math.floor(pqSubDistD(m, pe, ce) * 1048576.0 + 0.5).toLong
-        }
+    withProbes(cents, _ < EvalProbes) { probeVecs =>
+      val adcStructs = probeVecs.map { case (pid, pe) =>
+        struct(lit(pid).as("p_id"), adcDist(cents, cb, pe).as("s"))
       }
-      struct(lit(pid).as("p_id"),
-        graft.functions.pq_adc($"embedding", cb, luts, PqDims).as("s"))
+      val emb = Tables.embeddings(spark, dir)
+      val adc = emb
+        .select($"vec_id", explode(array(adcStructs.toIndexedSeq: _*)).as("pa"))
+        .select($"vec_id", $"pa.p_id".as("p_id"), $"pa.s".as("score"))
+        .where($"vec_id" =!= $"p_id")
+      val probes = evalProbes(emb, "embedding")
+      val l2 = dot($"embedding", $"embedding") -
+        lit(2.0) * dot($"embedding", $"pe") + dot($"pe", $"pe")
+      recallAt5(probes, probeScan(emb, probes, l2), adc, $"score".asc)
     }
-    val emb = Tables.embeddings(spark, dir)
-    val w = Window.partitionBy($"p_id").orderBy($"score".asc, $"vec_id")
-    def top5(scored: DataFrame): DataFrame = scored
-      .withColumn("rnk", row_number().over(w)).where($"rnk" <= 5)
-      .select($"p_id", $"vec_id")
-    val adc5 = top5(emb
-      .select($"vec_id", explode(array(adcStructs.toIndexedSeq: _*)).as("pa"))
-      .select($"vec_id", $"pa.p_id".as("p_id"), $"pa.s".as("score"))
-      .where($"vec_id" =!= $"p_id"))
-    val probesDf = emb.where($"vec_id" < nProbes)
-      .select($"vec_id".as("p_id"), $"embedding".as("pe"))
-    val l2 = dot($"embedding", $"embedding") -
-      lit(2.0) * dot($"embedding", $"pe") + dot($"pe", $"pe")
-    val exact5 = top5(emb.crossJoin(broadcast(probesDf))
-      .where($"vec_id" =!= $"p_id")
-      .select($"p_id", $"vec_id", l2.as("score")))
-    val hits = exact5.join(adc5, Seq("p_id", "vec_id"))
-      .groupBy($"p_id").agg(count(lit(1)).as("hits"))
-    probesDf.select($"p_id")
-      .join(hits, Seq("p_id"), "left_outer")
-      .select($"p_id", coalesce($"hits", lit(0L)).as("n_hits"),
-        (coalesce($"hits", lit(0L)).cast(DoubleType) / lit(5.0)).as("recall"))
-      .orderBy($"p_id")
   }
 
   /** NS: vector normalization through the higher-order-function surface —
@@ -549,15 +600,6 @@ object Similarity {
       .orderBy($"vec_a", $"vec_b")
   }
 
-  /** NS: int8 scalar quantization of embeddings — the 4× storage /
-    * bandwidth compression a 100 TB vector store applies before indexing.
-    * Per-vector symmetric scale = max|x|/127; quantize via
-    * floor(x/scale + 0.5) (bit-identical in any engine — round() differs
-    * half-even vs half-up across engines, floor doesn't). The audit
-    * columns are deliberately order-free so the oracle is exact: an
-    * integer checksum of the codes and the max absolute reconstruction
-    * error (max is permutation-safe; a double sum would depend on fold
-    * order). Pure per-row HOFs — zero shuffle, linear at any scale. */
   /** NS: per-label embedding centroids — the class-prototype computation
     * behind nearest-centroid classifiers, cluster-drift monitors, and
     * SemDeDup's cell means. Components are quantized to 2^-20 fixed point
@@ -584,12 +626,30 @@ object Similarity {
       .orderBy($"label", $"dim")
   }
 
+  /** `embeddings` with the int8 per-vector symmetric scale: abs_max =
+    * max|x| and scale = abs_max/127 (abs_max = 0 marks the all-zero
+    * vector, which quantizes to zeros). */
+  private def int8Scaled(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    Tables.embeddings(spark, dir)
+      .withColumn("abs_max",
+        array_max(transform($"embedding", x => abs(x.cast(DoubleType)))))
+      .withColumn("scale", $"abs_max" / 127.0)
+  }
+
+  /** NS: int8 scalar quantization of embeddings — the 4× storage /
+    * bandwidth compression a 100 TB vector store applies before indexing.
+    * Per-vector symmetric scale = max|x|/127; quantize via
+    * floor(x/scale + 0.5) (bit-identical in any engine — round() differs
+    * half-even vs half-up across engines, floor doesn't). The audit
+    * columns are deliberately order-free so the oracle is exact: an
+    * integer checksum of the codes and the max absolute reconstruction
+    * error (max is permutation-safe; a double sum would depend on fold
+    * order). Pure per-row HOFs — zero shuffle, linear at any scale. */
   def embeddingQuantize(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val xd: Column => Column = x => x.cast(DoubleType)
-    Tables.embeddings(spark, dir)
-      .withColumn("abs_max", array_max(transform($"embedding", x => abs(xd(x)))))
-      .withColumn("scale", $"abs_max" / 127.0)
+    int8Scaled(spark, dir)
       .withColumn("qs", when($"abs_max" === 0.0,
         transform($"embedding", _ => lit(0L)))
         .otherwise(transform($"embedding",
@@ -613,85 +673,36 @@ object Similarity {
     * the oracle (floor(x/scale + 0.5)·scale), so ranks agree bit-exactly. */
   def quantizeRecallEval(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val nProbes = 8
-    val xd: Column => Column = x => x.cast(DoubleType)
-    val deq = Tables.embeddings(spark, dir)
-      .withColumn("abs_max",
-        array_max(transform($"embedding", x => abs(xd(x)))))
-      .withColumn("scale", $"abs_max" / 127.0)
+    val deq = int8Scaled(spark, dir)
       .withColumn("dq", when($"abs_max" === 0.0,
         transform($"embedding", _ => lit(0.0)))
         .otherwise(transform($"embedding",
-          x => floor(xd(x) / $"scale" + 0.5) * $"scale")))
+          x => floor(x.cast(DoubleType) / $"scale" + 0.5) * $"scale")))
       .select($"vec_id", $"dq")
-    val probesQ = deq.where($"vec_id" < nProbes)
-      .select($"vec_id".as("p_id"), $"dq".as("pe"))
-    val probesX = Tables.embeddings(spark, dir).where($"vec_id" < nProbes)
-      .select($"vec_id".as("p_id"), $"embedding".as("pe"))
-    val w = Window.partitionBy($"p_id").orderBy($"score".desc, $"vec_id")
-    def top5(scored: DataFrame): DataFrame = scored
-      .withColumn("rnk", row_number().over(w)).where($"rnk" <= 5)
-      .select($"p_id", $"vec_id")
-    val quant5 = top5(deq.crossJoin(broadcast(probesQ))
-      .where($"vec_id" =!= $"p_id")
-      .select($"p_id", $"vec_id", cosine($"dq", $"pe").as("score")))
-    val exact5 = top5(Tables.embeddings(spark, dir)
-      .crossJoin(broadcast(probesX))
-      .where($"vec_id" =!= $"p_id")
-      .select($"p_id", $"vec_id", cosine($"embedding", $"pe").as("score")))
-    val hits = exact5.join(quant5, Seq("p_id", "vec_id"))
-      .groupBy($"p_id").agg(count(lit(1)).as("hits"))
-    probesX.select($"p_id")
-      .join(hits, Seq("p_id"), "left_outer")
-      .select($"p_id", coalesce($"hits", lit(0L)).as("n_hits"),
-        (coalesce($"hits", lit(0L)).cast(DoubleType) / 5.0).as("recall"))
-      .orderBy($"p_id")
+    val probesX = evalProbes(Tables.embeddings(spark, dir), "embedding")
+    val quant = probeScan(deq, evalProbes(deq, "dq"), cosine($"dq", $"pe"))
+    recallAt5(probesX, exactCosine(spark, dir, probesX), quant, $"score".desc)
   }
 
   /** NS: ANN quality evaluation — recall@5 of the IVF search (nprobe=2)
     * against the exact brute-force top-5, per probe (vec_id < 8). The
     * eval loop you run after (re)training a codebook to size nprobe:
     * both pipelines execute distributed; only the bounded probe→cell
-    * ranking (8 probes × 16 centroids) happens at plan time, from the
-    * same collected codebook the IVF queries embed as literals (same
-    * double fold order as the SQL twin, so ranks agree bit-for-bit). The
-    * exact side is the deliberate bounded-broadcast linear scan. */
+    * ranking (8 probes × 16 centroids, [[probeCells]]) happens at plan
+    * time, from the same collected codebook the IVF queries embed as
+    * literals (same double fold order as the SQL twin, so ranks agree
+    * bit-for-bit). The exact side is the deliberate bounded-broadcast
+    * linear scan. */
   def annRecallEval(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
     val cents = codebook(spark, dir)
-    val nProbes = 8
-    val probeCells = cents.filter(_._1 < nProbes).flatMap { case (pid, pe) =>
-      val pNorm = math.sqrt(dotD(pe, pe))
-      cents.map { case (cid, ce) =>
-        (pid, cid, dotD(pe, ce) / (pNorm * math.sqrt(dotD(ce, ce)))) }
-        .sortBy { case (_, cid, s) => (-s, cid) }
-        .take(2).map { case (_, cid, _) => (pid, cid) }
-    }.toSeq.toDF("p_id", "cell_id")
-    val probes = Tables.embeddings(spark, dir).where($"vec_id" < nProbes)
-      .select($"vec_id".as("p_id"), $"embedding".as("pe"))
-    val score = cosine($"embedding", $"pe")
-    val w = Window.partitionBy($"p_id").orderBy($"score".desc, $"vec_id")
-    def top5(scored: DataFrame): DataFrame = scored
-      .withColumn("rnk", row_number().over(w)).where($"rnk" <= 5)
-      .select($"p_id", $"vec_id")
-    val ivf5 = top5(ivfAssigned(spark, dir, cents).drop("score")
-      .join(broadcast(probeCells), "cell_id")
-      .join(broadcast(probes), "p_id")
-      .where($"vec_id" =!= $"p_id")
-      .select($"p_id", $"vec_id", score.as("score")))
-    val exact5 = top5(Tables.embeddings(spark, dir)
-      .crossJoin(broadcast(probes))
-      .where($"vec_id" =!= $"p_id")
-      .select($"p_id", $"vec_id", score.as("score")))
-    val hits = exact5.join(ivf5, Seq("p_id", "vec_id"))
-      .groupBy($"p_id").agg(count(lit(1)).as("hits"))
-    probes.select($"p_id")
-      .join(hits, Seq("p_id"), "left_outer")
-      .select($"p_id", coalesce($"hits", lit(0L)).as("n_hits"),
-        (coalesce($"hits", lit(0L)).cast(DoubleType) / 5.0).as("recall"))
-      .orderBy($"p_id")
+    withProbes(cents, _ < EvalProbes) { probeVecs =>
+      val probes = evalProbes(Tables.embeddings(spark, dir), "embedding")
+      val cells = probeCells(cents, probeVecs, 2).toDF("p_id", "cell_id", "pc_rnk")
+      val ivf = ivfCandidates(ivfAssigned(spark, dir, cents), cells, probes)
+        .select($"p_id", $"vec_id", cosine($"embedding", $"pe").as("score"))
+      recallAt5(probes, exactCosine(spark, dir, probes), ivf, $"score".desc)
+    }
   }
 
   /** NS (LLM pipeline): the nprobe COST/RECALL frontier — the one table
@@ -708,79 +719,37 @@ object Similarity {
     * 100 TB. */
   def annNprobeFrontier(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
     val cents = codebook(spark, dir)
-    val nProbes = 8
-    val probeCells = cents.filter(_._1 < nProbes).flatMap { case (pid, pe) =>
-      val pNorm = math.sqrt(dotD(pe, pe))
-      cents.map { case (cid, ce) =>
-        (pid, cid, dotD(pe, ce) / (pNorm * math.sqrt(dotD(ce, ce)))) }
-        .sortBy { case (_, cid, s) => (-s, cid) }
-        .take(4).zipWithIndex.map { case ((_, cid, _), i) => (pid, cid, i + 1) }
-    }.toSeq.toDF("p_id", "cell_id", "pc_rnk")
-    val probes = Tables.embeddings(spark, dir).where($"vec_id" < nProbes)
-      .select($"vec_id".as("p_id"), $"embedding".as("pe"))
-    val score = cosine($"embedding", $"pe")
-    val assigned = ivfAssigned(spark, dir, cents).drop("score")
-    val cand = assigned
-      .join(broadcast(probeCells), "cell_id")
-      .join(broadcast(probes), "p_id")
-      .where($"vec_id" =!= $"p_id")
-      .select($"p_id", $"vec_id", $"pc_rnk", score.as("score"))
-    val w = Window.partitionBy($"p_id").orderBy($"score".desc, $"vec_id")
-    val exact5 = Tables.embeddings(spark, dir)
-      .crossJoin(broadcast(probes))
-      .where($"vec_id" =!= $"p_id")
-      .select($"p_id", $"vec_id", score.as("score"))
-      .withColumn("rnk", row_number().over(w)).where($"rnk" <= 5)
-      .select($"p_id", $"vec_id")
-    val cellSizes = assigned.groupBy($"cell_id").agg(count(lit(1)).as("cell_n"))
-    val total = Tables.embeddings(spark, dir).agg(count(lit(1)).as("n_total"))
-    Seq(1, 2, 4).map { np =>
-      val ivf5 = cand.where($"pc_rnk" <= np)
-        .withColumn("rnk", row_number().over(w)).where($"rnk" <= 5)
-        .select($"p_id", $"vec_id")
-      val hits = exact5.join(ivf5, Seq("p_id", "vec_id"))
-        .agg(count(lit(1)).as("n_hits"))
-      val scanned = probeCells.where($"pc_rnk" <= np)
-        .join(cellSizes, "cell_id")
-        .agg(sum($"cell_n").as("scanned_rows"))
-      hits.crossJoin(scanned).select(lit(np).as("nprobe"), $"n_hits",
-        $"scanned_rows")
-    }.reduce(_ unionByName _)
-      .crossJoin(broadcast(total))
-      .select($"nprobe", $"n_hits",
-        expr(s"n_hits * 1048576 div ${nProbes * 5}").as("recall_u20"),
-        $"scanned_rows",
-        expr(s"scanned_rows * 1048576 div ($nProbes * n_total)")
-          .as("scanned_u20"))
-      .orderBy($"nprobe")
+    withProbes(cents, _ < EvalProbes) { probeVecs =>
+      val cells = probeCells(cents, probeVecs, 4).toDF("p_id", "cell_id", "pc_rnk")
+      val probes = evalProbes(Tables.embeddings(spark, dir), "embedding")
+      val assigned = ivfAssigned(spark, dir, cents).drop("score")
+      val cand = ivfCandidates(assigned, cells, probes)
+        .select($"p_id", $"vec_id", $"pc_rnk",
+          cosine($"embedding", $"pe").as("score"))
+      val exact5 = top5(exactCosine(spark, dir, probes), $"score".desc)
+      val cellSizes = assigned.groupBy($"cell_id").agg(count(lit(1)).as("cell_n"))
+      val total = Tables.embeddings(spark, dir).agg(count(lit(1)).as("n_total"))
+      Seq(1, 2, 4).map { np =>
+        val hits = exact5.join(top5(cand.where($"pc_rnk" <= np), $"score".desc),
+            Seq("p_id", "vec_id"))
+          .agg(count(lit(1)).as("n_hits"))
+        val scanned = cells.where($"pc_rnk" <= np)
+          .join(cellSizes, "cell_id")
+          .agg(sum($"cell_n").as("scanned_rows"))
+        hits.crossJoin(scanned).select(lit(np).as("nprobe"), $"n_hits",
+          $"scanned_rows")
+      }.reduce(_ unionByName _)
+        .crossJoin(broadcast(total))
+        .select($"nprobe", $"n_hits",
+          expr(s"n_hits * 1048576 div ${EvalProbes * 5}").as("recall_u20"),
+          $"scanned_rows",
+          expr(s"scanned_rows * 1048576 div ($EvalProbes * n_total)")
+            .as("scanned_u20"))
+        .orderBy($"nprobe")
+    }
   }
 
-  /** NS: semantic (embedding-space) deduplication — the SemDeDup recipe
-    * (Abbas et al. 2023, arXiv:2303.09540): cluster the embeddings, form
-    * cosine pairs ONLY within a cluster, and drop every vector that has a
-    * lower-id cluster-mate above the threshold; the surviving lowest id is
-    * the keeper. Output is one row per vector: (vec_id, cell_id, is_dup,
-    * keeper, max_dup_score) — the keep/drop decision a curation pipeline
-    * applies before training.
-    *
-    * Clustering reuses the IVF codebook assignment (zero-shuffle literal-
-    * codebook argmax). The within-cell self-join is the method's cost
-    * model: O(Σ|cell|²) = N × avg cell size, so the cluster COUNT is the
-    * scale knob — production SemDeDup sizes k ≈ N / (a few thousand) so
-    * cells stay bounded and cost stays linear in N (the paper runs 50k
-    * clusters on LAION); the 16-cell fixture codebook stands in for that
-    * trained codebook here exactly as in the IVF queries. max() over the
-    * pair scores is permutation-safe (a double SUM would be fold-order-
-    * dependent), so the oracle compare is exact. */
-  /** The semantic-dedup index: every vector with its IVF cell and its
-    * norm computed ONCE before any pair join (sqrt(n2x)·sqrt(n2y) then
-    * divide is the identical IEEE op sequence the per-pair form and the
-    * SQL twin use, so downstream scores stay bit-equal while per-pair
-    * work drops to one dot product). Shared by [[semanticDedup]] and the
-    * stream-static ingest twin (StreamingSpec): at ingest time a new
-    * batch probes exactly this index by cell key. */
   /** Cell count for the SemDeDup index, adaptive in corpus size N:
     * k = 16·2^ceil(log2(ceil(N/2000))) (k=16 up to N=2000). Pure INTEGER
     * arithmetic — the DuckDB twin computes the identical k as
@@ -800,113 +769,25 @@ object Similarity {
     16 << bits
   }
 
-  /** Memoized (FrameMemo): the dedup self-join consumes this frame on
-    * BOTH sides and the ingest twin probes it per batch — without the
-    * memo each consumer re-runs the k·N assignment fold. */
+  /** The semantic-dedup index: every vector with its IVF cell over the
+    * [[adaptiveCells]] codebook and its norm computed ONCE before any
+    * pair join (sqrt(n2x)·sqrt(n2y) then divide is the identical IEEE op
+    * sequence the per-pair form and the SQL twin use, so downstream
+    * scores stay bit-equal while per-pair work drops to one dot product).
+    * Shared by [[semanticDedup]], [[semanticCellProfile]] and the
+    * stream-static ingest twin (StreamingSpec): at ingest time a new
+    * batch probes exactly this index by cell key. Memoized (FrameMemo):
+    * the dedup self-join consumes this frame on BOTH sides and the ingest
+    * twin probes it per batch — without the memo each consumer re-runs
+    * the k·N assignment fold. */
   def cellIndex(spark: SparkSession, dir: String): DataFrame =
     FrameMemo.shared(spark, dir, "cellIndex") {
       import spark.implicits._
       val n = Tables.embeddings(spark, dir).count()
-      ivfAssigned(spark, dir,
-          rebalancedCodebook(spark, dir, codebook(spark, dir, adaptiveCells(n))))
+      ivfAssigned(spark, dir, codebook(spark, dir, adaptiveCells(n)))
         .select($"vec_id", $"cell_id", $"embedding",
           sqrt(norm2($"embedding")).as("nrm"))
     }
-
-  /** Default within-cell pair-mass budget for [[rebalancedCodebook]]:
-    * 2^20 pairs (~1M dot products) per cell before a split is forced. A
-    * deliberate NO-OP at fixture scale (sf0.1's fattest cell carries
-    * ~8k pairs; even a 10× sf1 tier stays under ~1M) so the oracled
-    * `semantic_dedup` answer is unchanged — the knob exists for the
-    * 100 TB shape, where one skewed cell otherwise owns a dead
-    * executor's worth of quadratic work. */
-  private[graft] val CellPairBudget = 1L << 20
-
-  /** ACT on the [[semanticCellProfile]] pre-flight: any cell whose
-    * within-cell candidate-pair count n·(n−1)/2 exceeds `pairBudget` is
-    * SPLIT — the standard IVF rebalance — by one deterministic 2-means
-    * step over its own members (seeds: the cell's min- and max-`vec_id`
-    * members; assignment by the same cosine argmax the queries use; new
-    * centroids = per-side component means). Repeats up to `maxRounds`
-    * or until every cell fits the budget. All driver-side state is
-    * bounded: a k-row count profile and two d-dim means per split —
-    * the same "collected plan-time literal" class as the codebook
-    * itself. Split cells keep the original id for side 0 and take
-    * `max(cell_id)+1...` for side 1, so unaffected cells keep their
-    * ids and a no-op rebalance returns the input codebook UNCHANGED. */
-  private[graft] def rebalancedCodebook(spark: SparkSession, dir: String,
-      cents: Array[(Long, Array[Float])],
-      pairBudget: Long = CellPairBudget,
-      maxRounds: Int = 3): Array[(Long, Array[Float])] = {
-    import spark.implicits._
-    var book = cents
-    var round = 0
-    var done = false
-    while (round < maxRounds && !done) {
-      val profile = ivfAssigned(spark, dir, book)
-        .groupBy($"cell_id").agg(count(lit(1)).as("n"))
-        .as[(Long, Long)].collect().toMap
-      val over = book.map(_._1)
-        .filter(cid => { val n = profile.getOrElse(cid, 0L); n * (n - 1) / 2 > pairBudget })
-      if (over.isEmpty) done = true
-      else {
-        var nextId = book.map(_._1).max + 1
-        val assigned = ivfAssigned(spark, dir, book)
-        val dims = book.head._2.length
-        val splits = over.flatMap { cid =>
-          val members = assigned.where($"cell_id" === cid)
-            .select($"vec_id", $"embedding").as[(Long, Array[Float])]
-          // deterministic seeds: the cell's extreme members by vec_id
-          val seedIds = members.agg(min($"vec_id"), max($"vec_id"))
-            .as[(Long, Long)].collect().head
-          val seeds = members
-            .where($"vec_id".isin(seedIds._1, seedIds._2)).collect()
-            .sortBy(_._1).map(_._2)
-          if (seeds.length < 2) Nil
-          else {
-            // one Lloyd step restricted to the cell: cosine-nearest seed
-            // (ties to side 0), then per-side component means summed in
-            // vec_id order — FP addition is order-sensitive, so the fold
-            // order must be pinned for the split to be deterministic
-            def cos(v: Array[Float], c: Array[Float]) =
-              dotD(v, c) / (math.sqrt(dotD(v, v)) * math.sqrt(dotD(c, c)))
-            val side = members.map { case (id, v) =>
-              val s = if (cos(v, seeds(0)) >= cos(v, seeds(1))) 0 else 1
-              (s, id, v)
-            }
-            val means = side.groupByKey(_._1)
-              .mapGroups { (s, vs) =>
-                val sorted = vs.toArray.sortBy(_._2)
-                val acc = new Array[Double](dims)
-                sorted.foreach { case (_, _, v) =>
-                  var d = 0
-                  while (d < dims) { acc(d) += v(d); d += 1 }
-                }
-                (s, acc.map(x => (x / sorted.length).toFloat))
-              }
-              .collect().toMap
-            // a side can be empty (all members tie to one seed): keep the
-            // original centroid for side 0 and skip the split
-            if (means.size < 2) Nil
-            else {
-              val id1 = nextId; nextId += 1
-              Seq((cid, (cid, means(0))), (cid, (id1, means(1))))
-            }
-          }
-        }
-        if (splits.isEmpty) done = true
-        else {
-          val byOld: Map[Long, Seq[(Long, Array[Float])]] =
-            splits.groupBy(_._1).map { case (k, v) => (k, v.map(_._2).toSeq) }
-          book = book.flatMap { case (cid, ce) =>
-            byOld.getOrElse(cid, Seq((cid, ce)))
-          }.sortBy(_._1)
-        }
-      }
-      round += 1
-    }
-    book
-  }
 
   /** NS (LLM pipeline): the Σ|cell|² knob report read BEFORE running
     * [[semanticDedup]] — per cell, the population and the EXACT
@@ -942,6 +823,23 @@ object Similarity {
       .orderBy($"cell_id")
   }
 
+  /** NS: semantic (embedding-space) deduplication — the SemDeDup recipe
+    * (Abbas et al. 2023, arXiv:2303.09540): cluster the embeddings, form
+    * cosine pairs ONLY within a cluster, and drop every vector that has a
+    * lower-id cluster-mate above the threshold; the surviving lowest id is
+    * the keeper. Output is one row per vector: (vec_id, cell_id, is_dup,
+    * keeper, max_dup_score) — the keep/drop decision a curation pipeline
+    * applies before training.
+    *
+    * Clustering reuses the IVF codebook assignment (zero-shuffle literal-
+    * codebook argmax). The within-cell self-join is the method's cost
+    * model: O(Σ|cell|²) = N × avg cell size, so the cluster COUNT is the
+    * scale knob — production SemDeDup sizes k ≈ N / (a few thousand) so
+    * cells stay bounded and cost stays linear in N (the paper runs 50k
+    * clusters on LAION); the 16-cell fixture codebook stands in for that
+    * trained codebook here exactly as in the IVF queries. max() over the
+    * pair scores is permutation-safe (a double SUM would be fold-order-
+    * dependent), so the oracle compare is exact. */
   def semanticDedup(spark: SparkSession, dir: String,
       tau: Double = 0.40): DataFrame = {
     import spark.implicits._
@@ -965,18 +863,6 @@ object Similarity {
       .orderBy($"vec_id")
   }
 
-  /** NS (LLM pipeline): the corpus second-moment (Gram) matrix XᵀX over
-    * the embedding column — the one-pass statistic behind PCA/whitening
-    * of an embedding space before clustering or semantic dedup.
-    * [[graft.functions.GramSumL]] multiply-adds each row's outer product
-    * STRAIGHT into triangular O(d²) aggregate state — no per-row d²
-    * intermediate array, no row explosion (`posexplode` twice would
-    * shuffle 4096 rows per vector at d=64) — and ships ONE array per
-    * partition across the shuffle. Components are 2^-20 fixed-point
-    * quantized before multiplying, so every product is an exact i64 and
-    * the sums are order-independent — cross-engine-identical without
-    * tolerance. Output: the upper triangle (i ≤ j; the matrix is
-    * symmetric) at 2^-40 scale, plus the row count that normalizes it. */
   /** NS (LLM pipeline): dominant principal direction of the embedding
     * cloud by power iteration — the "is this embedding space collapsed
     * onto one axis" diagnostic (a dominant component soaking up most
@@ -1023,6 +909,18 @@ object Similarity {
       .orderBy($"dim")
   }
 
+  /** NS (LLM pipeline): the corpus second-moment (Gram) matrix XᵀX over
+    * the embedding column — the one-pass statistic behind PCA/whitening
+    * of an embedding space before clustering or semantic dedup.
+    * [[graft.functions.GramSumL]] multiply-adds each row's outer product
+    * STRAIGHT into triangular O(d²) aggregate state — no per-row d²
+    * intermediate array, no row explosion (`posexplode` twice would
+    * shuffle 4096 rows per vector at d=64) — and ships ONE array per
+    * partition across the shuffle. Components are 2^-20 fixed-point
+    * quantized before multiplying, so every product is an exact i64 and
+    * the sums are order-independent — cross-engine-identical without
+    * tolerance. Output: the upper triangle (i ≤ j; the matrix is
+    * symmetric) at 2^-40 scale, plus the row count that normalizes it. */
   def embeddingGram(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val d = 64

@@ -91,35 +91,14 @@ class CurationOpsSpec extends SparkSpecBase {
     }
   }
 
-  test("IVF rebalance: a deliberately skewed codebook splits until the " +
-    "pair mass drops; shipped codebook is untouched (no-op under budget)") {
-    import Similarity.{codebook, rebalancedCodebook}
-    def pairMass(cents: Array[(Long, Array[Float])]): Long = {
-      val counts = Similarity.ivfAssigned(spark, Sf0001, cents)
-        .groupBy(col("cell_id")).count().collect().map(_.getLong(1))
-      counts.map(n => n * (n - 1) / 2).sum
+  test("semantic_cell_profile: a cold construction runs at most 6 jobs") {
+    // the corpus count, the codebook read and the cell index's
+    // localCheckpoint: nothing else runs before the query is returned
+    graft.operators.FrameMemo.shared.clear()
+    val jobs = jobsDuring {
+      SparkEntry.queries("semantic_cell_profile")(spark, Sf0001); ()
     }
-    // skewed: 2 cells seeded from vectors 0 and 1 — with 500 vectors the
-    // fat cell carries >= ~31k pairs, far over a 1000-pair budget
-    val skewed = codebook(spark, Sf0001, k = 2)
-    val before = pairMass(skewed)
-    assert(before > 1000L, s"fixture not skewed enough: $before")
-    val re = rebalancedCodebook(spark, Sf0001, skewed,
-      pairBudget = 1000L, maxRounds = 4)
-    assert(re.length > skewed.length, "no cell was split")
-    val after = pairMass(re)
-    assert(after < before,
-      s"rebalance did not drop the pair mass: $before -> $after")
-    // untouched cells keep their ids and centroids
-    val reMap = re.toMap
-    assert(skewed.forall { case (cid, _) => reMap.contains(cid) })
-    // shipped data: every cell fits the default budget -> EXACT no-op,
-    // so the oracled semantic_dedup answer is unchanged by round 9
-    val shipped = codebook(spark, Sf0001)
-    val noop = rebalancedCodebook(spark, Sf0001, shipped)
-    assert(noop.length === shipped.length)
-    assert(noop.zip(shipped).forall { case ((i1, c1), (i2, c2)) =>
-      i1 === i2 && c1.sameElements(c2) })
+    assert(jobs <= 6, s"$jobs jobs to construct semantic_cell_profile cold")
   }
 
   test("semantic_dedup: within-cell pairs join on the cell key, no cartesian") {
