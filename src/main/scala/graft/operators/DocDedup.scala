@@ -95,80 +95,72 @@ object DocDedup {
 
   private def minhashPairsMemo(spark: SparkSession, dir: String): DataFrame =
     FrameMemo.shared(spark, dir, "minhash_pairs") {
-      import spark.implicits._
-      val sigs = minhashSigs(spark, dir).select($"doc_id", $"sig", $"b0", $"b1", $"b2", $"b3")
-      val bands = sigs.select($"doc_id", $"sig",
-        posexplode(array($"b0", $"b1", $"b2", $"b3")).as(Seq("k", "bv")))
+      val bands = bandFrameOf(Tables.documents(spark, dir))
       bands.as("x")
-        .join(bands.as("y"), col("x.k") === col("y.k") && col("x.bv") === col("y.bv"))
+        .join(bands.as("y"), sameBand)
         .where(col("x.doc_id") < col("y.doc_id"))
-        .select(
-          col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-          (size(filter(zip_with(col("x.sig"), col("y.sig"), (u, v) => u === v),
-            b => b)).cast(DoubleType) / NumHashes).as("est_jaccard"))
+        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
+          estJaccard)
         .distinct()
     }
 
-  /** NS: incremental MinHash dedup — the ingest-time shape: a small NEW
-    * batch (docs with doc_id ≡ 7 mod 10, standing in for today's crawl)
-    * is checked against the persisted signature index (everything else)
-    * WITHOUT recomputing or reshuffling the index: new-batch band keys
-    * BROADCAST against the index's band keys, so the big side is one
-    * linear probe-side scan. This is `minhashDedupPairs`' candidate logic
-    * with the symmetry broken the way a daily pipeline actually runs it —
-    * at 100 TB the index is a bucketed table on (band, band_value) and
-    * the new batch is always broadcast-small relative to it. */
-  def minhashIncremental(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    minhashIncrementalPairs(spark, dir).orderBy($"new_doc", $"index_doc")
-  }
-
-  /** Band-exploded signature frame of `docs` — the `(k, bv)`-keyed probe
-    * layout the persisted dedup index is stored in (and the shape a new
-    * micro-batch is signed into before probing it). */
+  /** Band-exploded signature frame of `docs`: one `(doc_id, sig, k, bv)`
+    * row per LSH band — the `(k, bv)`-keyed layout both candidate joins
+    * read, and the one the persisted dedup index is stored in. */
   private[graft] def bandFrameOf(docs: DataFrame): DataFrame =
     minhashSigsOf(docs).select(col("doc_id"), col("sig"),
       posexplode(array(col("b0"), col("b1"), col("b2"), col("b3")))
         .as(Seq("k", "bv")))
 
-  /** New-batch near-dup probe: batch band keys BROADCAST against the
-    * persisted index band frame — [[minhashIncrementalPairs]]' join,
-    * parametrized so the streaming funnel can probe each micro-batch
-    * without rebuilding index signatures. The index side stays a linear
-    * probe scan; nothing reshuffles it. */
-  private[graft] def probePairs(indexBands: DataFrame,
-      batchBands: DataFrame): DataFrame =
-    indexBands.as("y").join(broadcast(batchBands.as("x")),
-        col("x.k") === col("y.k") && col("x.bv") === col("y.bv"))
-      .select(
-        col("x.doc_id").as("new_doc"), col("y.doc_id").as("index_doc"),
-        (size(filter(zip_with(col("x.sig"), col("y.sig"), (u, v) => u === v),
-          b => b)).cast(DoubleType) / NumHashes).as("est_jaccard"))
-      .distinct()
+  /** Band-bucket equality of the `x` and `y` aliases of a `(k, bv)`
+    * band frame (MinHash or SimHash). */
+  private def sameBand: Column =
+    col("x.k") === col("y.k") && col("x.bv") === col("y.bv")
 
-  /** The unordered (new_doc, index_doc, est_jaccard) candidate frame of
-    * [[minhashIncremental]] — reused by the incremental ingest funnel. */
-  private[graft] def minhashIncrementalPairs(spark: SparkSession,
-      dir: String): DataFrame = {
+  /** Estimated Jaccard of the `x` and `y` aliases: the fraction of equal
+    * signature slots (a k/16 dyadic, so thresholds are boundary-exact in
+    * any engine). */
+  private def estJaccard: Column =
+    (size(filter(zip_with(col("x.sig"), col("y.sig"), (u, v) => u === v),
+      b => b)).cast(DoubleType) / NumHashes).as("est_jaccard")
+
+  /** The new-batch split every incremental query shares: docs with
+    * doc_id ≡ 7 (mod 10) stand in for today's crawl; the rest is the
+    * persisted index. */
+  private[graft] def isNewDoc(docId: Column): Column = docId % 10 === 7
+
+  /** NS: incremental MinHash dedup — the ingest-time shape: a small NEW
+    * batch ([[isNewDoc]], standing in for today's crawl) is checked
+    * against the persisted signature index (everything else) WITHOUT
+    * recomputing or reshuffling the index: new-batch band keys BROADCAST
+    * against the index's band keys, so the big side is one linear
+    * probe-side scan. This is `minhashDedupPairs`' candidate logic with
+    * the symmetry broken the way a daily pipeline actually runs it — at
+    * 100 TB the index is a bucketed table on (band, band_value) and the
+    * new batch is always broadcast-small relative to it. */
+  def minhashIncremental(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     // LAZY checkpoint: the signature pipeline (corpus scan + per-shingle
     // md5 + 16-perm aggregation) feeds BOTH join inputs — without the
     // materialization it would execute twice (the filters differ, so no
-    // ReusedExchange applies); lazy so constructing the plan stays free.
-    val bands = minhashSigs(spark, dir)
-      .select($"doc_id", $"sig",
-        posexplode(array($"b0", $"b1", $"b2", $"b3")).as(Seq("k", "bv")))
-      .localCheckpoint(false)
-    val newBatch = bands.where($"doc_id" % 10 === 7)
-    val index = bands.where($"doc_id" % 10 =!= 7)
-    index.as("y").join(broadcast(newBatch.as("x")),
-        col("x.k") === col("y.k") && col("x.bv") === col("y.bv"))
-      .select(
-        col("x.doc_id").as("new_doc"), col("y.doc_id").as("index_doc"),
-        (size(filter(zip_with(col("x.sig"), col("y.sig"), (u, v) => u === v),
-          b => b)).cast(DoubleType) / NumHashes).as("est_jaccard"))
-      .distinct()
+    // ReusedExchange applies). Under AQE taking it runs the aggregation's
+    // map stage; the rest waits for the query's own action.
+    val bands = bandFrameOf(Tables.documents(spark, dir)).localCheckpoint(false)
+    probePairs(bands.where(!isNewDoc($"doc_id")), bands.where(isNewDoc($"doc_id")))
+      .orderBy($"new_doc", $"index_doc")
   }
+
+  /** New-batch near-dup probe: batch band keys BROADCAST against the
+    * persisted index band frame, one `(new_doc, index_doc, est_jaccard)`
+    * row per candidate — [[minhashIncremental]]'s join, and the one the
+    * ingest funnel runs per batch. The index side stays a linear probe
+    * scan; nothing reshuffles it. */
+  private[graft] def probePairs(indexBands: DataFrame,
+      batchBands: DataFrame): DataFrame =
+    indexBands.as("y").join(broadcast(batchBands.as("x")), sameBand)
+      .select(col("x.doc_id").as("new_doc"), col("y.doc_id").as("index_doc"),
+        estJaccard)
+      .distinct()
 
   // SimHash: 32-bit signature from md5-60 token hashes, frequency-weighted.
   private val SimHashBits = 32
@@ -244,19 +236,25 @@ object DocDedup {
     * explode over the 10 layout rows + two bounded aggregations; the
     * division by 2 is an exact shiftright (n·(n−1) is even), mirrored as
     * `//` in the DuckDB twin. */
-  private[graft] def simhashPairMass(docs: DataFrame): DataFrame = {
-    val bandCols = SimhashBandLayouts.map { case (l, k, sh, w) =>
-      struct(lit(l).as("lvl"), lit(k).as("k"),
-        pmod(shiftright(col("simhash"), sh), lit(1L << w)).as("bv"))
-    }
-    docs
-      .select(explode(array(bandCols: _*)).as("b"))
+  private[graft] def simhashPairMass(docs: DataFrame): DataFrame =
+    simhashBands(docs, SimhashBandLayouts)
       .groupBy(col("b.lvl").as("lvl"), col("b.k").as("k"), col("b.bv").as("bv"))
       .agg(count(lit(1)).as("n"))
       .groupBy(col("lvl"))
       .agg(countDistinct(col("k")).as("n_bands"),
         count(lit(1)).as("n_buckets"),
         sum(shiftright(col("n") * (col("n") - 1), 1)).as("cand_pairs"))
+
+  /** One `(doc_id, simhash, b)` row per document and band of `layouts`,
+    * `b` the `(lvl, k, bv)` bucket key the governor's mass projection
+    * counts and the banded pair join matches on. */
+  private def simhashBands(docs: DataFrame,
+      layouts: Seq[(Int, Int, Int, Int)]): DataFrame = {
+    val bandCols = layouts.map { case (l, k, sh, w) =>
+      struct(lit(l).as("lvl"), lit(k).as("k"),
+        pmod(shiftright(col("simhash"), sh), lit(1L << w)).as("bv"))
+    }
+    docs.select(col("doc_id"), col("simhash"), explode(array(bandCols: _*)).as("b"))
   }
 
   /** The governor's pick as a 1-row `chosen_lvl` frame: the loosest
@@ -352,26 +350,12 @@ object DocDedup {
     * truth set still yields one all-zero row. */
   private def recallTruthAgg(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val docs = simhashDocsMemo(spark, dir).where($"doc_id" < RecallCalibDocs)
-    val bandCols = SimhashBandLayouts.filter(_._1 == 0).map { case (_, k, sh, w) =>
-      struct(lit(k).as("k"),
-        pmod(shiftright($"simhash", sh), lit(1L << w)).as("bv"))
-    }
-    val bands = docs
-      .select($"doc_id", $"simhash", explode(array(bandCols: _*)).as("b"))
-      .select($"doc_id", $"simhash", $"b.k".as("k"), $"b.bv".as("bv"))
-    val truth = bands.as("x")
-      .join(bands.as("y"), col("x.k") === col("y.k") && col("x.bv") === col("y.bv"))
-      .where(col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"),
-        bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).as("h"))
-      .where($"h" <= 3)
-      .distinct()
-    truth.agg(
-      coalesce(sum(when($"h" <= 3, 1L)), lit(0L)).as("s0"),
-      coalesce(sum(when($"h" <= 2, 1L)), lit(0L)).as("s1"),
-      coalesce(sum(when($"h" <= 1, 1L)), lit(0L)).as("s2"),
-      coalesce(sum(when($"h" <= 0, 1L)), lit(0L)).as("s3"))
+    simhashPairsAt(simhashDocsMemo(spark, dir).where($"doc_id" < RecallCalibDocs), 0)
+      .agg(
+        coalesce(sum(when($"hamming" <= 3, 1L)), lit(0L)).as("s0"),
+        coalesce(sum(when($"hamming" <= 2, 1L)), lit(0L)).as("s1"),
+        coalesce(sum(when($"hamming" <= 1, 1L)), lit(0L)).as("s2"),
+        coalesce(sum(when($"hamming" <= 0, 1L)), lit(0L)).as("s3"))
   }
 
   /** The recall floor for the INVERSE governor mode, as an exact rational
@@ -413,9 +397,10 @@ object DocDedup {
 
   /** The inverse pick for `floorNum/floorDen`: the 4 per-level rows
     * (`lvl, s0, n_survive, cand_pairs, meets_floor`) and the 1-row
-    * `chosen_lvl, required_budget` frame — the one definition shared by
-    * [[governorRecallFloor]] and [[chosenSimhashLevelByRecall]]. */
-  private def recallFloorPlan(spark: SparkSession, dir: String,
+    * `chosen_lvl, required_budget` frame (the cheapest ladder level whose
+    * calibration recall meets the floor, and the pair budget that level
+    * requires). */
+  private[graft] def recallFloorPlan(spark: SparkSession, dir: String,
       floorNum: Long, floorDen: Long): (DataFrame, DataFrame) = {
     import spark.implicits._
     val one = recallTruthAgg(spark, dir)
@@ -441,18 +426,6 @@ object DocDedup {
     (rows, pick)
   }
 
-  /** Documented API for the inverse mode: the cheapest ladder level whose
-    * calibration recall meets `floorNum/floorDen`, with the pair budget
-    * that level requires. Driver-side state is one collected row —
-    * bounded at any corpus size. */
-  def chosenSimhashLevelByRecall(spark: SparkSession, dir: String,
-      floorNum: Long = RecallFloorNum,
-      floorDen: Long = RecallFloorDen): (Int, Long) = {
-    require(floorDen > 0 && floorNum >= 0, "floor must be a valid rational")
-    val r = recallFloorPlan(spark, dir, floorNum, floorDen)._2.head()
-    (r.getInt(0), r.getLong(1))
-  }
-
   /** SimHash near-dup pairs under the BUDGETED default: hamming(simhash)
     * ≤ 3 − chosen level, candidates restricted to docs sharing a band of
     * the chosen layout (pigeonhole-lossless at that radius — see
@@ -464,38 +437,28 @@ object DocDedup {
     simhashPairsMemo(spark, dir).orderBy($"doc_a", $"doc_b")
   }
 
-  private[graft] def simhashPairsMemo(spark: SparkSession, dir: String,
-      budget: Long = PairBudget): DataFrame =
-    // non-default budgets (the escalation spec's fixture path) get their
-    // own memo slot so they can never serve the governed default
-    FrameMemo.shared(spark, dir,
-      if (budget == PairBudget) "simhash_pairs" else s"simhash_pairs@b=$budget") {
-      simhashPairsAt(spark, dir, chosenSimhashLevel(spark, dir, budget))
+  private[graft] def simhashPairsMemo(spark: SparkSession, dir: String): DataFrame =
+    FrameMemo.shared(spark, dir, "simhash_pairs") {
+      simhashPairsAt(simhashDocsMemo(spark, dir), chosenSimhashLevel(spark, dir))
     }
 
-  /** The banded pair join at an EXPLICIT ladder level — the governed
+  /** The banded pair join over a `(doc_id, simhash)` frame at an EXPLICIT
+    * ladder level: `(doc_a, doc_b, hamming)` for every pair within radius
+    * `3 - lvl` that shares a band of that level's layout. The governed
     * default goes through [[simhashPairsMemo]]; calling this with level 0
     * regardless of corpus size is the unbudgeted audit path. */
-  private[graft] def simhashPairsAt(spark: SparkSession, dir: String,
-      lvl: Int): DataFrame = {
-    import spark.implicits._
-    val docs = simhashDocsMemo(spark, dir)
+  private[graft] def simhashPairsAt(docs: DataFrame, lvl: Int): DataFrame = {
     val layout = SimhashBandLayouts.filter(_._1 == lvl)
     require(layout.nonEmpty, s"no band layout for level $lvl")
-    val bandCols = layout.map { case (_, k, sh, w) =>
-      struct(lit(k).as("k"),
-        pmod(shiftright($"simhash", sh), lit(1L << w)).as("bv"))
-    }
-    val bands = docs
-      .select($"doc_id", $"simhash", explode(array(bandCols: _*)).as("b"))
-      .select($"doc_id", $"simhash", $"b.k".as("k"), $"b.bv".as("bv"))
+    val bands = simhashBands(docs, layout)
+      .select(col("doc_id"), col("simhash"), col("b.k").as("k"), col("b.bv").as("bv"))
     bands.as("x")
-      .join(bands.as("y"), col("x.k") === col("y.k") && col("x.bv") === col("y.bv"))
+      .join(bands.as("y"), sameBand)
       .where(col("x.doc_id") < col("y.doc_id"))
       .select(
         col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
         bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).as("hamming"))
-      .where($"hamming" <= 3 - lvl)
+      .where(col("hamming") <= 3 - lvl)
       .distinct()
   }
 
@@ -958,7 +921,7 @@ object DocDedup {
     * incremental-ingest story [[minhashIncremental]] starts: merge a NEW
     * batch's near-dup pairs into EXISTING cluster labels without re-running
     * the global transitive closure. The new batch is the same standing
-    * slice as minhash_incremental (doc_id ≡ 7 mod 10 = "today's crawl");
+    * slice as minhash_incremental ([[isNewDoc]] = "today's crawl");
     * prior state is the label table over everything else.
     *
     * The merge CONTRACTS each prior component to its label node (labels are
@@ -978,9 +941,8 @@ object DocDedup {
   def dedupClustersIncremental(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val pairs = simhashPairsMemo(spark, dir).select($"doc_a", $"doc_b")
-    def isNew(c: Column): Column = c % 10 === 7
-    val oldPairs = pairs.where(!isNew($"doc_a") && !isNew($"doc_b"))
-    val newPairs = pairs.where(isNew($"doc_a") || isNew($"doc_b"))
+    val oldPairs = pairs.where(!isNewDoc($"doc_a") && !isNewDoc($"doc_b"))
+    val newPairs = pairs.where(isNewDoc($"doc_a") || isNewDoc($"doc_b"))
     // prior state — what a daily pipeline has persisted (checkpointed by
     // connectedComponents; feeds three joins below). Memoized per
     // (session, dir) for exactly that reason: the incremental path's

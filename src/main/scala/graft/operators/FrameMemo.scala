@@ -4,17 +4,19 @@ import scala.collection.concurrent.TrieMap
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
-/** Bounded (session, dir)-scoped memo of `localCheckpoint`'ed frames —
-  * the shared intermediates several declared queries read (tokenized
-  * corpus, gate frames, candidate pairs, CC labels, the IVF cell index).
+/** Bounded (session, dir)-scoped memo of `localCheckpoint`'ed (or, via
+  * [[cached]], lazily persisted) frames — the shared intermediates
+  * several declared queries read (tokenized corpus, gate frames,
+  * candidate pairs, CC labels, the IVF cell index, the ingest index).
   * One process-wide instance, [[FrameMemo.shared]], serves every family;
   * keys are unique across families.
   *
   * Lifecycle: the map keeps at most `maxDirs` most-recently-used
   * (session, dir) groups. Admitting a NEW group beyond that evicts the
   * least-recently-used group's entries and EXPLICITLY unpersists their
-  * checkpointed RDDs; [[clear]] releases the same way.
+  * checkpointed RDDs or caches; [[clear]] releases the same way.
   *
   * Why explicit release instead of dropping references and letting the
   * ContextCleaner reclaim on GC: measured on Spark 4.1, a dropped
@@ -42,6 +44,14 @@ private[graft] final class FrameMemo(maxDirs: Int) {
   def apply(spark: SparkSession, dir: String, key: String)(
       build: => DataFrame): DataFrame =
     raw(spark, dir, key)(build.localCheckpoint(false))
+
+  /** [[apply]] with a lazy `persist` in place of the checkpoint, for
+    * frames a query must reference without running a job: under AQE a
+    * lazy localCheckpoint still runs the build's shuffle-map stages when
+    * it is taken, while a cache fills on the first job that reads it. */
+  def cached(spark: SparkSession, dir: String, key: String)(
+      build: => DataFrame): DataFrame =
+    raw(spark, dir, key)(build.persist())
 
   /** [[apply]] for builds that already return a checkpointed frame
     * (e.g. connectedComponents) — memoizes without re-checkpointing.
@@ -86,11 +96,14 @@ private[graft] final class FrameMemo(maxDirs: Int) {
     }
   }
 
-  /** Unpersist the frame's checkpointed RDDs NOW (blocks freed without
-    * waiting for a GC the cleaner may never act on — see class doc). */
+  /** Unpersist the frame's cache or checkpointed RDDs NOW (blocks freed
+    * without waiting for a GC the cleaner may never act on — see class
+    * doc). */
   private def release(df: DataFrame): Unit =
-    try GraftShims.unpersistCheckpoint(df)
-    catch { case _: Throwable => () } // a dead session is already free
+    try {
+      if (df.storageLevel != StorageLevel.NONE) df.unpersist(blocking = false)
+      else GraftShims.unpersistCheckpoint(df)
+    } catch { case _: Throwable => () } // a dead session is already free
 
   /** Drop AND release every memoized frame (tests / explicit session
     * teardown). */

@@ -327,9 +327,9 @@ object GraphOps {
     * round is ONE shuffle (neighbor expansion joined on the edge key,
     * then a min-dist re-group); plan depth stays constant via the
     * CC-loop lazy localCheckpoint. The cap bounds work on high-diameter
-    * graphs — beyond it, [[DocDedup.dedupClusters]]' pointer-doubling
-    * answers reachability in O(log d) rounds instead. The DuckDB twin
-    * unrolls the same `rounds` expansions. */
+    * graphs — beyond it, [[DocDedup.dedupClusters]]' star contraction
+    * answers reachability in O(log²) rounds independent of the diameter
+    * instead. The DuckDB twin unrolls the same `rounds` expansions. */
   def bfsDistance(spark: SparkSession, dir: String, rounds: Int = 4): DataFrame = {
     import spark.implicits._
     val pairs = DocDedup.simhashPairsMemo(spark, dir).select($"doc_a", $"doc_b")

@@ -905,7 +905,10 @@ object Similarity {
       val m = y.map(math.abs).max
       x = y.map(v => math.floor(v / m * 1048576.0 + 0.5))
     }
-    (0 until d).map(i => (i, x(i).toLong)).toDF("dim", "loading_u20")
+    // an all-zero Gram (no vectors) has no direction: NULL loadings, as
+    // the SQL twin's 0/0 normalization gives
+    (0 until d).map(i => (i, Option.when(trace != 0)(x(i).toLong)))
+      .toDF("dim", "loading_u20")
       .orderBy($"dim")
   }
 
@@ -920,7 +923,8 @@ object Similarity {
     * quantized before multiplying, so every product is an exact i64 and
     * the sums are order-independent — cross-engine-identical without
     * tolerance. Output: the upper triangle (i ≤ j; the matrix is
-    * symmetric) at 2^-40 scale, plus the row count that normalizes it. */
+    * symmetric) at 2^-40 scale, plus the row count that normalizes it;
+    * no rows when there are no vectors. */
   def embeddingGram(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val d = 64
@@ -930,6 +934,7 @@ object Similarity {
       .select(xs.as("xs"))
       .agg(graft.functions.gram_sum_l($"xs", d).as("g"),
         count(lit(1)).as("n_vecs"))
+      .where($"n_vecs" > 0)
       .select($"n_vecs", posexplode($"g").as(Seq("idx", "sum_q40")))
       .select(shiftright($"idx", 6).cast(IntegerType).as("i"),
         pmod($"idx", lit(d)).cast(IntegerType).as("j"),

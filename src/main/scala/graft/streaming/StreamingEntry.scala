@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftShims, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -116,9 +116,10 @@ object StreamingEntry {
       .as[Ev].collect().toSeq.sortBy(e => (micros(e.ts), e.event_id))
   }
 
-  private def docs(spark: SparkSession, dir: String): Seq[Doc] = {
+  private def docs(spark: SparkSession, dir: String,
+      where: Column = lit(true)): Seq[Doc] = {
     import spark.implicits._
-    graft.Tables.documents(spark, dir).select($"doc_id", $"text")
+    graft.Tables.documents(spark, dir).where(where).select($"doc_id", $"text")
       .as[Doc].collect().toSeq.sortBy(_.doc_id)
   }
 
@@ -308,41 +309,37 @@ object StreamingEntry {
       Parity(got, want)
     }),
     // the daily-ingest funnel as a REAL foreachBatch stream: today's
-    // crawl (doc_id ≡ 7 mod 10, the minhash_incremental split) arrives
-    // in N micro-batches and flows through quality gates scored from the
-    // arriving TEXT (repetition/entropy per-doc pure; LM probing the
-    // persisted corpus-trained model), exact dedup against the persisted
-    // index hashes + the cross-batch seen-hash state (first-keeper-wins
-    // over the doc_id-ordered feed ≡ the batch min-keeper rule), and a
-    // broadcast band probe of the persisted MinHash index. STRONG
-    // parity: the N-batch accumulated stage counts must equal
-    // corpus_pipeline_incremental's one-shot report — not just split
-    // invariance.
+    // crawl (the minhash_incremental split) arrives in N micro-batches,
+    // each one call of CorpusOps.ingestFunnel against the persisted
+    // index, with the cross-batch seen-hash state folded between calls
+    // (first-keeper-wins over the doc_id-ordered feed ≡ the batch
+    // min-keeper rule). corpus_pipeline_incremental is the same function
+    // applied to the whole slice as ONE batch, and the DuckDB oracle
+    // checks that report — so this twin checks split invariance against
+    // it: the N-batch accumulated stage counts must equal it.
     "corpus_funnel_stream" -> Twin("fold", (spark, dir, splits) => {
       import spark.implicits._
+      import graft.operators.{CorpusOps, DocDedup}
       implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val idx = graft.operators.CorpusOps.corpusIndex(spark, dir)
-      val rows = docs(spark, dir).filter(_.doc_id % 10 == 7)
+      val idx = CorpusOps.corpusIndex(spark, dir)
+      val rows = docs(spark, dir, DocDedup.isNewDoc($"doc_id"))
       val ms = MemoryStream[Doc]
       val acc = new java.util.concurrent.atomic.AtomicLongArray(8)
       val seenQ = new java.util.concurrent.atomic.AtomicReference[DataFrame](
         Seq.empty[String].toDF("h"))
       val applyBatch: (DataFrame, Long) => Unit = (b, _) => {
-        val (counts, qh) = graft.operators.CorpusOps
-          .ingestFunnelBatch(idx, seenQ.get(), b)
+        val (counts, qh) = CorpusOps.ingestFunnel(idx, seenQ.get(), b)
         val r = counts.collect()(0)
         (0 until 8).foreach(i =>
           acc.addAndGet(i, if (r.isNullAt(i)) 0L else r.getLong(i)))
         // EAGER checkpoint: the micro-batch frame is only valid inside
-        // this call; the folded hash state must outlive it. Release the
-        // now-superseded checkpoints (counts, qh, the PREVIOUS seenQ) —
-        // a per-batch checkpoint left pinned is a leak over a
-        // long-running stream (GC reclamation is unreliable; see
-        // GraftShims.unpersistCheckpoint).
+        // this call; the folded hash state must outlive it. Then release
+        // the superseded state — a per-batch checkpoint left pinned is a
+        // leak over a long-running stream (GC reclamation is unreliable;
+        // see GraftShims.unpersistCheckpoint).
         val prev = seenQ.get()
         seenQ.set(prev.union(qh).distinct().localCheckpoint(true))
-        Seq(counts, qh, prev).foreach(
-          org.apache.spark.sql.GraftShims.unpersistCheckpoint(_))
+        GraftShims.unpersistCheckpoint(prev)
       }
       val q = ms.toDF().writeStream.foreachBatch(applyBatch).start()
       try splitInto(rows, splits).foreach { b =>
@@ -352,8 +349,7 @@ object StreamingEntry {
         acc.get(4), acc.get(5), acc.get(6), acc.get(7)))
         .toDF("n_batch", "tok_batch", "n_quality", "tok_quality",
           "n_exact", "tok_exact", "n_ingest", "tok_ingest"))
-      val want = canon(graft.operators.CorpusOps
-        .corpusPipelineIncremental(spark, dir))
+      val want = canon(CorpusOps.corpusPipelineIncremental(spark, dir))
       Parity(got, want)
     }),
     // foreachBatch CDC/SCD2 folds: sequential per-batch apply over a

@@ -102,6 +102,22 @@ class DocDedupSpec extends SparkSpecBase {
     assert(newPairs > 0, "fixture has no new-batch pairs; merge untested")
   }
 
+  test("minhash_incremental is minhash_dedup_pairs' split-crossing pairs, " +
+      "oriented new -> index") {
+    val isNewA = DocDedup.isNewDoc($"doc_a")
+    val crossing = DocDedup.minhashDedupPairs(spark, Sf0001)
+      .where(isNewA =!= DocDedup.isNewDoc($"doc_b"))
+      .select(when(isNewA, $"doc_a").otherwise($"doc_b"),
+        when(isNewA, $"doc_b").otherwise($"doc_a"), $"est_jaccard")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val inc = DocDedup.minhashIncremental(spark, Sf0001)
+      .select($"new_doc", $"index_doc", $"est_jaccard")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    assert(inc.length === inc.distinct.length, "duplicate incremental rows")
+    assert(inc.toSet === crossing)
+    assert(crossing.nonEmpty, "no pair crosses the split; the probe is untested")
+  }
+
   test("dedup_threshold_sweep: counts decrease monotonically in the cutoff " +
     "and recount against the calibration pairs") {
     val rows = DocDedup.dedupThresholdSweep(spark, Sf0001).collect()
@@ -162,7 +178,7 @@ class DocDedupSpec extends SparkSpecBase {
         (a, sa) <- sims; (b, sb) <- sims
         if a < b && java.lang.Long.bitCount(sa ^ sb) <= radius
       } yield (a, b)).toSet
-      val banded = DocDedup.simhashPairsAt(spark, Sf0001, lvl)
+      val banded = DocDedup.simhashPairsAt(docs, lvl)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(banded === brute, s"level $lvl misses/invents pairs")
     }
@@ -212,9 +228,11 @@ class DocDedupSpec extends SparkSpecBase {
     val budget = 1000L
     val lvl = DocDedup.chosenSimhashLevel(spark, Sf0001, budget)
     assert(lvl >= 1, s"budget=$budget must force escalation, picked $lvl")
-    val governed = DocDedup.simhashPairsMemo(spark, Sf0001, budget)
+    val docs = DocDedup.simhashDocsMemo(spark, Sf0001)
+    val governedPairs = DocDedup.simhashPairsAt(docs, lvl)
+    val governed = governedPairs
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val sims = DocDedup.simhashDocsMemo(spark, Sf0001).collect()
+    val sims = docs.collect()
       .map(x => x.getLong(0) -> x.getLong(1)).toVector
     val layout = DocDedup.SimhashBandLayouts.filter(_._1 == lvl)
     val brute = (for {
@@ -235,8 +253,7 @@ class DocDedupSpec extends SparkSpecBase {
     // downstream consumer at the escalated level: engine star-contraction
     // CC over the governed pairs vs a driver-side union-find over brute
     val labels = DocDedup.connectedComponents(
-        DocDedup.simhashPairsMemo(spark, Sf0001, budget)
-          .select($"doc_a", $"doc_b"))
+        governedPairs.select($"doc_a", $"doc_b"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val parent = scala.collection.mutable.Map[Long, Long]()
     def find(x: Long): Long = {
@@ -265,8 +282,12 @@ class DocDedupSpec extends SparkSpecBase {
         if a < b && java.lang.Long.bitCount((sa ^ sb) & 0xffffffffL) <= 3 - lvl
       } yield 1).size.toLong
     }
+    def pick(num: Long, den: Long): (Int, Long) = {
+      val r = DocDedup.recallFloorPlan(spark, Sf0001, num, den)._2.head()
+      (r.getInt(0), r.getLong(1))
+    }
     // default floor 1/4
-    val (lvl, reqBudget) = DocDedup.chosenSimhashLevelByRecall(spark, Sf0001)
+    val (lvl, reqBudget) = pick(DocDedup.RecallFloorNum, DocDedup.RecallFloorDen)
     val meets = (l: Int) => s(0) == 0L ||
       s(l) * DocDedup.RecallFloorDen >= s(0) * DocDedup.RecallFloorNum
     assert(meets(lvl), s"chosen level $lvl must meet the floor")
@@ -290,10 +311,10 @@ class DocDedupSpec extends SparkSpecBase {
     }
     // floor 1/1 (perfect recall): only a level with zero loss qualifies —
     // level 0 by construction; higher only if calibration loses nothing
-    val (lvlAll, _) = DocDedup.chosenSimhashLevelByRecall(spark, Sf0001, 1L, 1L)
+    val (lvlAll, _) = pick(1L, 1L)
     assert((0 to lvlAll).forall(l => s(0) == 0L || s(l) == s(0)))
     // floor 0: any level qualifies, so the cheapest (3) wins
-    val (lvl0, _) = DocDedup.chosenSimhashLevelByRecall(spark, Sf0001, 0L, 1L)
+    val (lvl0, _) = pick(0L, 1L)
     assert(lvl0 === 3)
   }
 

@@ -24,6 +24,13 @@ class SimilaritySpec extends SparkSpecBase {
       val n = SparkEntry.queries(q)(spark, d).collect().length
       assert(n === 0, s"$q: $n rows on an empty embeddings table")
     }
+    // the Gram matrix of no vectors has no rows, and its principal
+    // direction is undefined: one NULL loading per dim, as in the twins
+    val gram = SparkEntry.queries("embedding_gram")(spark, d).collect()
+    assert(gram.isEmpty, s"embedding_gram: ${gram.length} rows")
+    val pca = SparkEntry.queries("embedding_pca")(spark, d).collect()
+    assert(pca.map(_.getInt(0)).toSeq === (0 until 64))
+    assert(pca.forall(_.isNullAt(1)), "embedding_pca: non-NULL loading")
   }
 
   test("ann_nprobe_frontier agrees with ann_recall_eval and the exact top 5") {

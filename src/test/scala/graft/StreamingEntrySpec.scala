@@ -21,53 +21,29 @@ class StreamingEntrySpec extends SparkSpecBase {
     assert(kinds === Set("agg", "fold"))
   }
 
-  test("ingest funnel: seenQ broadcast-cap switchover preserves verdicts " +
-      "and drops the hint past the cap") {
-    // The cross-batch seen-hash state grows with stream lifetime, so the
-    // funnel only HINTS the broadcast under a size cap; past it the probe
-    // degrades to an unhinted h-keyed join. Fold the same 3-batch feed
-    // through both regimes (cap = MaxValue: always hinted; cap = 0:
-    // never) — the 8 accumulated stage counts and the folded hash state
-    // must be identical either side of the switchover.
-    import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val idx = graft.operators.CorpusOps.corpusIndex(spark, Sf0001)
-    val feed = graft.Tables.documents(spark, Sf0001)
-      .where($"doc_id" % 10 === 7).select($"doc_id", $"text")
-      .orderBy($"doc_id").collect()
-    val batches = feed.grouped(math.max(1, (feed.length + 2) / 3)).toSeq
-      .map(rs => rs.map(r => (r.getLong(0), r.getString(1))).toSeq
-        .toDF("doc_id", "text"))
-    def fold(cap: Long): (Seq[Long], Set[String]) = {
-      var seen: DataFrame = Seq.empty[String].toDF("h")
-      val acc = new Array[Long](8)
-      batches.foreach { b =>
-        val (counts, qh) = graft.operators.CorpusOps
-          .ingestFunnelBatch(idx, seen, b, seenQBroadcastCap = cap)
-        val r = counts.collect()(0)
-        (0 until 8).foreach(i => acc(i) += (if (r.isNullAt(i)) 0L else r.getLong(i)))
-        seen = seen.union(qh).distinct().localCheckpoint(true)
-      }
-      (acc.toSeq, seen.collect().map(_.getString(0)).toSet)
+  test("corpus_pipeline_incremental: a cold construction runs no job past " +
+      "its table loads, and a call pins one checkpoint outside the memo") {
+    // The report is one lazy funnel call over the new slice: no gate,
+    // index or probe work may run while the query is built. Each
+    // spark.read.parquet runs one schema-inference job, and the query
+    // loads documents twice (the new slice and the index).
+    import graft.operators.{CorpusOps, FrameMemo}
+    val sc = spark.sparkContext
+    val loads = jobsDuring {
+      Tables.documents(spark, Sf0001); Tables.documents(spark, Sf0001); ()
     }
-    val (cHinted, sHinted) = fold(Long.MaxValue)
-    val (cUnhinted, sUnhinted) = fold(0L)
-    assert(cHinted === cUnhinted, "stage counts diverge across the switchover")
-    assert(sHinted === sUnhinted, "folded seen-hash state diverges")
-    assert(cHinted.head > 0, "feed was empty — parity would be vacuous")
-    // structural: past the cap the seen-probe frame carries NO broadcast
-    // hint (statistics may still choose one — only the FORCED hint is
-    // the scale liability)
-    val seen1 = Seq("beef").toDF("h").localCheckpoint(true)
-    def hasHint(cap: Long): Boolean =
-      graft.operators.CorpusOps.seenProbeFrame(seen1, cap)
-        .queryExecution.analyzed.collectFirst {
-          case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
-            if h.hints.strategy.exists(
-              _.toString.toUpperCase.contains("BROADCAST")) => h
-        }.nonEmpty
-    assert(hasHint(Long.MaxValue), "under the cap the probe must be hinted")
-    assert(!hasHint(0L), "past the cap the broadcast hint must be dropped")
+    FrameMemo.shared.clear()
+    val before = sc.getPersistentRDDs.keySet.toSet
+    var report: org.apache.spark.sql.DataFrame = null
+    val jobs = jobsDuring {
+      report = CorpusOps.corpusPipelineIncremental(spark, Sf0001); ()
+    }
+    assert(jobs === loads,
+      s"$jobs jobs to construct cold; the two table loads alone run $loads")
+    assert(report.collect().length === 1)
+    // the memo releases the index; only the new slice's checkpoint stays
+    FrameMemo.shared.clear()
+    val pinned = sc.getPersistentRDDs.keySet.toSet -- before
+    assert(pinned.size <= 1, s"${pinned.size} RDDs left pinned past the memo")
   }
 }
