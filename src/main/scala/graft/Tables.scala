@@ -10,6 +10,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * unchanged against a multi-TB directory on a real cluster.
   */
 object Tables {
+  /** Load `dir/name.parquet`. Each call runs one parquet schema-inference
+    * job on the driver, so a query pays one job per table load it makes
+    * (outside a memo build) while it is constructed. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 

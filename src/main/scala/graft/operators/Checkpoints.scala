@@ -15,7 +15,11 @@ import org.apache.spark.sql.DataFrame
   * instead — the swap is config-only, and ClusterConfSpec proves the
   * reliable path produces identical results on a fixture. Both forms are
   * LAZY: the caller's next action (fingerprint count, next round's
-  * shuffle) materializes the cut, so no round runs twice.
+  * shuffle) materializes the cut, so no round runs twice. Lazy is not
+  * free under AQE (Spark's default): taking a lazy `localCheckpoint`
+  * of a shuffle-bearing plan runs its shuffle-map stages at once, since
+  * the adaptive plan materializes every stage below the final one before
+  * it hands out the RDD; only the final stage waits for the next action.
   */
 object Checkpoints {
   val ConfKey = "spark.graft.reliableCheckpoints"

@@ -41,14 +41,17 @@ private[graft] final class FrameMemo(maxDirs: Int) {
   // re-inserting on touch moves a dir to the back.
   private val lru = mutable.LinkedHashSet[(SparkSession, String)]()
 
+  /** Memoize `build` as a lazy `localCheckpoint`. Under AQE (Spark's
+    * default) taking it runs the build's shuffle-map stages at once, so a
+    * shuffle-bearing build costs jobs when the memo entry is created; see
+    * [[cached]] for a form that runs none. */
   def apply(spark: SparkSession, dir: String, key: String)(
       build: => DataFrame): DataFrame =
     raw(spark, dir, key)(build.localCheckpoint(false))
 
   /** [[apply]] with a lazy `persist` in place of the checkpoint, for
-    * frames a query must reference without running a job: under AQE a
-    * lazy localCheckpoint still runs the build's shuffle-map stages when
-    * it is taken, while a cache fills on the first job that reads it. */
+    * frames a query must reference without running a job: a cache fills
+    * on the first job that reads it. */
   def cached(spark: SparkSession, dir: String, key: String)(
       build: => DataFrame): DataFrame =
     raw(spark, dir, key)(build.persist())

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.Tables
 import graft.functions.{fnv1a32, money_dec2, wire_decode, wire_encode}
+import graft.streaming.StreamOps
 
 /** Queries derived from the reference's own operator surface (SURVEY.md §2
   * Part A). Each is a plain `Column`-expression plan so Catalyst gets full
@@ -26,21 +27,9 @@ object ReferenceOps {
     * stage. */
   def moneySum(c: Column): Column = sum(money_dec2(c)).cast(DoubleType)
 
-  /** A1+A11+A16: the sales pipeline as one query — purchases only,
-    * per-customer revenue (reference: golang/chapter_4/sales/
-    * sales_consumer_client.go:91-95 computes quantity*price per record;
-    * aggregation is the Spark-native closure of that projection).
-    */
-  def salesTotals(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Tables.events(spark, dir)
-      .filter($"event_type" === "purchase")
-      .groupBy($"user_id")
-      .agg(
-        moneySum($"value").as("revenue"),
-        count(lit(1)).as("n_purchases"))
-      .orderBy($"user_id")
-  }
+  /** A1+A11+A16: the sales pipeline, [[StreamOps.salesTotals]]. */
+  def salesTotals(spark: SparkSession, dir: String): DataFrame =
+    StreamOps.salesTotals(Tables.events(spark, dir)).orderBy(col("user_id"))
 
   /** A11+A12: projection + derived columns + key extraction
     * (reference: sales_producer_client.go:59 key=CustomerName;

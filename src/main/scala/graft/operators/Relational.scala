@@ -8,6 +8,7 @@ import org.apache.spark.sql.types._
 import graft.Tables
 import graft.functions.{money_cents, money_dec2, unscaled_decimal}
 import graft.operators.ReferenceOps.moneySum
+import graft.streaming.StreamOps
 
 /** Relational capability closure (SURVEY.md §2 Part B): joins, window
   * functions, time windows, set ops, rollup, top-k, dedup. All plans are
@@ -94,39 +95,20 @@ object Relational {
     semi.unionAll(anti).orderBy($"c_custkey")
   }
 
-  /** NS (Kafka Streams tumbling window): 1-hour tumbling aggregate.
-    * Streaming twin adds a watermark on `ts` (see graft.streaming). */
-  def windowedAgg(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Tables.events(spark, dir)
-      .groupBy(window($"ts", "1 hour").as("w"), $"event_type")
-      .agg(count(lit(1)).as("n"), moneySum($"value").as("total_value"))
-      .select(unix_micros($"w.start").as("w_start"), $"event_type", $"n", $"total_value")
-      .orderBy($"w_start", $"event_type")
-  }
+  /** NS (Kafka Streams tumbling window): [[StreamOps.windowedAgg]]. */
+  def windowedAgg(spark: SparkSession, dir: String): DataFrame =
+    StreamOps.windowedAgg(Tables.events(spark, dir))
+      .orderBy(col("w_start"), col("event_type"))
 
-  /** NS (hopping window): 1-hour window sliding every 15 minutes. */
-  def slidingWindow(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Tables.events(spark, dir)
-      .groupBy(window($"ts", "1 hour", "15 minutes").as("w"), $"event_type")
-      .agg(count(lit(1)).as("n"))
-      .select(unix_micros($"w.start").as("w_start"), $"event_type", $"n")
-      .orderBy($"w_start", $"event_type")
-  }
+  /** NS (hopping window): [[StreamOps.slidingWindow]]. */
+  def slidingWindow(spark: SparkSession, dir: String): DataFrame =
+    StreamOps.slidingWindow(Tables.events(spark, dir))
+      .orderBy(col("w_start"), col("event_type"))
 
-  /** NS (session window): 30-minute-gap sessions per user. Batch uses the
-    * built-in `session_window`; the streaming twin keeps state via
-    * watermark-driven merge (same logical plan under readStream). */
-  def sessionWindow(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Tables.events(spark, dir)
-      .groupBy(session_window($"ts", "30 minutes").as("w"), $"user_id")
-      .agg(count(lit(1)).as("n_events"), moneySum($"value").as("session_value"))
-      .select($"user_id", unix_micros($"w.start").as("session_start"),
-        $"n_events", $"session_value")
-      .orderBy($"user_id", $"session_start")
-  }
+  /** NS (session window): [[StreamOps.sessionWindow]]. */
+  def sessionWindow(spark: SparkSession, dir: String): DataFrame =
+    StreamOps.sessionWindow(Tables.events(spark, dir))
+      .orderBy(col("user_id"), col("session_start"))
 
   /** NS: top-3 purchases per user — rank inside a key partition. One
     * shuffle on user_id; rank+filter is map-side after that. */
@@ -162,26 +144,9 @@ object Relational {
       .orderBy($"user_id", $"rnk")
   }
 
-  /** NS: KTable / log-compaction materialization — the latest record per
-    * key, last-write-wins on (ts, event_id). This is the Kafka Streams
-    * table abstraction the reference's topics imply (a compacted topic
-    * retains only the newest value per key). `max_by` over an orderable
-    * struct partial-aggregates map-side, so the shuffle carries ONE row
-    * per (key, partition) — a row_number window would shuffle the whole
-    * changelog to sort rows it then discards. */
-  def ktableLatest(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Tables.events(spark, dir)
-      .groupBy($"user_id")
-      .agg(max_by(
-        struct($"event_id", $"event_type", $"value"),
-        struct(unix_micros($"ts"), $"event_id")).as("last"))
-      .select($"user_id",
-        $"last.event_id".as("last_event_id"),
-        $"last.event_type".as("last_event_type"),
-        $"last.value".as("last_value"))
-      .orderBy($"user_id")
-  }
+  /** NS: KTable / log-compaction materialization, [[StreamOps.ktableLatest]]. */
+  def ktableLatest(spark: SparkSession, dir: String): DataFrame =
+    StreamOps.ktableLatest(Tables.events(spark, dir)).orderBy(col("user_id"))
 
   /** NS: time-series resample with gap fill — hourly counts per type with
     * explicit zero rows for empty hours (the shape chart/train-curve
@@ -512,28 +477,9 @@ object Relational {
       .orderBy($"event_type")
   }
 
-  /** NS: KMV distinct sketch per event type — the engine's own
-    * `TypedImperativeAggregate` ([[graft.functions.KmvSketch]]): k=8
-    * smallest distinct md5 hashes of user_id + the derived distinct-count
-    * estimate. Unlike HLL++ the whole sketch is deterministic and
-    * cross-engine reproducible, so the oracle checks the sketch itself,
-    * not just row counts. */
-  def kmvDistinct(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Tables.events(spark, dir)
-      .groupBy($"event_type")
-      .agg(graft.functions.kmv_sketch($"user_id".cast("string"), 8).as("kmv"),
-        count(lit(1)).as("n_events"))
-      // The sketch is emitted CSV-stringified: the verify comparator sorts
-      // column values, and an array<long> column is unsortable there (same
-      // trick as minhash_signatures' band keys).
-      .select($"event_type", concat_ws(",", $"kmv").as("kmv_csv"),
-        when(size($"kmv") < 8, size($"kmv").cast(DoubleType))
-          .otherwise(lit(7.0 * math.pow(2, 60)) / element_at($"kmv", 8).cast(DoubleType))
-          .as("est_users"),
-        $"n_events")
-      .orderBy($"event_type")
-  }
+  /** NS: KMV distinct sketch per event type, [[StreamOps.kmvDistinct]]. */
+  def kmvDistinct(spark: SparkSession, dir: String): DataFrame =
+    StreamOps.kmvDistinct(Tables.events(spark, dir)).orderBy(col("event_type"))
 
   /** NS: KMV sketch SET ALGEBRA — union / intersection cardinality and
     * Jaccard between every pair of event-type user populations from the

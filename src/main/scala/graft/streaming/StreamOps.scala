@@ -7,6 +7,8 @@ import org.apache.spark.sql.types._
 
 import org.apache.spark.sql.Row
 
+import graft.operators.ReferenceOps.moneySum
+
 /** Structured-Streaming surface of the engine.
   *
   * The reference is a set of Kafka client applications (SURVEY.md §0); its
@@ -117,38 +119,44 @@ object StreamOps {
       .option("numRows", numRows.toString)
       .option("truncate", truncate.toString)
 
-  /** Streaming twin of `ReferenceOps.salesTotals` — running per-customer
-    * totals (update mode; unwindowed KTable-style aggregation). */
+  /** A1+A11+A16, the sales pipeline: per-customer exact purchase revenue
+    * and count (reference: golang/chapter_4/sales/
+    * sales_consumer_client.go:91-95 computes quantity*price per record).
+    * Batch query `sales_totals` over the `events` table; running
+    * KTable-style totals over a stream (`sales_totals_stream`). */
   def salesTotals(events: DataFrame): DataFrame =
     events
       .filter(col("event_type") === "purchase")
       .groupBy(col("user_id"))
-      .agg(sum(col("value")).as("revenue"), count(lit(1)).as("n_purchases"))
+      .agg(moneySum(col("value")).as("revenue"), count(lit(1)).as("n_purchases"))
 
-  /** NS streaming twin of `Relational.kmvDistinct`: the KMV distinct
-    * sketch is STREAMING-NATIVE — a `TypedImperativeAggregate` whose
-    * partials merge in complete/update mode, and the k-smallest-distinct-
-    * hash set is a pure set union (commutative, idempotent), so the
-    * streamed sketch is BIT-IDENTICAL to the batch sketch however the
-    * arrival batches split — unlike HLL, whose estimate is reproducible
-    * but opaque, the sketch itself is the checkable state. This is the
-    * 100 TB shape of streaming distinct-count: 64 bytes of state per
-    * group, no per-key exact dedup state growing with the stream. */
+  /** k=8 KMV distinct sketch of user_id per event type
+    * ([[graft.functions.KmvSketch]]) and its distinct-count estimate.
+    * Batch query `kmv_distinct`, whose oracle checks the sketch itself
+    * (unlike HLL++ it is deterministic across engines). Streamed
+    * (`kmv_distinct_stream`), partials merge as a set union, so the
+    * sketch is bit-identical however the batches split, in 64 bytes of
+    * state per group. */
   def kmvDistinct(events: DataFrame): DataFrame =
     events
       .groupBy(col("event_type"))
       .agg(graft.functions.kmv_sketch(col("user_id").cast("string"), 8)
           .as("kmv"),
         count(lit(1)).as("n_events"))
+      // CSV-stringified: the verify comparator cannot sort array columns
       .select(col("event_type"), concat_ws(",", col("kmv")).as("kmv_csv"),
+        when(size(col("kmv")) < 8, size(col("kmv")).cast(DoubleType))
+          .otherwise(lit(7.0 * math.pow(2, 60)) /
+            element_at(col("kmv"), 8).cast(DoubleType))
+          .as("est_users"),
         col("n_events"))
 
-  /** Streaming twin of `Relational.ktableLatest`: the KTable / compacted-
-    * topic materialization as a continuously-updated table — latest record
-    * per key, last-write-wins on (ts, event_id). The same map-side
-    * `max_by` argmax as the batch plan, so per-key state is ONE struct
-    * regardless of stream length; run in update mode to emit only keys
-    * whose latest value changed in the micro-batch. */
+  /** KTable / compacted-topic materialization: the latest record per key,
+    * last-write-wins on (ts, event_id). `max_by` over a struct
+    * partial-aggregates map-side, so the shuffle carries one row per
+    * (key, partition) and the stream state is one struct per key. Batch
+    * query `ktable_latest`; streamed (`ktable_latest_stream`) in update
+    * mode it emits only the keys whose latest value changed. */
   def ktableLatest(events: DataFrame): DataFrame =
     events
       .groupBy(col("user_id"))
@@ -160,35 +168,39 @@ object StreamOps {
         col("last.event_type").as("last_event_type"),
         col("last.value").as("last_value"))
 
-  /** Streaming twin of `Relational.windowedAgg`: watermarked 1-hour
-    * tumbling windows; late events beyond 10 minutes are dropped and state
-    * is evicted — bounded memory at any scale. Pass `watermark = ""` when
-    * the input already carries one (Spark disallows redefining it
-    * downstream of another stateful operator). */
+  /** 1-hour tumbling windows per event type: count and exact value total.
+    * Batch query `windowed_agg` (the analyzer drops a watermark on a batch
+    * frame); streamed (`windowed_agg_stream`), the watermark drops late
+    * events and evicts closed windows. Pass `watermark = ""` when the
+    * input already carries one (Spark disallows redefining it downstream
+    * of another stateful operator). */
   def windowedAgg(events: DataFrame, watermark: String = "10 minutes"): DataFrame =
     (if (watermark.isEmpty) events else events.withWatermark("ts", watermark))
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("total_value"))
-      .select(col("w.start").as("w_start"), col("event_type"), col("n"), col("total_value"))
+      .agg(count(lit(1)).as("n"), moneySum(col("value")).as("total_value"))
+      .select(unix_micros(col("w.start")).as("w_start"), col("event_type"),
+        col("n"), col("total_value"))
 
-  /** Streaming twin of `Relational.slidingWindow`: 1-hour windows hopping
-    * every 15 minutes — each event lands in 4 windows; watermark bounds
-    * how long the 4 open windows stay in state. */
+  /** 1-hour windows hopping every 15 minutes per event type (4 windows
+    * per event). Batch query `sliding_window`; streamed
+    * (`sliding_window_stream`), the watermark bounds how long open windows
+    * stay in state. */
   def slidingWindow(events: DataFrame, watermark: String = "10 minutes"): DataFrame =
     events
       .withWatermark("ts", watermark)
       .groupBy(window(col("ts"), "1 hour", "15 minutes").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"))
-      .select(col("w.start").as("w_start"), col("event_type"), col("n"))
+      .select(unix_micros(col("w.start")).as("w_start"), col("event_type"), col("n"))
 
-  /** Streaming twin of `Relational.sessionWindow` (30-minute gap sessions,
-    * watermark-driven merge + eviction). */
+  /** 30-minute-gap sessions per user: count and exact value total. Batch
+    * query `session_window`; streamed (`session_window_stream`), the
+    * watermark drives the session merge and eviction. */
   def sessionWindow(events: DataFrame, watermark: String = "10 minutes"): DataFrame =
     events
       .withWatermark("ts", watermark)
       .groupBy(session_window(col("ts"), "30 minutes").as("w"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("session_value"))
-      .select(col("user_id"), col("w.start").as("session_start"),
+      .agg(count(lit(1)).as("n_events"), moneySum(col("value")).as("session_value"))
+      .select(col("user_id"), unix_micros(col("w.start")).as("session_start"),
         col("n_events"), col("session_value"))
 
   /** Streaming dedup within the watermark horizon — the streaming twin of

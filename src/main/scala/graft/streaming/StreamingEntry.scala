@@ -2,9 +2,10 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftShims, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, GraftShims, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The enumerable STREAMING surface — the `SparkEntry.queries` analogue
   * for the streaming twins, so a driver can list and gate them the same
@@ -17,9 +18,12 @@ import org.apache.spark.sql.functions._
   * memory sink, and compares canonicalized results against the twin's
   * declared invariant —
   *
-  *  - `agg` twins (stateless/windowed aggregations): the streamed
-  *    result must equal the SAME transform applied to the static frame
-  *    (batch parity — the A32 run-once contract);
+  *  - `agg` twins (stateless/windowed aggregations): twin `<q>_stream`
+  *    must drain the rows of the registered, DuckDB-oracled batch query
+  *    `SparkEntry.queries(<q>)` (batch parity — the A32 run-once
+  *    contract); most stream the very `StreamOps` function that query
+  *    runs over the static table. `interval_join_stream` checks against
+  *    an independent batch inequality join;
   *  - `fold` twins (arbitrary-state mapGroupsWithState /
   *    foreachBatch folds): the N-batch fold must equal the 1-batch
   *    fold (split invariance — the batch boundary must be
@@ -41,10 +45,11 @@ object StreamingEntry {
   final case class Twin(kind: String,
       run: (SparkSession, String, Int) => Parity)
 
-  private case class Ev(event_id: Long, ts: Timestamp, user_id: Long,
+  // Public: Spark's generated (de)serializers construct and read them.
+  final case class Ev(event_id: Long, ts: Timestamp, user_id: Long,
       event_type: String, value: Double)
-  private case class Doc(doc_id: Long, text: String)
-  private case class Change(user_id: Long, event_id: Long, op: String,
+  final case class Doc(doc_id: Long, text: String)
+  final case class Change(user_id: Long, event_id: Long, op: String,
       event_type: String, value: Double)
 
   private val nameCtr = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -56,20 +61,26 @@ object StreamingEntry {
     rows.grouped(per).toSeq
   }
 
-  /** Feed `rows` through a MemoryStream in `splits` batches, drain
-    * `xform` to a memory sink, return the sink table (dropped by
-    * [[canon]] after collection). */
-  private def runStream[T: org.apache.spark.sql.Encoder](spark: SparkSession,
-      rows: Seq[T], splits: Int, mode: String,
-      xform: DataFrame => DataFrame): DataFrame = {
+  /** Feed `rows` through a MemoryStream in `splits` arrival batches into
+    * the query `start` begins on the stream, draining each batch before
+    * the next arrives; the query is stopped on return. */
+  private def runStream[T: Encoder](spark: SparkSession, rows: Seq[T],
+      splits: Int)(start: DataFrame => StreamingQuery): Unit = {
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val name = s"graft_parity_${nameCtr.incrementAndGet()}"
     val ms = MemoryStream[T]
-    val q = xform(ms.toDF()).writeStream
-      .format("memory").queryName(name).outputMode(mode).start()
+    val q = start(ms.toDF())
     try splitInto(rows, splits).foreach { b =>
       ms.addData(b); q.processAllAvailable()
     } finally q.stop()
+  }
+
+  /** [[runStream]] of `xform` into a memory sink in output `mode`;
+    * returns the sink table. */
+  private def drained[T: Encoder](spark: SparkSession, rows: Seq[T],
+      splits: Int, mode: String, xform: DataFrame => DataFrame): DataFrame = {
+    val name = s"graft_parity_${nameCtr.incrementAndGet()}"
+    runStream(spark, rows, splits)(xform(_).writeStream
+      .format("memory").queryName(name).outputMode(mode).start())
     spark.table(name)
   }
 
@@ -123,16 +134,18 @@ object StreamingEntry {
       .as[Doc].collect().toSeq.sortBy(_.doc_id)
   }
 
-  /** agg twin: streamed complete/update-mode result == the same
-    * transform over the static frame. */
-  private def aggTwin(mode: String, xform: DataFrame => DataFrame,
-      post: (DataFrame, Int) => Seq[String] = (df, _) => canon(df)): Twin =
-    Twin("agg", (spark, dir, splits) => {
+  /** agg twin `<query>_stream`: the streamed result == the registered
+    * batch query `query` over the same tables, projected onto the twin's
+    * columns. */
+  private def aggTwin(query: String, mode: String,
+      xform: DataFrame => DataFrame,
+      post: DataFrame => Seq[String] = canon): (String, Twin) =
+    s"${query}_stream" -> Twin("agg", (spark, dir, splits) => {
       import spark.implicits._
-      val rows = events(spark, dir)
-      val got = post(runStream(spark, rows, splits, mode, xform), splits)
-      val want = canon(xform(spark.createDataset(rows).toDF()))
-      Parity(got, want)
+      val streamed = drained(spark, events(spark, dir), splits, mode, xform)
+      val want = graft.SparkEntry.queries(query)(spark, dir)
+        .select(streamed.columns.toSeq.map(col): _*)
+      Parity(post(streamed), canon(want))
     })
 
   /** fold twin: N-split fold == 1-split fold (split invariance). `order`
@@ -147,8 +160,8 @@ object StreamingEntry {
     Twin("fold", (spark, dir, splits) => {
       import spark.implicits._
       val rows = events(spark, dir).sortBy(order)
-      val got = post(runStream(spark, rows, splits, mode, xform))
-      val want = post(runStream(spark, rows, 1, mode, xform))
+      val got = post(drained(spark, rows, splits, mode, xform))
+      val want = post(drained(spark, rows, 1, mode, xform))
       Parity(got, want)
     })
 
@@ -180,65 +193,47 @@ object StreamingEntry {
   /** name → parity runner; the streaming registry a driver enumerates. */
   def twins: Map[String, Twin] = Map(
     // -- agg twins: batch parity ------------------------------------
-    "sales_totals_stream" -> aggTwin("complete", StreamOps.salesTotals),
-    "windowed_agg_stream" -> aggTwin("complete", StreamOps.windowedAgg(_)),
-    "sliding_window_stream" -> aggTwin("complete", StreamOps.slidingWindow(_)),
-    "session_window_stream" -> aggTwin("complete", StreamOps.sessionWindow(_)),
-    // update mode emits per-batch revisions; last row per user is the
+    aggTwin("sales_totals", "complete", StreamOps.salesTotals),
+    aggTwin("kmv_distinct", "complete", StreamOps.kmvDistinct),
+    // update mode emits per-batch revisions; the last row per user is the
     // materialized KTable and must equal the batch argmax
-    "kmv_distinct_stream" -> aggTwin("complete", StreamOps.kmvDistinct),
+    aggTwin("ktable_latest", "update", StreamOps.ktableLatest,
+      canonLastPerKey(_, 0)),
+    aggTwin("windowed_agg", "complete", StreamOps.windowedAgg(_)),
+    aggTwin("sliding_window", "complete", StreamOps.slidingWindow(_)),
+    aggTwin("session_window", "complete", StreamOps.sessionWindow(_)),
+    // Markov transition matrix as a stream: the per-user transition
+    // extractor (flatMapGroupsWithState, append — state = last event per
+    // user, so batch boundaries are unobservable) feeds a downstream
+    // streaming COUNT aggregate; the drained matrix must equal the batch
+    // lead-window matrix exactly — the one twin that composes
+    // arbitrary-state FMGWS with a streaming aggregation.
+    aggTwin("markov_transitions", "complete",
+      StreamOps.statusTransitionsStream(_)
+        .groupBy(col("from_type"), col("to_type"))
+        .agg(count(lit(1)).as("n"))),
     // stream-stream interval join: the one twin with TWO streaming sides
     // (both derived from the same feed, like a fanned-out topic). Ordered
     // arrival + watermarked time-bounded condition ⇒ the streamed append
     // result must equal the batch inequality join exactly.
     "interval_join_stream" -> Twin("agg", (spark, dir, splits) => {
+      import spark.implicits._
       def shape(df: DataFrame) = (
         df.filter(col("event_type") === "purchase")
           .select(col("user_id").as("p_user"),
             col("event_id").as("p_event_id"), col("ts").as("p_ts")),
         df.select(col("user_id").as("e_user"),
           col("event_id").as("e_event_id"), col("ts").as("e_ts")))
-      val cond =
-        expr("p_user = e_user AND e_ts > p_ts AND e_ts <= p_ts + INTERVAL 1 HOUR")
+      val pairs = Seq(col("p_event_id"), col("e_event_id"))
       val rows = events(spark, dir)
-      import spark.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val name = s"graft_parity_${nameCtr.incrementAndGet()}"
-      val ms = MemoryStream[Ev]
-      val (sp, se) = shape(ms.toDF())
-      val q = StreamOps.intervalJoinFollowups(sp, se)
-        .select(col("p_event_id"), col("e_event_id"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try splitInto(rows, splits).foreach { b =>
-        ms.addData(b); q.processAllAvailable()
-      } finally q.stop()
-      val got = canon(spark.table(name))
+      val got = canon(drained(spark, rows, splits, "append", { df =>
+        val (sp, se) = shape(df)
+        StreamOps.intervalJoinFollowups(sp, se).select(pairs: _*)
+      }))
       val (bp, be) = shape(spark.createDataset(rows).toDF())
-      val want = canon(bp.join(be, cond)
-        .select(col("p_event_id"), col("e_event_id")))
-      Parity(got, want)
-    }),
-    "ktable_latest_stream" -> aggTwin("update", StreamOps.ktableLatest,
-      (df, _) => canonLastPerKey(df, 0)),
-    // Markov transition matrix as a stream: the per-user transition
-    // extractor (flatMapGroupsWithState, append — state = last event per
-    // user, so batch boundaries are unobservable) feeds a downstream
-    // streaming COUNT aggregate; the drained matrix must equal the batch
-    // lead-window matrix exactly. STRONG parity (vs the independent
-    // batch plan, not the same transform replayed) — the one twin that
-    // composes arbitrary-state FMGWS with a streaming aggregation.
-    "markov_transitions_stream" -> Twin("agg", (spark, dir, splits) => {
-      import spark.implicits._
-      val rows = events(spark, dir)
-      val xform = (df: DataFrame) =>
-        StreamOps.statusTransitionsStream(df)
-          .groupBy(col("from_type"), col("to_type"))
-          .agg(count(lit(1)).as("n"))
-      val got = canon(runStream(spark, rows, splits, "complete", xform))
-      val want = canon(
-        graft.operators.Relational.markovTransitions(spark, dir)
-          .select(col("from_type"), col("to_type"), col("n")))
+      val want = canon(bp.join(be,
+        expr("p_user = e_user AND e_ts > p_ts AND e_ts <= p_ts + INTERVAL 1 HOUR"))
+        .select(pairs: _*))
       Parity(got, want)
     }),
     // -- fold twins: split invariance -------------------------------
@@ -269,7 +264,7 @@ object StreamingEntry {
         .map(d => d -> perDay.getOrElse(d, 0L))
       val ref = daily.map(_._2).sum / daily.size // the configured target
       def run(n: Int): Seq[String] =
-        canon(runStream[(Long, Long)](spark, daily, n, "append",
+        canon(drained(spark, daily, n, "append",
           df => StreamOps.cusumStream(ref)(df.toDF("day", "cents"))))
       Parity(run(splits), run(1))
     }),
@@ -284,7 +279,7 @@ object StreamingEntry {
       try {
         val rows = events(spark, dir).map(e => (e.user_id, e.value))
         def run(n: Int): Seq[String] = canonLastPerKey(
-          runStream[(Long, Double)](spark, rows, n, "update",
+          drained(spark, rows, n, "update",
             df => TwsOps.runningTotals(df.as[(Long, Double)]).toDF()), 0)
         Parity(run(splits), run(1))
       } finally prev match {
@@ -297,7 +292,7 @@ object StreamingEntry {
     "dedup_stream" -> Twin("fold", (spark, dir, splits) => {
       import spark.implicits._
       val rows = docs(spark, dir)
-      val got = canon(runStream(spark, rows, splits, "update",
+      val got = canon(drained(spark, rows, splits, "update",
         StreamOps.dedupStream))
       val static = spark.createDataset(rows).toDF()
         .select(md5($"text").as("content_md5"), $"doc_id")
@@ -320,10 +315,8 @@ object StreamingEntry {
     "corpus_funnel_stream" -> Twin("fold", (spark, dir, splits) => {
       import spark.implicits._
       import graft.operators.{CorpusOps, DocDedup}
-      implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
       val idx = CorpusOps.corpusIndex(spark, dir)
       val rows = docs(spark, dir, DocDedup.isNewDoc($"doc_id"))
-      val ms = MemoryStream[Doc]
       val acc = new java.util.concurrent.atomic.AtomicLongArray(8)
       val seenQ = new java.util.concurrent.atomic.AtomicReference[DataFrame](
         Seq.empty[String].toDF("h"))
@@ -341,10 +334,8 @@ object StreamingEntry {
         seenQ.set(prev.union(qh).distinct().localCheckpoint(true))
         GraftShims.unpersistCheckpoint(prev)
       }
-      val q = ms.toDF().writeStream.foreachBatch(applyBatch).start()
-      try splitInto(rows, splits).foreach { b =>
-        ms.addData(b); q.processAllAvailable()
-      } finally q.stop()
+      runStream(spark, rows, splits)(
+        _.writeStream.foreachBatch(applyBatch).start())
       val got = canon(Seq((acc.get(0), acc.get(1), acc.get(2), acc.get(3),
         acc.get(4), acc.get(5), acc.get(6), acc.get(7)))
         .toDF("n_batch", "tok_batch", "n_quality", "tok_quality",

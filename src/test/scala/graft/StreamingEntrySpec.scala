@@ -3,8 +3,9 @@ package graft
 import graft.streaming.StreamingEntry
 
 /** The streaming-surface manifest gate: every declared twin must hold
-  * its parity contract (agg twins: streamed == batch transform; fold
-  * twins: N-split fold == 1-split fold) over the real fixture tables.
+  * its parity contract (agg twins: streamed == the registered batch
+  * query; fold twins: N-split fold == 1-split fold) over the real
+  * fixture tables.
   * This is the in-suite mirror of the one-command
   * `runMain graft.streaming.StreamingParity` harness. */
 class StreamingEntrySpec extends SparkSpecBase {
@@ -19,6 +20,22 @@ class StreamingEntrySpec extends SparkSpecBase {
     // both parity classes must stay represented
     val kinds = StreamingEntry.twins.values.map(_.kind).toSet
     assert(kinds === Set("agg", "fold"))
+  }
+
+  test("the Ev, Doc and Change feeds run on generated code alone " +
+      "(no interpreted fallback)") {
+    // A feed case class Spark's generated projections cannot construct
+    // fails to compile there; by default Spark logs the error and falls
+    // back to interpreted code, which CODEGEN_ONLY turns into a failure.
+    val key = "spark.sql.codegen.factoryMode"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "CODEGEN_ONLY")
+    try Seq("windowed_agg_stream", "dedup_stream", "cdc_apply").foreach { n =>
+      assert(StreamingEntry.twins(n).run(spark, Sf0001, 2).ok, n)
+    } finally prev match {
+      case Some(p) => spark.conf.set(key, p)
+      case None => spark.conf.unset(key)
+    }
   }
 
   test("corpus_pipeline_incremental: a cold construction runs no job past " +

@@ -212,10 +212,10 @@ class StreamingSpec extends SparkSpecBase {
     q.awaitTermination()
     val streamed = spark.table("wagg")
       .select($"w_start", $"event_type", $"n", $"total_value")
-      .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2),
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
         math.rint(r.getDouble(3) * 100) / 100)).toSet
     val batch = StreamOps.windowedAgg(batchDf)
-      .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2),
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
         math.rint(r.getDouble(3) * 100) / 100)).toSet
     assert(streamed === batch)
     assert(streamed.nonEmpty)
@@ -230,15 +230,15 @@ class StreamingSpec extends SparkSpecBase {
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
     val streamed = spark.table("swin")
-      .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
     val batch = StreamOps.slidingWindow(batchDf)
-      .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
     assert(streamed === batch)
     // hop = 4 windows per event: distinct sliding window-starts strictly
     // exceed the TUMBLING aggregation's distinct window-starts on the same
     // data (the 15-min hop slices each 1-hour tumbling window four ways)
     val tumblingStarts = StreamOps.windowedAgg(batchDf)
-      .collect().map(_.getTimestamp(0)).toSet
+      .collect().map(_.getLong(0)).toSet
     assert(streamed.map(_._1).size > tumblingStarts.size)
   }
 
@@ -252,10 +252,10 @@ class StreamingSpec extends SparkSpecBase {
     q.awaitTermination()
     val streamed = spark.table("sess")
       .select($"user_id", $"session_start", $"n_events")
-      .collect().map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2))).toSet
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val batch = StreamOps.sessionWindow(batchDf)
       .select($"user_id", $"session_start", $"n_events")
-      .collect().map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2))).toSet
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(streamed === batch)
     assert(streamed.nonEmpty)
   }
@@ -327,12 +327,12 @@ class StreamingSpec extends SparkSpecBase {
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
     val streamed = spark.table("pipeline_e2e")
-      .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2),
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
         math.rint(r.getDouble(3) * 100) / 100)).toSet
     val batch = StreamOps.windowedAgg(
       batchDf.filter(length($"props") >= 5 && $"props".startsWith("{"))
         .dropDuplicates("event_id"))
-      .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2),
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
         math.rint(r.getDouble(3) * 100) / 100)).toSet
     assert(streamed === batch && streamed.nonEmpty)
   }
@@ -396,8 +396,8 @@ class StreamingSpec extends SparkSpecBase {
       ms.addData(ev(4, 1), ev(5, 400)); q.processAllAvailable()
       ms.addData(ev(6, 401)); q.processAllAvailable()   // wm = 390: closes [180,240)
       val got = spark.table("late").select($"w_start", $"n").collect()
-        .map(r => (r.getTimestamp(0).getTime, r.getLong(1))).toSet
-      assert(got === Set((t(0).getTime, 2L), (t(180).getTime, 2L)),
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(got === Set((t(0).getTime * 1000L, 2L), (t(180).getTime * 1000L, 2L)),
         s"late row leaked into emitted windows: $got")
     } finally q.stop()
   }
