@@ -221,7 +221,9 @@ object CorpusOps {
     * arithmetic — order-free and exact; only the final mean is a single
     * (correctly-rounded) double division. Plans as three aggregates over
     * one exploded shape + two joins keyed on bigram/prefix — all
-    * partial-aggregated, vocabulary-bounded, no skew hot spots. */
+    * partial-aggregated, vocabulary-bounded, no skew hot spots — built
+    * once into [[lmFrame]], which a call reads already in `doc_id`
+    * order. */
   def lmScore(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     lmFrame(spark, dir).orderBy($"doc_id")
@@ -264,10 +266,14 @@ object CorpusOps {
       .orderBy($"lang", $"bucket")
   }
 
-  /** Pre-sort gate frame, memoized once per (session, dir) — see
-    * [[TextAnalysis.repetitionFrame]]; `quality_ensemble` shares it. */
+  /** The LM gate frame, memoized once per (session, dir) and laid out
+    * sorted on `doc_id` ([[FrameMemo.sorted]]): `lm_score`'s
+    * `orderBy(doc_id)` reads it with no exchange and no sort;
+    * `perplexity_buckets`, `quality_ensemble` and `corpus_pipeline`
+    * share it. */
   private[graft] def lmFrame(spark: SparkSession, dir: String): DataFrame =
-    FrameMemo.shared(spark, dir, "lm_gate")(lmFrameBuild(spark, dir))
+    FrameMemo.shared.sorted(spark, dir, "lm_gate", "doc_id")(
+      lmFrameBuild(spark, dir))
 
   private def lmFrameBuild(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)

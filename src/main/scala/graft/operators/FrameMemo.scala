@@ -4,19 +4,35 @@ import scala.collection.concurrent.TrieMap
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
-/** Bounded (session, dir)-scoped memo of `localCheckpoint`'ed (or, via
-  * [[cached]], lazily persisted) frames — the shared intermediates
+/** Bounded (session, dir)-scoped memo of the shared intermediates
   * several declared queries read (tokenized corpus, gate frames,
   * candidate pairs, CC labels, the IVF cell index, the ingest index).
   * One process-wide instance, [[FrameMemo.shared]], serves every family;
   * keys are unique across families.
   *
+  * Three forms, by what the readers need:
+  *   - [[apply]]: a lazy `localCheckpoint` — the lineage is cut, so the
+  *     entry pins none of its build's broadcast relations. Under AQE the
+  *     checkpoint reports `UnknownPartitioning(0)` and no ordering: every
+  *     reader that groups, joins or sorts on a key re-shuffles it. Fits
+  *     frames read whole or on varying keys.
+  *   - [[cached]]: a lazy `persist` — referencing it runs no job (the
+  *     cache fills on the first job that reads it), and it keeps its
+  *     plan's partitioning and ordering, but it pins its build's
+  *     broadcast relations for as long as it lives. Fits frames a query
+  *     must reference without running a job.
+  *   - [[sorted]]: checkpoint, then range-partition and sort on the
+  *     readers' key, then persist — the lineage cut of [[apply]] with the
+  *     layout of a persist, so a reader's `orderBy`/`groupBy` on that key
+  *     plans no exchange. Fits frames whose readers share one key.
+  *
   * Lifecycle: the map keeps at most `maxDirs` most-recently-used
   * (session, dir) groups. Admitting a NEW group beyond that evicts the
   * least-recently-used group's entries and EXPLICITLY unpersists their
-  * checkpointed RDDs or caches; [[clear]] releases the same way.
+  * checkpointed RDDs and caches; [[clear]] releases the same way.
   *
   * Why explicit release instead of dropping references and letting the
   * ContextCleaner reclaim on GC: measured on Spark 4.1, a dropped
@@ -36,7 +52,9 @@ import org.apache.spark.storage.StorageLevel
   * needs a third (session, dir) group entering the process.
   */
 private[graft] final class FrameMemo(maxDirs: Int) {
-  private val frames = TrieMap[(SparkSession, String, String), DataFrame]()
+  import FrameMemo.Entry
+
+  private val frames = TrieMap[(SparkSession, String, String), Entry]()
   // LRU over (session, dir): LinkedHashSet iterates in insertion order;
   // re-inserting on touch moves a dir to the back.
   private val lru = mutable.LinkedHashSet[(SparkSession, String)]()
@@ -56,17 +74,39 @@ private[graft] final class FrameMemo(maxDirs: Int) {
       build: => DataFrame): DataFrame =
     raw(spark, dir, key)(build.persist())
 
+  /** Memoize `build` checkpointed (as [[apply]]), then range-partitioned
+    * and sorted on column `by` and persisted: readers that order or group
+    * on `by` plan no exchange and no sort over it. The checkpoint goes
+    * first so the cache pins none of the build's broadcasts; the range
+    * partitions number the checkpoint's own partitions (AQE has coalesced
+    * those to the data; a cached plan's own shuffle would keep
+    * `spark.sql.shuffle.partitions` of them). The cache fills on the
+    * first job that reads it. */
+  def sorted(spark: SparkSession, dir: String, key: String, by: String)(
+      build: => DataFrame): DataFrame =
+    memo(spark, dir, key) {
+      val cut = build.localCheckpoint(false)
+      val laid = cut
+        .repartitionByRange(math.max(1, cut.rdd.getNumPartitions), col(by))
+        .sortWithinPartitions(by).persist()
+      Entry(laid, Seq(laid, cut))
+    }
+
   /** [[apply]] for builds that already return a checkpointed frame
-    * (e.g. connectedComponents) — memoizes without re-checkpointing.
-    * Validity check is membership in `frames` (did release run on OUR
-    * frame?), not LRU membership: re-admission cannot resurrect released
-    * blocks, so a frame evicted mid-build is REBUILT. */
+    * (e.g. connectedComponents) — memoizes without re-checkpointing. */
   def raw(spark: SparkSession, dir: String, key: String)(
-      build: => DataFrame): DataFrame = {
+      build: => DataFrame): DataFrame =
+    memo(spark, dir, key) { val df = build; Entry(df, Seq(df)) }
+
+  /** Validity check is membership in `frames` (did release run on OUR
+    * entry?), not LRU membership: re-admission cannot resurrect released
+    * blocks, so a frame evicted mid-build is REBUILT. */
+  private def memo(spark: SparkSession, dir: String, key: String)(
+      build: => Entry): DataFrame = {
     val k = (spark, dir, key)
     while (true) {
       synchronized(admit(spark, dir))
-      val df = frames.get(k) match {
+      val e = frames.get(k) match {
         case Some(existing) => existing
         case None =>
           val built = build
@@ -76,9 +116,9 @@ private[graft] final class FrameMemo(maxDirs: Int) {
           }
       }
       synchronized {
-        if (frames.get(k).exists(_ eq df)) {
+        if (frames.get(k).exists(_ eq e)) {
           admit(spark, dir) // hand-out counts as a use
-          return df
+          return e.df
         }
       }
       // evicted (and released) mid-build — loop and rebuild
@@ -99,14 +139,15 @@ private[graft] final class FrameMemo(maxDirs: Int) {
     }
   }
 
-  /** Unpersist the frame's cache or checkpointed RDDs NOW (blocks freed
-    * without waiting for a GC the cleaner may never act on — see class
-    * doc). */
-  private def release(df: DataFrame): Unit =
+  /** Unpersist every cache and checkpointed RDD the entry holds NOW
+    * (blocks freed without waiting for a GC the cleaner may never act on
+    * — see class doc). */
+  private def release(e: Entry): Unit = e.holds.foreach { df =>
     try {
       if (df.storageLevel != StorageLevel.NONE) df.unpersist(blocking = false)
       else GraftShims.unpersistCheckpoint(df)
     } catch { case _: Throwable => () } // a dead session is already free
+  }
 
   /** Drop AND release every memoized frame (tests / explicit session
     * teardown). */
@@ -120,6 +161,10 @@ private[graft] final class FrameMemo(maxDirs: Int) {
 }
 
 private[graft] object FrameMemo {
+  /** A memoized frame and the frames whose cache or checkpoint it holds
+    * (itself, plus the checkpoint under a [[FrameMemo.sorted]] entry). */
+  private final case class Entry(df: DataFrame, holds: Seq[DataFrame])
+
   /** Two groups cover every in-process multi-dir pattern we ship while
     * keeping a 3-dir session bounded. */
   val MaxDirs = 2

@@ -779,9 +779,11 @@ object Similarity {
     * batch probes exactly this index by cell key. Memoized (FrameMemo):
     * the dedup self-join consumes this frame on BOTH sides and the ingest
     * twin probes it per batch — without the memo each consumer re-runs
-    * the k·N assignment fold. */
+    * the k·N assignment fold. Laid out sorted on `cell_id`
+    * ([[FrameMemo.sorted]]), so [[semanticCellProfile]]'s per-cell
+    * aggregate plans no exchange. */
   def cellIndex(spark: SparkSession, dir: String): DataFrame =
-    FrameMemo.shared(spark, dir, "cellIndex") {
+    FrameMemo.shared.sorted(spark, dir, "cellIndex", "cell_id") {
       import spark.implicits._
       val n = Tables.embeddings(spark, dir).count()
       ivfAssigned(spark, dir, codebook(spark, dir, adaptiveCells(n)))
@@ -800,16 +802,17 @@ object Similarity {
     * owning most of the pair mass — BEFORE the join is paid for, which
     * at 100 TB is the difference between resizing k and discovering the
     * skew in a dead executor. Plan: one |cells|-row aggregate over the
-    * cell assignment + a 1-row total broadcast — linear, shardable. */
+    * cell-sorted index (no exchange), then the totals as a window over
+    * those |cells| rows (bounded by the codebook size) in one partition,
+    * which the final sort reuses — linear, shardable. */
   def semanticCellProfile(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val per = cellIndex(spark, dir)
+    cellIndex(spark, dir)
       .groupBy($"cell_id").agg(count(lit(1)).as("n_vectors"))
       // n·(n−1) is even, so DIV 2 is exact — integer arithmetic only
       .withColumn("n_pairs", expr("n_vectors * (n_vectors - 1) DIV 2"))
-    val tot = per.agg(sum($"n_pairs").as("total_pairs"),
-      sum($"n_vectors").as("n_total"))
-    per.crossJoin(broadcast(tot))
+      .withColumn("total_pairs", sum($"n_pairs").over())
+      .withColumn("n_total", sum($"n_vectors").over())
       .select($"cell_id", $"n_vectors", $"n_pairs", $"total_pairs",
         expr("n_total * (n_total - 1) DIV 2").as("brute_pairs"),
         // share of the pair mass, quantized on an exact-bigint ratio

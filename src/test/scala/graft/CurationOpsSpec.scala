@@ -101,6 +101,20 @@ class CurationOpsSpec extends SparkSpecBase {
     assert(jobs <= 6, s"$jobs jobs to construct semantic_cell_profile cold")
   }
 
+  test("semantic_cell_profile: a warm build and collect runs 1 job and " +
+    "returns its rows in cell_id order") {
+    // the cell-sorted index serves the per-cell aggregate, and its
+    // data-sized single partition serves the totals window and the sort
+    val q = SparkEntry.queries("semantic_cell_profile")
+    q(spark, Sf0001).collect()
+    var cells = Seq.empty[Long]
+    val jobs = jobsDuring {
+      cells = q(spark, Sf0001).collect().map(_.getAs[Long]("cell_id")).toSeq
+    }
+    assert(jobs === 1, s"$jobs jobs on a warm build and collect")
+    assert(cells.nonEmpty && cells === cells.sorted && cells.distinct === cells)
+  }
+
   test("semantic_dedup: within-cell pairs join on the cell key, no cartesian") {
     val p = Similarity.semanticDedup(spark, Sf0001, 0.40)
       .queryExecution.executedPlan.toString

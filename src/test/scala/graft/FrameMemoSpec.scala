@@ -1,6 +1,13 @@
 package graft
 
-import graft.operators.FrameMemo
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{LogicalRDD, SortExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.functions.broadcast
+
+import graft.operators.{CorpusOps, FrameMemo, Similarity}
 
 /** Lifecycle contract of the shared (session, dir) frame memo: bounded
   * LRU over dirs with EXPLICIT release on eviction, so a multi-dir
@@ -141,5 +148,87 @@ class FrameMemoSpec extends SparkSpecBase {
       val jobs = jobsDuring { SparkEntry.queries(q)(spark, Sf0001); () }
       assert(jobs === 0, s"$q: $jobs jobs on a warm construction")
     }
+  }
+
+  test("a warm lm_score runs 1 job and returns its rows in doc_id order " +
+    "(the memo is laid out sorted on doc_id)") {
+    val q = SparkEntry.queries("lm_score")
+    q(spark, Sf0001).collect()
+    var df: DataFrame = null
+    var ids = Seq.empty[Long]
+    val jobs = jobsDuring {
+      df = q(spark, Sf0001)
+      ids = df.collect().map(_.getAs[Long]("doc_id")).toSeq
+    }
+    assert(jobs === 1, s"lm_score: $jobs jobs on a warm build and collect")
+    assert(ids.nonEmpty && ids === ids.sorted && ids.distinct === ids)
+    // the final plan above the cached scan neither sorts nor shuffles
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    assert(plan.collect { case s: SortExec => s
+      case e: ShuffleExchangeExec => e }.isEmpty, plan.toString)
+  }
+
+  test("a sorted entry cuts its lineage: the cached plan holds no " +
+    "BroadcastExchange of the build") {
+    val m = new FrameMemo(maxDirs = 2)
+    def build = spark.range(3000).toDF("k")
+      .join(broadcast(spark.range(3000).toDF("k")), "k")
+    assert(build.queryExecution.executedPlan.toString
+      .contains("BroadcastExchange"), "the build must plan a broadcast")
+    val df = m.sorted(spark, "d", "k", "k")(build)
+    assert(df.count() === 3000L)
+    val cachedPlans = df.queryExecution.withCachedData.collect {
+      case r: InMemoryRelation => r.cachedPlan.toString
+    }
+    assert(cachedPlans.size === 1)
+    assert(!cachedPlans.head.contains("BroadcastExchange"), cachedPlans.head)
+    m.clear()
+  }
+
+  test("a sorted entry's cache AND checkpoint are released by LRU " +
+    "eviction and by clear()") {
+    val sc = spark.sparkContext
+    val m = new FrameMemo(maxDirs = 2)
+    def buildIds(dir: String, mult: Long): Set[Int] = {
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val df = m.sorted(spark, dir, "k", "v")(
+        spark.range(5000).select(($"id" * mult % 997).as("v")).toDF())
+      assert(df.count() === 5000L) // fills the cache over the checkpoint
+      (sc.getPersistentRDDs.keySet.toSet -- before)
+    }
+    val idsA = buildIds("dirA", 3)
+    val idsB = buildIds("dirB", 5)
+    assert(idsA.size >= 2 && idsB.size >= 2,
+      s"a sorted entry holds a cache and a checkpoint: $idsA, $idsB")
+    val idsC = buildIds("dirC", 7) // LRU-evicts dirA
+    assert(idsA.forall(id => !sc.getPersistentRDDs.contains(id)),
+      s"dirA RDDs still pinned after eviction: " +
+        idsA.filter(sc.getPersistentRDDs.contains))
+    assert((idsB ++ idsC).forall(sc.getPersistentRDDs.contains))
+    m.clear()
+    assert((idsB ++ idsC).forall(id => !sc.getPersistentRDDs.contains(id)),
+      "clear() must unpersist every cache and checkpoint it held")
+  }
+
+  test("with 200 shuffle partitions a sorted memo keeps no more " +
+    "partitions than the checkpoint under it") {
+    def checkpointParts(df: DataFrame): Int =
+      df.queryExecution.analyzed.collect {
+        case lr: LogicalRDD => lr.rdd.getNumPartitions
+      }.head
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    FrameMemo.shared.clear()
+    spark.conf.set(key, "200")
+    try {
+      Seq(CorpusOps.lmFrame(spark, Sf0001),
+        Similarity.cellIndex(spark, Sf0001)).foreach { df =>
+        val (parts, cut) = (df.rdd.getNumPartitions, checkpointParts(df))
+        assert(parts <= cut, s"$parts cached partitions over a $cut-partition checkpoint")
+      }
+    } finally { spark.conf.set(key, saved); FrameMemo.shared.clear() }
   }
 }

@@ -511,7 +511,6 @@ class PlanSpec extends SparkSpecBase {
       "cusum_changepoint", // 1-row (n_days, total) broadcast onto the day grid
       "dedup_threshold_sweep", // 3-row literal threshold dim onto the pair set
       "graph_modularity", // 1-row edge-count broadcast onto |communities| rows
-      "semantic_cell_profile", // 1-row pair-total broadcast onto |cells| rows
       "kmv_set_ops",   // |types|-row sketch aggregate broadcast, non-equi pair join
       "autocorr_daily", // 1-row (n, s) totals broadcast onto the |days| frame
       "pair_budget_governor", // 1-row chosen-level aggregate onto the 4 ladder rows
