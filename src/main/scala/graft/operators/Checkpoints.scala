@@ -14,12 +14,19 @@ import org.apache.spark.sql.DataFrame
   * write reliable `checkpoint()`s to `spark.checkpoint.dir` (shared FS)
   * instead — the swap is config-only, and ClusterConfSpec proves the
   * reliable path produces identical results on a fixture. Both forms are
-  * LAZY: the caller's next action (fingerprint count, next round's
-  * shuffle) materializes the cut, so no round runs twice. Lazy is not
-  * free under AQE (Spark's default): taking a lazy `localCheckpoint`
-  * of a shuffle-bearing plan runs its shuffle-map stages at once, since
-  * the adaptive plan materializes every stage below the final one before
-  * it hands out the RDD; only the final stage waits for the next action.
+  * LAZY, so no round runs twice. A lazy cut completes (writes its blocks
+  * or file and drops its lineage) only when a RESULT job's checkpoint
+  * walk reaches it before any other checkpoint-marked RDD: the walk runs
+  * down from the job's final RDD and stops at the first marked one. A
+  * round whose fingerprint is a driver read (count, collect) over the
+  * cut completes it. AQE's shuffle-map-stage jobs never walk, so a cut
+  * read only by the next round's shuffle, below that round's own cut,
+  * stays open: it keeps its lineage and, on the reliable path, never
+  * writes its file. Lazy is not free under AQE (Spark's default): taking
+  * a lazy `localCheckpoint` of a shuffle-bearing plan runs its
+  * shuffle-map stages at once, since the adaptive plan materializes every
+  * stage below the final one before it hands out the RDD; only the final
+  * stage waits for the next action.
   */
 object Checkpoints {
   val ConfKey = "spark.graft.reliableCheckpoints"

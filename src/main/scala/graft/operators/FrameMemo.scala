@@ -14,11 +14,15 @@ import org.apache.spark.storage.StorageLevel
   * keys are unique across families.
   *
   * Three forms, by what the readers need:
-  *   - [[apply]]: a lazy `localCheckpoint` — the lineage is cut, so the
-  *     entry pins none of its build's broadcast relations. Under AQE the
-  *     checkpoint reports `UnknownPartitioning(0)` and no ordering: every
-  *     reader that groups, joins or sorts on a key re-shuffles it. Fits
-  *     frames read whole or on varying keys.
+  *   - [[apply]]: an eager `localCheckpoint` — written when the entry is
+  *     built, so the entry pins none of its build's shuffle or broadcast
+  *     pages, whoever reads it later. A lazy one would stay open, keeping
+  *     its whole build alive, when every reader reaches it through
+  *     another checkpoint or a shuffle-map stage (see [[Checkpoints]] for
+  *     the completion rule; `simhash_pairs` is read so by the k-core
+  *     waves). Under AQE the checkpoint reports `UnknownPartitioning(0)`
+  *     and no ordering: every reader that groups, joins or sorts on a key
+  *     re-shuffles it. Fits frames read whole or on varying keys.
   *   - [[cached]]: a lazy `persist` — referencing it runs no job (the
   *     cache fills on the first job that reads it), and it keeps its
   *     plan's partitioning and ordering, but it pins its build's
@@ -59,13 +63,13 @@ private[graft] final class FrameMemo(maxDirs: Int) {
   // re-inserting on touch moves a dir to the back.
   private val lru = mutable.LinkedHashSet[(SparkSession, String)]()
 
-  /** Memoize `build` as a lazy `localCheckpoint`. Under AQE (Spark's
-    * default) taking it runs the build's shuffle-map stages at once, so a
-    * shuffle-bearing build costs jobs when the memo entry is created; see
-    * [[cached]] for a form that runs none. */
+  /** Memoize `build` as an eager `localCheckpoint`: building the entry
+    * runs the build (its shuffle-map stages and one job that writes the
+    * blocks), so the entry holds its blocks and no lineage from then on.
+    * See [[cached]] for a form that runs no job. */
   def apply(spark: SparkSession, dir: String, key: String)(
       build: => DataFrame): DataFrame =
-    raw(spark, dir, key)(build.localCheckpoint(false))
+    raw(spark, dir, key)(build.localCheckpoint(true))
 
   /** [[apply]] with a lazy `persist` in place of the checkpoint, for
     * frames a query must reference without running a job: a cache fills
@@ -74,10 +78,13 @@ private[graft] final class FrameMemo(maxDirs: Int) {
       build: => DataFrame): DataFrame =
     raw(spark, dir, key)(build.persist())
 
-  /** Memoize `build` checkpointed (as [[apply]]), then range-partitioned
-    * and sorted on column `by` and persisted: readers that order or group
-    * on `by` plan no exchange and no sort over it. The checkpoint goes
-    * first so the cache pins none of the build's broadcasts; the range
+  /** Memoize `build` checkpointed, then range-partitioned and sorted on
+    * column `by` and persisted: readers that order or group on `by` plan
+    * no exchange and no sort over it. The checkpoint goes first so the
+    * cache pins none of the build's broadcasts. It is lazy, unlike
+    * [[apply]]'s: the first job that reads the cache is a result job
+    * whose checkpoint walk reaches it, and an eager one would cost a cold
+    * build one more job (FrameMemoSpec pins both cuts complete). The range
     * partitions number the checkpoint's own partitions (AQE has coalesced
     * those to the data; a cached plan's own shuffle would keep
     * `spark.sql.shuffle.partitions` of them). The cache fills on the
@@ -157,6 +164,9 @@ private[graft] final class FrameMemo(maxDirs: Int) {
   }
 
   private[graft] def size: Int = frames.size
+  /** The handed-out frame of every entry, by key. */
+  private[graft] def entries: Seq[(String, DataFrame)] =
+    frames.toSeq.map { case ((_, _, key), e) => key -> e.df }
   private[graft] def dirCount: Int = synchronized(lru.size)
 }
 

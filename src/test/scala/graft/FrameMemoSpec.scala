@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.ShuffleDependency
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{LogicalRDD, SortExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -22,6 +24,31 @@ class FrameMemoSpec extends SparkSpecBase {
   import spark.implicits._
 
   private def frame(tag: String) = Seq((tag, 1L)).toDF("tag", "v")
+
+  /** The checkpointed RDDs under a memo entry's frame (the entry's own
+    * checkpoint, or the one under a sorted entry's cache). */
+  private def cutRdds(df: DataFrame): Seq[RDD[_]] =
+    df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd }
+
+  private def shuffleDeps(rdd: RDD[_]): Seq[ShuffleDependency[_, _, _]] =
+    rdd.dependencies.flatMap {
+      case s: ShuffleDependency[_, _, _] => s +: shuffleDeps(s.rdd)
+      case d => shuffleDeps(d.rdd)
+    }
+
+  /** Run `query` alone on a fresh shared memo and return the entries it
+    * left whose checkpoint never completed, as "key (rdd id)". */
+  private def openCutsAfter(query: String): Seq[String] = {
+    FrameMemo.shared.clear()
+    SparkEntry.queries(query)(spark, Sf0001).collect()
+    val entries = FrameMemo.shared.entries
+    assert(entries.nonEmpty, s"$query built no memo entry")
+    entries.flatMap { case (key, df) =>
+      val cuts = cutRdds(df)
+      assert(cuts.nonEmpty, s"$query: entry $key holds no checkpoint")
+      cuts.filterNot(_.isCheckpointed).map(r => s"$key (rdd ${r.id})")
+    }
+  }
 
   test("3-dir session: LRU keeps 2 dirs, evicted dir's frames are forgotten") {
     val m = new FrameMemo(maxDirs = 2)
@@ -63,7 +90,7 @@ class FrameMemoSpec extends SparkSpecBase {
       val before = sc.getPersistentRDDs.keySet.toSet
       val df = m(spark, dir, "k")(
         spark.range(5000).select(($"id" * mult).as("v")).toDF())
-      assert(df.count() === 5000L) // materialize the lazy checkpoint
+      assert(df.count() === 5000L) // reads the checkpoint back
       (sc.getPersistentRDDs.keySet.toSet -- before)
     }
     val idsA = buildIds("dirA", 3)
@@ -211,6 +238,37 @@ class FrameMemoSpec extends SparkSpecBase {
     m.clear()
     assert((idsB ++ idsC).forall(id => !sc.getPersistentRDDs.contains(id)),
       "clear() must unpersist every cache and checkpoint it held")
+  }
+
+  test("kcore_membership and dedup_clusters, each alone on a fresh memo, " +
+    "leave every memo checkpoint complete and simhash_pairs with no " +
+    "shuffle in its lineage") {
+    try {
+      Seq("kcore_membership", "dedup_clusters").foreach { q =>
+        val open = openCutsAfter(q)
+        assert(open.isEmpty, s"$q left memo checkpoints open: $open")
+        val pairs = FrameMemo.shared.entries.collect {
+          case ("simhash_pairs", df) => df
+        }
+        assert(pairs.size === 1, s"$q: no simhash_pairs entry")
+        val deps = cutRdds(pairs.head).flatMap(shuffleDeps)
+        assert(deps.isEmpty,
+          s"$q: simhash_pairs still holds ${deps.size} shuffle dependencies")
+      }
+    } finally FrameMemo.shared.clear()
+  }
+
+  test("a sorted entry's lazy checkpoint completes on its first reader " +
+    "(lm_gate under lm_score and perplexity_buckets, cellIndex under " +
+    "semantic_cell_profile)") {
+    try {
+      Seq("lm_score" -> "lm_gate", "perplexity_buckets" -> "lm_gate",
+          "semantic_cell_profile" -> "cellIndex").foreach { case (q, key) =>
+        val open = openCutsAfter(q)
+        assert(FrameMemo.shared.entries.exists(_._1 == key), s"$q: no $key")
+        assert(open.isEmpty, s"$q left memo checkpoints open: $open")
+      }
+    } finally FrameMemo.shared.clear()
   }
 
   test("with 200 shuffle partitions a sorted memo keeps no more " +
