@@ -10,10 +10,16 @@ import org.apache.spark.sql.DataFrame
   * Local mode (default): lazy `localCheckpoint` — executor-block storage,
   * free of DFS round-trips, but LOST on executor death, which on a real
   * cluster would kill a long loop half-way. The 100 TB conf therefore
-  * flips `spark.graft.reliableCheckpoints=true` and the same call sites
-  * write reliable `checkpoint()`s to `spark.checkpoint.dir` (shared FS)
-  * instead — the swap is config-only, and ClusterConfSpec proves the
-  * reliable path produces identical results on a fixture. Both forms are
+  * flips `spark.graft.reliableCheckpoints=true` and [[cut]] writes
+  * reliable `checkpoint()`s to `spark.checkpoint.dir` (shared FS) instead;
+  * ClusterConfSpec proves the reliable path result-identical on a
+  * fixture. The swap reaches ONLY [[cut]]: the in-query lazy
+  * `localCheckpoint(false)`s stay node-local (`Scale.rangeBounds` and the
+  * global rank/cumsum/prefix-max helpers; `Relational.ksDrift`,
+  * `basketPairs`, `cusumDays`; `CorpusOps.corpusPipelineIncremental`;
+  * `DocDedup.minhashIncremental`, `fuzzyJoinPairs`, `connectedComponents`;
+  * `TextAnalysis.winnowDedupPairs`; `FrameMemo`), so a lost executor
+  * fails the query that holds them. Both forms are
   * LAZY, so no round runs twice. A lazy cut completes (writes its blocks
   * or file and drops its lineage) only when a RESULT job's checkpoint
   * walk reaches it before any other checkpoint-marked RDD: the walk runs

@@ -592,17 +592,21 @@ object Relational {
   def markovTransitions(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val w = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
-    val tr = Tables.events(spark, dir)
+    transitionMatrix(Tables.events(spark, dir)
       .select($"user_id", $"ts", $"event_id", $"event_type".as("from_type"))
       .withColumn("to_type", lead($"from_type", 1).over(w))
-      .where($"to_type".isNotNull)
-    tr.groupBy($"from_type", $"to_type").agg(count(lit(1)).as("n"))
-      .withColumn("n_from",
-        sum($"n").over(Window.partitionBy($"from_type")))
-      .select($"from_type", $"to_type", $"n", $"n_from",
-        ($"n".cast(DoubleType) / $"n_from".cast(DoubleType)).as("prob"))
-      .orderBy($"from_type", $"to_type")
+      .where($"to_type".isNotNull))
   }
+
+  /** The transition matrix over (from_type, to_type) rows: count, row
+    * total `n_from` and probability per edge. */
+  private[graft] def transitionMatrix(tr: DataFrame): DataFrame =
+    tr.groupBy(col("from_type"), col("to_type")).agg(count(lit(1)).as("n"))
+      .withColumn("n_from",
+        sum(col("n")).over(Window.partitionBy(col("from_type"))))
+      .select(col("from_type"), col("to_type"), col("n"), col("n_from"),
+        (col("n").cast(DoubleType) / col("n_from").cast(DoubleType)).as("prob"))
+      .orderBy(col("from_type"), col("to_type"))
 
   /** NS: disjunctive bracket revenue — the TPC-H Q19 shape: revenue
     * grouped by which of three (brand-set, size-range, quantity-range)
@@ -967,24 +971,14 @@ object Relational {
     * the warehouse shape [[mergeUpsert]]'s CDC apply feeds: each per-key
     * change event becomes a version row carrying a validity interval,
     * half-open in µs — valid_from = its event time, valid_to = the next
-    * change's time minus 1µs, NULL-ended + is_current on the latest. One
-    * window over (user, time, id); per-key state is the key's own history,
-    * so the shuffle is the same one any per-key operator pays and no
-    * global sort exists. (The reference's KTable is exactly this table
-    * with only the is_current row retained — [[ktableLatest]].) */
-  def scd2Build(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val w = Window.partitionBy($"user_id").orderBy($"ts_us", $"event_id")
-    Tables.events(spark, dir)
-      .select($"user_id", $"event_type".as("state"),
-        unix_micros($"ts").as("ts_us"), $"event_id")
-      .select($"user_id", row_number().over(w).as("version"), $"state",
-        $"ts_us".as("valid_from_us"),
-        (lead($"ts_us", 1).over(w) - 1).as("valid_to_us"),
-        lead($"ts_us", 1).over(w).isNull.as("is_current"),
-        $"event_id")
-      .orderBy($"user_id", $"version")
-  }
+    * change's time minus 1µs, NULL-ended + is_current on the latest: one
+    * [[StreamOps.applyScd2]] micro-batch step (a window over (user, time,
+    * id), no global sort) over the whole table onto an empty version
+    * table. (The reference's KTable is exactly this table with only the
+    * is_current row retained — [[ktableLatest]].) */
+  def scd2Build(spark: SparkSession, dir: String): DataFrame =
+    StreamOps.applyScd2(StreamOps.emptyScd2(spark), Tables.events(spark, dir))
+      .orderBy(col("user_id"), col("version"))
 
   /** NS: point-in-time dimension slice — "the table AS OF instant T" read
     * off the [[scd2Build]] version table: per key, the single version row
@@ -1726,18 +1720,13 @@ object Relational {
   def statusTransitions(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val w = Window.partitionBy($"o_custkey").orderBy($"o_orderdate", $"o_orderkey")
-    val edges = Tables.orders(spark, dir)
+    transitionMatrix(Tables.orders(spark, dir)
       .select($"o_custkey", $"o_orderdate", $"o_orderkey", $"o_orderstatus")
-      .withColumn("from_status", lag($"o_orderstatus", 1).over(w))
-      .where($"from_status".isNotNull)
-      .select($"from_status", $"o_orderstatus".as("to_status"))
-    val counts = edges.groupBy($"from_status", $"to_status")
-      .agg(count(lit(1)).as("n"))
-    val fromTotals = counts.groupBy($"from_status").agg(sum($"n").as("from_n"))
-    counts.join(fromTotals, "from_status")
-      .select($"from_status", $"to_status", $"n",
-        ($"n".cast(DoubleType) / $"from_n").as("p"))
-      .orderBy($"from_status", $"to_status")
+      .withColumn("from_type", lag($"o_orderstatus", 1).over(w))
+      .where($"from_type".isNotNull)
+      .select($"from_type", $"o_orderstatus".as("to_type")))
+      .select($"from_type".as("from_status"), $"to_type".as("to_status"),
+        $"n", $"prob".as("p"))
   }
 
   /** NS: market-basket brand affinity — co-purchase counts and lift for
@@ -2121,18 +2110,19 @@ object Relational {
     import spark.implicits._
     val w = Window.partitionBy($"user_id").orderBy($"event_id")
       .rowsBetween(Window.unboundedPreceding, -1)
-    Tables.events(spark, dir)
+    lateArrivalsReport(Tables.events(spark, dir)
       .select($"user_id", $"event_type", $"event_id",
         unix_micros($"ts").as("ts_us"))
-      .withColumn("prev_max_us", max($"ts_us").over(w))
-      .withColumn("ooo",
-        ($"prev_max_us".isNotNull && $"ts_us" < $"prev_max_us")
-          .cast(LongType))
-      .groupBy($"event_type")
-      .agg(count(lit(1)).as("n_events"), sum($"ooo").as("n_ooo"))
-      .withColumn("ooo_permille", expr("n_ooo * 1000 div n_events"))
-      .orderBy($"event_type")
+      .withColumn("ooo", coalesce($"ts_us" < max($"ts_us").over(w), lit(false))))
   }
+
+  /** [[lateArrivals]]' rollup over its per-event `ooo` flags. */
+  private[graft] def lateArrivalsReport(flagged: DataFrame): DataFrame =
+    flagged.groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n_events"),
+        sum(col("ooo").cast(LongType)).as("n_ooo"))
+      .withColumn("ooo_permille", expr("n_ooo * 1000 div n_events"))
+      .orderBy(col("event_type"))
 
   /** NS: freshness SLA report — per event type, how far its newest event
     * lags the newest event anywhere (the staleness monitor a pipeline
@@ -2244,16 +2234,19 @@ object Relational {
     val p = step("purchase").join(s.select($"user_id", $"s_us"), "user_id")
       .where($"ts_us" > $"s_us" && $"ts_us" <= $"s_us" + stepUs)
       .groupBy($"user_id", $"s_us").agg(min($"ts_us").as("p_us"))
-    v.join(s.select($"user_id", $"s_us"), Seq("user_id"), "left_outer")
-      .join(p.select($"user_id", $"p_us"), Seq("user_id"), "left_outer")
-      .select($"user_id", $"v_us", $"s_us", $"p_us",
-        (lit(1) + $"s_us".isNotNull.cast(IntegerType) +
-          $"p_us".isNotNull.cast(IntegerType)).as("steps_completed"))
-      .groupBy($"steps_completed")
-      .agg(count(lit(1)).as("n_users"),
-        sum(when($"p_us".isNotNull, $"p_us" - $"v_us")).as("total_conv_us"))
-      .orderBy($"steps_completed")
+    funnelRollup(
+      v.join(s.select($"user_id", $"s_us"), Seq("user_id"), "left_outer")
+        .join(p.select($"user_id", $"p_us"), Seq("user_id"), "left_outer"))
   }
+
+  /** [[funnelSteps]]' rollup over one row per user who viewed: the step
+    * instants `v_us`, `s_us`, `p_us`, NULL for a step not reached. */
+  private[graft] def funnelRollup(perUser: DataFrame): DataFrame =
+    perUser.groupBy((lit(1) + col("s_us").isNotNull.cast(IntegerType) +
+        col("p_us").isNotNull.cast(IntegerType)).as("steps_completed"))
+      .agg(count(lit(1)).as("n_users"),
+        sum(col("p_us") - col("v_us")).as("total_conv_us"))
+      .orderBy(col("steps_completed"))
 
   /** NS: 7-day trailing moving average of daily purchase revenue on the
     * DENSE day grid — the gap-correct moving average (a frame over only
@@ -2813,19 +2806,7 @@ object Relational {
     * the 10 highest-alarm days. */
   def cusumChangepoint(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // lazy-checkpoint the |days|-row aggregate so the bounds/grid/totals/
-    // cumsum passes all read the materialized day frame instead of each
-    // re-scanning orders (the ksDrift perValue pattern)
-    val perDay = Tables.orders(spark, dir)
-      .select(expr("unix_micros(cast(o_orderdate as timestamp)) div 86400000000")
-          .as("day"),
-        floor($"o_totalprice" * 100 + 0.5).cast(LongType).as("cents"))
-      .groupBy($"day").agg(sum($"cents").as("x"))
-      .localCheckpoint(false)
-    val bounds = perDay.agg(min($"day").as("lo"), max($"day").as("hi"))
-    val grid = bounds.select(explode(sequence($"lo", $"hi")).as("day"))
-    val daily = grid.join(perDay, Seq("day"), "left_outer")
-      .select($"day", coalesce($"x", lit(0L)).as("x"))
+    val daily = cusumDays(spark, dir)
     val totals = daily.agg(count(lit(1)).as("n_days"), sum($"x").as("total"))
     val drift = daily.crossJoin(broadcast(totals))
       .select($"day", $"x", ($"x" * $"n_days" - $"total").as("d"))
@@ -2840,5 +2821,24 @@ object Relational {
         greatest($"cum" + greatest($"pm", lit(0L)), lit(0L)).as("cusum"))
       .orderBy($"cusum".desc, $"epoch_day")
       .limit(10)
+  }
+
+  /** [[cusumChangepoint]]'s feed: order cents `(day, x)` on the DENSE
+    * day grid from the first order day to the last, zero on dark days. */
+  private[graft] def cusumDays(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    // lazy-checkpoint the |days|-row aggregate so the bounds/grid/totals/
+    // cumsum passes all read the materialized day frame instead of each
+    // re-scanning orders (the ksDrift perValue pattern)
+    val perDay = Tables.orders(spark, dir)
+      .select(expr("unix_micros(cast(o_orderdate as timestamp)) div 86400000000")
+          .as("day"),
+        floor($"o_totalprice" * 100 + 0.5).cast(LongType).as("cents"))
+      .groupBy($"day").agg(sum($"cents").as("x"))
+      .localCheckpoint(false)
+    val bounds = perDay.agg(min($"day").as("lo"), max($"day").as("hi"))
+    val grid = bounds.select(explode(sequence($"lo", $"hi")).as("day"))
+    grid.join(perDay, Seq("day"), "left_outer")
+      .select($"day", coalesce($"x", lit(0L)).as("x"))
   }
 }

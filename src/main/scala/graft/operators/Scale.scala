@@ -588,7 +588,8 @@ object Scale {
     // boundaries, branch A's offsets describe different pids than
     // branch B's rows — silently wrong ranks. The lazy checkpoint creates
     // ONE shuffled RDD whose boundaries are sampled exactly once; both
-    // branches read its blocks. (Swap for `checkpoint()` on a cluster.)
+    // branches read its blocks. (Node-local even on a cluster:
+    // `spark.graft.reliableCheckpoints` reaches only Checkpoints.cut.)
     requireFreshCols(df, Seq(rankCol, nCol, "_gr_pid", "_gr_mid"))
     val parted = df.repartitionByRange(numParts, sortCols: _*)
       .localCheckpoint(eager = false)

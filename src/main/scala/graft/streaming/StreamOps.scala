@@ -308,7 +308,8 @@ object StreamOps {
     * feed gives per key); out-of-order WITHIN a batch is handled by the
     * batch-local window. Under that contract the fold over any batch
     * split is row-identical to the batch [[graft.operators.Relational.scd2Build]]
-    * on the concatenated feed — asserted by StreamingSpec's parity test. */
+    * on the concatenated feed — asserted by StreamingSpec's parity test
+    * and the `scd2_apply` twin's anchor. */
   def applyScd2(scd2: DataFrame, changes: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
@@ -337,6 +338,12 @@ object StreamOps {
         col("is_current"), col("event_id"))
     closed.unionByName(appended)
   }
+
+  /** The version table before any change event. */
+  def emptyScd2(spark: SparkSession): DataFrame =
+    spark.createDataFrame(Seq.empty[(Long, Int, String, Long, Long, Boolean, Long)])
+      .toDF("user_id", "version", "state", "valid_from_us", "valid_to_us",
+        "is_current", "event_id")
 
   /** Exponentially time-decayed per-user event counters as a CUSTOM-STATE
     * streaming aggregate — the `mapGroupsWithState` twin of
@@ -426,16 +433,13 @@ object StreamOps {
     * of cum) — on ONE monitor key per watched series; the per-day totals
     * feeding it are an ordinary upstream aggregate, so the single-key
     * fold touches |days| rows, never raw volume. FEED CONTRACT: the day
-    * grid must be DENSE — the upstream aggregate emits a row for every
-    * closed day, zero on dark days — because a day the monitor never
-    * sees would silently skip its −ref drift, and a dark day IS drift
-    * (the batch detector gap-fills for the same reason; the
-    * StreamingEntry twin gap-fills its feed). Days fold in day order
-    * within a batch; on a day-ordered feed the fold is split-invariant
-    * (the StreamingEntry parity contract) and equals the scalar
-    * recursion exactly — integer arithmetic end to end, asserted in
-    * StreamingSpec. Append mode: a closed day's alarm level never
-    * revises. */
+    * grid must be DENSE, zero on dark days (the twin folds the batch
+    * detector's `Relational.cusumDays`): a day the monitor never sees
+    * would silently skip its −ref drift, and a dark day IS drift. Days
+    * fold in day order within a batch, so on a day-ordered feed the fold
+    * is split-invariant and equals the scalar recursion exactly (integer
+    * arithmetic, asserted in StreamingSpec). Append mode: a closed day's
+    * alarm level never revises. */
   def cusumStream(refCents: Long)(daily: DataFrame): DataFrame = {
     import daily.sparkSession.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
@@ -498,9 +502,9 @@ object StreamOps {
       .toDF("user_id", "v_us", "s_us", "p_us", "steps_completed")
   }
 
-  /** NS streaming twin of `status_transitions`: per-user consecutive
-    * event-type transitions as an ONLINE fold — the Markov-matrix feed
-    * computed at ingest instead of by a nightly lag-window job. State is
+  /** NS per-user step of `markov_transitions` (not of the order-status
+    * `status_transitions`): consecutive event-type transitions as an
+    * ONLINE fold, computed at ingest instead of by a lag-window job. State is
     * one (last_type, last_us, last_id) per user; each batch sorts its
     * per-user slice by (event time, event_id) — the same total order the
     * feed arrives in, so a batch boundary lands BETWEEN two ordered

@@ -2,33 +2,44 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, GraftShims, SparkSession}
+import scala.jdk.CollectionConverters._
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, GraftShims,
+  SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.operators.{ReferenceOps, Relational}
+
 /** The enumerable STREAMING surface — the `SparkEntry.queries` analogue
   * for the streaming twins, so a driver can list and gate them the same
-  * way it gates the batch registry (round-6 judge ask: the twins were
-  * spec-verified but invisible to any harness).
+  * way it gates the batch registry.
   *
-  * Each manifest entry is a self-contained parity runner over the
-  * driver's own fixture tables: it feeds the table through a
-  * MemoryStream in `splits` arrival batches, drains the twin to a
-  * memory sink, and compares canonicalized results against the twin's
-  * declared invariant —
+  * Each manifest entry is a self-contained parity runner over a fixture
+  * directory's tables: it feeds a table through a MemoryStream
+  * in `splits` arrival batches, drains the twin to a memory sink, and
+  * compares canonicalized results with the registered, DuckDB-oracled
+  * batch query (D-Streams: a stream is a series of deterministic batch
+  * computations, so it owes the batch answer):
   *
-  *  - `agg` twins (stateless/windowed aggregations): twin `<q>_stream`
-  *    must drain the rows of the registered, DuckDB-oracled batch query
-  *    `SparkEntry.queries(<q>)` (batch parity — the A32 run-once
-  *    contract); most stream the very `StreamOps` function that query
-  *    runs over the static table. `interval_join_stream` checks against
-  *    an independent batch inequality join;
-  *  - `fold` twins (arbitrary-state mapGroupsWithState /
-  *    foreachBatch folds): the N-batch fold must equal the 1-batch
-  *    fold (split invariance — the batch boundary must be
-  *    unobservable). Exact value assertions for these live in
-  *    StreamingSpec against scalar ground truths.
+  *  - `agg` twins drain the rows of `SparkEntry.queries(<q>)`; most
+  *    stream the very `StreamOps` function that query runs;
+  *  - `fold` twins (arbitrary-state and foreachBatch folds) must give
+  *    the same rows at N batches as at 1 (split invariance), AND their
+  *    rows through the batch query's own tail must equal that query
+  *    (the [[Anchor]]); split invariance alone passes a fold that is
+  *    wrong the same way at every split.
+  *
+  * Not fully anchored: `cdc_apply` (no registered query applies
+  * last-change-wins over events; `merge_upsert` applies a generated
+  * balance-delta change set to `customer`); `decayed_counts_stream`
+  * checks `n_events` only (the batch query quantizes each decay term
+  * before it sums, the fold rescales one double per user, so the values
+  * differ by up to n/2 quanta); `corpus_funnel_stream` checks its
+  * N-batch stage counts against `corpus_pipeline_incremental`, the
+  * one-batch report. StreamingSpec keeps hand-written truths.
   *
   * One-command run: `sbt "runMain graft.streaming.StreamingParity
   * /root/testdata/sf0.01 3"` — prints a single JSON line per the bench
@@ -36,14 +47,21 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object StreamingEntry {
 
-  /** (got, want) canonical row strings; parity ⇔ got == want. */
-  final case class Parity(got: Seq[String], want: Seq[String]) {
-    def ok: Boolean = got == want
+  /** (got, want) canonical row strings, plus a fold twin's anchor check;
+    * parity ⇔ got == want and the anchor (if any) holds. */
+  final case class Parity(got: Seq[String], want: Seq[String],
+      anchor: Option[Parity] = None) {
+    def ok: Boolean = got == want && anchor.forall(_.ok)
   }
 
   /** kind ∈ {agg, fold} — see object doc. */
   final case class Twin(kind: String,
       run: (SparkSession, String, Int) => Parity)
+
+  /** A twin's link to the oracle: `tail` of its final rows must equal
+    * the registered batch query `query`, projected onto the tail's
+    * columns. */
+  final case class Anchor(query: String, tail: DataFrame => DataFrame)
 
   // Public: Spark's generated (de)serializers construct and read them.
   final case class Ev(event_id: Long, ts: Timestamp, user_id: Long,
@@ -102,30 +120,43 @@ object StreamingEntry {
   private def canon(df: DataFrame): Seq[String] =
     quantized(df).collect().map(_.toString).toSeq.sorted
 
-  /** Update-mode folds emit one row per (key, batch): the LAST row per
-    * key is the final state (arrival order of the memory sink is batch
-    * order, so max batch ordinal per key = the tail row). */
-  private def canonLastPerKey(df: DataFrame, keyIdx: Int): Seq[String] = {
-    val rows = quantized(df).collect()
-    rows.zipWithIndex
-      .groupBy { case (r, _) => r.get(keyIdx) }
-      .map { case (_, rs) => rs.maxBy(_._2)._1.toString }
-      .toSeq.sorted
+  /** Update-mode folds emit one row per (key, batch): the last row per
+    * key in collect (= batch) order of the memory sink is its final state. */
+  private def lastPerKey(df: DataFrame, keyIdx: Int): DataFrame = {
+    val last = df.collect().toSeq.groupMapReduce(_.get(keyIdx))(identity)((_, r) => r)
+    df.sparkSession.createDataFrame(last.values.toSeq.asJava, df.schema)
   }
 
-  /** Exact µs of a Timestamp (getTime is ms-truncated; the fixture's
-    * event times carry µs, and the batch plans order by unix_micros —
-    * the feed must use the same granularity or a same-ms pair could
-    * arrive in a different order than the batch lead/argmax sees). */
-  private def micros(ts: Timestamp): Long =
-    math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
+  /** The anchor check: `a.tail(rows)` against the registered query. */
+  private def anchorParity(spark: SparkSession, dir: String, rows: DataFrame,
+      a: Anchor): Parity = {
+    val got = a.tail(rows)
+    val want = graft.SparkEntry.queries(a.query)(spark, dir)
+      .select(got.columns.toSeq.map(col): _*)
+    Parity(canon(got), canon(want))
+  }
 
+  /** A fold twin's parity: the `splits`-batch fold against the 1-batch
+    * fold, and the `splits`-batch fold against its anchor. */
+  private def foldParity(spark: SparkSession, dir: String, splits: Int,
+      anchor: Option[Anchor])(fold: Int => DataFrame): Parity = {
+    val got = fold(splits)
+    Parity(canon(got), canon(fold(1)), anchor.map(anchorParity(spark, dir, got, _)))
+  }
+
+  /** The events table in event-time order, to the µs the batch plans
+    * order by (a ms order could swap a same-ms pair the batch
+    * lead/argmax sees in µs order). */
   private def events(spark: SparkSession, dir: String): Seq[Ev] = {
     import spark.implicits._
     graft.Tables.events(spark, dir)
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-      .as[Ev].collect().toSeq.sortBy(e => (micros(e.ts), e.event_id))
+      .orderBy(unix_micros($"ts"), $"event_id").as[Ev].collect().toSeq
   }
+
+  /** The events table in arrival (event_id) order. */
+  private[graft] def arrivals(spark: SparkSession, dir: String): Seq[Ev] =
+    events(spark, dir).sortBy(_.event_id)
 
   private def docs(spark: SparkSession, dir: String,
       where: Column = lit(true)): Seq[Doc] = {
@@ -134,60 +165,61 @@ object StreamingEntry {
       .as[Doc].collect().toSeq.sortBy(_.doc_id)
   }
 
-  /** agg twin `<query>_stream`: the streamed result == the registered
-    * batch query `query` over the same tables, projected onto the twin's
-    * columns. */
+  /** Run `body` with the session conf `conf` set, then restore it. */
+  private def withConf[A](spark: SparkSession, conf: Map[String, String])(
+      body: => A): A = {
+    val prev = conf.map { case (k, v) =>
+      val p = spark.conf.getOption(k); spark.conf.set(k, v); k -> p }
+    try body finally prev.foreach { case (k, p) =>
+      p.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  /** agg twin `name`: the streamed result, through `post`, == the
+    * registered batch query `query` over the same tables, projected onto
+    * the result's columns. */
   private def aggTwin(query: String, mode: String,
-      xform: DataFrame => DataFrame,
-      post: DataFrame => Seq[String] = canon): (String, Twin) =
-    s"${query}_stream" -> Twin("agg", (spark, dir, splits) => {
+      xform: DataFrame => DataFrame, post: DataFrame => DataFrame = identity,
+      name: Option[String] = None): (String, Twin) =
+    name.getOrElse(s"${query}_stream") -> Twin("agg", (spark, dir, splits) => {
       import spark.implicits._
       val streamed = drained(spark, events(spark, dir), splits, mode, xform)
-      val want = graft.SparkEntry.queries(query)(spark, dir)
-        .select(streamed.columns.toSeq.map(col): _*)
-      Parity(post(streamed), canon(want))
+      anchorParity(spark, dir, streamed, Anchor(query, post))
     })
 
-  /** fold twin: N-split fold == 1-split fold (split invariance). `order`
-    * is the feed's arrival order — it must agree with the order the
-    * twin's within-batch fold uses (event time for the time-ordered
-    * folds, event_id for the arrival-ordered late-arrival flagger), or
-    * a batch boundary would reorder the fold sequence and the parity
-    * would test nothing. */
-  private def foldTwin(mode: String, xform: DataFrame => DataFrame,
-      post: DataFrame => Seq[String],
-      order: Ev => (Long, Long) = e => (micros(e.ts), e.event_id)): Twin =
-    Twin("fold", (spark, dir, splits) => {
-      import spark.implicits._
-      val rows = events(spark, dir).sortBy(order)
-      val got = post(drained(spark, rows, splits, mode, xform))
-      val want = post(drained(spark, rows, 1, mode, xform))
-      Parity(got, want)
+  /** fold twin: N-split fold == 1-split fold, and the N-split fold
+    * matches its `anchor`. The `feed`'s arrival order must be the one the
+    * within-batch fold uses, or a batch boundary would reorder the fold.
+    * `xform` sees the whole feed (CUSUM's level is a property of it);
+    * `post` turns the drained rows into the final state; `conf` is set
+    * for the run. */
+  private[graft] def foldTwin[T <: Product : TypeTag](
+      feed: (SparkSession, String) => Seq[T], mode: String)(
+      xform: Seq[T] => DataFrame => DataFrame,
+      post: DataFrame => DataFrame = identity,
+      anchor: Option[Anchor] = None,
+      conf: Map[String, String] = Map.empty): Twin =
+    Twin("fold", (spark, dir, splits) => withConf(spark, conf) {
+      implicit val enc: Encoder[T] = Encoders.product[T]
+      val rows = feed(spark, dir)
+      foldParity(spark, dir, splits, anchor)(n =>
+        post(drained(spark, rows, n, mode, xform(rows))))
     })
 
-  /** foreachBatch-shaped fold (pure per-batch apply function): N-split
-    * sequential apply == 1-split apply. `sortKey` orders the feed the
-    * way the apply function's cross-batch contract requires (seq order
-    * for CDC, per-key event-time order for SCD2). */
-  private def batchFold(init: SparkSession => DataFrame,
+  /** foreachBatch-shaped fold (pure per-batch apply function) over a
+    * `feed` in the order the apply function's cross-batch contract
+    * requires (seq order for CDC, per-key event-time order for SCD2):
+    * N-split sequential apply == 1-split apply, and the N-split state
+    * matches its `anchor`. */
+  private def batchFold[T <: Product : TypeTag](
+      feed: (SparkSession, String) => Seq[T], init: SparkSession => DataFrame,
       apply: (DataFrame, DataFrame) => DataFrame,
-      feed: (SparkSession, String) => DataFrame,
-      sortKey: org.apache.spark.sql.Row => (Long, Long)): Twin =
+      anchor: Option[Anchor] = None): Twin =
     Twin("fold", (spark, dir, splits) => {
-      val all = feed(spark, dir)
-      def fold(n: Int): Seq[String] = {
-        val batches = splitInto(all.collect().toSeq.sortBy(sortKey), n)
-        val schema = all.schema
-        var state = init(spark)
-        batches.foreach { b =>
-          state = apply(state,
-            spark.createDataFrame(
-              scala.jdk.CollectionConverters.SeqHasAsJava(b).asJava, schema))
-            .localCheckpoint(true)
-        }
-        canon(state)
-      }
-      Parity(fold(splits), fold(1))
+      val rows = feed(spark, dir)
+      foldParity(spark, dir, splits, anchor)(n =>
+        splitInto(rows, n).foldLeft(init(spark))((state, b) =>
+          apply(state, spark.createDataset(b)(Encoders.product[T]).toDF())
+            .localCheckpoint(true)))
     })
 
   /** name → parity runner; the streaming registry a driver enumerates. */
@@ -198,120 +230,94 @@ object StreamingEntry {
     // update mode emits per-batch revisions; the last row per user is the
     // materialized KTable and must equal the batch argmax
     aggTwin("ktable_latest", "update", StreamOps.ktableLatest,
-      canonLastPerKey(_, 0)),
+      lastPerKey(_, 0)),
     aggTwin("windowed_agg", "complete", StreamOps.windowedAgg(_)),
     aggTwin("sliding_window", "complete", StreamOps.slidingWindow(_)),
     aggTwin("session_window", "complete", StreamOps.sessionWindow(_)),
-    // Markov transition matrix as a stream: the per-user transition
-    // extractor (flatMapGroupsWithState, append — state = last event per
-    // user, so batch boundaries are unobservable) feeds a downstream
-    // streaming COUNT aggregate; the drained matrix must equal the batch
-    // lead-window matrix exactly — the one twin that composes
-    // arbitrary-state FMGWS with a streaming aggregation.
+    // the one twin that composes an arbitrary-state fold (the per-user
+    // transition extractor) with a downstream streaming aggregation
     aggTwin("markov_transitions", "complete",
       StreamOps.statusTransitionsStream(_)
         .groupBy(col("from_type"), col("to_type"))
         .agg(count(lit(1)).as("n"))),
     // stream-stream interval join: the one twin with TWO streaming sides
     // (both derived from the same feed, like a fanned-out topic). Ordered
-    // arrival + watermarked time-bounded condition ⇒ the streamed append
-    // result must equal the batch inequality join exactly.
-    "interval_join_stream" -> Twin("agg", (spark, dir, splits) => {
-      import spark.implicits._
-      def shape(df: DataFrame) = (
-        df.filter(col("event_type") === "purchase")
-          .select(col("user_id").as("p_user"),
-            col("event_id").as("p_event_id"), col("ts").as("p_ts")),
-        df.select(col("user_id").as("e_user"),
-          col("event_id").as("e_event_id"), col("ts").as("e_ts")))
-      val pairs = Seq(col("p_event_id"), col("e_event_id"))
-      val rows = events(spark, dir)
-      val got = canon(drained(spark, rows, splits, "append", { df =>
-        val (sp, se) = shape(df)
-        StreamOps.intervalJoinFollowups(sp, se).select(pairs: _*)
-      }))
-      val (bp, be) = shape(spark.createDataset(rows).toDF())
-      val want = canon(bp.join(be,
-        expr("p_user = e_user AND e_ts > p_ts AND e_ts <= p_ts + INTERVAL 1 HOUR"))
-        .select(pairs: _*))
-      Parity(got, want)
-    }),
-    // -- fold twins: split invariance -------------------------------
-    "decayed_counts_stream" -> foldTwin("update",
-      StreamOps.decayedCountsStream(_), canonLastPerKey(_, 0)),
-    "late_arrivals_stream" -> foldTwin("append",
-      StreamOps.lateArrivalsStream, canon,
-      order = e => (e.event_id, 0L)),
-    "funnel_steps_stream" -> foldTwin("update",
-      StreamOps.funnelStepsStream(_), canonLastPerKey(_, 0)),
-    "status_transitions_stream" -> foldTwin("append",
-      StreamOps.statusTransitionsStream(_), canon),
-    // online CUSUM over closed-day revenue totals: a day-ordered
-    // (day, cents) feed folded against a configured reference level —
-    // the N-split alarm sequence must equal the 1-split one exactly
-    // (integer state, append mode: closed alarms never revise)
-    "cusum_stream" -> Twin("fold", (spark, dir, splits) => {
-      import spark.implicits._
-      val perDay = graft.Tables.orders(spark, dir)
-        .select(expr("unix_micros(cast(o_orderdate as timestamp)) " +
-          "div 86400000000").as("day"),
-          floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
-        .groupBy(col("day")).agg(sum(col("cents")).as("cents"))
-        .as[(Long, Long)].collect().toMap
-      // the monitor's feed contract is a DENSE day grid (a dark day IS
-      // drift) — gap-fill missing days with zero, like the batch detector
-      val daily = (perDay.keys.min to perDay.keys.max)
-        .map(d => d -> perDay.getOrElse(d, 0L))
-      val ref = daily.map(_._2).sum / daily.size // the configured target
-      def run(n: Int): Seq[String] =
-        canon(drained(spark, daily, n, "append",
-          df => StreamOps.cusumStream(ref)(df.toDF("day", "cents"))))
-      Parity(run(splits), run(1))
-    }),
-    "tws_running_totals" -> Twin("fold", (spark, dir, splits) => {
-      import spark.implicits._
-      // transformWithState requires the RocksDB store (multiple column
-      // families); set it for this twin and restore after
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider")
-      try {
-        val rows = events(spark, dir).map(e => (e.user_id, e.value))
-        def run(n: Int): Seq[String] = canonLastPerKey(
-          drained(spark, rows, n, "update",
-            df => TwsOps.runningTotals(df.as[(Long, Double)]).toDF()), 0)
-        Parity(run(splits), run(1))
-      } finally prev match {
-        case Some(p) => spark.conf.set(key, p)
-        case None => spark.conf.unset(key)
-      }
-    }),
-    // dedup feed is doc_id-ordered, so first-seen == min-id and the
-    // stream must also match the batch md5-group keeper rule
-    "dedup_stream" -> Twin("fold", (spark, dir, splits) => {
-      import spark.implicits._
-      val rows = docs(spark, dir)
-      val got = canon(drained(spark, rows, splits, "update",
-        StreamOps.dedupStream))
-      val static = spark.createDataset(rows).toDF()
-        .select(md5($"text").as("content_md5"), $"doc_id")
-      val want = canon(static
-        .join(static.groupBy($"content_md5")
-          .agg(min($"doc_id").as("keeper_doc_id")), "content_md5")
-        .select($"doc_id", $"content_md5", $"keeper_doc_id",
-          ($"doc_id" =!= $"keeper_doc_id").as("is_duplicate")))
-      Parity(got, want)
-    }),
+    // arrival + watermarked time-bounded condition ⇒ every (purchase,
+    // follow-up) pair streams out; per purchase they are range_join's row.
+    aggTwin("range_join", "append", df => StreamOps.intervalJoinFollowups(
+        df.filter(col("event_type") === "purchase").select(
+          col("user_id").as("p_user"), col("event_id").as("p_event_id"),
+          col("ts").as("p_ts")),
+        df.select(col("user_id").as("e_user"), col("ts").as("e_ts"),
+          col("value"))),
+      _.groupBy(col("p_event_id"), col("p_user")).agg(count(lit(1)).as("n_follow"),
+        ReferenceOps.moneySum(col("value")).as("follow_value")),
+      Some("interval_join_stream")),
+    // -- fold twins: split invariance + anchor ----------------------
+    // n_events only (see the object doc)
+    "decayed_counts_stream" -> foldTwin(events, "update")(
+      _ => StreamOps.decayedCountsStream(_), lastPerKey(_, 0),
+      Some(Anchor("decayed_counts", _.select("user_id", "n_events")))),
+    "late_arrivals_stream" -> foldTwin(arrivals, "append")(
+      _ => StreamOps.lateArrivalsStream,
+      anchor = Some(Anchor("late_arrivals", Relational.lateArrivalsReport))),
+    "funnel_steps_stream" -> foldTwin(events, "update")(
+      _ => StreamOps.funnelStepsStream(_), lastPerKey(_, 0),
+      Some(Anchor("funnel_steps", { users =>
+        // an unset step is Long.MinValue in the fold, NULL in the batch
+        // query; a user who never viewed is not in its funnel
+        def step(c: String) = when(col(c) =!= Long.MinValue, col(c)).as(c)
+        Relational.funnelRollup(users.where(col("v_us") =!= Long.MinValue)
+          .select(step("v_us"), step("s_us"), step("p_us")))
+      }))),
+    // the per-user step of markov_transitions' lead window
+    "status_transitions_stream" -> foldTwin(events, "append")(
+      _ => StreamOps.statusTransitionsStream(_),
+      anchor = Some(Anchor("markov_transitions", Relational.transitionMatrix))),
+    // online CUSUM on the batch detector's day grid (append: closed
+    // alarms never revise): fed x·n_days against the total, its drift is
+    // the batch query's; one row per day, so n_days = count
+    "cusum_stream" -> foldTwin((spark, dir) => Relational.cusumDays(spark, dir)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1),
+        "append")(
+      days => df => StreamOps.cusumStream(days.map(_._2).sum)(df.select(
+        col("_1").as("day"), (col("_2") * days.size).as("cents"))),
+      anchor = Some(Anchor("cusum_changepoint", { days =>
+        days.crossJoin(days.agg(count(lit(1)).as("n_days")))
+          .select(col("day").as("epoch_day"),
+            expr("day_cents div n_days").as("day_cents"), col("cum_drift"),
+            col("cusum"))
+          .orderBy(col("cusum").desc, col("epoch_day")).limit(10)
+      }))),
+    // transformWithState over the purchases (needs the RocksDB store):
+    // each user's running totals are sales_totals' row
+    "tws_running_totals" -> foldTwin(
+      (spark, dir) => events(spark, dir).filter(_.event_type == "purchase")
+        .map(e => (e.user_id, e.value)),
+      "update")(
+      _ => df => TwsOps.runningTotals(df.as(Encoders.product[(Long, Double)]))
+        .toDF(),
+      lastPerKey(_, 0),
+      Some(Anchor("sales_totals", _.select(col("user_id"),
+        (col("revenue_cents") / 100.0).as("revenue"),
+        col("n_events").as("n_purchases")))),
+      Map("spark.sql.streaming.stateStore.providerClass" ->
+        ("org.apache.spark.sql.execution.streaming." +
+          "state.RocksDBStateStoreProvider"))),
+    // dedup feed is doc_id-ordered, so first-seen == min-id: per content
+    // md5, the keeper and copy count are doc_dedup_exact's row
+    "dedup_stream" -> foldTwin((spark, dir) => docs(spark, dir), "update")(
+      _ => StreamOps.dedupStream,
+      anchor = Some(Anchor("doc_dedup_exact",
+        _.groupBy(col("content_md5").as("text_md5"))
+          .agg(min(col("keeper_doc_id")).as("keeper_doc_id"),
+            count(lit(1)).as("n_copies"))))),
     // the daily-ingest funnel as a REAL foreachBatch stream: today's
-    // crawl (the minhash_incremental split) arrives in N micro-batches,
-    // each one call of CorpusOps.ingestFunnel against the persisted
-    // index, with the cross-batch seen-hash state folded between calls
-    // (first-keeper-wins over the doc_id-ordered feed ≡ the batch
-    // min-keeper rule). corpus_pipeline_incremental is the same function
-    // applied to the whole slice as ONE batch, and the DuckDB oracle
-    // checks that report — so this twin checks split invariance against
-    // it: the N-batch accumulated stage counts must equal it.
+    // crawl arrives in N micro-batches, each one CorpusOps.ingestFunnel
+    // call against the persisted index, the seen-hash state folded
+    // between calls; corpus_pipeline_incremental is the same function
+    // over the whole slice as ONE batch, so the N-batch stage counts
+    // must equal that oracled report.
     "corpus_funnel_stream" -> Twin("fold", (spark, dir, splits) => {
       import spark.implicits._
       import graft.operators.{CorpusOps, DocDedup}
@@ -344,36 +350,17 @@ object StreamingEntry {
       Parity(got, want)
     }),
     // foreachBatch CDC/SCD2 folds: sequential per-batch apply over a
-    // seq-ordered feed == one-shot apply
+    // seq-ordered feed == one-shot apply (cdc_apply: no anchor, see the
+    // object doc)
     "cdc_apply" -> batchFold(
-      init = { spark =>
-        import spark.implicits._
-        Seq.empty[(Long, String, Double)].toDF("user_id", "event_type", "value")
-      },
-      apply = (state, b) =>
-        StreamOps.applyCdc(state, b, "user_id", "event_id", "op"),
-      feed = { (spark, dir) =>
-        import spark.implicits._
-        spark.createDataset(events(spark, dir).map(e =>
-          Change(e.user_id, e.event_id,
-            if (e.event_type == "click") "D" else "U",
-            e.event_type, e.value))).toDF()
-      },
-      sortKey = r => (r.getAs[Long]("event_id"), 0L)),
-    "scd2_apply" -> batchFold(
-      init = { spark =>
-        import spark.implicits._
-        Seq.empty[(Long, Int, String, Long, Long, Boolean, Long)]
-          .toDF("user_id", "version", "state", "valid_from_us",
-            "valid_to_us", "is_current", "event_id")
-      },
-      apply = StreamOps.applyScd2,
-      feed = { (spark, dir) =>
-        import spark.implicits._
-        spark.createDataset(events(spark, dir)).toDF()
-      },
-      sortKey = r => (r.getAs[Timestamp]("ts").getTime,
-        r.getAs[Long]("event_id"))))
+      (spark, dir) => arrivals(spark, dir).map(e => Change(e.user_id,
+        e.event_id, if (e.event_type == "click") "D" else "U", e.event_type,
+        e.value)),
+      _.createDataFrame(Seq.empty[(Long, String, Double)])
+        .toDF("user_id", "event_type", "value"),
+      StreamOps.applyCdc(_, _, "user_id", "event_id", "op")),
+    "scd2_apply" -> batchFold(events, StreamOps.emptyScd2, StreamOps.applyScd2,
+      Some(Anchor("scd2_build", identity))))
 }
 
 /** One-command parity gate over [[StreamingEntry.twins]] — prints ONE
@@ -395,11 +382,12 @@ object StreamingParity {
         val ok =
           try {
             val p = twin.run(spark, sfDir, splits)
-            if (!p.ok) System.err.println(
-              s"[parity] $name MISMATCH: got ${p.got.size} rows vs " +
-                s"want ${p.want.size}; first diff: " +
-                (p.got.toSet diff p.want.toSet).headOption
-                  .orElse((p.want.toSet diff p.got.toSet).headOption))
+            for ((check, c) <- ("split" -> p) +: p.anchor.map("anchor" -> _).toSeq
+                 if c.got != c.want) System.err.println(
+              s"[parity] $name $check MISMATCH: got ${c.got.size} rows vs " +
+                s"want ${c.want.size}; first diff: " +
+                (c.got.toSet diff c.want.toSet).headOption
+                  .orElse((c.want.toSet diff c.got.toSet).headOption))
             p.ok
           } catch { case e: Throwable =>
             System.err.println(s"[parity] $name failed: ${e.getMessage}")

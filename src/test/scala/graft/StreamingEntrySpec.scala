@@ -4,8 +4,9 @@ import graft.streaming.StreamingEntry
 
 /** The streaming-surface manifest gate: every declared twin must hold
   * its parity contract (agg twins: streamed == the registered batch
-  * query; fold twins: N-split fold == 1-split fold) over the real
-  * fixture tables.
+  * query; fold twins: N-split fold == 1-split fold, and the fold through
+  * its anchor's tail == the anchor's batch query) over the real fixture
+  * tables.
   * This is the in-suite mirror of the one-command
   * `runMain graft.streaming.StreamingParity` harness. */
 class StreamingEntrySpec extends SparkSpecBase {
@@ -20,6 +21,29 @@ class StreamingEntrySpec extends SparkSpecBase {
     // both parity classes must stay represented
     val kinds = StreamingEntry.twins.values.map(_.kind).toSet
     assert(kinds === Set("agg", "fold"))
+    // every fold twin checks a batch query but these two, whose reasons
+    // the StreamingEntry doc states
+    val unanchored = results.collect { case (n, p)
+      if StreamingEntry.twins(n).kind == "fold" && p.anchor.isEmpty => n }
+    assert(unanchored.toSet === Set("cdc_apply", "corpus_funnel_stream"))
+  }
+
+  test("an anchor catches a fold that is wrong the same way at every split") {
+    import org.apache.spark.sql.functions.{col, not}
+    import graft.operators.Relational
+    import graft.streaming.StreamOps
+    import StreamingEntry.{Anchor, arrivals, foldTwin}
+    // late_arrivals_stream with every out-of-order flag negated: the
+    // fold is still split-invariant, but its per-type counts are not
+    // late_arrivals'
+    val negated = foldTwin(arrivals, "append")(
+      _ => StreamOps.lateArrivalsStream(_).withColumn("ooo", not(col("ooo"))),
+      anchor = Some(Anchor("late_arrivals", Relational.lateArrivalsReport)))
+    val p = negated.run(spark, Sf0001, 3)
+    assert(p.got.nonEmpty)
+    assert(p.got === p.want, "the negated fold should still be split-invariant")
+    assert(p.anchor.exists(a => a.want.nonEmpty && a.got != a.want))
+    assert(!p.ok)
   }
 
   test("the Ev, Doc and Change feeds run on generated code alone " +
