@@ -202,7 +202,9 @@ object Relational {
     * `session_window` can't express per-event gaps, so batch uses the
     * lag + conditional-gap + running-sum session-id window idiom (one
     * shuffle on user_id; both windows share it), and streaming uses
-    * flatMapGroupsWithState — the spec proves they agree row for row. */
+    * flatMapGroupsWithState. The `dynamic_sessions_stream` twin checks
+    * that the fold over the real `events` table, drained in N
+    * micro-batches, equals this query row for row. */
   def dynamicSessionize(spark: SparkSession, dir: String): DataFrame =
     dynamicSessionizeDf(Tables.events(spark, dir), 30L * 60 * 1000000)
 
@@ -819,12 +821,18 @@ object Relational {
       .select($"user_id", $"event_id", $"ts", $"value")
     val views = ev.filter($"event_type" === "view")
       .select($"user_id".as("v_user"), $"ts".as("v_ts"), $"event_id".as("v_event_id"))
-    graft.plans.AsOfJoin(purchases, views, "user_id", "v_user", "ts", "v_ts")
-      .where(unix_micros($"ts") - unix_micros($"v_ts") <= 3600000000L)
-      .groupBy($"user_id")
-      .agg(count(lit(1)).as("n_converted"), moneySum($"value").as("converted_value"))
-      .orderBy($"user_id")
+    conversionRollup(
+      graft.plans.AsOfJoin(purchases, views, "user_id", "v_user", "ts", "v_ts")
+        .where(unix_micros($"ts") - unix_micros($"v_ts") <= 3600000000L))
   }
+
+  /** [[funnelConversion]]'s per-user rollup over its matched purchases
+    * (`user_id`, `value`), which `funnel_conversion_stream` also runs. */
+  private[graft] def conversionRollup(matches: DataFrame): DataFrame =
+    matches.groupBy(col("user_id"))
+      .agg(count(lit(1)).as("n_converted"),
+        moneySum(col("value")).as("converted_value"))
+      .orderBy(col("user_id"))
 
   /** NS: cube report — all 4 grouping sets of (event_type, weekday) in one
     * pass via Expand (4 output rows per input row, partial-aggregated

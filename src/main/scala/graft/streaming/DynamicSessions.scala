@@ -1,9 +1,10 @@
 package graft.streaming
 
-import java.sql.Timestamp
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, unix_micros}
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.functions.money_cents
 
 /** Dynamic-gap sessionization — the one piece of custom streaming state
   * the engine needs (SURVEY.md §7.4): the built-in `session_window` covers
@@ -11,89 +12,87 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * session open longer than views) go through
   * `flatMapGroupsWithState` with event-time timeouts.
   *
-  * State per user is one [[DynamicSessions.SessionState]] (a few dozen
-  * bytes); eviction is watermark-driven via `EventTimeTimeout`, so state
-  * size is bounded by (active users within the watermark horizon), not by
-  * stream length — the property that keeps this runnable forever at any
-  * scale.
+  * State per user is one (start µs, last µs, n, cents, gap µs) tuple;
+  * eviction is watermark-driven via `EventTimeTimeout`, so state size is
+  * bounded by (active users within the watermark horizon), not by stream
+  * length — the property that keeps this runnable forever at any scale.
   */
 object DynamicSessions {
 
-  final case class SessionEvent(
-      user_id: Long, ts: Timestamp, event_type: String, value: Double)
-
-  final case class SessionState(
-      startMs: Long, lastMs: Long, nEvents: Long, sumValue: Double,
-      gapMs: Long)
-
-  final case class SessionOut(
-      user_id: Long, session_start: Timestamp, session_end: Timestamp,
-      n_events: Long, session_value: Double)
-
-  /** Gap policy: how long after event `e` the session stays open. */
-  type GapPolicy = SessionEvent => Long
+  /** Gap policy: how long (µs) after an event of this type the session
+    * stays open. */
+  type GapPolicy = String => Long
 
   /** The fixed-gap policy (recovers built-in `session_window` semantics). */
-  def fixedGap(ms: Long): GapPolicy = _ => ms
+  def fixedGap(us: Long): GapPolicy = _ => us
 
   /** Example dynamic policy: purchases extend the session 3× longer. */
-  def purchaseWeightedGap(baseMs: Long): GapPolicy =
-    e => if (e.event_type == "purchase") baseMs * 3 else baseMs
+  def purchaseWeightedGap(baseUs: Long): GapPolicy =
+    tpe => if (tpe == "purchase") baseUs * 3 else baseUs
 
-  /** Sessionize a (watermarked) event stream with a per-event gap.
+  /** Sessionize a (watermarked) events-shaped stream with a per-event gap
+    * into `dynamic_sessions`' columns (user_id, session_start_us,
+    * session_end_us, n_events, session_value).
     *
-    * Emits a session once the watermark passes its dynamic gap (timeout
-    * path) or when a new event arrives after the gap (in-batch split).
-    * Append-mode output; exactly the built-in session contract, with the
-    * gap recomputed per event.
+    * Each batch's per-user rows fold in (ts µs, event_id) order, the
+    * batch query's lag-window order; money sums as exact cents, as
+    * `moneySum` does. Emits a session once the watermark passes its
+    * dynamic gap (timeout path) or when a new event arrives after the gap
+    * (in-batch split). Append-mode output; exactly the built-in session
+    * contract, with the gap recomputed per event.
     */
-  def sessionize(events: Dataset[SessionEvent], gap: GapPolicy)
-      : Dataset[SessionOut] = {
-    implicit val stateEnc = Encoders.product[SessionState]
-    implicit val outEnc = Encoders.product[SessionOut]
+  def sessionize(events: DataFrame, gap: GapPolicy): DataFrame = {
+    import events.sparkSession.implicits._
+    // state: (start µs, last µs, n, cents, gap µs)
+    def out(user: Long, s: (Long, Long, Long, Long, Long)) =
+      (user, s._1, s._2, s._3, s._4 / 100.0)
     events
-      .groupByKey(_.user_id)(Encoders.scalaLong)
-      .flatMapGroupsWithState[SessionState, SessionOut](
+      // ts_us keeps ts's watermark: event-time timeouts need a watermarked
+      // input column, and late rows (ts_us ≤ watermark µs) are dropped
+      .select(col("user_id"),
+        unix_micros(col("ts")).as("ts_us", events.schema("ts").metadata),
+        col("event_id"), col("event_type"), money_cents(col("value")))
+      .as[(Long, Long, Long, String, Long)]
+      .groupByKey(_._1)
+      .flatMapGroupsWithState[(Long, Long, Long, Long, Long),
+        (Long, Long, Long, Long, Double)](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (userId: Long, it: Iterator[SessionEvent], state: GroupState[SessionState]) =>
+        case (user, rows, state) =>
           if (state.hasTimedOut) {
             val s = state.get
             state.remove()
-            Iterator.single(SessionOut(userId, new Timestamp(s.startMs),
-              new Timestamp(s.lastMs), s.nEvents, s.sumValue))
+            Iterator.single(out(user, s))
           } else {
-            val sorted = it.toVector.sortBy(e => (e.ts.getTime, e.event_type))
             var cur = state.getOption
-            val closed = Vector.newBuilder[SessionOut]
-            sorted.foreach { e =>
-              val t = e.ts.getTime
-              cur match {
-                case Some(s) if t - s.lastMs <= s.gapMs =>
+            val closed = Vector.newBuilder[(Long, Long, Long, Long, Double)]
+            rows.toArray.sortBy(r => (r._2, r._3)).foreach {
+              case (_, t, _, tpe, cents) => cur match {
+                case Some((start, last, n, sum, g)) if t - last <= g =>
                   // Activity-refresh semantics: the session stays open
                   // gap(latest event) past the latest event — a late
-                  // out-of-order arrival (t < lastMs) joins the session
+                  // out-of-order arrival (t < last) joins the session
                   // but does not change its deadline. (Deliberately NOT
-                  // max(gapMs, gap(e)): a sticky max would let one early
+                  // max(gap, gap(e)): a sticky max would let one early
                   // purchase hold the session open forever, and has no
                   // window-SQL batch twin — `dynamic_sessions` oracles
                   // this exact lag-based contract.)
-                  cur = Some(SessionState(s.startMs, math.max(s.lastMs, t),
-                    s.nEvents + 1, s.sumValue + e.value,
-                    if (t >= s.lastMs) gap(e) else s.gapMs))
-                case Some(s) =>
-                  closed += SessionOut(userId, new Timestamp(s.startMs),
-                    new Timestamp(s.lastMs), s.nEvents, s.sumValue)
-                  cur = Some(SessionState(t, t, 1, e.value, gap(e)))
-                case None =>
-                  cur = Some(SessionState(t, t, 1, e.value, gap(e)))
+                  cur = Some((start, math.max(last, t), n + 1, sum + cents,
+                    if (t >= last) gap(tpe) else g))
+                case prev =>
+                  prev.foreach(closed += out(user, _))
+                  cur = Some((t, t, 1L, cents, gap(tpe)))
               }
             }
             cur.foreach { s =>
               state.update(s)
-              state.setTimeoutTimestamp(s.lastMs + s.gapMs)
+              // the deadline in ms, rounded UP: the session closes only
+              // once the watermark is past every µs it could still join at
+              state.setTimeoutTimestamp(-Math.floorDiv(-(s._2 + s._5), 1000L))
             }
             closed.result().iterator
           }
       }
+      .toDF("user_id", "session_start_us", "session_end_us", "n_events",
+        "session_value")
   }
 }

@@ -505,37 +505,34 @@ object StreamOps {
   /** NS per-user step of `markov_transitions` (not of the order-status
     * `status_transitions`): consecutive event-type transitions as an
     * ONLINE fold, computed at ingest instead of by a lag-window job. State is
-    * one (last_type, last_us, last_id) per user; each batch sorts its
-    * per-user slice by (event time, event_id) — the same total order the
-    * feed arrives in, so a batch boundary lands BETWEEN two ordered
-    * events and the emitted transition set is split-invariant (append
-    * mode: each transition is emitted exactly once, in the batch where
-    * its later event arrives). At 100 TB: state is O(|users|) × ~40
-    * bytes sharded by the groupByKey hash; swap NoTimeout for a TTL on
-    * idle users to bound it. */
+    * the user's last event type (no state = no event seen yet); each batch
+    * sorts its per-user slice by (event time, event_id) — the same total
+    * order the feed arrives in, so a batch boundary lands BETWEEN two
+    * ordered events and the emitted transition set is split-invariant
+    * (append mode: each transition is emitted exactly once, in the batch
+    * where its later event arrives). At 100 TB: state is O(|users|) × ~24
+    * bytes (one short string as an UnsafeRow) sharded by the groupByKey
+    * hash; swap NoTimeout for a TTL on idle users to bound it. */
   def statusTransitionsStream(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    val Unset = Long.MinValue
     events
       .select(col("user_id"), col("event_type"),
         unix_micros(col("ts")).as("us"), col("event_id"))
       .as[(Long, String, Long, Long)]
       .groupByKey(_._1)
-      .flatMapGroupsWithState[(String, Long, Long),
-        (Long, String, String, Long)](
+      .flatMapGroupsWithState[String, (Long, String, String, Long)](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         case (user, rows, state) =>
-          var (last, lastUs, lastId) =
-            state.getOption.getOrElse(("", Unset, Unset))
+          var last = state.getOption
           val out =
             scala.collection.mutable.ArrayBuffer[(Long, String, String, Long)]()
           rows.toArray.sortBy(r => (r._3, r._4)).foreach {
-            case (_, tpe, us, id) =>
-              if (lastUs != Unset) out += ((user, last, tpe, id))
-              last = tpe; lastUs = us; lastId = id
+            case (_, tpe, _, id) =>
+              last.foreach(from => out += ((user, from, tpe, id)))
+              last = Some(tpe)
           }
-          state.update((last, lastUs, lastId))
+          last.foreach(state.update)
           out.iterator
       }
       .toDF("user_id", "from_type", "to_type", "event_id")

@@ -1,22 +1,10 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-
-/** Input row for the streaming as-of funnel (the `events` shape). */
-case class AsOfEvent(event_id: Long, ts: Timestamp, user_id: Long,
-    event_type: String, value: Double)
-
-/** A purchase enriched with the same user's latest view at-or-before it. */
-case class AsOfMatch(user_id: Long, event_id: Long, ts_us: Long, value: Double,
-    v_event_id: Long, v_ts_us: Long)
-
-/** Per-user state: the best (latest, greatest-id) view seen so far. */
-case class ViewState(v_event_id: Long, v_ts_us: Long)
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, unix_micros}
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /** Streaming twin of the batch as-of funnel
   * ([[graft.operators.Relational.funnelConversion]]'s core): each purchase
@@ -28,8 +16,8 @@ case class ViewState(v_event_id: Long, v_ts_us: Long)
   * [[graft.plans.AsOfJoinExec]]).
   *
   * Ordering semantics match the batch operator: within a micro-batch,
-  * events are processed in (ts, views-before-purchases, event_id) order,
-  * so a view with the same timestamp as a purchase is visible to it
+  * events are processed in (ts µs, views-before-purchases, event_id)
+  * order, so a view with the same timestamp as a purchase is visible to it
   * (as-of is `ts >= v_ts`), and tied views resolve to the greatest
   * event_id — the batch tiebreak. Across micro-batches the state keeps
   * the greatest (v_ts, v_event_id) view, so in-order arrival reproduces
@@ -39,40 +27,35 @@ case class ViewState(v_event_id: Long, v_ts_us: Long)
   */
 object StreamingAsOf {
 
-  /** Microseconds since epoch from the Timestamp's full nanosecond field —
-    * `getTime * 1000` would truncate to millisecond precision and diverge
-    * from the batch twin's `unix_micros` on sub-ms timestamps (the events
-    * fixture is TIMESTAMP(NANOS); Spark keeps µs). */
-  private def us(t: Timestamp): Long =
-    Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-
-  def funnelMatches(events: Dataset[AsOfEvent],
-      gapUs: Long = 3600000000L): Dataset[AsOfMatch] = {
+  /** Events-shaped stream → one row per matched purchase: (user_id,
+    * event_id, ts_us, value, v_event_id, v_ts_us). Per-user state is the
+    * best view so far, (v_event_id, v_ts_us). */
+  def funnelMatches(events: DataFrame,
+      gapUs: Long = 3600000000L): DataFrame = {
     import events.sparkSession.implicits._
     events
-      .filter(e => e.event_type == "view" || e.event_type == "purchase")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, it: Iterator[AsOfEvent], state: GroupState[ViewState]) =>
-          val sorted = it.toArray.sortBy(e =>
-            (us(e.ts), if (e.event_type == "view") 0 else 1, e.event_id))
+      .where(col("event_type").isin("view", "purchase"))
+      .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
+        col("user_id"), col("event_type") === "view", col("value"))
+      .as[(Long, Long, Long, Boolean, Double)]
+      .groupByKey(_._3)
+      .flatMapGroupsWithState[(Long, Long), (Long, Long, Long, Double, Long, Long)](
+        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+        case (user, rows, state) =>
           var cur = state.getOption
-          val out = ArrayBuffer.empty[AsOfMatch]
-          sorted.foreach { e =>
-            val t = us(e.ts)
-            if (e.event_type == "view") {
-              if (cur.forall(c => c.v_ts_us < t ||
-                  (c.v_ts_us == t && c.v_event_id < e.event_id)))
-                cur = Some(ViewState(e.event_id, t))
-            } else {
-              cur.foreach { c =>
-                if (c.v_ts_us <= t && t - c.v_ts_us <= gapUs)
-                  out += AsOfMatch(user, e.event_id, t, e.value, c.v_event_id, c.v_ts_us)
+          val out = ArrayBuffer.empty[(Long, Long, Long, Double, Long, Long)]
+          rows.toArray.sortBy(e => (e._2, if (e._4) 0 else 1, e._1)).foreach {
+            case (id, t, _, true, _) =>
+              if (cur.forall { case (vId, vTs) => vTs < t || (vTs == t && vId < id) })
+                cur = Some((id, t))
+            case (id, t, _, false, value) =>
+              cur.foreach { case (vId, vTs) =>
+                if (vTs <= t && t - vTs <= gapUs) out += ((user, id, t, value, vId, vTs))
               }
-            }
           }
           cur.foreach(state.update)
           out.iterator
       }
+      .toDF("user_id", "event_id", "ts_us", "value", "v_event_id", "v_ts_us")
   }
 }

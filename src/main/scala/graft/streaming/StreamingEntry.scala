@@ -32,6 +32,11 @@ import graft.operators.{ReferenceOps, Relational}
   *    (the [[Anchor]]); split invariance alone passes a fold that is
   *    wrong the same way at every split.
   *
+  * Every stateful fold in `graft.streaming` runs here but `RateLimiter`
+  * (its token bucket has no batch query); `dynamic_sessions_stream` and
+  * `funnel_conversion_stream` check `DynamicSessions` and `StreamingAsOf`
+  * against `dynamic_sessions` and `funnel_conversion`.
+  *
   * Not fully anchored: `cdc_apply` (no registered query applies
   * last-change-wins over events; `merge_upsert` applies a generated
   * balance-delta change set to `customer`); `decayed_counts_stream`
@@ -69,6 +74,10 @@ object StreamingEntry {
   final case class Doc(doc_id: Long, text: String)
   final case class Change(user_id: Long, event_id: Long, op: String,
       event_type: String, value: Double)
+
+  /** Closes a watermarked feed: an event after every real one. */
+  private val Sentinel = Ev(Long.MaxValue, new Timestamp(32503680000000L),
+    Long.MinValue, "sentinel", 0.0)
 
   private val nameCtr = new java.util.concurrent.atomic.AtomicInteger(0)
 
@@ -274,6 +283,18 @@ object StreamingEntry {
     "status_transitions_stream" -> foldTwin(events, "append")(
       _ => StreamOps.statusTransitionsStream(_),
       anchor = Some(Anchor("markov_transitions", Relational.transitionMatrix))),
+    // purchase-weighted dynamic-gap sessions under a 10-minute watermark;
+    // the far-future sentinel ends the feed, so every real session closes
+    // by timeout (the sentinel's own session never closes)
+    "dynamic_sessions_stream" -> foldTwin(
+      (spark, dir) => events(spark, dir) :+ Sentinel, "append")(
+      _ => df => DynamicSessions.sessionize(df.withWatermark("ts", "10 minutes"),
+        DynamicSessions.purchaseWeightedGap(30L * 60 * 1000000)),
+      anchor = Some(Anchor("dynamic_sessions", identity))),
+    // each purchase's as-of view; per user, funnel_conversion's rollup
+    "funnel_conversion_stream" -> foldTwin(events, "append")(
+      _ => StreamingAsOf.funnelMatches(_),
+      anchor = Some(Anchor("funnel_conversion", Relational.conversionRollup))),
     // online CUSUM on the batch detector's day grid (append: closed
     // alarms never revise): fed x·n_days against the total, its drift is
     // the batch query's; one row per day, so n_days = count

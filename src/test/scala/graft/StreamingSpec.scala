@@ -472,16 +472,15 @@ class StreamingSpec extends SparkSpecBase {
   }
 
   test("streaming as-of funnel across micro-batches == batch as-of join") {
-    import graft.streaming.{AsOfEvent, StreamingAsOf}
+    import graft.streaming.StreamingAsOf
     implicit val ctx = spark.sqlContext
-    val ms = MemoryStream[AsOfEvent]
-    val evs = rows.map(e => AsOfEvent(e.event_id, e.ts, e.user_id, e.event_type, e.value))
-    val q = StreamingAsOf.funnelMatches(ms.toDS()).writeStream
+    val ms = MemoryStream[Ev]
+    val q = StreamingAsOf.funnelMatches(ms.toDF()).writeStream
       .format("memory").queryName("asof_stream").outputMode("append").start()
     try {
       // in-order arrival split across micro-batches: purchases in the second
       // batch must match view state carried from the first
-      val (first, second) = evs.splitAt(evs.length / 2)
+      val (first, second) = rows.splitAt(rows.length / 2)
       ms.addData(first); q.processAllAvailable()
       ms.addData(second); q.processAllAvailable()
       val streamed = spark.table("asof_stream")
@@ -499,7 +498,7 @@ class StreamingSpec extends SparkSpecBase {
   }
 
   test("streaming as-of keeps sub-millisecond timestamps at µs precision") {
-    import graft.streaming.{AsOfEvent, StreamingAsOf}
+    import graft.streaming.StreamingAsOf
     implicit val ctx = spark.sqlContext
     def tsUs(us: Long): Timestamp = {
       val ts = new Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
@@ -508,11 +507,11 @@ class StreamingSpec extends SparkSpecBase {
     }
     // view and purchase inside the SAME millisecond: getTime*1000 would
     // round both to 1_000_000 µs and break the batch-parity contract
-    val ms = MemoryStream[AsOfEvent]
+    val ms = MemoryStream[Ev]
     ms.addData(Seq(
-      AsOfEvent(1L, tsUs(1000250L), 7L, "view", 0.0),
-      AsOfEvent(2L, tsUs(1000750L), 7L, "purchase", 5.0)))
-    val q = StreamingAsOf.funnelMatches(ms.toDS()).writeStream
+      Ev(1L, tsUs(1000250L), 7L, "view", 0.0, ""),
+      Ev(2L, tsUs(1000750L), 7L, "purchase", 5.0, "")))
+    val q = StreamingAsOf.funnelMatches(ms.toDF()).writeStream
       .format("memory").queryName("asof_subms").outputMode("append").start()
     try {
       q.processAllAvailable()
