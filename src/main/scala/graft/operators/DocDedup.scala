@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -140,12 +140,12 @@ object DocDedup {
     * new batch is always broadcast-small relative to it. */
   def minhashIncremental(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // LAZY checkpoint: the signature pipeline (corpus scan + per-shingle
+    // lazy cut: the signature pipeline (corpus scan + per-shingle
     // md5 + 16-perm aggregation) feeds BOTH join inputs — without the
     // materialization it would execute twice (the filters differ, so no
     // ReusedExchange applies). Under AQE taking it runs the aggregation's
     // map stage; the rest waits for the query's own action.
-    val bands = bandFrameOf(Tables.documents(spark, dir)).localCheckpoint(false)
+    val bands = Checkpoints.cut(bandFrameOf(Tables.documents(spark, dir)))
     probePairs(bands.where(!isNewDoc($"doc_id")), bands.where(isNewDoc($"doc_id")))
       .orderBy($"new_doc", $"index_doc")
   }
@@ -668,15 +668,13 @@ object DocDedup {
     import spark.implicits._
     val base = Tables.customer(spark, dir).select($"c_custkey", $"c_name")
     // (key, name, pos, del = name minus the character at pos) —
-    // materialized ONCE (lazily, so plan construction/inspection stays
-    // free): it feeds three join inputs on two different keys ((pos, del)
-    // and (del)), so the per-character explode would otherwise run per
-    // input (no common exchange for Spark to reuse). On a cluster:
-    // persist() / a staging table instead of the local checkpoint.
-    val keyed = base.select($"c_custkey", $"c_name",
+    // materialized ONCE (a lazy cut of a scan, so plan construction and
+    // inspection stay free): it feeds three join inputs on two different
+    // keys ((pos, del) and (del)), so the per-character explode would
+    // otherwise run per input (no common exchange for Spark to reuse).
+    val keyed = Checkpoints.cut(base.select($"c_custkey", $"c_name",
       posexplode(expr("transform(sequence(1, length(c_name)), i -> " +
-        "concat(substr(c_name, 1, i-1), substr(c_name, i+1)))")))
-      .localCheckpoint(false)
+        "concat(substr(c_name, 1, i-1), substr(c_name, i+1)))"))))
     val subst = keyed.as("x").join(keyed.as("y"),
         $"x.pos" === $"y.pos" && $"x.col" === $"y.col" &&
           $"x.c_custkey" < $"y.c_custkey")
@@ -814,12 +812,13 @@ object DocDedup {
     * multiset never growing beyond |E| + |V| per round — the standard
     * 100 TB-scale formulation.
     *
-    * Each round is two (groupBy + join) stages over the current edge set;
-    * localCheckpoint truncates lineage (Catalyst would otherwise
-    * re-optimize a doubling plan tree every round; on a real cluster use
-    * reliable checkpoint() instead). Convergence is detected by a cheap
-    * (count, Σu, Σv) fingerprint of the checkpointed edge multiset; the
-    * result is then PROVEN, not trusted: a final validation join asserts
+    * Each round is two (groupBy + join) stages over the current edge set,
+    * ending in one [[Checkpoints.eagerCut]] (Catalyst would otherwise
+    * re-optimize a doubling plan tree every round) that also observes the
+    * (count, Σu, Σv) fingerprint of the new edge multiset: the round's
+    * own SQL execution is its convergence check, and a count of 0 on the
+    * first (oriented-edge) cut means an empty graph. The result is then
+    * PROVEN, not trusted: a final validation join asserts
     * label(a) == label(b) for every ORIGINAL pair. Labels can never merge
     * two true components (every rewritten edge stays inside its component
     * by construction), so consistency on the input pairs is a sound
@@ -828,15 +827,16 @@ object DocDedup {
   def connectedComponents(pairs: DataFrame): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    // Materialize the pair pipeline ONCE — it feeds both the initial edge
-    // set and the final validation join (without this the whole upstream
-    // candidate-generation DAG would run twice).
-    // (lazy: the isEmpty/first-fingerprint action below materializes both
-    // checkpoints in one pass)
+    // Cut the pair pipeline ONCE — it feeds both the initial edge set and
+    // the final validation join (without this the whole upstream
+    // candidate-generation DAG would run twice); the validation count
+    // completes it.
     val pairs0 = Checkpoints.cut(pairs.toDF("a", "b"))
+    def starCut(e: DataFrame): (DataFrame, Row) = Checkpoints.eagerCut(e,
+      count(lit(1)), sum($"u".cast(DecimalType(38, 0))), sum($"v".cast(DecimalType(38, 0))))
     // Orient (bigger, smaller), drop self-loops; multiset semantics
     // throughout — groupBys dedup where it matters.
-    var edges = Checkpoints.cut(pairs0.where($"a" =!= $"b")
+    var (edges, prev) = starCut(pairs0.where($"a" =!= $"b")
       .select(greatest($"a", $"b").as("u"), least($"a", $"b").as("v")))
 
     // large-star: every node hangs its LARGER neighbors onto the min of
@@ -854,22 +854,13 @@ object DocDedup {
         .unionAll(mins.select($"u", $"m".as("v")))
         .where($"u" =!= $"v")
     }
-    def fingerprint(e: DataFrame): (Long, BigDecimal, BigDecimal) = {
-      val r = e.agg(count(lit(1)), sum($"u".cast(DecimalType(38, 0))),
-        sum($"v".cast(DecimalType(38, 0)))).collect()(0)
-      (r.getLong(0), BigDecimal(r.getDecimal(1)), BigDecimal(r.getDecimal(2)))
-    }
-    if (edges.isEmpty) return edges.select($"u".as("doc_id"), $"v".as("label"))
-    var prev = fingerprint(edges)
+    if (prev.getLong(0) == 0) return edges.select($"u".as("doc_id"), $"v".as("label"))
     var iter = 0
     var stable = false
     while (!stable && iter < 16) {
-      // LAZY checkpoint: the fingerprint action right below materializes
-      // it — an eager checkpoint would run the round's shuffles twice-ish
-      // (one job to materialize, one to fingerprint) for no benefit.
-      edges = Checkpoints.cut(smallStar(largeStar(edges)))
-      val cur = fingerprint(edges)
+      val (next, cur) = starCut(smallStar(largeStar(edges)))
       stable = cur == prev
+      edges = next
       prev = cur
       iter += 1
     }
@@ -878,10 +869,9 @@ object DocDedup {
     // root its own (root, root) row so every paired node is labeled.
     val nonRoot = edges.groupBy($"u").agg(min($"v").as("label"))
       .select($"u".as("doc_id"), $"label")
-    val labels = nonRoot
+    val labels = Checkpoints.cut(nonRoot // completed by the validation count
       .unionByName(nonRoot.select($"label".as("doc_id"), $"label"))
-      .groupBy($"doc_id").agg(min($"label").as("label"))
-      .localCheckpoint(false) // materialized by the validation count
+      .groupBy($"doc_id").agg(min($"label").as("label")))
     val la = labels.select($"doc_id".as("a"), $"label".as("la"))
     val lb = labels.select($"doc_id".as("b"), $"label".as("lb"))
     val bad = pairs0

@@ -25,8 +25,8 @@ object GraphOps {
 
   /** PageRank iteration over an undirected edge list, fully distributed:
     * one shuffle per round (contributions grouped by destination), joined
-    * back to the degree table. Each round lazily localCheckpoints its
-    * result (the [[DocDedup.connectedComponents]] loop pattern), so plan
+    * back to the degree table. Each round takes a lazy
+    * [[Checkpoints.cut]] of its result, so plan
     * depth stays CONSTANT in `iters` — long runs are safe, not just the
     * fixed 3 rounds the declared query uses.
     *
@@ -52,10 +52,9 @@ object GraphOps {
         .groupBy($"dst").agg(sum($"c").as("in_c"))
       // every node of an undirected graph has deg ≥ 1 and thus in-edges,
       // but keep the left join + coalesce so directed edge lists are safe
-      // lazy lineage cut per round (the CC-loop pattern): without it the
-      // plan tree deepens linearly with iters and the optimizer/codegen
-      // cost blows up for long runs; the per-node frame is graph-sized,
-      // never corpus-sized (Checkpoints.cut flips to reliable on cluster)
+      // lazy lineage cut per round: without it the plan tree deepens
+      // linearly with iters and the optimizer/codegen cost blows up for
+      // long runs; the per-node frame is graph-sized, never corpus-sized
       pr = Checkpoints.cut(
         base.join(contrib, base("doc_id") === contrib("dst"), "left")
           .select(base("doc_id"), base("deg"), base("n_nodes"),
@@ -210,7 +209,7 @@ object GraphOps {
   def graphModularity(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val pairs = DocDedup.simhashPairsMemo(spark, dir).select($"doc_a", $"doc_b")
-    // lazy checkpoint: the LPA label frame is referenced THREE times
+    // lazy cut: the LPA label frame is referenced THREE times
     // below (la, lb, the degree rollup) — without materialization each
     // reference re-runs both LPA rounds (4 shuffles apiece)
     val labels = Checkpoints.cut(labelPropagation(spark, dir))
@@ -268,16 +267,18 @@ object GraphOps {
     *    wave's kills), and
     *  - one `−1` row per pair endpoint whose other endpoint was killed,
     *    selected by an in-set filter on the driver-held kill ids (a node
-    *    dies once, so the whole peel emits ≤ 2|E| such rows),
-    * then one lineage cut and one driver read of the next wave's kill ids
-    * (`alive && deg < k`), which is also the convergence fingerprint:
-    * empty ⇒ fixpoint. So a wave costs one shuffle and one driver read,
-    * and because every node dies at most once, all reads together return
-    * ≤ |V| ids (for the shipped query |V| ≤ documents = 50,000 × sf).
-    * Joining the table against the kills instead would shuffle both sides
-    * every wave: a checkpointed frame reports no output partitioning.
-    * The output is the final table itself: `in_core = alive`, and
-    * `core_deg = deg` for a live node.
+    *    dies once, so the whole peel emits ≤ 2|E| such rows).
+    * Each table, the first and every wave's, is one
+    * [[Checkpoints.eagerCut]] that observes `collect_list(doc_id)` where
+    * `alive && deg < k`: the next wave's kill ids, which are also the
+    * convergence check (empty ⇒ fixpoint). So a wave costs one shuffle
+    * and one SQL execution (two jobs: the shuffle-map stage and the cut),
+    * and because every node dies at most once, all observed lists
+    * together hold ≤ |V| ids (for the shipped query |V| ≤ documents =
+    * 50,000 × sf). Joining the table against the kills instead would
+    * shuffle both sides every wave: a checkpointed frame reports no
+    * output partitioning. The output is the final table itself:
+    * `in_core = alive`, and `core_deg = deg` for a live node.
     *
     * `MaxPeelRounds` is a runaway guard, not the convergence contract.
     * `unrollGuard = Some(g)` fails the call unless the peel converged
@@ -286,25 +287,27 @@ object GraphOps {
   private[graft] def kcoreMembershipOf(spark: SparkSession, pairs: DataFrame,
       k: Int, unrollGuard: Option[Int] = None): DataFrame = {
     import spark.implicits._
-    var table = Checkpoints.cut(
+    def peeled(t: DataFrame): (DataFrame, Seq[Long]) = {
+      val (cut, kills) = Checkpoints.eagerCut(t,
+        collect_list(when($"alive" === 1 && $"deg" < k, $"doc_id")))
+      (cut, kills.getSeq[Long](0))
+    }
+    var (table, killed) = peeled(
       pairs.select($"doc_a".as("doc_id")).union(pairs.select($"doc_b".as("doc_id")))
         .groupBy($"doc_id").agg(count(lit(1)).as("deg"))
         .select($"doc_id", $"deg", lit(1).as("alive")))
-    def killedIn(t: DataFrame): Array[Long] =
-      t.where($"alive" === 1 && $"deg" < k).select($"doc_id").as[Long].collect()
-    var killed = killedIn(table)
     var round = 0
     while (killed.nonEmpty && round < MaxPeelRounds) {
-      val dead = killed.toSeq
-      val dec = pairs.where($"doc_a".isin(dead: _*)).select($"doc_b".as("doc_id"))
-        .union(pairs.where($"doc_b".isin(dead: _*)).select($"doc_a".as("doc_id")))
+      val dec = pairs.where($"doc_a".isin(killed: _*)).select($"doc_b".as("doc_id"))
+        .union(pairs.where($"doc_b".isin(killed: _*)).select($"doc_a".as("doc_id")))
         .select($"doc_id", lit(-1L).as("deg"), lit(0).as("alive"))
-      table = Checkpoints.cut(
+      val (next, kills) = peeled(
         table.select($"doc_id", $"deg",
             when($"deg" < k, 0).otherwise($"alive").as("alive"))
           .union(dec)
           .groupBy($"doc_id").agg(sum($"deg").as("deg"), max($"alive").as("alive")))
-      killed = killedIn(table)
+      table = next
+      killed = kills
       round += 1
     }
     unrollGuard.foreach { g =>
@@ -325,8 +328,8 @@ object GraphOps {
     * dist 2 = their neighborhood, unreachable = outside the audited
     * components. Classic frontier iteration, fully distributed: each
     * round is ONE shuffle (neighbor expansion joined on the edge key,
-    * then a min-dist re-group); plan depth stays constant via the
-    * CC-loop lazy localCheckpoint. The cap bounds work on high-diameter
+    * then a min-dist re-group); plan depth stays constant via one
+    * [[Checkpoints.eagerCut]] per round. The cap bounds work on high-diameter
     * graphs — beyond it, [[DocDedup.dedupClusters]]' star contraction
     * answers reachability in O(log²) rounds independent of the diameter
     * instead. The DuckDB twin unrolls the same `rounds` expansions. */
@@ -341,9 +344,10 @@ object GraphOps {
     for (_ <- 1 to rounds) {
       val next = edges.join(dist, edges("dst") === dist("doc_id"))
         .select(edges("src").as("doc_id"), (dist("dist") + 1).as("dist"))
-      // lazy lineage cut per round (the pagerank/CC pattern)
-      dist = Checkpoints.cut(dist.union(next)
-        .groupBy($"doc_id").agg(min($"dist").as("dist")))
+      // eager: a lazy round cut is read only by the next round's shuffle,
+      // so no result job would complete it
+      dist = Checkpoints.eagerCut(dist.union(next)
+        .groupBy($"doc_id").agg(min($"dist").as("dist")))._1
     }
     dist.orderBy($"doc_id")
   }

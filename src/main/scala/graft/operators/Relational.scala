@@ -1694,13 +1694,12 @@ object Relational {
     val ev = Tables.events(spark, dir)
       .filter($"event_type".isin("purchase", "view"))
       .select($"event_type", $"value")
-    // lazy-checkpoint the grid so withGlobalCumsum's range-boundary
+    // lazy cut of the grid so withGlobalCumsum's range-boundary
     // sampling pass and its cumulative pass both read the materialized
     // per-value counts instead of re-aggregating the event scan
-    val perValue = ev.groupBy($"value")
+    val perValue = Checkpoints.cut(ev.groupBy($"value")
       .agg(sum(($"event_type" === "purchase").cast(LongType)).as("ca"),
-        sum(($"event_type" === "view").cast(LongType)).as("cb"))
-      .localCheckpoint(false)
+        sum(($"event_type" === "view").cast(LongType)).as("cb")))
     val totals = ev.agg(
       sum(($"event_type" === "purchase").cast(LongType)).as("na"),
       sum(($"event_type" === "view").cast(LongType)).as("nb"))
@@ -1757,16 +1756,15 @@ object Relational {
     // (a<b via index slicing — same pair set, same string order as the
     // old a.brand < b.brand join condition), and the totals/marginals
     // derive from the same per-order frame. Bounded per-group state at
-    // any SF; the checkpoint (cluster: checkpoint()) feeds 3 consumers.
+    // any SF; the lineage cut feeds 3 consumers.
     // collect_set drops NULLs, so a NULL p_brand would vanish from the
     // brandN marginals (the old distinct kept it): the query assumes
     // p_brand is non-null, as it is in the contract data.
     // part is SF-scaled — no broadcast hint; stats/AQE choose.
-    val orderSets = Tables.lineitem(spark, dir)
+    val orderSets = Checkpoints.cut(Tables.lineitem(spark, dir)
       .join(Tables.part(spark, dir), $"l_partkey" === $"p_partkey")
       .groupBy($"l_orderkey".as("okey"))
-      .agg(array_sort(collect_set($"p_brand")).as("brands"))
-      .localCheckpoint(false)
+      .agg(array_sort(collect_set($"p_brand")).as("brands")))
     // 1-row totals frame folded into the plan (no separate count action)
     val totals = orderSets.agg(count(lit(1)).as("n_orders_total"))
     val brandN = orderSets
@@ -2835,15 +2833,14 @@ object Relational {
     * day grid from the first order day to the last, zero on dark days. */
   private[graft] def cusumDays(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // lazy-checkpoint the |days|-row aggregate so the bounds/grid/totals/
+    // lazy cut of the |days|-row aggregate so the bounds/grid/totals/
     // cumsum passes all read the materialized day frame instead of each
     // re-scanning orders (the ksDrift perValue pattern)
-    val perDay = Tables.orders(spark, dir)
+    val perDay = Checkpoints.cut(Tables.orders(spark, dir)
       .select(expr("unix_micros(cast(o_orderdate as timestamp)) div 86400000000")
           .as("day"),
         floor($"o_totalprice" * 100 + 0.5).cast(LongType).as("cents"))
-      .groupBy($"day").agg(sum($"cents").as("x"))
-      .localCheckpoint(false)
+      .groupBy($"day").agg(sum($"cents").as("x")))
     val bounds = perDay.agg(min($"day").as("lo"), max($"day").as("hi"))
     val grid = bounds.select(explode(sequence($"lo", $"hi")).as("day"))
     grid.join(perDay, Seq("day"), "left_outer")

@@ -498,14 +498,13 @@ object Scale {
     import spark.implicits._
     import graft.operators.TextAnalysis.md5Long60
     val li = graft.Tables.lineitem(spark, dir)
-    // lazy-checkpoint the sample so withGlobalRank's range-boundary
+    // lazy cut of the sample so withGlobalRank's range-boundary
     // sampling pass and its rank pass both read the materialized 2%
     // rows instead of re-running the md5 filter over the full fact
-    val sample = li
+    val sample = Checkpoints.cut(li
       .select($"l_orderkey", $"l_linenumber")
       .where(md5Long60(concat_ws(":", lit("sb"), $"l_orderkey", $"l_linenumber"))
-        % 50 === 0)
-      .localCheckpoint(false)
+        % 50 === 0))
     // Rank the sample DISTRIBUTED via withGlobalRank — a 2% sample of a
     // 100 TB fact is still far too big for an unpartitioned row_number
     // window (the exact single-task failure this planner exists to
@@ -586,13 +585,11 @@ object Scale {
     // columns and column pruning de-canonicalizes its copy (also
     // measured 1.4x slower from the double compute). With different
     // boundaries, branch A's offsets describe different pids than
-    // branch B's rows — silently wrong ranks. The lazy checkpoint creates
-    // ONE shuffled RDD whose boundaries are sampled exactly once; both
-    // branches read its blocks. (Node-local even on a cluster:
-    // `spark.graft.reliableCheckpoints` reaches only Checkpoints.cut.)
+    // branch B's rows — silently wrong ranks. The lazy cut creates ONE
+    // shuffled RDD whose boundaries are sampled exactly once; both
+    // branches read its blocks (or, on the reliable path, its file).
     requireFreshCols(df, Seq(rankCol, nCol, "_gr_pid", "_gr_mid"))
-    val parted = df.repartitionByRange(numParts, sortCols: _*)
-      .localCheckpoint(eager = false)
+    val parted = Checkpoints.cut(df.repartitionByRange(numParts, sortCols: _*))
     val wOff = Window.orderBy(col("_gr_pid"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val wTot = Window.orderBy(col("_gr_pid"))
@@ -641,14 +638,13 @@ object Scale {
     import org.apache.spark.sql.expressions.Window
     requireFreshCols(df, "_gc_pid" +:
       sumCols.flatMap { case (in, out) => Seq(out, s"_gc_off_$in") })
-    // lazy checkpoint: pins ONE sampled set of range boundaries for both
+    // lazy cut: pins ONE sampled set of range boundaries for both
     // branches — without it the totals branch and the running-sum branch
     // each own a range exchange whose boundary sampling is seeded by its
     // RDD id, and when ReuseExchange doesn't dedupe them (AQE off) the
     // two pid spaces diverge and the joined offsets are silently wrong
     // (ks_drift failed the sf0.1 AQE-off oracle sweep exactly this way).
-    val parted0 = df.repartitionByRange(numParts, sortCols: _*)
-      .localCheckpoint(eager = false)
+    val parted0 = Checkpoints.cut(df.repartitionByRange(numParts, sortCols: _*))
     val parted = parted0.withColumn("_gc_pid", spark_partition_id())
     val wOff = Window.orderBy(col("_gc_pid"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -685,10 +681,9 @@ object Scale {
       maxCol: String, outCol: String, numParts: Int = 32): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     requireFreshCols(df, Seq("_gm_pid", "_gm_off", outCol))
-    // lazy checkpoint — same boundary-pinning argument as
+    // lazy cut — same boundary-pinning argument as
     // [[withGlobalCumsum]] (one sampled pid space for both branches)
-    val parted0 = df.repartitionByRange(numParts, sortCols: _*)
-      .localCheckpoint(eager = false)
+    val parted0 = Checkpoints.cut(df.repartitionByRange(numParts, sortCols: _*))
     val parted = parted0.withColumn("_gm_pid", spark_partition_id())
     val wOff = Window.orderBy(col("_gm_pid"))
       .rowsBetween(Window.unboundedPreceding, -1)

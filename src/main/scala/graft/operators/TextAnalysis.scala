@@ -34,9 +34,9 @@ object TextAnalysis {
     * tokenization is the single most repeated subtree in the registry,
     * and one localCheckpoint turns N corpus re-tokenizations into N
     * block reads ([[FrameMemo.shared]]; a warm query over it measures
-    * checkpoint reads, not the build). On a real cluster swap
-    * `localCheckpoint` for `checkpoint()` — or drop the memo entirely
-    * and re-scan; correctness never depends on it. */
+    * checkpoint reads, not the build). It stays node-local on the
+    * cluster conf too (memo cuts do; see [[Checkpoints]]); correctness
+    * never depends on it. */
   def docTokens(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     FrameMemo.shared(spark, dir, "doc_tokens") {
@@ -646,15 +646,13 @@ object TextAnalysis {
   def winnowDedupPairs(spark: SparkSession, dir: String,
       k: Int = 4, w: Int = 8, maxDf: Int = 32): DataFrame = {
     import spark.implicits._
-    // localCheckpoint: the winnowing subtree feeds THREE consumers (the
+    // lineage cut: the winnowing subtree feeds THREE consumers (the
     // df gate + both self-join sides) — materialize it once instead of
-    // re-hashing every gram 3×. On a real cluster swap for checkpoint()
-    // (same convention as DocDedup's pair memoization).
-    val fps = winnowSelect(Tables.documents(spark, dir), k, w)
+    // re-hashing every gram 3×
+    val fps = Checkpoints.cut(winnowSelect(Tables.documents(spark, dir), k, w)
       .select($"doc_id", explode($"sel").as("x"))
       .select($"doc_id", shiftright($"x", 20).as("fp"))
-      .distinct()
-      .localCheckpoint(false)
+      .distinct())
     // document-frequency gate BEFORE pairing: a fingerprint in > maxDf
     // docs is boilerplate (shared nav/header runs) whose per-fp pair
     // fan-out is df² — the same hub hazard graph_degree_hist profiles —

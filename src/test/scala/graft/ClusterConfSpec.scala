@@ -80,6 +80,14 @@ class ClusterConfSpec extends SparkSpecBase {
       val core = graft.operators.GraphOps.kcoreMembershipOf(s, pairs, k = 2)
         .collect().map(r => (r.getLong(0), r.getInt(1))).toMap
       assert(core === Map(1L -> 1, 2L -> 1, 3L -> 1, 4L -> 0, 5L -> 0))
+      // every other cut site takes the reliable form too: the global
+      // rank/cumsum/prefix-max helpers, the per-query multi-consumer cuts
+      // and the eager BFS rounds
+      for (q <- Seq("range_bounds", "ks_drift", "rfm_segments", "skyline_2d",
+          "cusum_changepoint", "basket_pairs", "fuzzy_join", "winnow_dedup_pairs",
+          "minhash_incremental", "corpus_pipeline_incremental", "graph_bfs_distance"))
+        assert(SparkEntry.queries(q)(s, Sf0001).collect().toSeq ===
+          SparkEntry.queries(q)(spark, Sf0001).collect().toSeq, s"$q diverged")
     } finally s.conf.unset(graft.operators.Checkpoints.ConfKey)
   }
 

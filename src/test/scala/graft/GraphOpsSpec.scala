@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{GraphOps, Relational, TextAnalysis}
+import graft.operators.{DocDedup, GraphOps, Relational, TextAnalysis}
 
 /** PageRank + the round-5 robust-stats operators, cross-checked against
   * scalar reference implementations that replay the exact same IEEE
@@ -352,12 +352,64 @@ class GraphOpsSpec extends SparkSpecBase {
       (1L, 5L), (5L, 6L), (6L, 7L))
     val df = g.toDF("doc_a", "doc_b")
     for (k <- Seq(2, 3)) {
-      val jobs = jobsDuring { GraphOps.kcoreMembershipOf(spark, df, k).collect() }
+      val (jobs, execs) = jobsAndExecutionsDuring {
+        GraphOps.kcoreMembershipOf(spark, df, k).collect()
+      }
       val waves = peelWaves(g, k)
-      // c = 6: the vertex table's build and first kill read, the ordered
-      // collect (sample, shuffle, result), and one job of slack
-      assert(jobs <= 2 * waves + 6, s"k=$k: $jobs jobs for $waves waves")
+      // the vertex table and each wave's table are one observed eager cut
+      // apiece (one SQL execution: its shuffle-map stage and the cut
+      // job), then the ordered collect (sample, shuffle, result)
+      assert(execs === waves + 2, s"k=$k: $execs SQL executions for $waves waves")
+      assert(jobs === 2 * (waves + 1) + 3, s"k=$k: $jobs jobs for $waves waves")
     }
+  }
+
+  /** Scalar replay of [[DocDedup.connectedComponents]]' star rounds over
+    * the same edge multiset: how many rounds its loop runs, i.e. until
+    * the (count, Σu, Σv) fingerprint repeats. */
+  private def starRounds(pairs: Seq[(Long, Long)]): Int = {
+    def mins(e: Seq[(Long, Long)]) = e.groupMapReduce(_._1)(_._2)(math.min)
+    def largeStar(e: Seq[(Long, Long)]) = {
+      val sym = e ++ e.map(_.swap)
+      val m = mins(sym)
+      sym.collect { case (u, v) if v > u => (v, math.min(m(u), u)) }
+    }
+    def smallStar(e: Seq[(Long, Long)]) = {
+      val m = mins(e)
+      (e.map { case (u, v) => (v, m(u)) } ++ m.toSeq).filter { case (u, v) => u != v }
+    }
+    def fingerprint(e: Seq[(Long, Long)]) = (e.size, e.map(_._1).sum, e.map(_._2).sum)
+    var edges = pairs.collect { case (a, b) if a != b => (math.max(a, b), math.min(a, b)) }
+    var rounds = 0
+    var stable = false
+    while (!stable) {
+      val next = smallStar(largeStar(edges))
+      stable = fingerprint(next) == fingerprint(edges)
+      edges = next
+      rounds += 1
+    }
+    rounds
+  }
+
+  test("connected components: a star round costs one SQL execution") {
+    // a 12-node path (one star round per ~halving of its length) and a
+    // triangle: two components, labelled by their min doc_id
+    val g = (1L until 12L).map(i => (i, i + 1)) ++
+      Seq((100L, 101L), (101L, 102L), (100L, 102L))
+    val rounds = starRounds(g)
+    assert(rounds === 5)
+    val (jobs, execs) = jobsAndExecutionsDuring {
+      val labels = DocDedup.connectedComponents(g.toDF("doc_a", "doc_b")).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(labels === ((1L to 12L).map(_ -> 1L) ++ (100L to 102L).map(_ -> 100L)).toMap)
+    }
+    // the input-pairs cut, the oriented-edge cut, one observed eager cut
+    // per round, the labels cut, the validation count, the collect
+    assert(execs === rounds + 5, s"$execs SQL executions for $rounds rounds")
+    // per round: its shuffle-map stages and broadcasts (AQE picks the
+    // joins from the round's data, so this is pinned for this graph
+    // only) and the cut job, 6 in all; 6 more around the loop
+    assert(jobs === 6 * rounds + 6, s"$jobs jobs for $rounds rounds")
   }
 
   test("kcore matches the scalar reference on seeded random graphs") {

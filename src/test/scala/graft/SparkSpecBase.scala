@@ -34,16 +34,29 @@ trait SparkSpecBase extends AnyFunSuite {
 
   val Sf0001 = "/root/testdata/sf0.001"
 
-  /** Number of Spark jobs `body` starts. Sentinel jobs fence the call,
+  /** Number of Spark jobs `body` starts. */
+  def jobsDuring(body: => Unit): Int = jobsAndExecutionsDuring(body)._1
+
+  /** Number of SQL executions `body` starts (`SparkListenerSQLExecutionStart`
+    * events: one per Dataset action, eager or lazy checkpoint included). */
+  def sqlExecutionsDuring(body: => Unit): Int = jobsAndExecutionsDuring(body)._2
+
+  /** (jobs, SQL executions) `body` starts. Sentinel jobs fence the call,
     * because listener events arrive asynchronously but in order. */
-  def jobsDuring(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+  def jobsAndExecutionsDuring(body: => Unit): (Int, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val SqlStart = "<sql-execution-start>" // no fence job carries it
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         seen.add(Option(e.properties)
           .flatMap(p => Option(p.getProperty("spark.job.description")))
           .getOrElse(""))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => seen.add(SqlStart)
+        case _ =>
+      }
     }
     val sc = spark.sparkContext
     def fence(tag: String): Unit = {
@@ -59,7 +72,8 @@ trait SparkSpecBase extends AnyFunSuite {
       body
       fence("jobs-end")
       val all = seen.toArray(Array.empty[String]).toSeq
-      all.indexOf("jobs-end") - all.indexOf("jobs-start") - 1
+      val inside = all.slice(all.indexOf("jobs-start") + 1, all.indexOf("jobs-end"))
+      (inside.count(_ != SqlStart), inside.count(_ == SqlStart))
     } finally sc.removeSparkListener(listener)
   }
 }
