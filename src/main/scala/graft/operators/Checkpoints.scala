@@ -5,80 +5,94 @@ import scala.concurrent.duration.Duration
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 
-/** The one place an operator in `graft.operators` cuts lineage. A cut
-  * replaces a frame's plan with its materialized rows, so an iterative
-  * loop's plan stays constant in depth (the plan tree would otherwise
-  * double per round and Catalyst re-optimize an ever-growing DAG), and a
-  * subtree read by several consumers runs once.
+/** The one place the library cuts lineage. A cut replaces a frame's plan
+  * with its materialized rows, so an iterative loop's plan stays bounded
+  * in depth (the plan tree would otherwise grow per round and Catalyst
+  * re-optimize an ever-growing DAG), and a subtree read by several
+  * consumers runs once.
   *
-  * Both forms honour [[ConfKey]]: unset (local mode, the default) they
-  * take a `localCheckpoint` (executor blocks, free of DFS round-trips but
-  * lost with their executor); `conf/cluster-100tb.conf` sets it, and they
-  * take a reliable `checkpoint()` to `spark.checkpoint.dir` (shared FS),
-  * so a long loop or a multi-consumer query survives executor loss.
-  * ClusterConfSpec proves the reliable path result-identical, and
+  * One form, [[eagerCut]], and one completion rule: a cut is complete
+  * when it returns. Its rows are written and its lineage dropped in one
+  * SQL execution, whose job also fills an `Observation` of the given
+  * aggregates over the cut rows, so a loop reads its convergence off the
+  * job that cuts the round instead of running a second one. There is no
+  * lazy form. A lazy checkpoint completes only when a result job's
+  * checkpoint walk reaches it before any other marked RDD, so one read
+  * only by a later cut's shuffle stays open; under AQE taking it runs its
+  * shuffle-map stages anyway; and the job that completes it drops its SQL
+  * metrics ("attempted to access non-existent accumulator").
+  *
+  * The cut honours [[ConfKey]]: unset (local mode, the default) it is a
+  * `localCheckpoint` (executor blocks, free of DFS round-trips but lost
+  * with their executor); `conf/cluster-100tb.conf` sets it, and the cut
+  * is a reliable `checkpoint()` to `spark.checkpoint.dir` (shared FS), so
+  * a long loop or a multi-consumer query survives executor loss. Spark
+  * deletes a reliable cut's files only under
+  * `spark.cleaner.referenceTracking.cleanCheckpoints`, which the same
+  * conf sets: each cut's directory goes once its RDD is collected on the
+  * driver. ClusterConfSpec proves the reliable path result-identical, and
   * CheckpointsSpec that no query leaves a cut open on either path.
   *
-  *  - [[cut]] is lazy. It completes (writes its blocks or file and drops
-  *    its lineage) only when a RESULT job's checkpoint walk reaches it
-  *    before any other checkpoint-marked RDD: the walk runs down from the
-  *    job's final RDD and stops at the first marked one. AQE's
-  *    shuffle-map-stage jobs never walk, so a lazy cut read only by a
-  *    later cut's shuffle stays open, keeping its lineage and, on the
-  *    reliable path, never writing its file. Nor is it free to take
-  *    under AQE (Spark's default): the adaptive plan materializes every
-  *    stage below the final one before it hands out the RDD, so a lazy
-  *    cut of a shuffle-bearing plan runs its shuffle-map stages at once.
-  *    Sites: the multi-consumer subtrees of `Scale.rangeBounds` and the
-  *    global rank/cumsum/prefix-max helpers, `Relational.ksDrift`,
-  *    `basketPairs` and `cusumDays`, `CorpusOps.corpusPipelineIncremental`,
-  *    `DocDedup.minhashIncremental` and `fuzzyJoinPairs`,
-  *    `TextAnalysis.winnowDedupPairs`; the PageRank rounds, the LPA
-  *    labels of `GraphOps.graphModularity`, and the input pairs and the
-  *    labels of `DocDedup.connectedComponents`. A result job of the same
-  *    query (its final job, or a broadcast's collect) reaches each of
-  *    these first.
-  *  - [[eagerCut]] completes when taken, in one SQL execution that also
-  *    fills an `Observation` of the given aggregates over the cut rows:
-  *    a loop reads its convergence off the job that cuts the round
-  *    instead of running a second one. Sites: the k-core peel waves
-  *    (`GraphOps.kcoreMembershipOf`, the next wave's kill set), the
-  *    oriented-edge cut and the star rounds of
-  *    `DocDedup.connectedComponents` (the edge multiset's (count, Σu, Σv)
-  *    fingerprint), and the BFS rounds of
-  *    `GraphOps.bfsDistance` (no metric: their lazy cuts would be read
-  *    only by the next round's shuffle, so they would stay open).
+  * A cut costs a job and a SQL execution of its own, so a site takes one
+  * only where it buys more: without it, a subtree with more than a scan
+  * below it would run again per consumer (work that grows with the data,
+  * where a job's cost does not), or a loop's plan would grow per round.
+  * The sites and what each cut buys:
+  *  - `Scale.withGlobalRank`, `withGlobalCumsum`, `withGlobalPrefixMax`:
+  *    one range exchange, so both branches see one set of sampled
+  *    boundaries (load-bearing for correctness, see `withGlobalRank`);
+  *    `Scale.rangeBounds`: the boundary sampling and rank passes read the
+  *    2% sample instead of re-filtering the fact table.
+  *  - `Relational.basketPairs` (the per-order brand sets, read three
+  *    times) and `Relational.cusumDays` (the day frame, read by the
+  *    bounds aggregate and the grid join): one fact scan, not several.
+  *  - `DocDedup.fuzzyJoinPairs` (the deletion neighbourhoods, three join
+  *    inputs on two keys) and `TextAnalysis.winnowDedupPairs` (the
+  *    fingerprints, read by the df gate and both join sides): one
+  *    explode or hashing pass, not three.
+  *  - `DocDedup.connectedComponents`: the input pairs (read by the first
+  *    round and the validation join), the oriented edges and each star
+  *    round (with the edge multiset's (count, Σu, Σv) fingerprint), and
+  *    the labels (read by the validation and every caller;
+  *    `dedupClusters` memoizes them as taken).
+  *  - `GraphOps.kcoreMembershipOf`: each peel wave, with the next kill
+  *    set; `GraphOps.bfsDistance`: each round; `GraphOps.pagerank`: after
+  *    every 4th round that is not the last, bounding the plan's depth.
+  *
+  * Sites that plan without a cut, where one bought nothing (counted per
+  * warm call at sf0.01 and sf0.1, the cut ran more jobs and SQL
+  * executions and read no fewer rows, or the subtree is a pruned scan):
+  * the LPA labels of `GraphOps.graphModularity` (the three readers plan
+  * as one query), the 3 rounds of `pair_graph_pagerank`, the grid of
+  * `Relational.ksDrift` (its one reader, `withGlobalCumsum`, cuts), the
+  * band frame of `DocDedup.minhashIncremental` and the new-doc slice of
+  * `CorpusOps.corpusPipelineIncremental` (so building its report runs no
+  * job).
   *
   * `FrameMemo` keeps its own two cuts and stays local on either path: its
   * entries are session-scoped and freed by its `release`'s unpersist,
-  * while a reliable checkpoint's files would outlive that release. (Its
-  * `raw` entry `cc_labels` holds the CC labels' [[cut]] as taken.)
+  * while a reliable checkpoint's files would outlive that release. Its
+  * `sorted` form's inner cut stays lazy: the first job that reads its
+  * cache is a result job whose checkpoint walk reaches it, and FrameMemoSpec
+  * pins it complete.
   */
 object Checkpoints {
   val ConfKey = "spark.graft.reliableCheckpoints"
 
-  /** Sees every frame either form hands out (CheckpointsSpec records
+  /** Sees every frame [[eagerCut]] hands out (CheckpointsSpec records
     * them); a no-op otherwise. */
   @volatile private[graft] var taken: DataFrame => Unit = _ => ()
 
-  /** Lazy lineage cut of `df`; see the completion rule above. */
-  def cut(df: DataFrame): DataFrame = handOut(df, eager = false)
-
-  /** Eager lineage cut of `df` and, when `metrics` is non-empty, the row
-    * of those aggregates over its rows, both from one SQL execution. */
-  def eagerCut(df: DataFrame, metrics: Column*): (DataFrame, Row) =
-    if (metrics.isEmpty) (handOut(df, eager = true), Row.empty)
-    else {
-      val obs = Observation()
-      val c = handOut(df.observe(obs, metrics.head, metrics.tail: _*), eager = true)
-      (c, Await.result(obs.future, Duration.Inf))
-    }
-
-  private def handOut(df: DataFrame, eager: Boolean): DataFrame = {
+  /** Lineage cut of `df`, complete when it returns, and, when `metrics`
+    * is non-empty, the row of those aggregates over its rows, both from
+    * one SQL execution (`Row.empty` otherwise). */
+  def eagerCut(df: DataFrame, metrics: Column*): (DataFrame, Row) = {
+    val obs = if (metrics.isEmpty) None else Some(Observation())
+    val in = obs.fold(df)(o => df.observe(o, metrics.head, metrics.tail: _*))
     val c =
-      if (df.sparkSession.conf.get(ConfKey, "false").toBoolean) df.checkpoint(eager)
-      else df.localCheckpoint(eager)
+      if (df.sparkSession.conf.get(ConfKey, "false").toBoolean) in.checkpoint(true)
+      else in.localCheckpoint(true)
     taken(c)
-    c
+    (c, obs.fold(Row.empty)(o => Await.result(o.future, Duration.Inf)))
   }
 }

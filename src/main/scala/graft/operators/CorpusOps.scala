@@ -976,11 +976,10 @@ object CorpusOps {
     * the daily ingest report. */
   def corpusPipelineIncremental(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // lazy cut (of a scan, so taking it runs no job): the slice feeds
-    // the three gates, the hashes and the band probe — one corpus scan,
-    // as a micro-batch is handed over
-    val batch = Checkpoints.cut(Tables.documents(spark, dir)
-      .where(DocDedup.isNewDoc($"doc_id")).select($"doc_id", $"text"))
+    // no cut: building the report runs no job (a cut of the slice would
+    // run one), and each of its readers re-reads only a pruned scan
+    val batch = Tables.documents(spark, dir)
+      .where(DocDedup.isNewDoc($"doc_id")).select($"doc_id", $"text")
     ingestFunnel(corpusIndex(spark, dir), Seq.empty[String].toDF("h"), batch)._1
   }
 

@@ -140,12 +140,10 @@ object DocDedup {
     * new batch is always broadcast-small relative to it. */
   def minhashIncremental(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // lazy cut: the signature pipeline (corpus scan + per-shingle
-    // md5 + 16-perm aggregation) feeds BOTH join inputs — without the
-    // materialization it would execute twice (the filters differ, so no
-    // ReusedExchange applies). Under AQE taking it runs the aggregation's
-    // map stage; the rest waits for the query's own action.
-    val bands = Checkpoints.cut(bandFrameOf(Tables.documents(spark, dir)))
+    // no cut: planned as one query, the two doc_id slices of the band
+    // frame ran fewer jobs, SQL executions and rows read than a cut of
+    // the whole frame did (per warm call at sf0.01 and sf0.1)
+    val bands = bandFrameOf(Tables.documents(spark, dir))
     probePairs(bands.where(!isNewDoc($"doc_id")), bands.where(isNewDoc($"doc_id")))
       .orderBy($"new_doc", $"index_doc")
   }
@@ -668,11 +666,10 @@ object DocDedup {
     import spark.implicits._
     val base = Tables.customer(spark, dir).select($"c_custkey", $"c_name")
     // (key, name, pos, del = name minus the character at pos) —
-    // materialized ONCE (a lazy cut of a scan, so plan construction and
-    // inspection stay free): it feeds three join inputs on two different
+    // materialized ONCE: it feeds three join inputs on two different
     // keys ((pos, del) and (del)), so the per-character explode would
     // otherwise run per input (no common exchange for Spark to reuse).
-    val keyed = Checkpoints.cut(base.select($"c_custkey", $"c_name",
+    val (keyed, _) = Checkpoints.eagerCut(base.select($"c_custkey", $"c_name",
       posexplode(expr("transform(sequence(1, length(c_name)), i -> " +
         "concat(substr(c_name, 1, i-1), substr(c_name, i+1)))"))))
     val subst = keyed.as("x").join(keyed.as("y"),
@@ -817,7 +814,10 @@ object DocDedup {
     * re-optimize a doubling plan tree every round) that also observes the
     * (count, Σu, Σv) fingerprint of the new edge multiset: the round's
     * own SQL execution is its convergence check, and a count of 0 on the
-    * first (oriented-edge) cut means an empty graph. The result is then
+    * first (oriented-edge) cut means an empty graph. The input pairs (read
+    * by the first round and the validation join) and the labels (read by
+    * the validation and the caller) are eager cuts too, so the returned
+    * frame holds its rows and no lineage. The result is then
     * PROVEN, not trusted: a final validation join asserts
     * label(a) == label(b) for every ORIGINAL pair. Labels can never merge
     * two true components (every rewritten edge stays inside its component
@@ -829,9 +829,8 @@ object DocDedup {
     import spark.implicits._
     // Cut the pair pipeline ONCE — it feeds both the initial edge set and
     // the final validation join (without this the whole upstream
-    // candidate-generation DAG would run twice); the validation count
-    // completes it.
-    val pairs0 = Checkpoints.cut(pairs.toDF("a", "b"))
+    // candidate-generation DAG would run twice).
+    val (pairs0, _) = Checkpoints.eagerCut(pairs.toDF("a", "b"))
     def starCut(e: DataFrame): (DataFrame, Row) = Checkpoints.eagerCut(e,
       count(lit(1)), sum($"u".cast(DecimalType(38, 0))), sum($"v".cast(DecimalType(38, 0))))
     // Orient (bigger, smaller), drop self-loops; multiset semantics
@@ -869,7 +868,9 @@ object DocDedup {
     // root its own (root, root) row so every paired node is labeled.
     val nonRoot = edges.groupBy($"u").agg(min($"v").as("label"))
       .select($"u".as("doc_id"), $"label")
-    val labels = Checkpoints.cut(nonRoot // completed by the validation count
+    // cut: read by the validation join and by every caller (dedupClusters
+    // memoizes it as is)
+    val (labels, _) = Checkpoints.eagerCut(nonRoot
       .unionByName(nonRoot.select($"label".as("doc_id"), $"label"))
       .groupBy($"doc_id").agg(min($"label").as("label")))
     val la = labels.select($"doc_id".as("a"), $"label".as("la"))

@@ -25,10 +25,12 @@ object GraphOps {
 
   /** PageRank iteration over an undirected edge list, fully distributed:
     * one shuffle per round (contributions grouped by destination), joined
-    * back to the degree table. Each round takes a lazy
-    * [[Checkpoints.cut]] of its result, so plan
-    * depth stays CONSTANT in `iters` — long runs are safe, not just the
-    * fixed 3 rounds the declared query uses.
+    * back to the degree table. After every [[CutEvery]]-th round that is
+    * not the last, the rank frame takes a [[Checkpoints.eagerCut]], so the
+    * plan spans at most [[CutEvery]] rounds whatever `iters` is: long runs
+    * stay safe from a plan tree that deepens per round. Up to
+    * [[CutEvery]] rounds run as one plan with no cut — the declared
+    * query's 3 rounds plan and run as one SQL execution.
     *
     * @param pairs undirected edges as (doc_a, doc_b), doc_a < doc_b, distinct
     */
@@ -45,23 +47,24 @@ object GraphOps {
     val teleport = floor(lit(0.15) * lit(1048576.0) / $"n_nodes" + lit(0.5))
     var pr = base.select($"doc_id", $"deg", $"n_nodes",
       floor(lit(1048576.0) / $"n_nodes" + lit(0.5)).as("pr_u20"))
-    for (_ <- 1 to iters) {
+    for (round <- 1 to iters) {
       val contrib = pr.join(edges, $"doc_id" === $"src")
         .select($"dst",
           floor(lit(0.85) * $"pr_u20" / $"deg" + lit(0.5)).as("c"))
         .groupBy($"dst").agg(sum($"c").as("in_c"))
       // every node of an undirected graph has deg ≥ 1 and thus in-edges,
       // but keep the left join + coalesce so directed edge lists are safe
-      // lazy lineage cut per round: without it the plan tree deepens
-      // linearly with iters and the optimizer/codegen cost blows up for
-      // long runs; the per-node frame is graph-sized, never corpus-sized
-      pr = Checkpoints.cut(
-        base.join(contrib, base("doc_id") === contrib("dst"), "left")
-          .select(base("doc_id"), base("deg"), base("n_nodes"),
-            (teleport + coalesce($"in_c", lit(0L))).as("pr_u20")))
+      pr = base.join(contrib, base("doc_id") === contrib("dst"), "left")
+        .select(base("doc_id"), base("deg"), base("n_nodes"),
+          (teleport + coalesce($"in_c", lit(0L))).as("pr_u20"))
+      // the per-node frame is graph-sized, never corpus-sized
+      if (round % CutEvery == 0 && round < iters) pr = Checkpoints.eagerCut(pr)._1
     }
     pr
   }
+
+  /** Rounds [[pagerank]] plans between two lineage cuts. */
+  private val CutEvery = 4
 
   /** NS: community detection by synchronous label propagation over the
     * near-dup pair graph — where [[DocDedup.dedupClusters]] answers
@@ -209,10 +212,11 @@ object GraphOps {
   def graphModularity(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val pairs = DocDedup.simhashPairsMemo(spark, dir).select($"doc_a", $"doc_b")
-    // lazy cut: the LPA label frame is referenced THREE times
-    // below (la, lb, the degree rollup) — without materialization each
-    // reference re-runs both LPA rounds (4 shuffles apiece)
-    val labels = Checkpoints.cut(labelPropagation(spark, dir))
+    // no cut: planned as one query, the three references to the LPA
+    // labels (la, lb, the degree rollup) ran fewer jobs, SQL executions
+    // and rows read than a cut of the labels did (per warm call at
+    // sf0.01 and sf0.1)
+    val labels = labelPropagation(spark, dir)
     val withLab = pairs
       .join(labels.select($"doc_id".as("doc_a"), $"label".as("la")), "doc_a")
       .join(labels.select($"doc_id".as("doc_b"), $"label".as("lb")), "doc_b")

@@ -1694,12 +1694,12 @@ object Relational {
     val ev = Tables.events(spark, dir)
       .filter($"event_type".isin("purchase", "view"))
       .select($"event_type", $"value")
-    // lazy cut of the grid so withGlobalCumsum's range-boundary
-    // sampling pass and its cumulative pass both read the materialized
-    // per-value counts instead of re-aggregating the event scan
-    val perValue = Checkpoints.cut(ev.groupBy($"value")
+    // no cut of the grid: its one reader is withGlobalCumsum, whose own
+    // cut materializes it for both of that helper's branches (a second
+    // cut here ran one more job and SQL execution and read more rows)
+    val perValue = ev.groupBy($"value")
       .agg(sum(($"event_type" === "purchase").cast(LongType)).as("ca"),
-        sum(($"event_type" === "view").cast(LongType)).as("cb")))
+        sum(($"event_type" === "view").cast(LongType)).as("cb"))
     val totals = ev.agg(
       sum(($"event_type" === "purchase").cast(LongType)).as("na"),
       sum(($"event_type" === "view").cast(LongType)).as("nb"))
@@ -1761,7 +1761,7 @@ object Relational {
     // brandN marginals (the old distinct kept it): the query assumes
     // p_brand is non-null, as it is in the contract data.
     // part is SF-scaled — no broadcast hint; stats/AQE choose.
-    val orderSets = Checkpoints.cut(Tables.lineitem(spark, dir)
+    val (orderSets, _) = Checkpoints.eagerCut(Tables.lineitem(spark, dir)
       .join(Tables.part(spark, dir), $"l_partkey" === $"p_partkey")
       .groupBy($"l_orderkey".as("okey"))
       .agg(array_sort(collect_set($"p_brand")).as("brands")))
@@ -2404,7 +2404,7 @@ object Relational {
     val anchor = per.agg(max($"last_day").as("anchor"))
     val base = per.crossJoin(broadcast(anchor))
       .withColumn("recency_days", $"anchor" - $"last_day")
-    // the three ranks chain into ONE lazy plan with no driver round trip;
+    // the three ranks chain with no driver round trip (one cut apiece);
     // each ntile reads its total count from the rank's n column
     def score(df: DataFrame, rank: String, out: String,
         sort: Seq[Column]): DataFrame =
@@ -2833,10 +2833,10 @@ object Relational {
     * day grid from the first order day to the last, zero on dark days. */
   private[graft] def cusumDays(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // lazy cut of the |days|-row aggregate so the bounds/grid/totals/
-    // cumsum passes all read the materialized day frame instead of each
-    // re-scanning orders (the ksDrift perValue pattern)
-    val perDay = Checkpoints.cut(Tables.orders(spark, dir)
+    // cut of the |days|-row aggregate so the bounds aggregate and the
+    // grid join both read the materialized day frame instead of each
+    // re-scanning orders
+    val (perDay, _) = Checkpoints.eagerCut(Tables.orders(spark, dir)
       .select(expr("unix_micros(cast(o_orderdate as timestamp)) div 86400000000")
           .as("day"),
         floor($"o_totalprice" * 100 + 0.5).cast(LongType).as("cents"))

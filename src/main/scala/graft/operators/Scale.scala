@@ -498,10 +498,10 @@ object Scale {
     import spark.implicits._
     import graft.operators.TextAnalysis.md5Long60
     val li = graft.Tables.lineitem(spark, dir)
-    // lazy cut of the sample so withGlobalRank's range-boundary
-    // sampling pass and its rank pass both read the materialized 2%
-    // rows instead of re-running the md5 filter over the full fact
-    val sample = Checkpoints.cut(li
+    // cut of the sample so withGlobalRank's range-boundary sampling pass
+    // and its rank pass both read the materialized 2% rows instead of
+    // re-running the md5 filter over the full fact
+    val (sample, _) = Checkpoints.eagerCut(li
       .select($"l_orderkey", $"l_linenumber")
       .where(md5Long60(concat_ws(":", lit("sb"), $"l_orderkey", $"l_linenumber"))
         % 50 === 0))
@@ -549,8 +549,8 @@ object Scale {
 
   /** Global `row_number()` over a TOTAL order without the single-partition
     * window (`Window.orderBy` with no partitionBy funnels every row
-    * through one task — the classic 100 TB scale-killer). One lazy plan,
-    * no driver round trip:
+    * through one task — the classic 100 TB scale-killer). One lineage
+    * cut, then one plan with no driver round trip:
     *
     *  - range-repartition on the sort key (REPARTITION_BY_NUM origin —
     *    AQE never coalesces or skew-splits it, so partition ids are
@@ -566,8 +566,8 @@ object Scale {
     *  - broadcast-join A onto B on `mid >> 33 = pid`:
     *    rank = offset(pid) + (mid & mask) + 1.
     *
-    * Both branches read ONE lazily checkpointed range exchange (see the
-    * in-body note). Requires `sortCols` to be a total order (callers
+    * Both branches read ONE checkpointed range exchange (see the in-body
+    * note). Requires `sortCols` to be a total order (callers
     * tie-break on a key), which makes the rank independent of where the
     * range boundaries fall. A partition of 2^33 rows or more would
     * overflow the mid packing, so it fails the query instead (raise
@@ -585,11 +585,11 @@ object Scale {
     // columns and column pruning de-canonicalizes its copy (also
     // measured 1.4x slower from the double compute). With different
     // boundaries, branch A's offsets describe different pids than
-    // branch B's rows — silently wrong ranks. The lazy cut creates ONE
+    // branch B's rows — silently wrong ranks. The cut creates ONE
     // shuffled RDD whose boundaries are sampled exactly once; both
     // branches read its blocks (or, on the reliable path, its file).
     requireFreshCols(df, Seq(rankCol, nCol, "_gr_pid", "_gr_mid"))
-    val parted = Checkpoints.cut(df.repartitionByRange(numParts, sortCols: _*))
+    val (parted, _) = Checkpoints.eagerCut(df.repartitionByRange(numParts, sortCols: _*))
     val wOff = Window.orderBy(col("_gr_pid"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val wTot = Window.orderBy(col("_gr_pid"))
@@ -638,13 +638,13 @@ object Scale {
     import org.apache.spark.sql.expressions.Window
     requireFreshCols(df, "_gc_pid" +:
       sumCols.flatMap { case (in, out) => Seq(out, s"_gc_off_$in") })
-    // lazy cut: pins ONE sampled set of range boundaries for both
+    // the cut pins ONE sampled set of range boundaries for both
     // branches — without it the totals branch and the running-sum branch
     // each own a range exchange whose boundary sampling is seeded by its
     // RDD id, and when ReuseExchange doesn't dedupe them (AQE off) the
     // two pid spaces diverge and the joined offsets are silently wrong
     // (ks_drift failed the sf0.1 AQE-off oracle sweep exactly this way).
-    val parted0 = Checkpoints.cut(df.repartitionByRange(numParts, sortCols: _*))
+    val (parted0, _) = Checkpoints.eagerCut(df.repartitionByRange(numParts, sortCols: _*))
     val parted = parted0.withColumn("_gc_pid", spark_partition_id())
     val wOff = Window.orderBy(col("_gc_pid"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -681,9 +681,9 @@ object Scale {
       maxCol: String, outCol: String, numParts: Int = 32): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     requireFreshCols(df, Seq("_gm_pid", "_gm_off", outCol))
-    // lazy cut — same boundary-pinning argument as
+    // the cut — same boundary-pinning argument as
     // [[withGlobalCumsum]] (one sampled pid space for both branches)
-    val parted0 = Checkpoints.cut(df.repartitionByRange(numParts, sortCols: _*))
+    val (parted0, _) = Checkpoints.eagerCut(df.repartitionByRange(numParts, sortCols: _*))
     val parted = parted0.withColumn("_gm_pid", spark_partition_id())
     val wOff = Window.orderBy(col("_gm_pid"))
       .rowsBetween(Window.unboundedPreceding, -1)

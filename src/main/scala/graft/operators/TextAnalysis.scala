@@ -649,7 +649,7 @@ object TextAnalysis {
     // lineage cut: the winnowing subtree feeds THREE consumers (the
     // df gate + both self-join sides) — materialize it once instead of
     // re-hashing every gram 3×
-    val fps = Checkpoints.cut(winnowSelect(Tables.documents(spark, dir), k, w)
+    val (fps, _) = Checkpoints.eagerCut(winnowSelect(Tables.documents(spark, dir), k, w)
       .select($"doc_id", explode($"sel").as("x"))
       .select($"doc_id", shiftright($"x", 20).as("fp"))
       .distinct())

@@ -19,28 +19,39 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * before folding the bucket — the per-(key, batch) buffer is bounded by
   * the key's in-batch volume, the same bound `collect_list` aggregation
   * carries.
+  *
+  * Clock: µs, the resolution of Spark's `TimestampType`, as the other
+  * event-time folds (`DynamicSessions`, `StreamingAsOf`). The refill
+  * instant, the replay order and the eviction deadline all read a
+  * timestamp's exact µs, so two events of one key inside one millisecond
+  * fold in event-time order, not `event_id` order. On whole-ms input the
+  * refill doubles equal a ms clock's bit for bit.
   */
 object RateLimiter {
 
   final case class LimitEvent(user_id: Long, ts: Timestamp, event_id: Long)
 
-  final case class BucketState(tokens: Double, lastMs: Long)
+  final case class BucketState(tokens: Double, lastUs: Long)
 
   final case class Admission(
       user_id: Long, event_id: Long, ts: Timestamp, admitted: Boolean)
+
+  /** `ts` in exact µs since the epoch (`Timestamp.getTime` is ms). */
+  private def micros(ts: Timestamp): Long =
+    Math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000
 
   /** Pure single-key fold — shared by the operator and any batch replay
     * (the spec replays it to prove streaming parity). */
   def foldBucket(state: Option[BucketState], capacity: Double,
       refillPerSec: Double, evs: Seq[LimitEvent]): (BucketState, Seq[Admission]) = {
-    var s = state.getOrElse(BucketState(capacity, evs.head.ts.getTime))
+    var s = state.getOrElse(BucketState(capacity, micros(evs.head.ts)))
     val out = evs.map { e =>
-      val now = e.ts.getTime
+      val now = micros(e.ts)
       val refilled = math.min(capacity,
-        s.tokens + math.max(0L, now - s.lastMs) / 1000.0 * refillPerSec)
+        s.tokens + math.max(0L, now - s.lastUs) / 1e6 * refillPerSec)
       val admitted = refilled >= 1.0
       s = BucketState(if (admitted) refilled - 1.0 else refilled,
-        math.max(now, s.lastMs))
+        math.max(now, s.lastUs))
       Admission(e.user_id, e.event_id, e.ts, admitted)
     }
     (s, out)
@@ -60,10 +71,14 @@ object RateLimiter {
             state.remove()
             Iterator.empty
           } else {
-            val evs = it.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
+            val evs = it.toSeq.sortBy(e => (micros(e.ts), e.event_id))
             val (s, out) = foldBucket(state.getOption, capacity, refillPerSec, evs)
             state.update(s)
-            state.setTimeoutTimestamp(evs.map(_.ts.getTime).max + idleEvictMs)
+            // Spark times a key out once the ms watermark exceeds this
+            // value; for the ms floor of the µs deadline that is exactly
+            // when the watermark passes the µs deadline
+            state.setTimeoutTimestamp(
+              Math.floorDiv(micros(evs.last.ts) + idleEvictMs * 1000L, 1000L))
             out.iterator
           }
       }

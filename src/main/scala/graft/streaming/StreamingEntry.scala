@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.{ReferenceOps, Relational}
+import graft.operators.{Checkpoints, ReferenceOps, Relational}
 
 /** The enumerable STREAMING surface — the `SparkEntry.queries` analogue
   * for the streaming twins, so a driver can list and gate them the same
@@ -227,8 +227,8 @@ object StreamingEntry {
       val rows = feed(spark, dir)
       foldParity(spark, dir, splits, anchor)(n =>
         splitInto(rows, n).foldLeft(init(spark))((state, b) =>
-          apply(state, spark.createDataset(b)(Encoders.product[T]).toDF())
-            .localCheckpoint(true)))
+          Checkpoints.eagerCut(
+            apply(state, spark.createDataset(b)(Encoders.product[T]).toDF()))._1))
     })
 
   /** name → parity runner; the streaming registry a driver enumerates. */
@@ -358,7 +358,7 @@ object StreamingEntry {
         // leak over a long-running stream (GC reclamation is unreliable;
         // see GraftShims.unpersistCheckpoint).
         val prev = seenQ.get()
-        seenQ.set(prev.union(qh).distinct().localCheckpoint(true))
+        seenQ.set(Checkpoints.eagerCut(prev.union(qh).distinct())._1)
         GraftShims.unpersistCheckpoint(prev)
       }
       runStream(spark, rows, splits)(

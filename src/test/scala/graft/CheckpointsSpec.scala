@@ -55,16 +55,18 @@ class CheckpointsSpec extends SparkSpecBase {
         "range_bounds", "fuzzy_join", "winnow_dedup_pairs")
       .foreach(q => assert(cutting.contains(q), s"$q took no cut"))
     val ckDir = java.nio.file.Files.createTempDirectory("graft_open_cut_spec")
-    spark.sparkContext.setCheckpointDir(ckDir.toString)
-    val reliable = spark.newSession()
-    reliable.conf.set(Checkpoints.ConfKey, "true")
-    val rel = openIn(reliable, cutting)
-    FrameMemo.shared.clear()
-    val open = for {
-      (path, res) <- Seq("local" -> local, "reliable" -> rel)
-      (q, (_, ids)) <- res.toSeq.sortBy(_._1) if ids.nonEmpty
-    } yield s"$path $q: rdds ${ids.mkString(",")}"
-    assert(open.isEmpty, s"cuts left open:\n${open.mkString("\n")}")
-    assert(java.nio.file.Files.list(ckDir).count() > 0, "the reliable pass wrote no checkpoint")
+    try {
+      spark.sparkContext.setCheckpointDir(ckDir.toString)
+      val reliable = spark.newSession()
+      reliable.conf.set(Checkpoints.ConfKey, "true")
+      val rel = openIn(reliable, cutting)
+      FrameMemo.shared.clear()
+      val open = for {
+        (path, res) <- Seq("local" -> local, "reliable" -> rel)
+        (q, (_, ids)) <- res.toSeq.sortBy(_._1) if ids.nonEmpty
+      } yield s"$path $q: rdds ${ids.mkString(",")}"
+      assert(open.isEmpty, s"cuts left open:\n${open.mkString("\n")}")
+      assert(java.nio.file.Files.list(ckDir).count() > 0, "the reliable pass wrote no checkpoint")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(ckDir.toFile)
   }
 }

@@ -59,6 +59,8 @@ class ClusterConfSpec extends SparkSpecBase {
     assert(conf("spark.graft.reliableCheckpoints") === "true")
     assert(conf("spark.checkpoint.dir").contains("://"),
       "cluster checkpoint dir must be shared FS")
+    assert(conf("spark.cleaner.referenceTracking.cleanCheckpoints") === "true",
+      "reliable cut files must be deleted once their RDDs are collected")
     val ckDir = java.nio.file.Files.createTempDirectory("graft_ck_spec")
     spark.sparkContext.setCheckpointDir(ckDir.toString)
     val base = graft.operators.DocDedup.dedupClusters(spark, Sf0001)

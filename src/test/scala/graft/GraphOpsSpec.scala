@@ -82,6 +82,13 @@ class GraphOpsSpec extends SparkSpecBase {
         "the per-round checkpoint is not cutting lineage")
   }
 
+  test("pair_graph_pagerank: its 3 rounds plan and run as one SQL execution") {
+    val q = SparkEntry.queries("pair_graph_pagerank")
+    q(spark, Sf0001).collect() // builds the pairs memo
+    val (_, execs) = jobsAndExecutionsDuring(q(spark, Sf0001).collect())
+    assert(execs === 1, s"$execs SQL executions for a warm call")
+  }
+
   test("pagerank: disconnected components do not leak rank across") {
     val two = Seq((1L, 2L), (10L, 11L), (11L, 12L), (12L, 10L))
     val pr = prSpark(two, 3)
@@ -408,8 +415,9 @@ class GraphOpsSpec extends SparkSpecBase {
     assert(execs === rounds + 5, s"$execs SQL executions for $rounds rounds")
     // per round: its shuffle-map stages and broadcasts (AQE picks the
     // joins from the round's data, so this is pinned for this graph
-    // only) and the cut job, 6 in all; 6 more around the loop
-    assert(jobs === 6 * rounds + 6, s"$jobs jobs for $rounds rounds")
+    // only) and the cut job, 6 in all; 8 more around the loop, of which
+    // the input-pairs and labels cuts run one cut job apiece
+    assert(jobs === 6 * rounds + 8, s"$jobs jobs for $rounds rounds")
   }
 
   test("kcore matches the scalar reference on seeded random graphs") {

@@ -51,6 +51,28 @@ class RateLimiterSpec extends SparkSpecBase {
     assert(streamed.filter(_._1 == 1L).forall(_._3), "trickle user was throttled")
   }
 
+  test("two events inside one millisecond fold in µs order, not event_id order") {
+    implicit val ctx = spark.sqlContext
+    def at(us: Long) = {
+      val ts = new Timestamp(1704067200000L)
+      ts.setNanos((us * 1000L).toInt)
+      ts
+    }
+    // 300 µs apart in one ms; the earlier event carries the larger id
+    val pair = Seq(LimitEvent(5L, at(400L), 1L), LimitEvent(5L, at(100L), 2L))
+    val ms = MemoryStream[LimitEvent]
+    ms.addData(pair)
+    val q = RateLimiter.rateLimit(ms.toDS().withWatermark("ts", "10 minutes"),
+        capacity = 1.0, refillPerSec)
+      .writeStream.format("memory").queryName("ratelimit_us")
+      .outputMode("append").trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    val admitted = spark.table("ratelimit_us").as[Admission].collect()
+      .map(a => a.event_id -> a.admitted).toMap
+    assert(admitted === Map(2L -> true, 1L -> false),
+      "the token must go to the earlier-µs event")
+  }
+
   test("bucket refills in event time: spaced events re-admit after a burst") {
     val burst = (0 until 5).map(i => LimitEvent(7L, t(i.toLong), i.toLong))
     val later = LimitEvent(7L, t(60L), 99L) // 55+ s later: fully refilled

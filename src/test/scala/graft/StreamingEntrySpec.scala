@@ -53,6 +53,42 @@ class StreamingEntrySpec extends SparkSpecBase {
     assert(!p.ok)
   }
 
+  test("late_arrivals counts out-of-order events, and its twin anchors to " +
+      "it, on events whose event_id order disagrees with ts") {
+    import java.nio.file.Files
+    import org.apache.spark.sql.functions.{col, expr, lit}
+    import spark.implicits._
+    // contract-shaped events (ts as TIMESTAMP_NTZ µs): user i % 4 sends
+    // event i 60 s after event i - 4, plus µs noise; every 5th event is
+    // stamped 5 minutes early, so it lands before its user's previous one
+    val t0 = 1704067200000000L
+    val rows = (0 until 40).map { i =>
+      val us = t0 + i * 60000000L + i * 137L - (if (i % 5 == 3) 300000000L else 0L)
+      (i.toLong, us, (i % 4).toLong, Seq("click", "purchase", "view")(i % 3),
+        i * 1.25, "{}")
+    }
+    val want = rows.groupBy(_._3).values.flatMap { evs =>
+      evs.sortBy(_._1).scanLeft((Long.MinValue, Option.empty[String])) {
+        case ((mx, _), (_, us, _, tpe, _, _)) =>
+          (math.max(mx, us), if (us < mx) Some(tpe) else None)
+      }.flatMap(_._2)
+    }.groupBy(identity).view.mapValues(_.size.toLong).toMap
+    assert(want.values.sum > 0)
+    val dir = Files.createTempDirectory("graft_ooo_events")
+    try {
+      rows.toDF("event_id", "us", "user_id", "event_type", "value", "props")
+        .select(col("event_id"),
+          expr("cast(timestamp_micros(us) as timestamp_ntz)").as("ts"),
+          col("user_id"), col("event_type"), col("value"), col("props"))
+        .write.parquet(s"$dir/events.parquet")
+      val got = SparkEntry.queries("late_arrivals")(spark, dir.toString)
+        .where(col("n_ooo") > lit(0L)).collect()
+        .map(r => r.getAs[String]("event_type") -> r.getAs[Long]("n_ooo")).toMap
+      assert(got === want)
+      assert(StreamingEntry.twins("late_arrivals_stream").run(spark, dir.toString, 3).ok)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
   test("the Ev, Doc and Change feeds run on generated code alone " +
       "(no interpreted fallback)") {
     // A feed case class Spark's generated projections cannot construct
