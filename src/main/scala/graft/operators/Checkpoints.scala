@@ -61,13 +61,16 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
   *
   * Sites that plan without a cut, where one bought nothing (counted per
   * warm call at sf0.01 and sf0.1, the cut ran more jobs and SQL
-  * executions and read no fewer rows, or the subtree is a pruned scan):
-  * the LPA labels of `GraphOps.graphModularity` (the three readers plan
-  * as one query), the 3 rounds of `pair_graph_pagerank`, the grid of
-  * `Relational.ksDrift` (its one reader, `withGlobalCumsum`, cuts), the
-  * band frame of `DocDedup.minhashIncremental` and the new-doc slice of
-  * `CorpusOps.corpusPipelineIncremental` (so building its report runs no
-  * job).
+  * executions and read no fewer rows): the LPA labels of
+  * `GraphOps.graphModularity` (the three readers plan as one query), the
+  * 3 rounds of `pair_graph_pagerank`, and the grid of `Relational.ksDrift`
+  * (its one reader, `withGlobalCumsum`, cuts). The new-doc slice that
+  * `DocDedup.minhashIncremental` and `CorpusOps.corpusPipelineIncremental`
+  * broadcast is no cut but a `FrameMemo.sorted` entry
+  * (`DocDedup.newBatch`): building either query runs no job (an eager
+  * cut would run one, which StreamingEntrySpec forbids for the funnel),
+  * the hinted side is still read from a checkpoint, and a warm call
+  * reads the slice from the memo.
   *
   * `FrameMemo` keeps its own two cuts and stays local on either path: its
   * entries are session-scoped and freed by its `release`'s unpersist,

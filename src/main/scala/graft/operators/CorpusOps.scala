@@ -976,11 +976,8 @@ object CorpusOps {
     * the daily ingest report. */
   def corpusPipelineIncremental(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // no cut: building the report runs no job (a cut of the slice would
-    // run one), and each of its readers re-reads only a pruned scan
-    val batch = Tables.documents(spark, dir)
-      .where(DocDedup.isNewDoc($"doc_id")).select($"doc_id", $"text")
-    ingestFunnel(corpusIndex(spark, dir), Seq.empty[String].toDF("h"), batch)._1
+    ingestFunnel(corpusIndex(spark, dir), Seq.empty[String].toDF("h"),
+      DocDedup.newBatch(spark, dir))._1
   }
 
   /** The persisted artifacts the daily ingest funnel probes, built ONCE

@@ -129,23 +129,31 @@ object DocDedup {
     * persisted index. */
   private[graft] def isNewDoc(docId: Column): Column = docId % 10 === 7
 
+  /** The new batch's `(doc_id, text)` rows: the arrived crawl a daily
+    * pipeline has persisted, memoized per (session, dir) sorted on
+    * `doc_id`, the key every reader groups on. Referencing it runs no
+    * job (the first query that reads it fills it), and the batch is read
+    * from the memo, not re-sliced from the corpus, by every call of
+    * [[minhashIncremental]] and `CorpusOps.corpusPipelineIncremental`. */
+  private[graft] def newBatch(spark: SparkSession, dir: String): DataFrame =
+    FrameMemo.shared.sorted(spark, dir, "new_batch", "doc_id")(
+      Tables.documents(spark, dir).where(isNewDoc(col("doc_id")))
+        .select("doc_id", "text"))
+
   /** NS: incremental MinHash dedup — the ingest-time shape: a small NEW
     * batch ([[isNewDoc]], standing in for today's crawl) is checked
-    * against the persisted signature index (everything else) WITHOUT
-    * recomputing or reshuffling the index: new-batch band keys BROADCAST
-    * against the index's band keys, so the big side is one linear
-    * probe-side scan. This is `minhashDedupPairs`' candidate logic with
+    * against the persisted signature index (everything else: the band
+    * frame of [[CorpusOps.corpusIndex]], which the ingest funnel probes)
+    * WITHOUT recomputing or reshuffling the index: new-batch band keys
+    * BROADCAST against the index's band keys, so the big side is one
+    * linear probe-side scan. This is `minhashDedupPairs`' candidate logic with
     * the symmetry broken the way a daily pipeline actually runs it — at
     * 100 TB the index is a bucketed table on (band, band_value) and the
     * new batch is always broadcast-small relative to it. */
   def minhashIncremental(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // no cut: planned as one query, the two doc_id slices of the band
-    // frame ran fewer jobs, SQL executions and rows read than a cut of
-    // the whole frame did (per warm call at sf0.01 and sf0.1)
-    val bands = bandFrameOf(Tables.documents(spark, dir))
-    probePairs(bands.where(!isNewDoc($"doc_id")), bands.where(isNewDoc($"doc_id")))
-      .orderBy($"new_doc", $"index_doc")
+    val index = CorpusOps.corpusIndex(spark, dir).bands
+    probePairs(index, bandFrameOf(newBatch(spark, dir))).orderBy($"new_doc", $"index_doc")
   }
 
   /** New-batch near-dup probe: batch band keys BROADCAST against the

@@ -74,11 +74,10 @@ object RateLimiter {
             val evs = it.toSeq.sortBy(e => (micros(e.ts), e.event_id))
             val (s, out) = foldBucket(state.getOption, capacity, refillPerSec, evs)
             state.update(s)
-            // Spark times a key out once the ms watermark exceeds this
-            // value; for the ms floor of the µs deadline that is exactly
-            // when the watermark passes the µs deadline
-            state.setTimeoutTimestamp(
-              Math.floorDiv(micros(evs.last.ts) + idleEvictMs * 1000L, 1000L))
+            // the ms floor of the µs deadline (the latest event's µs +
+            // idleEvictMs): Spark's ms watermark exceeds it exactly when
+            // it passes that deadline
+            state.setTimeoutTimestamp(evs.last.ts.getTime + idleEvictMs)
             out.iterator
           }
       }
